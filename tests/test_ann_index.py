@@ -215,7 +215,7 @@ def test_resize_snapshot_skips_inflight_temporary(spark, emb, tmp_path):
     task-attempt parquet under ``tbl=0/_temporary/``; baking it into
     the snapshot crashes the explicit-path read (or the footer
     arithmetic) on every subsequent rebuild — a permanent wedge."""
-    from irio2024_mapreduce_spark.operators.ann_index import _tbl0_files
+    from irio2024_mapreduce_spark.operators.stored_index import data_files
 
     idx = str(tmp_path / "ann")
     corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
@@ -230,7 +230,8 @@ def test_resize_snapshot_skips_inflight_temporary(spark, emb, tmp_path):
     with open(os.path.join(tmp_dir, "part-crashed.parquet"), "wb") as f:
         f.write(b"truncated, not parquet")
     assert not any(
-        "_temporary" in p for p in _tbl0_files(data_dir)
+        "_temporary" in p
+        for p in data_files(os.path.join(data_dir, "tbl=0"))
     ), "in-flight task-attempt files leaked into the snapshot set"
     out = resize_ann_index(spark, idx)  # must not wedge on the junk
     # the junk file must not enter the no-op path's footer-delta
@@ -245,19 +246,15 @@ def test_resize_stages_under_unique_name_and_gcs_leftovers(
     """ADVICE r13-input (medium): the lock-free resize must never
     stage at the versioned name a racing full build would also write
     (two interleaved overwrites → one corrupt committed dir). It
-    stages under ``stage_rows_*`` — a name outside every builder's and
-    GC's prefix — renamed under the index lock; crashed stage dirs
-    are GC'd at guard acquisition."""
+    reserves its version in the manifest first and writes the reserved
+    name wholesale, replacing a crashed writer's orphan there."""
     idx = str(tmp_path / "ann")
     corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     h = build_ann_index(spark, corpus, idx)["bits"]
     before = _rows(probe_ann_index(spark, queries, idx))
-    # a SIGKILLed predecessor's stage leftover
-    crashed = os.path.join(idx, f"stage_rows_h{h}_v2.424242")
-    os.makedirs(os.path.join(crashed, "tbl=0", "pb=0"))
     # a crashed direct writer's orphan at the NEXT versioned name,
-    # with junk inside — the rename path must replace it wholesale
+    # with junk inside — the rewrite must replace it wholesale
     orphan = os.path.join(idx, f"rows_h{h}_v2")
     junk = os.path.join(orphan, "tbl=0", "pb=0", "part-junk.parquet")
     os.makedirs(os.path.dirname(junk))
@@ -267,7 +264,6 @@ def test_resize_stages_under_unique_name_and_gcs_leftovers(
     append_ann_index(spark, corpus.limit(3), idx)
     out = resize_ann_index(spark, idx)
     assert out["compacted"] and not out["resized"], out
-    assert not os.path.isdir(crashed), "stage leftover survived GC"
     m = read_ann_manifest(idx)
     assert m["data"] == f"rows_h{h}_v2"
     assert not os.path.exists(junk), (
@@ -280,7 +276,7 @@ def test_resize_classifies_vanished_input(spark, emb, tmp_path, monkeypatch):
     """ADVICE r12 (low): maintenance entry points classify
     vanished-input Py4J failures to the protocol's documented
     retryable instead of leaking an opaque JVM traceback."""
-    import irio2024_mapreduce_spark.operators.ann_index as mod
+    import irio2024_mapreduce_spark.operators.stored_index as mod
 
     idx = str(tmp_path / "ann")
     build_ann_index(
@@ -293,7 +289,7 @@ def test_resize_classifies_vanished_input(spark, emb, tmp_path, monkeypatch):
             f"{idx}/rows_h8_v1/tbl=0/pb=3/part-0.parquet does not exist"
         )
 
-    monkeypatch.setattr(mod, "_resize_ann_index_locked", boom)
+    monkeypatch.setattr(mod, "_rewrite_locked", boom)
     with pytest.raises(RuntimeError, match="vanished beneath"):
         resize_ann_index(spark, idx)
 
@@ -362,16 +358,20 @@ def test_probe_opens_only_probed_partition_dirs(
 
 
 def _plant_delta(spark, idx, emb_delta, tag="b=test.1"):
-    """Publish a batch as ingest does (r13): delta-shaped write +
-    rename into the live delta area + advisory rows bump."""
+    """Plant a committed delta batch: delta-shaped write with its
+    sidecar, moved into the live delta area, plus the advisory rows
+    bump."""
     from irio2024_mapreduce_spark.operators.ann_index import (
-        _deltas_root,
-        _write_manifest,
+        FAMILY,
         delta_shaped_rows,
+    )
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        deltas_root,
+        write_manifest,
     )
 
     m = read_ann_manifest(idx)
-    droot = _deltas_root(idx, m["data"])
+    droot = deltas_root(idx, m["data"])
     os.makedirs(droot, exist_ok=True)
     staged = os.path.join(droot, tag + ".staging")
     delta_shaped_rows(
@@ -382,7 +382,7 @@ def _plant_delta(spark, idx, emb_delta, tag="b=test.1"):
     write_filelist(spark, staged)  # as ingest's _stage_batch does (r14)
     os.rename(staged, os.path.join(droot, tag))
     n = emb_delta.count()
-    _write_manifest(idx, {**m, "rows": m["rows"] + n})
+    write_manifest(FAMILY, idx, {**m, "rows": m["rows"] + n})
     return n
 
 
@@ -393,10 +393,10 @@ def test_probe_unions_unfolded_deltas_and_fold_preserves_answers(
     probes must see delta rows immediately (visibility = directory
     presence), and the maintenance fold must move them into the
     two-level layout without changing a single answer."""
-    from irio2024_mapreduce_spark.operators.ann_index import (
-        _delta_files,
-        _deltas_root,
-        fold_ann_deltas,
+    from irio2024_mapreduce_spark.operators.ann_index import fold_ann_deltas
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        delta_files as _delta_files,
+        deltas_root as _deltas_root,
     )
 
     idx = str(tmp_path / "ann")
@@ -441,8 +441,9 @@ def test_resize_absorbs_unfolded_deltas(spark, emb, tmp_path):
     """The resize snapshot unit is layout ∪ delta area: a rewrite
     (here: duplicate-collapse) must carry delta vectors into the new
     version and GC the old version's delta root with it."""
-    from irio2024_mapreduce_spark.operators.ann_index import (
-        _corpus_tbl0_files,
+    from irio2024_mapreduce_spark.operators.ann_index import FAMILY
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        corpus_files,
     )
 
     idx = str(tmp_path / "ann")
@@ -463,7 +464,9 @@ def test_resize_absorbs_unfolded_deltas(spark, emb, tmp_path):
     assert not os.path.isdir(
         os.path.join(idx, f"rows_h{h}_v1.deltas")
     )
-    stored = spark.read.parquet(*sorted(_corpus_tbl0_files(idx, m2["data"])))
+    stored = spark.read.parquet(
+        *sorted(corpus_files(FAMILY, idx, m2["data"]))
+    )
     assert stored.select("neighbor_id").distinct().count() == corpus.count()
     # answers equal a clean full build at the same width
     ref = str(tmp_path / "ann_ref")
@@ -498,8 +501,8 @@ def test_probe_filelist_sidecar_matches_listing_fallback(
     maintained by every locked writer — must resolve the probe to the
     SAME answers as the pre-r14 per-dir listing fallback, with delta
     batches resolved through their own per-batch sidecars."""
-    from irio2024_mapreduce_spark.operators.ann_index import (
-        _deltas_root,
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        deltas_root as _deltas_root,
     )
     from irio2024_mapreduce_spark.sources.sinks import FILELIST_NAME
 
@@ -521,10 +524,6 @@ def test_probe_filelist_sidecar_matches_listing_fallback(
     # the sidecar resolves to concrete FILES (point reads, no LISTs)
     opened = probe_ann_index(spark, queries, idx).inputFiles()
     assert all(f.endswith(".parquet") for f in opened)
-    # fallback: delete both sidecars → per-dir listing, same answers
-    os.remove(os.path.join(data_dir, FILELIST_NAME))
-    os.remove(os.path.join(bdir, FILELIST_NAME))
-    assert _rows(probe_ann_index(spark, queries, idx)) == with_sidecar
 
 
 def test_probe_retries_once_then_classifies_vanished_input(
@@ -534,7 +533,7 @@ def test_probe_retries_once_then_classifies_vanished_input(
     drops just-folded delta dirs must either succeed on its one
     fresh-listing retry or fail with the protocol's documented
     retryable — never a raw Py4JJavaError."""
-    import irio2024_mapreduce_spark.operators.ann_index as ann_mod
+    import irio2024_mapreduce_spark.operators.stored_index as si_mod
 
     idx = str(tmp_path / "ann")
     corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
@@ -544,7 +543,7 @@ def test_probe_retries_once_then_classifies_vanished_input(
     m = read_ann_manifest(idx)
     data_dir = os.path.join(idx, m["data"])
 
-    real = ann_mod.read_filelist
+    real = si_mod.read_filelist
     calls = {"n": 0}
 
     def phantom_then_real(path):
@@ -562,7 +561,7 @@ def test_probe_retries_once_then_classifies_vanished_input(
                 }
         return side
 
-    monkeypatch.setattr(ann_mod, "read_filelist", phantom_then_real)
+    monkeypatch.setattr(si_mod, "read_filelist", phantom_then_real)
     # first attempt fails on the phantom file; the retry re-reads the
     # (now truthful) sidecar and succeeds
     assert _rows(probe_ann_index(spark, queries, idx)) == want
@@ -583,6 +582,6 @@ def test_probe_retries_once_then_classifies_vanished_input(
             }
         return side
 
-    monkeypatch.setattr(ann_mod, "read_filelist", always_phantom)
+    monkeypatch.setattr(si_mod, "read_filelist", always_phantom)
     with pytest.raises(RuntimeError, match="vanished beneath"):
         probe_ann_index(spark, queries, idx).collect()

@@ -1,22 +1,14 @@
-"""The object-storage commit seam (r14, VERDICT r13 item 2).
+"""The object-storage commit seam.
 
-The reference's own data plane is GCS
-(``/root/reference/mapreduce/coordinator/utils.py:35-39``), where no
-atomic DIRECTORY rename exists. The engine's publication protocol
-therefore has two modes, recorded per-index in the manifest:
-
-* ``rename`` (POSIX fast path) — per-batch delta publishes commit via
-  one atomic same-FS directory rename;
-* ``marker`` — delta files are placed at their final names first and
-  the batch's ``_filelist.json`` sidecar is written LAST with one
-  atomic single-object write (the commit); readers treat a
-  sidecar-less delta dir as uncommitted.
-
-Version swaps need NO directory rename in EITHER mode since r14: a
-resize/rebuild RESERVES its target version in the manifest under the
-index lock, writes directly at the final versioned name, and commits
-with the manifest flip — the marker-file pattern that translates to
-object storage unchanged.
+The reference's own data plane is GCS, where no atomic DIRECTORY
+rename exists. A per-batch delta publish therefore places the batch's
+files at their final names first and writes the batch's
+``_filelist.json`` sidecar LAST with one atomic single-object write
+(the commit); readers treat a sidecar-less delta dir as uncommitted.
+Version swaps need no directory rename either: a resize/rebuild
+RESERVES its target version in the manifest under the index lock,
+writes directly at the final versioned name, and commits with the
+manifest flip.
 
 The shim here FORBIDS directory renames process-wide (Python side) —
 os.rename / os.replace / shutil.move raise on directories — and the
@@ -31,12 +23,17 @@ protocol layer).
 
 from __future__ import annotations
 
+import json
 import os
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+import irio2024_mapreduce_spark.operators.stored_index as si
+from irio2024_mapreduce_spark.operators.ann_index import (
+    FAMILY as ANN,
+)
 from irio2024_mapreduce_spark.operators.ann_index import (
     build_ann_index,
     fold_ann_deltas,
@@ -44,8 +41,8 @@ from irio2024_mapreduce_spark.operators.ann_index import (
     read_ann_manifest,
     resize_ann_index,
 )
-from irio2024_mapreduce_spark.operators.ann_index import (
-    _deltas_root as _ann_droot,
+from irio2024_mapreduce_spark.operators.stored_index import (
+    deltas_root as _ann_droot,
 )
 from irio2024_mapreduce_spark.operators.ivf_index import (
     build_ivf_index,
@@ -59,7 +56,10 @@ from irio2024_mapreduce_spark.plans.ingest import (
     build_corpus_index,
     ingest_batch,
 )
-from irio2024_mapreduce_spark.sources.sinks import FILELIST_NAME
+from irio2024_mapreduce_spark.sources.sinks import (
+    FILELIST_NAME,
+    acquire_compaction_lock_patiently,
+)
 
 
 def _vec(seed: int) -> list[float]:
@@ -132,9 +132,7 @@ def test_full_ingest_lifecycle_without_dir_renames(
 ):
     """Ingest publish + BOTH similarity delta publishes + folds + an
     ANN resize + an IVF rebuild, all with directory renames forbidden
-    — the object-storage discipline end-to-end. Marker mode is set at
-    build time and recorded in the manifests."""
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_MODE", "marker")
+    — the object-storage discipline end-to-end."""
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "corpus")
     ann = str(tmp_path / "ann")
@@ -143,8 +141,6 @@ def test_full_ingest_lifecycle_without_dir_renames(
     build_corpus_index(spark, _frame(spark, SEED_DOCS), idx)
     build_ann_index(spark, _emb(spark, seed_ids), ann, bits=8)
     build_ivf_index(spark, _emb(spark, seed_ids), ivf, k_cells=2)
-    assert read_ann_manifest(ann)["commit_mode"] == "marker"
-    assert read_ivf_manifest(ivf)["commit_mode"] == "marker"
 
     m = ingest_batch(
         spark, _frame(spark, BATCH_DOCS), idx, out,
@@ -217,7 +213,7 @@ def test_full_ingest_lifecycle_without_dir_renames(
 def test_marker_publish_is_invisible_until_sidecar(
     spark, tmp_path, monkeypatch, no_dir_renames
 ):
-    """Batch-atomic visibility in marker mode: data files placed
+    """Batch-atomic visibility: data files placed
     before the sidecar are invisible to probes AND folds; the sidecar
     write flips the whole batch visible at once; roll-forward of a
     crashed publish is idempotent."""
@@ -225,15 +221,14 @@ def test_marker_publish_is_invisible_until_sidecar(
     from irio2024_mapreduce_spark.operators.ann_index import (
         delta_shaped_rows,
     )
-    from irio2024_mapreduce_spark.operators.ann_index import (
-        _delta_files as _ann_delta_files,
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        delta_files as _ann_delta_files,
     )
     from irio2024_mapreduce_spark.sources.sinks import (
         publish_delta_marker,
         write_filelist,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_MODE", "marker")
     ann = str(tmp_path / "ann")
     build_ann_index(spark, _emb(spark, [100, 101]), ann, bits=8)
     m = read_ann_manifest(ann)
@@ -267,7 +262,7 @@ def test_marker_publish_is_invisible_until_sidecar(
     assert (
         _rows(probe_ann_index(spark, _emb(spark, [300]), ann)) == want
     )
-    assert not _ann_delta_files(ann, m["data"], mode="marker")
+    assert not _ann_delta_files(ann, m["data"])
 
     # roll-forward: idempotent re-copy + marker = the commit
     publish_delta_marker(staged, target)
@@ -285,9 +280,167 @@ def test_marker_publish_is_invisible_until_sidecar(
     assert _rows(probe_ann_index(spark, _emb(spark, [300]), ann)) == after
 
 
-def test_rename_mode_unchanged_by_default(spark, tmp_path):
-    """The POSIX fast path stays the default: a build without the env
-    records rename mode and publishes deltas via one dir rename."""
-    ann = str(tmp_path / "ann")
-    build_ann_index(spark, _emb(spark, [100, 101]), ann, bits=8)
-    assert read_ann_manifest(ann)["commit_mode"] == "rename"
+# ------------------------------------------- Spark-free publish protocol
+DATA = "rows_h8_v1"
+
+
+def _manifest_only_index(root) -> str:
+    """An ANN index dir holding only a manifest: all the delta publish
+    reads besides the staged files."""
+    idx = os.path.join(root, "ann")
+    os.makedirs(os.path.join(idx, DATA))
+    si.write_manifest(ANN, idx, {
+        "version": si.FORMAT_VERSION, **ANN.constants(), "bits": 8,
+        "part_bits": 0, "bucket_target": 64, "rows": 0, "data": DATA,
+        "data_version": 1,
+    })
+    return idx
+
+
+def _stage_batch(root) -> str:
+    """A staged ANN delta batch of three vectors: one tiny parquet file
+    per table, written with pyarrow, plus the batch's sidecar."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    staging = os.path.join(root, "staging")
+    files = {}
+    for t in (0, 1):
+        d = os.path.join(staging, "ann_index", f"tbl={t}")
+        os.makedirs(d)
+        pq.write_table(
+            pa.table({
+                "neighbor_id": [1, 2, 3], "cv": [[0.5]] * 3,
+                "pb": [0] * 3, "cb": [t] * 3,
+            }),
+            os.path.join(d, "part-0.parquet"),
+        )
+        files[f"tbl={t}"] = ["part-0.parquet"]
+    with open(os.path.join(staging, "ann_index", FILELIST_NAME), "w") as f:
+        json.dump({"version": 1, "files": files}, f)
+    return staging
+
+
+def _publish(staging, idx):
+    ex = {
+        "kind": "ann", "root": idx, "staged": "ann_index", "data": DATA,
+        "delta": "b=s.1", "rows": 3,
+    }
+    si.publish_delta(
+        os.path.join(staging, "ann_index"), ex,
+        acquire_compaction_lock_patiently,
+    )
+
+
+def _committed(idx):
+    """What every reader sees: the committed delta files, the vectors
+    the footer recount finds, and the advisory row count."""
+    files = sorted(
+        os.path.relpath(f, idx) for f in si.delta_files(idx, DATA)
+    )
+    vectors = si.footer_rows(si.corpus_files(ANN, idx, DATA))
+    return files, vectors, si.read_manifest(ANN, idx)["rows"]
+
+
+def test_publish_protocol_placed_files_commit_with_sidecar(
+    tmp_path, monkeypatch, no_dir_renames
+):
+    """Files placed without their sidecar are invisible to the committed
+    listing, the footer recount and the fold; the sidecar write makes
+    the whole batch visible at once."""
+    import irio2024_mapreduce_spark.sources.sinks as sinks_mod
+
+    idx = _manifest_only_index(str(tmp_path))
+    staging = _stage_batch(str(tmp_path))
+    real_awf = sinks_mod.atomic_write_file
+
+    def crash_on_sidecar(path, content):
+        if os.path.basename(path) == FILELIST_NAME:
+            raise RuntimeError("injected crash before commit marker")
+        return real_awf(path, content)
+
+    monkeypatch.setattr(sinks_mod, "atomic_write_file", crash_on_sidecar)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _publish(staging, idx)
+    monkeypatch.setattr(sinks_mod, "atomic_write_file", real_awf)
+    batch = os.path.join(si.deltas_root(idx, DATA), "b=s.1")
+    assert sorted(os.listdir(batch)) == ["tbl=0", "tbl=1"]  # placed
+    assert _committed(idx) == ([], 0, 0)
+    # the fold reads the committed listing only: nothing to fold
+    assert si.fold(ANN, None, idx) == {"folded": 0, "batches": 0}
+
+    _publish(staging, idx)
+    assert _committed(idx) == (
+        ["rows_h8_v1.deltas/b=s.1/tbl=0/part-0.parquet",
+         "rows_h8_v1.deltas/b=s.1/tbl=1/part-0.parquet"],
+        3, 3,
+    )
+    assert not os.path.exists(os.path.join(staging, "ann_index"))
+
+
+@pytest.mark.parametrize(
+    "crash", ["first_file", "sidecar", "staged_drop", "count_bump", None]
+)
+def test_publish_protocol_resumes_to_one_result(
+    tmp_path, monkeypatch, no_dir_renames, crash
+):
+    """A publish resumed after a crash at any step, or run again after
+    it finished, ends in the clean run's committed state with nothing
+    duplicated. The one difference is documented: a crash between the
+    staged-dir drop and the count bump leaves the advisory count low,
+    which the maintenance footer recount detects."""
+    import shutil
+
+    import irio2024_mapreduce_spark.sources.sinks as sinks_mod
+
+    clean_idx = _manifest_only_index(str(tmp_path / "clean"))
+    _publish(_stage_batch(str(tmp_path / "clean")), clean_idx)
+    want = _committed(clean_idx)
+
+    idx = _manifest_only_index(str(tmp_path / "crash"))
+    staging = _stage_batch(str(tmp_path / "crash"))
+    staged = os.path.join(staging, "ann_index")
+
+    def boom(*a, **k):
+        raise RuntimeError(f"injected crash at {crash}")
+
+    links = []
+    real_link, real_awf = os.link, sinks_mod.atomic_write_file
+    real_rmtree = shutil.rmtree
+
+    def link_once(src, dst):
+        if links:
+            boom()
+        links.append(dst)
+        return real_link(src, dst)
+
+    def awf(path, content):
+        if os.path.basename(path) == FILELIST_NAME:
+            boom()
+        return real_awf(path, content)
+
+    def rmtree(path, *a, **k):
+        if path == staged:
+            boom()
+        return real_rmtree(path, *a, **k)
+
+    with monkeypatch.context() as mp:
+        if crash == "first_file":
+            mp.setattr(os, "link", link_once)
+        elif crash == "sidecar":
+            mp.setattr(sinks_mod, "atomic_write_file", awf)
+        elif crash == "staged_drop":
+            mp.setattr(shutil, "rmtree", rmtree)
+        elif crash == "count_bump":
+            mp.setattr(si, "write_manifest", boom)
+        if crash is None:
+            _publish(staging, idx)
+        else:
+            with pytest.raises(RuntimeError, match="injected crash"):
+                _publish(staging, idx)
+    _publish(staging, idx)  # roll-forward
+    _publish(staging, idx)  # and again: a no-op
+    files, vectors, rows = _committed(idx)
+    assert (files, vectors) == want[:2]
+    assert rows == (0 if crash == "count_bump" else want[2])
+    assert not os.path.exists(staged)

@@ -119,12 +119,13 @@ def _ingest(spark, idx, out, ann, ivf, crash=None):
 def _ann_ids(spark, ann):
     # the committed corpus-vector set is layout ∪ per-batch deltas
     # (r13: ingest publishes batches as delta dirs; maintenance folds)
-    from irio2024_mapreduce_spark.operators.ann_index import (
-        _corpus_tbl0_files,
+    from irio2024_mapreduce_spark.operators.ann_index import FAMILY
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        corpus_files,
     )
 
     m = read_ann_manifest(ann)
-    files = sorted(_corpus_tbl0_files(ann, m["data"]))
+    files = sorted(corpus_files(FAMILY, ann, m["data"]))
     if not files:
         return []
     df = spark.read.parquet(*files)
@@ -135,16 +136,17 @@ def _ann_ids(spark, ann):
 
 def _ivf_ids(spark, ivf):
     # the committed set is layout ∪ per-batch deltas (r13)
-    from irio2024_mapreduce_spark.operators.ivf_index import (
-        _corpus_cell_files,
-        _read_vector_files,
+    from irio2024_mapreduce_spark.operators.ivf_index import FAMILY
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        corpus_files,
+        read_vectors,
     )
 
     m = read_ivf_manifest(ivf)
-    files = sorted(_corpus_cell_files(ivf, m["data_version"]))
+    files = sorted(corpus_files(FAMILY, ivf, m["data"]))
     if not files:
         return []
-    df = _read_vector_files(spark, files, m)
+    df = read_vectors(FAMILY, spark, files)
     return sorted(r["vec_id"] for r in df.select("vec_id").collect())
 
 
@@ -453,11 +455,8 @@ def test_unkeyed_batches_get_unique_delta_dirs(spark, tmp_path):
     batch_id=0), and the second publisher fell into the per-file
     mover, silently voiding the single-rename batch-atomic visibility
     guarantee."""
-    from irio2024_mapreduce_spark.operators.ann_index import (
-        _deltas_root as _ann_droot,
-    )
-    from irio2024_mapreduce_spark.operators.ivf_index import (
-        _deltas_root as _ivf_droot,
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        deltas_root,
     )
 
     idx, out, ann, ivf = _setup(spark, tmp_path)
@@ -476,13 +475,13 @@ def test_unkeyed_batches_get_unique_delta_dirs(spark, tmp_path):
     am = read_ann_manifest(ann)
     ann_batches = sorted(
         d
-        for d in os.listdir(_ann_droot(ann, am["data"]))
+        for d in os.listdir(deltas_root(ann, am["data"]))
         if d.startswith("b=")
     )
     im = read_ivf_manifest(ivf)
     ivf_batches = sorted(
         d
-        for d in os.listdir(_ivf_droot(ivf, im["data_version"]))
+        for d in os.listdir(deltas_root(ivf, im["data"]))
         if d.startswith("b=")
     )
     assert len(ann_batches) == 2, ann_batches

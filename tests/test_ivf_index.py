@@ -199,8 +199,10 @@ def test_rebuild_snapshot_skips_inflight_temporary(spark, emb, tmp_path):
     ``footer_cell_counts``) on every subsequent rebuild — a permanent
     wedge."""
     from irio2024_mapreduce_spark.operators.ivf_index import (
-        _data_files,
         footer_cell_counts,
+    )
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        data_files as _data_files,
     )
 
     idx = str(tmp_path / "ivf")
@@ -232,18 +234,14 @@ def test_rebuild_stages_under_unique_name_and_gcs_leftovers(
     stage at the ``cells_v{n}``/``centroids_v{n}`` names a racing full
     build computes from the same manifest (two interleaved overwrites
     → one writer's centroids committed with the other's assignments).
-    It stages under ``*_stage.{pid}`` — outside every builder's and
-    GC's prefix — renamed under the index lock; crashed stage dirs
-    are GC'd at guard acquisition."""
+    It reserves its version in the manifest first and writes the
+    reserved names wholesale, replacing a crashed writer's orphans."""
     idx = str(tmp_path / "ivf")
     corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     build_ivf_index(spark, corpus, idx)
-    # a SIGKILLed predecessor's stage leftovers
-    for d in ("cells_stage.424242", "centroids_stage.424242"):
-        os.makedirs(os.path.join(idx, d, "cell=0"))
     # a crashed direct writer's orphans at the NEXT version, with junk
-    # inside — the rename path must replace them wholesale
+    # inside — the rewrite must replace them wholesale
     junk = os.path.join(idx, "cells_v2", "cell=0", "part-junk.parquet")
     os.makedirs(os.path.dirname(junk))
     os.makedirs(os.path.join(idx, "centroids_v2"))
@@ -251,15 +249,13 @@ def test_rebuild_stages_under_unique_name_and_gcs_leftovers(
         f.write(b"junk")
     out = rebuild_ivf_index(spark, idx, force=True)  # re-train, same k
     assert out["rebuilt"], out
-    assert not os.path.isdir(os.path.join(idx, "cells_stage.424242"))
-    assert not os.path.isdir(os.path.join(idx, "centroids_stage.424242"))
     m = read_ivf_manifest(idx)
     assert m["data_version"] == 2
     assert not os.path.exists(junk), (
         "crashed orphan's junk baked into the committed dir"
     )
     # the committed v2 answers probes (centroids and cells are from
-    # ONE writer — the staged pair, renamed together)
+    # ONE writer — the reserved pair, written together)
     assert len(_rows(probe_ivf_index(spark, queries, idx))) > 0
 
 
@@ -267,7 +263,7 @@ def test_rebuild_classifies_vanished_input(spark, emb, tmp_path, monkeypatch):
     """ADVICE r12 (low): maintenance entry points classify
     vanished-input Py4J failures to the protocol's documented
     retryable instead of leaking an opaque JVM traceback."""
-    import irio2024_mapreduce_spark.operators.ivf_index as mod
+    import irio2024_mapreduce_spark.operators.stored_index as mod
 
     idx = str(tmp_path / "ivf")
     build_ivf_index(
@@ -280,7 +276,7 @@ def test_rebuild_classifies_vanished_input(spark, emb, tmp_path, monkeypatch):
             f"{idx}/cells_v1/cell=3/part-0.parquet does not exist"
         )
 
-    monkeypatch.setattr(mod, "_rebuild_ivf_index_locked", boom)
+    monkeypatch.setattr(mod, "_rewrite_locked", boom)
     with pytest.raises(RuntimeError, match="vanished beneath"):
         rebuild_ivf_index(spark, idx)
 

@@ -98,7 +98,7 @@ class LockHoldRecorder:
     ``sinks`` (module-global — also covers every lazy
     ``from sinks import ...`` in plans/ingest.py and the patient
     wrapper, whose inner acquire resolves through sinks' globals) plus
-    ``ann_index`` / ``ivf_index`` (module-level imports)."""
+    ``stored_index`` (module-level import)."""
 
     def __init__(self):
         self.holds: list[tuple[str, float]] = []
@@ -106,7 +106,7 @@ class LockHoldRecorder:
         self._mu = threading.Lock()
 
     def install(self, monkeypatch) -> None:
-        from irio2024_mapreduce_spark.operators import ann_index, ivf_index
+        from irio2024_mapreduce_spark.operators import stored_index
         from irio2024_mapreduce_spark.sources import sinks
 
         real_acquire = sinks.acquire_compaction_lock
@@ -127,7 +127,7 @@ class LockHoldRecorder:
                     )
             real_release(lock)
 
-        for mod in (sinks, ann_index, ivf_index):
+        for mod in (sinks, stored_index):
             monkeypatch.setattr(mod, "acquire_compaction_lock", acquire)
             monkeypatch.setattr(mod, "release_compaction_lock", release)
 

@@ -233,6 +233,50 @@ def test_ivf_duplicates_trip_rebuild_and_compact(spark, tmp_path):
     assert not report2["ivf_rebuild"]["ran"], report2["ivf_rebuild"]
 
 
+@pytest.mark.parametrize("kind", ["ann", "ivf"])
+def test_uncommitted_delta_does_not_trip_maintenance(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A delta publish that placed its files and crashed before its
+    commit sidecar is not part of the index: the default pass over 500
+    committed vectors plus 100 such uncommitted ones must not count
+    them as physical rows, so it trips nothing and rewrites nothing."""
+    import irio2024_mapreduce_spark.sources.sinks as sinks_mod
+    from irio2024_mapreduce_spark.operators import stored_index as si
+    from irio2024_mapreduce_spark.sources.sinks import (
+        FILELIST_NAME,
+        publish_delta_marker,
+    )
+
+    fam = si.family(kind)
+    idx = str(tmp_path / kind)
+    build = build_ann_index if kind == "ann" else build_ivf_index
+    build(spark, _emb(spark, range(500)), idx)
+    m = si.read_manifest(fam, idx)
+    staged = str(tmp_path / "staged")
+    si.stage_delta(
+        fam, spark, _emb(spark, range(1000, 1100)), idx, m, staged, 1
+    )
+    real_awf = sinks_mod.atomic_write_file
+
+    def crash_on_marker(path, content):
+        if os.path.basename(path) == FILELIST_NAME:
+            raise RuntimeError("injected crash before commit marker")
+        return real_awf(path, content)
+
+    monkeypatch.setattr(sinks_mod, "atomic_write_file", crash_on_marker)
+    target = os.path.join(si.deltas_root(idx, m["data"]), "b=crashed.1")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        publish_delta_marker(staged, target)
+    monkeypatch.setattr(sinks_mod, "atomic_write_file", real_awf)
+    assert os.listdir(target)  # the files are placed
+
+    report = maintain_corpus_index(spark, **{f"{kind}_index_dir": idx})
+    r = report["ann_resize" if kind == "ann" else "ivf_rebuild"]
+    assert not r["ran"], r
+    assert si.read_manifest(fam, idx)["data_version"] == m["data_version"]
+
+
 def test_ivf_hot_cells_force_retrain_and_restore_recall(spark, tmp_path):
     """Planted drift (r11 verdict item 2): appends pile into hot cells
     while k stays within the 2x hysteresis — the footer-only imbalance

@@ -116,28 +116,29 @@ def test_stream_keeps_similarity_indexes_fresh(spark, tmp_path):
     # committed set = layout ∪ per-batch deltas (r13: micro-batches
     # publish as delta dirs; the maintenance fold moves them later)
     from irio2024_mapreduce_spark.operators.ann_index import (
-        _corpus_tbl0_files,
+        FAMILY as ANN,
     )
     from irio2024_mapreduce_spark.operators.ivf_index import (
-        _corpus_cell_files,
-        _read_vector_files,
+        FAMILY as IVF,
+    )
+    from irio2024_mapreduce_spark.operators.stored_index import (
+        corpus_files,
+        read_vectors,
     )
 
     m_ann, m_ivf = read_ann_manifest(ann), read_ivf_manifest(ivf)
     ann_ids = {
         r["neighbor_id"]
         for r in spark.read.parquet(
-            *sorted(_corpus_tbl0_files(ann, m_ann["data"]))
+            *sorted(corpus_files(ANN, ann, m_ann["data"]))
         )
         .select("neighbor_id")
         .collect()
     }
     ivf_ids = {
         r["vec_id"]
-        for r in _read_vector_files(
-            spark,
-            sorted(_corpus_cell_files(ivf, m_ivf["data_version"])),
-            m_ivf,
+        for r in read_vectors(
+            IVF, spark, sorted(corpus_files(IVF, ivf, m_ivf["data"]))
         )
         .select("vec_id")
         .collect()

@@ -674,13 +674,6 @@ def orchestrate(args) -> None:
     import tempfile
 
     t_start = time.time()
-    if args.commit_mode != "rename":
-        # the object-storage commit seam (r14): every index built by
-        # the seed fixture records this mode and every publisher /
-        # fold / swap in every worker (env inherited via _spawn)
-        # commits via the marker protocol instead of dir renames —
-        # the soak then SIGKILLs THAT protocol's windows
-        os.environ["SPARK_GRAFT_COMMIT_MODE"] = args.commit_mode
     root = tempfile.mkdtemp(prefix="chaos_ingest_")
     print(f"chaos root: {root}", file=sys.stderr)
     _seed_fixture(root, args.streams)
@@ -866,7 +859,6 @@ def orchestrate(args) -> None:
     result = {
         "kills": kills,
         "stream_kills": stream_kills,
-        "commit_mode": args.commit_mode,
         "fold_crashes": fold_crash_kinds(),
         "deep_fires_started_under_fire": fires,
         "deep_fires_completed": fire_dones,
@@ -905,9 +897,6 @@ def main() -> None:
     ap.add_argument("--deep-fires-min", type=int, default=3)
     ap.add_argument("--stream-kills-min", type=int, default=3)
     ap.add_argument("--fold-crashes-min", type=int, default=1)
-    ap.add_argument(
-        "--commit-mode", default="rename", choices=("rename", "marker")
-    )
     ap.add_argument("--deep-fire", type=int, default=0)
     ap.add_argument("--max-minutes", type=float, default=30.0)
     ap.add_argument(

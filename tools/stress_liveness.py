@@ -58,7 +58,7 @@ class Recorder:
     """Same instrumentation as tests/test_liveness.py's
     LockHoldRecorder, standalone: wraps acquire/release in sinks
     (module globals — covers the lazy importers and the patient
-    wrapper) + ann_index + ivf_index."""
+    wrapper) + stored_index."""
 
     def __init__(self):
         self.holds: list[tuple[str, float]] = []
@@ -66,7 +66,7 @@ class Recorder:
         self._mu = threading.Lock()
 
     def install(self):
-        from irio2024_mapreduce_spark.operators import ann_index, ivf_index
+        from irio2024_mapreduce_spark.operators import stored_index
         from irio2024_mapreduce_spark.sources import sinks
 
         real_acquire = sinks.acquire_compaction_lock
@@ -85,7 +85,7 @@ class Recorder:
                     self.holds.append((lock, time.perf_counter() - t0))
             real_release(lock)
 
-        for mod in (sinks, ann_index, ivf_index):
+        for mod in (sinks, stored_index):
             mod.acquire_compaction_lock = acquire
             mod.release_compaction_lock = release
 
