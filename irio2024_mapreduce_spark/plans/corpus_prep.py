@@ -49,6 +49,8 @@ here collects to the driver except the manifest's counts.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,7 +65,12 @@ from irio2024_mapreduce_spark.operators.llm_prep import (
     split_docs,
 )
 from irio2024_mapreduce_spark.operators.text_analysis import funnel_verdict
-from irio2024_mapreduce_spark.sources.sinks import SimulatedCrash
+from irio2024_mapreduce_spark.sources import staged_commit
+from irio2024_mapreduce_spark.sources.sinks import (
+    SimulatedCrash,
+    fsync_dir,
+    release_compaction_lock,
+)
 from irio2024_mapreduce_spark.sources.tables import load_table
 
 # the eval-benchmark stripe — the fixture role decontaminate's driver
@@ -71,55 +78,16 @@ from irio2024_mapreduce_spark.sources.tables import load_table
 BENCHMARK_STRIPE = 8
 
 # ---------------------------------------------- transactional publish
-# The staged-generation protocol (r10 verdict item 5) — the ingest
-# commit's shape applied to prepare_corpus's three artifacts: corpus,
-# packs, and the seeded ingest index are all written under
-# `{out_dir}/_staged/prep_{uuid}/`, ONE atomic `_committed` file is
-# the commit point, and publication swaps each target into place with
-# roll-forwardable renames (tmp/old suffixes, deterministic crash
-# classification). Pre-commit crash → every live target is the
-# complete OLD generation and the staging is discarded; post-commit
-# crash → `recover_prepared` (run on every prepare_corpus entry)
-# finishes the swaps — the targets become the complete NEW generation
-# together. The old behavior (three independent overwrite calls)
-# could ship new packs beside old docs.
-#
-# Same-filesystem requirement: the swaps are directory renames, so
-# out_dir and index_dir must live on one filesystem (EXDEV surfaces
-# loudly; a committed generation retries after the operator moves the
-# target).
-_PREP_COMMITTED = "_committed"
-_PREP_PLAN = "_publish_plan.json"
+# prepare_corpus's three artifacts (corpus, packs, and the seeded ingest
+# index) are one staged commit (``sources.staged_commit``) under
+# ``{out_dir}/_staged/prep_{uuid}/``. What is prep's own: the target
+# list, and publication by swapping each target into place with
+# roll-forwardable directory renames (tmp/old suffixes). The swaps are
+# directory renames, so out_dir and index_dir must live on one
+# filesystem (EXDEV surfaces loudly; a committed generation retries
+# after the operator moves the target).
 _PREP_TMP = "._prep_tmp"
 _PREP_OLD = "._prep_old"
-
-
-# SimulatedCrash — ONE fault-injection class for the ingest and prep
-# kill matrices — lives in sources.sinks, re-exported via the top
-# import for `from plans.corpus_prep import SimulatedCrash` callers.
-
-
-def _crash_if(point: str | None, here: str) -> None:
-    if point == here:
-        raise SimulatedCrash(here)
-
-
-def _new_prep_staging(out_dir: str) -> tuple[str, object]:
-    """Private staging dir + held sibling liveness flock (the ingest
-    convention: lock BEFORE mkdir so recovery can never discard a
-    just-created live staging)."""
-    import uuid  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_flock,
-    )
-
-    base = os.path.join(out_dir, "_staged")
-    os.makedirs(base, exist_ok=True)
-    staging = os.path.join(base, "prep_" + uuid.uuid4().hex[:16])
-    alive = acquire_flock(staging + "._alive.lock", purpose="being prepared")
-    os.makedirs(staging)
-    return staging, alive
 
 
 def _commit_and_publish(
@@ -129,12 +97,6 @@ def _commit_and_publish(
     index_dir: str | None,
     _test_crash_after: str | None = None,
 ) -> None:
-    import json  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        atomic_write_file,
-    )
-
     targets = [
         ["corpus", os.path.abspath(clean_path)],
         ["packs", os.path.abspath(packs_path)],
@@ -142,40 +104,9 @@ def _commit_and_publish(
     if index_dir is not None:
         targets.append(["index", os.path.abspath(index_dir)])
     plan = {"targets": targets}
-    atomic_write_file(
-        os.path.join(staging, _PREP_PLAN), json.dumps(plan, indent=1)
-    )
-    _crash_if(_test_crash_after, "stage")
-    # flush every staged data file BEFORE the fsync-durable commit
-    # marker: without this, a post-commit power loss could roll a
-    # generation forward whose parquet blocks never hit disk — after
-    # the old generation was already dropped (the ingest publish's
-    # _move_file discipline, applied tree-wide)
-    _fsync_tree(staging)
-    atomic_write_file(
-        os.path.join(staging, _PREP_COMMITTED), "committed\n"
-    )  # THE commit point
-    _crash_if(_test_crash_after, "commit")
+    staged_commit.write_plan(staging, plan)
+    staged_commit.commit(staging, _test_crash_after)
     _publish_prepared(staging, plan, _test_crash_after)
-
-
-def _fsync_tree(root: str) -> None:
-    """Flush file CONTENTS and directory ENTRIES: fsyncing only the
-    files leaves their dirents journal-soft, and a power loss after
-    the commit marker could roll forward a generation silently
-    missing parquet parts."""
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        fsync_dir,
-    )
-
-    for dirpath, _dirs, files in os.walk(root):
-        for name in files:
-            fd = os.open(os.path.join(dirpath, name), os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        fsync_dir(dirpath)
 
 
 def _publish_prepared(
@@ -183,147 +114,58 @@ def _publish_prepared(
 ) -> None:
     """Swap every staged artifact into place — idempotent, so a crash
     at any rename resumes here on the next roll-forward. Per-target
-    protocol (deterministic state classification; at most one of the
-    impossible combinations can ever exist):
+    protocol (deterministic state classification):
 
       rename(staged → target._prep_tmp)     # skipped if already done
       rename(target → target._prep_old)     # skipped for gen 1 / done
       rename(target._prep_tmp → target)
       rmtree(target._prep_old)
 
-    Locking is two-level: ONE whole-publication lock on the staging's
-    parent (``out_dir``) serializes concurrent generation flips — two
-    overlapping prepare runs publishing target-by-target under only
-    per-target locks could interleave into corpus-of-A + packs-of-B,
-    the exact mixed state this protocol exists to prevent — and each
-    target's swap additionally takes that target's advisory
+    Locking is two-level: ONE whole-publication lock on ``out_dir``
+    serializes concurrent generation flips (per-target locks alone
+    could interleave two publications into corpus-of-A + packs-of-B),
+    and each target's swap also takes that target's advisory
     compaction lock, so a concurrent ingest append or compaction of
     the same corpus fails loudly instead of interleaving with the
     flip. Lock order (out_dir → target) is acyclic with every other
     writer: nothing else takes the out_dir lock."""
-    import shutil  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_compaction_lock_patiently,
-        release_compaction_lock,
-    )
-
     out_dir = os.path.dirname(os.path.dirname(staging))
-    pub_lock = acquire_compaction_lock_patiently(out_dir)
+    pub_lock = staged_commit.acquire_patiently(out_dir)
     try:
-        _swap_targets(staging, plan, _test_crash_after)
+        for name, target in plan["targets"]:
+            src = os.path.join(staging, name)
+            tmp, old = target + _PREP_TMP, target + _PREP_OLD
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            lock = staged_commit.acquire_patiently(target)
+            try:
+                if os.path.isdir(src) and not os.path.exists(tmp):
+                    os.rename(src, tmp)
+                if os.path.exists(tmp):
+                    if os.path.exists(target):
+                        if os.path.exists(old):  # defensive; unreachable
+                            shutil.rmtree(old)
+                        os.rename(target, old)
+                    os.rename(tmp, target)
+                    fsync_dir(os.path.dirname(target))
+                if os.path.exists(old):
+                    shutil.rmtree(old)
+            finally:
+                release_compaction_lock(lock)
+            staged_commit._crash_if(_test_crash_after, f"swap:{name}")
     finally:
         release_compaction_lock(pub_lock)
     shutil.rmtree(staging, ignore_errors=True)
 
 
-def _swap_targets(
-    staging: str, plan: dict, _test_crash_after: str | None
-) -> None:
-    import shutil  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_compaction_lock_patiently,
-        fsync_dir,
-        release_compaction_lock,
-    )
-
-    for name, target in plan["targets"]:
-        src = os.path.join(staging, name)
-        tmp, old = target + _PREP_TMP, target + _PREP_OLD
-        os.makedirs(os.path.dirname(target), exist_ok=True)
-        lock = acquire_compaction_lock_patiently(target)
-        try:
-            if os.path.isdir(src) and not os.path.exists(tmp):
-                os.rename(src, tmp)
-            if os.path.exists(tmp):
-                if os.path.exists(target):
-                    if os.path.exists(old):  # defensive; unreachable
-                        shutil.rmtree(old)
-                    os.rename(target, old)
-                os.rename(tmp, target)
-                fsync_dir(os.path.dirname(target))
-            if os.path.exists(old):
-                shutil.rmtree(old)
-        finally:
-            release_compaction_lock(lock)
-        _crash_if(_test_crash_after, f"swap:{name}")
-
-
 def recover_prepared(out_dir: str) -> dict[str, int]:
-    """Classify leftover prepare_corpus stagings under
-    ``{out_dir}/_staged``: committed → finish the swaps (idempotent);
-    uncommitted with a dead holder → discard wholesale (no target was
-    touched pre-commit); live holder → leave alone. Lock-file litter
-    of dead uuid stagings is GC'd with the acquire-then-unlink-
-    while-held discipline. Returns
+    """Roll forward or discard every leftover prepare_corpus staging
+    under ``{out_dir}/_staged`` (``staged_commit.recover``; a prep name
+    is never staged again). A committed generation that cannot take its
+    locks in time raises ``LockPatienceExhausted``. Returns
     {rolled_forward, discarded, in_flight}."""
-    import json  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_flock,
-        flock_is_live,
-        release_flock,
+    return staged_commit.recover(
+        out_dir, _publish_prepared, prefix="prep_", strict=True
     )
-
-    out = {"rolled_forward": 0, "discarded": 0, "in_flight": 0}
-    base = os.path.join(out_dir, "_staged")
-    if not os.path.isdir(base):
-        return out
-    for name in sorted(os.listdir(base)):
-        d = os.path.join(base, name)
-        if not name.startswith("prep_"):
-            continue
-        if not os.path.isdir(d):
-            if name.endswith("._alive.lock"):
-                try:
-                    held = acquire_flock(d, purpose="GC'd")
-                except (RuntimeError, FileNotFoundError):
-                    continue
-                try:
-                    if not os.path.isdir(d[: -len("._alive.lock")]):
-                        try:
-                            os.unlink(d)
-                        except FileNotFoundError:
-                            pass
-                finally:
-                    release_flock(held)
-            continue
-        if os.path.exists(os.path.join(d, _PREP_COMMITTED)):
-            try:
-                with open(os.path.join(d, _PREP_PLAN)) as f:
-                    plan = json.load(f)
-            except FileNotFoundError:
-                # plan is written before the marker; committed-without-
-                # plan means final cleanup was already underway
-                shutil.rmtree(d, ignore_errors=True)
-                continue
-            _publish_prepared(d, plan)
-            out["rolled_forward"] += 1
-        elif flock_is_live(d + "._alive.lock"):
-            out["in_flight"] += 1
-        else:
-            try:
-                held = acquire_flock(d + "._alive.lock", purpose="recovered")
-            except RuntimeError:
-                out["in_flight"] += 1
-                continue
-            try:
-                if os.path.exists(os.path.join(d, _PREP_COMMITTED)):
-                    with open(os.path.join(d, _PREP_PLAN)) as f:
-                        _publish_prepared(d, json.load(f))
-                    out["rolled_forward"] += 1
-                elif os.path.isdir(d):
-                    shutil.rmtree(d)
-                    out["discarded"] += 1
-                    try:
-                        os.unlink(d + "._alive.lock")
-                    except FileNotFoundError:
-                        pass
-            finally:
-                release_flock(held)
-    return out
 
 
 def prepare_corpus(
@@ -342,8 +184,8 @@ def prepare_corpus(
     RuntimeErrors pass through; a Spark-job failure whose root cause
     is files vanishing under ``out_dir`` or ``index_dir`` mid-scan —
     a maintenance compaction swapping the live corpus/index beneath a
-    lock-free read (the r12 chaos soak hit a prep scan of
-    ``clean_documents.parquet`` racing the corpus compaction) — is
+    lock-free read (a prep scan of ``clean_documents.parquet``
+    racing the corpus compaction) — is
     re-raised as the documented retryable (the regeneration is
     all-staged: nothing published before the commit marker, so a
     retry is lossless)."""
@@ -421,9 +263,9 @@ def _prepare_corpus_impl(
     mergeable stats row are written there, so ``plans.ingest`` can
     continue this corpus batch-by-batch from day one.
 
-    PUBLICATION IS TRANSACTIONAL (r10 verdict item 5): the cleaned
-    corpus, the packs, and the seeded index are all written to a
-    private staging dir under ``{out_dir}/_staged/``, ONE atomic
+    PUBLICATION IS TRANSACTIONAL (``sources.staged_commit``): the
+    cleaned corpus, the packs, and the seeded index are all written
+    to a private staging dir under ``{out_dir}/_staged/``, ONE atomic
     ``_committed`` marker is the commit point, and publication swaps
     each target into place with roll-forwardable renames. A crash at
     ANY point leaves the output dirs either the complete OLD
@@ -534,7 +376,9 @@ def _prepare_corpus_impl(
     # every artifact goes to PRIVATE staging first (no reader sees a
     # partial generation); the downstream stages read the STAGED
     # artifacts, exactly as they used to read the live ones
-    staging, alive = _new_prep_staging(out_dir)
+    staging, alive = staged_commit.open_staging(
+        out_dir, "prep_" + uuid.uuid4().hex[:16], _publish_prepared
+    )
     staged_corpus = os.path.join(staging, "corpus")
     try:
         if holdout_split:
@@ -594,7 +438,7 @@ def _prepare_corpus_impl(
                 # the DAILY pipeline keeps the decontamination
                 # guarantee — without it, ingested batches could
                 # reintroduce eval-set 13-grams that stage 4 just
-                # removed (ADVICE r8)
+                # removed
                 benchmark=benchmark,
             )
 
@@ -609,15 +453,7 @@ def _prepare_corpus_impl(
         cleaned = spark.read.parquet(clean_path)
         packs = spark.read.parquet(os.path.join(out_dir, "packs.parquet"))
     finally:
-        from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-            release_flock,
-        )
-
-        try:
-            os.unlink(staging + "._alive.lock")
-        except FileNotFoundError:
-            pass
-        release_flock(alive)
+        staged_commit.release(staging, alive)
 
     agg = packs.agg(
         F.count("*").alias("docs"),

@@ -27,21 +27,16 @@ writes of batch-sized frames. Nothing corpus-sized moves.
 ``tools/stress_incremental.py`` measures the probe's ~flat cost at
 100× corpus.
 
-Durability: ``ingest_batch`` is TRANSACTIONAL — all-or-nothing batch
-visibility on a plain filesystem. Every part (index halves, corpus
-docs, stats row, manifest row) is first written to a private staging
-dir under ``{index_dir}/_staged/``; one atomic ``_committed`` marker
-(write-temp + ``os.replace``, the versioned layout's pointer-flip
-shape) is the commit point; publication is then pure file renames
-into the live dirs, rolled forward by ``recover_staged_batches`` on
-any crash. A crash BEFORE the marker published nothing anywhere, so
-a redelivery admits the docs normally (lossless — the old
-multi-append design's self-conviction window, where index rows
-without corpus rows convicted a redelivered batch as exact dups, is
-structurally gone). A crash AFTER the marker rolls forward to full
-visibility on the next touch of the index. Maintenance collisions
-abort pre-commit under the advisory locks — lossless in both
-directions.
+Durability: ``ingest_batch`` is transactional through the staged-commit
+protocol of ``sources.staged_commit``, shared with ``plans.corpus_prep``.
+Every part (index halves, corpus docs, stats row, manifest row and the
+similarity-index deltas) is staged under ``{index_dir}/_staged/``; one
+``_committed`` file is the commit point; publication is then file moves
+into the live dirs, rolled forward by ``recover_staged_batches`` after
+any crash. A crash before the commit published nothing anywhere, so a
+redelivery admits the docs normally. A crash after it rolls forward to
+full visibility on the next touch of the index. A maintenance collision
+aborts before the commit, under the advisory locks.
 
 Note the index covers SHIPPED docs only: a batch doc killed by the
 funnel never enters the index — a future byte-identical doc fails the
@@ -55,6 +50,7 @@ import errno
 import hashlib
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,23 +77,29 @@ from irio2024_mapreduce_spark.operators.llm_prep import (
 )
 from irio2024_mapreduce_spark.operators import stored_index
 from irio2024_mapreduce_spark.operators.text_analysis import funnel_verdict
+from irio2024_mapreduce_spark.sources import staged_commit
 from irio2024_mapreduce_spark.sources.sinks import (
-    LockPatienceExhausted,
     SimulatedCrash,
+    acquire_compaction_lock_patiently,
     atomic_write_file,
     check_not_compacting,
+    fsync_dir,
+    recover_swap_crash,
+    release_compaction_lock,
+    resolve_current,
     reraise_if_vanished_input as _reraise_if_vanished_input,
 )
 
 # ----------------------------------------------------------- index manifest
-# The index is SELF-DESCRIBING (r8 verdict item 4): a small JSON
-# manifest persisted at build time records which near-dup family and
-# which constants built it; every subsequent open validates against it
-# instead of trusting the caller's `family` argument — a
-# build-ngram/probe-lsh confusion used to fail only via a
-# missing-path read error deep inside Spark.
+# The index is SELF-DESCRIBING: a small JSON manifest persisted at
+# build time records which near-dup family and which constants built
+# it; every subsequent open validates against it instead of trusting
+# the caller's `family` argument — a build-ngram/probe-lsh confusion
+# used to fail only via a missing-path read error deep inside Spark.
+# Version 2 is the staged-commit layout; an older index must be
+# rebuilt.
 INDEX_MANIFEST_NAME = "_index_manifest.json"
-INDEX_FORMAT_VERSION = 1
+INDEX_FORMAT_VERSION = 2
 
 
 def _index_manifest(family: str, decontaminate: bool) -> dict:
@@ -171,8 +173,6 @@ def _clear_prior_life(index_dir: str) -> None:
     the index wholesale' invariant was not actually established.
     Callers must validate their arguments FIRST — this is the
     destructive half of a rebuild."""
-    import shutil  # noqa: PLC0415
-
     # refuse while a compaction holds the index: the clear would
     # delete the compactor's in-flight dirs mid-swap, and the
     # compactor's later steps could re-create old-life state right
@@ -186,7 +186,7 @@ def _clear_prior_life(index_dir: str) -> None:
         "stats",
         # staged batches belong to the replaced life too: a committed
         # staging would roll FORWARD into the fresh index otherwise
-        _STAGED_ROOT,
+        staged_commit.STAGED_ROOT,
     ):
         # the ._compact_* variants too: a compaction that crashed
         # mid-swap leaves a ._compact_old snapshot that crash
@@ -229,8 +229,7 @@ def build_corpus_index(
     {DECONTAM_NGRAM}-gram digest set beside the index, so every
     future ``ingest_batch`` decontaminates its admissions — without
     it, batches appended after the one-shot build could reintroduce
-    eval-set contamination that ``prepare_corpus`` stage 4 removed
-    (ADVICE r8).
+    eval-set contamination that ``prepare_corpus`` stage 4 removed.
 
     Writes a small JSON manifest recording family + constants; every
     later open validates against it. Returns per-part row counts."""
@@ -286,10 +285,9 @@ def benchmark_ngram_digests(benchmark: DataFrame) -> DataFrame:
     )
 
 
-# _reraise_if_vanished_input moved to sources/sinks.py (shared with the
-# index-maintenance entry points — ADVICE r12, low); re-exported here
-# because ingest is the protocol's home and plans/corpus_prep imports
-# it from here.
+# _reraise_if_vanished_input lives in sources/sinks.py (shared with the
+# index-maintenance entry points); plans/corpus_prep imports it from
+# here.
 
 
 def ingest_batch(
@@ -314,11 +312,9 @@ def ingest_batch(
     as the documented retryable when it matches.
 
     Classification covers EVERY root the batch reads lock-free — the
-    dedup index, the corpus, and the similarity indexes: the r13 soak
-    caught ``_stage_ivf``'s centroid read dying with a raw
-    Py4JJavaError when a mid-fire deep rebuild flipped the IVF
-    version and GC'd ``centroids_v{N}`` under it, because the old
-    boundary only matched paths under ``index_dir``. Staging is
+    dedup index, the corpus, and the similarity indexes: a mid-fire
+    deep rebuild that flips the IVF version GCs ``centroids_v{N}``
+    under the staging's centroid read. Staging is
     pre-commit, so the batch is losslessly retryable against any of
     these roots."""
     try:
@@ -375,8 +371,8 @@ def _ingest_batch_impl(
 
     ``batch_emb`` + ``ann_index_dir`` / ``ivf_index_dir`` keep the
     STORED similarity indexes consistent with the corpus inside the
-    SAME transaction (r10 verdict item 1): the admitted survivors'
-    vectors (``batch_emb``: ``vec_id`` == ``doc_id``, ``v``) are
+    SAME transaction: the admitted survivors' vectors (``batch_emb``:
+    ``vec_id`` == ``doc_id``, ``v``) are
     shaped for each index at its live geometry, staged beside the
     other parts, and covered by the one ``_committed`` marker — a
     crash at any point leaves dedup halves, corpus, stats, manifest
@@ -401,7 +397,8 @@ def _ingest_batch_impl(
     # admitting against the half-flipped state would split-brain).
     # Before validate_index, because the flip replaces the manifest
     # this call is about to validate.
-    if os.path.isdir(os.path.join(corpus_dir, _STAGED_ROOT)):
+    prep_staged = os.path.join(corpus_dir, staged_commit.STAGED_ROOT)
+    if os.path.isdir(prep_staged):
         from irio2024_mapreduce_spark.plans.corpus_prep import (  # noqa: PLC0415
             recover_prepared,
         )
@@ -421,11 +418,10 @@ def _ingest_batch_impl(
         os.path.abspath(p) for p in (ann_index_dir, ivf_index_dir) if p
     ]
     # every publish lock target must be distinct — index dir, both
-    # similarity roots, AND the corpus publish target (ADVICE r11:
-    # aliasing a sim root to clean_documents.parquet self-blocked at
-    # publish until LockPatienceExhausted instead of failing fast):
-    # each is flocked independently at publish; aliased roots would
-    # self-deadlock the second acquire
+    # similarity roots, AND the corpus publish target: each is flocked
+    # independently at publish, so aliased roots would block the
+    # second acquire until LockPatienceExhausted instead of failing
+    # fast
     lock_targets = sim_roots + [
         os.path.abspath(index_dir),
         os.path.abspath(os.path.join(corpus_dir, "clean_documents.parquet")),
@@ -514,8 +510,8 @@ def _ingest_batch_impl(
     }
     survivors = tagged.filter(F.col("_verdict") == "pass").drop("_verdict")
 
-    # decontamination vs the STORED benchmark digest set (ADVICE r8:
-    # without this, batches appended after the one-shot build would
+    # decontamination vs the STORED benchmark digest set (without
+    # this, batches appended after the one-shot build would
     # silently reintroduce eval-set 13-gram contamination that
     # prepare_corpus stage 4 removed). Same stage order as the
     # one-shot pipeline — funnel first, decontaminate on raw text
@@ -559,7 +555,7 @@ def _ingest_batch_impl(
         ],
     ).localCheckpoint(eager=False)
 
-    # SCHEMA GATE (r14): the corpus append is schema-blind at write
+    # SCHEMA GATE: the corpus append is schema-blind at write
     # time — parquet happily lands files of any shape next to the live
     # ones — so a producer that adds/drops a column or changes a type
     # mid-stream would commit a schema-divergent dataset whose damage
@@ -611,36 +607,19 @@ def _ingest_batch_impl(
         "appended": appended,
     }
 
-    # TRANSACTIONAL COMMIT: every part — index halves, corpus docs,
-    # stats row, manifest row — is first written to a PRIVATE staging
-    # dir (no reader sees it, no lock is needed, maintenance can run
-    # concurrently), then published under the advisory locks with one
-    # atomic commit marker (`_committed`, the os.replace shape the
-    # versioned layout proved). Crash classification is binary:
-    #   * before the marker → the batch never happened. No index row
-    #     landed, so a redelivery admits the docs NORMALLY — the old
-    #     multi-append design's self-conviction loss (index rows
-    #     without corpus rows) cannot occur. Recovery discards the
-    #     stale staging dir.
-    #   * after the marker → the batch is committed. Recovery ROLLS
-    #     FORWARD the remaining file moves (each an atomic rename),
-    #     so the index, corpus, stats, and manifest become visible
-    #     together — all-or-nothing at the batch level.
-    # A maintenance collision at publish time waits briefly for the
-    # lock and then aborts PRE-marker: lossless in both directions
-    # (the old design's 'loud but lossy' window is gone). The index
-    # covers the survivors' RAW text (the bytes tomorrow's duplicates
-    # will carry) while the corpus ships the scrubbed text — dedup on
-    # pre-scrub bytes is deliberate.
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        release_flock,
-    )
-
+    # TRANSACTIONAL COMMIT (module docstring): stage every part
+    # privately, then publish under the advisory locks. A maintenance
+    # collision at publish time waits briefly for the lock and then
+    # aborts before the commit, which is lossless in both directions.
+    # The index covers the survivors' RAW text (the bytes tomorrow's
+    # duplicates will carry) while the corpus ships the scrubbed text:
+    # dedup on pre-scrub bytes is deliberate.
     try:
-        staging, alive = _new_staging_dir(index_dir, batch_id, stream)
+        staging, alive = staged_commit.open_staging(
+            index_dir, _staging_name(batch_id, stream), _roll_forward,
+            _BatchAlreadyCommitted,
+        )
     except _BatchAlreadyCommitted:
-        # a crashed predecessor of this very key committed; it was
-        # rolled forward above — replay its recorded manifest
         prior = read_recorded_manifest(
             spark, index_dir, batch_id, stream=stream
         )
@@ -657,22 +636,11 @@ def _ingest_batch_impl(
             vecs=vecs, ann_index_dir=ann_index_dir,
             ivf_index_dir=ivf_index_dir,
         )
-        _crash_if(_test_crash_after, "stage")
         _publish_staged(staging, _test_crash_after=_test_crash_after)
     finally:
-        # a real crash releases the flock via the kernel; the
-        # simulated one must only release the lock, never clean up —
-        # the leftover staging dir IS the state under test.
-        # Unkeyed (uuid) staging also unlinks its lock file while
-        # still holding it: the uuid address is never re-acquired, so
-        # the unlink-while-held is race-free, and without it every
-        # unkeyed batch leaks one lock file forever.
-        if batch_id is None:
-            try:
-                os.unlink(_alive_lock_path(staging))
-            except FileNotFoundError:
-                pass
-        release_flock(alive)
+        # a simulated crash only releases the lock and never cleans
+        # up: the leftover staging dir is the state under test
+        staged_commit.release(staging, alive, reusable=batch_id is not None)
     if widened_authority is not None:
         # the evolve-admitted batch COMMITTED — only now widen the
         # schema authority (widening at gate time would leave it
@@ -694,132 +662,33 @@ def _ingest_batch_impl(
 
 
 # ------------------------------------------------- transactional commit
-# The staged-batch protocol (r9 verdict item 1). A batch's parts are
-# written to a private dir under `{index_dir}/_staged/`, a JSON publish
-# plan records their live targets, and ONE atomic file creation
-# (`_committed`, the os.replace shape) is the commit point. File moves
-# into the live dirs happen after it and are rolled forward by
-# `recover_staged_batches` on any crash; a pre-commit crash leaves
-# nothing published anywhere, so redelivery admits the docs normally.
-_STAGED_ROOT = "_staged"
+# A batch is one staged commit (``sources.staged_commit``). What is
+# ingest's own: the keyed staging name, the publish by file moves, the
+# external commit markers, and the classification of a staging that
+# vanished before its publication.
 
 # the ingest schema gate's authority sidecar, beside the corpus's
 # clean_documents.parquet (underscore prefix: invisible to every
 # pruned dataset walk and to Spark's file index)
 _SCHEMA_SIDECAR = "_schema.json"
-_COMMITTED = "_committed"
-_PUBLISH_PLAN = "_publish_plan.json"
-
-
-def _alive_lock_path(staging: str) -> str:
-    """The staging dir's liveness flock — a SIBLING file, not a member:
-    it must exist and be held BEFORE the dir is created (a racer's
-    recovery between mkdir and an in-dir flock acquisition would
-    discard a live ingest's brand-new staging), and it must survive
-    the dir's rmtree so the address stays stable."""
-    return staging + "._alive.lock"
 
 
 class _BatchAlreadyCommitted(Exception):
-    """Raised by :func:`_new_staging_dir` when the same (stream,
-    batch_id) was already COMMITTED by a crashed predecessor that the
-    entry recovery could not see (its holder looked alive then) — the
-    leftover is rolled forward, and the caller must return the
-    recorded manifest instead of publishing a duplicate."""
+    """The batch's (stream, batch_id) staging was already committed by
+    a crashed predecessor that entry recovery could not finish (its
+    holder still looked alive). It has been rolled forward; the caller
+    returns the recorded manifest instead of publishing a duplicate."""
 
 
-# SimulatedCrash (the fault-injection type both kill matrices raise)
-# now lives in sources.sinks and is re-exported via the top import —
-# `from plans.ingest import SimulatedCrash` keeps working.
+def _staging_name(batch_id: int | None, stream: str) -> str:
+    """A keyed batch stages under its (stream, batch_id) name, which is
+    also its commit marker's name; an unkeyed one under a unique name
+    that is never staged again."""
+    if batch_id is None:
+        import uuid  # noqa: PLC0415
 
-
-def _crash_if(point: str | None, here: str) -> None:
-    if point == here:
-        raise SimulatedCrash(here)
-
-
-def _new_staging_dir(
-    index_dir: str, batch_id: int | None, stream: str
-) -> tuple[str, str]:
-    """Create the batch's private staging dir and return
-    ``(staging, held_alive_lock)``. The liveness flock is taken on the
-    SIBLING lock file BEFORE any dir mutation, so a concurrent
-    recovery can never classify (and discard) a dir whose owner is
-    alive but hasn't flocked yet. Keyed batches stage under a
-    deterministic (stream, batch_id) name; an existing dir is
-    classified under the held lock: a live holder is a concurrent
-    double-ingest (refused loudly), a COMMITTED leftover is rolled
-    forward and :class:`_BatchAlreadyCommitted` raised (publishing our
-    own copy would duplicate its corpus rows), a pre-commit leftover
-    is discarded."""
-    import shutil  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_flock,
-        release_flock,
-    )
-
-    base = os.path.join(index_dir, _STAGED_ROOT)
-    os.makedirs(base, exist_ok=True)
-    if batch_id is not None:
-        tag = hashlib.md5(stream.encode()).hexdigest()[:10]
-        name = f"{tag}_{int(batch_id)}"
-    else:
-        name = "nokey_" + uuid.uuid4().hex[:16]
-    staging = os.path.join(base, name)
-    try:
-        alive = acquire_flock(
-            _alive_lock_path(staging), purpose="being staged"
-        )
-    except RuntimeError:
-        raise RuntimeError(
-            f"{staging} is being staged by a live process — two "
-            "ingests of the same (stream, batch_id) are running "
-            "concurrently"
-        ) from None
-    try:
-        if os.path.exists(staging):
-            if os.path.exists(os.path.join(staging, _COMMITTED)):
-                # a predecessor CRASHED MID-PUBLISH after committing,
-                # while its holder still looked alive to the entry
-                # recovery — finish its publication, never destroy it
-                _publish_staged(staging, known_committed=True)
-                raise _BatchAlreadyCommitted(staging)
-            # pre-commit leftover — or the remains of a sibling's
-            # post-publication GC whose rmtree deleted the staged
-            # _committed before our check; either way the dir must
-            # go, and the discard must tolerate that racing deleter
-            shutil.rmtree(staging, ignore_errors=True)
-        # the racing GC's final step is an rmdir BY NAME of the top
-        # dir: retry makedirs while it drains, then drop a sentinel
-        # file immediately so a straggler rmdir hits ENOTEMPTY (its
-        # ignore_errors swallows that) instead of deleting our fresh
-        # empty dir. If a vanishingly-timed rmdir still wins, the
-        # staged writes fail and ingest_batch's vanished-input
-        # classification turns it into the re-deliver retryable —
-        # lossless either way.
-        import time as _time  # noqa: PLC0415
-
-        for attempt in range(40):
-            try:
-                os.makedirs(staging)
-                break
-            except FileExistsError:
-                _time.sleep(0.05)
-                shutil.rmtree(staging, ignore_errors=True)
-        else:
-            raise RuntimeError(
-                f"{staging}: could not obtain a clean staging dir "
-                "(a sibling deleter kept the path occupied)"
-            )
-        atomic_write_file(
-            os.path.join(staging, "_owner"), f"{os.getpid()}\n"
-        )
-    except BaseException:
-        release_flock(alive)
-        raise
-    return staging, alive
+        return "nokey_" + uuid.uuid4().hex[:16]
+    return f"{hashlib.md5(stream.encode()).hexdigest()[:10]}_{int(batch_id)}"
 
 
 def _resolve_live_corpus(clean_path: str) -> tuple[str, bool]:
@@ -828,10 +697,6 @@ def _resolve_live_corpus(clean_path: str) -> tuple[str, bool]:
     ``clean_documents.parquet``."""
     target = clean_path
     if os.path.exists(os.path.join(clean_path, "_CURRENT")):
-        from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-            resolve_current,
-        )
-
         target = resolve_current(clean_path)
     is_split = os.path.isdir(target) and any(
         d.startswith("split=") for d in os.listdir(target)
@@ -989,7 +854,7 @@ def _stage_batch(
     else:
         parts["bands"] = corpus_index_bands(survivors)
         parts["rep_shingles"] = corpus_index_rep_shingles(survivors)
-    # keyed stats row (r12): a SIGKILLed publication can be replayed
+    # keyed stats row: a SIGKILLed publication can be replayed
     # wholesale (the marker is the last artifact to land), appending
     # a SECOND stats row for the same batch — unkeyed rows made that
     # census drift permanent. With the (stream, batch_id) key,
@@ -1016,12 +881,12 @@ def _stage_batch(
     # every staged part lands in its OWN subdir from frames whose
     # upstream checkpoints are already materialized (the manifest
     # counts forced them), so the writes are independent Spark jobs —
-    # submit them CONCURRENTLY (r11 verdict item 4: sequential
-    # submission made the two similarity-index parts a +33-47%
-    # wall-clock overhead on a 4k-doc batch; concurrent submission
-    # overlaps their fixed per-job cost with the corpus/index writes
-    # on otherwise-idle executor threads). Protocol unchanged: the
-    # plan is still written AFTER every part is on disk.
+    # submit them CONCURRENTLY (sequential submission made the two
+    # similarity-index parts a +33-47% wall-clock overhead on a
+    # 4k-doc batch; concurrent submission overlaps their fixed
+    # per-job cost with the corpus/index writes on otherwise-idle
+    # executor threads). The plan is still written AFTER every part
+    # is on disk.
     write_jobs: list = []
     for name, df in parts.items():
         write_jobs.append(
@@ -1057,14 +922,13 @@ def _stage_batch(
     # (just _SUCCESS) would make the slow-path roll-forward's
     # schema-less read throw and wedge recovery.
     #
-    # r12 overhead trim (verdict item 4): the base-part writes are
-    # SUBMITTED FIRST, so the vecs semi-join count — the one Spark
-    # job that must resolve before the sim parts can be shaped (it
-    # decides whether to stage them at all and their shuffle width) —
-    # runs OVERLAPPED with them on the main thread instead of
-    # serializing in front of the whole pool; the centroid read moves
-    # inside the IVF job for the same reason. Protocol unchanged: the
-    # plan is still written after every part is on disk.
+    # The base-part writes are SUBMITTED FIRST, so the vecs semi-join
+    # count — the one Spark job that must resolve before the sim parts
+    # can be shaped (it decides whether to stage them at all and their
+    # shuffle width) — runs OVERLAPPED with them on the main thread
+    # instead of serializing in front of the whole pool; the centroid
+    # read moves inside the IVF job for the same reason. The plan is
+    # still written after every part is on disk.
     extras: list[dict] = []
     # Delta tag (shared by the ANN and IVF parts): KEYED batches get
     # the deterministic (stream, batch_id) tag, so a redelivered batch
@@ -1082,7 +946,7 @@ def _stage_batch(
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         futures = [pool.submit(j) for j in write_jobs]
-        # the count doubles as the vector DIMENSION gate (r14): one
+        # the count doubles as the vector DIMENSION gate: one
         # aggregate verifies every admitted vector is EMB_DIM wide
         # before any index part ships it — still pre-commit (no
         # _committed marker yet), so a failed batch is GC'd whole
@@ -1121,62 +985,29 @@ def _stage_batch(
         "corpus_root": clean_path,
         "similarity_indexes": extras,
     }
-    atomic_write_file(
-        os.path.join(staging, _PUBLISH_PLAN), json.dumps(plan, indent=1)
-    )
-
-
-def _acquire_patiently(
-    path: str, attempts: int = 40, wait: float = 0.25
-) -> str:
-    """The shared patient lock acquire (sinks) — publish holds its
-    locks for milliseconds, so brief contention waits, a real
-    compaction still fails loudly. Kept as a module name so tests can
-    shrink the patience."""
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_compaction_lock_patiently,
-    )
-
-    return acquire_compaction_lock_patiently(path, attempts, wait)
+    staged_commit.write_plan(staging, plan)
 
 
 def _move_file(src: str, dst: str) -> str | None:
-    """Move one staged file into place. Returns the destination dir
-    when its fsync is the CALLER's to batch (rename path), or None
-    when durability was already settled here (cross-device path)."""
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        fsync_dir,
-    )
-
-    # flush the staged bytes BEFORE any rename becomes durable: the
-    # commit marker is fsynced, so without this a post-commit power
-    # loss could publish a rename whose data blocks never hit disk —
-    # a truncated parquet file in the live dir with the source gone
-    fd = os.open(src, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
+    """Move one staged file into place (its data was flushed before the
+    commit). Returns the destination dir when its fsync is the
+    caller's to batch (rename path), or None when durability was
+    already settled here (cross-device path)."""
     try:
         # ONLY the rename is in the try: a directory-fsync error must
         # surface as itself, not misroute into the copy fallback
-        # (which would reopen the already-renamed src and crash)
         os.rename(src, dst)
     except OSError as e:
         # the fallback is for CROSS-DEVICE staging only: any other
         # OSError (EACCES, ENOSPC, read-only fs, ...) is a genuine
-        # publish failure that must surface as itself, not be masked
-        # behind a copy attempt whose own error obscures the root cause
+        # publish failure that must surface as itself
         if e.errno != errno.EXDEV:
             raise
-        # cross-device staging (corpus on another mount): copy to a
-        # hidden temp name, fsync, atomic-replace, fsync the DEST
-        # dir, and only then drop the source — the unlink (source fs)
-        # must never become durable before the rename (dest fs), or a
-        # power loss would lose the file on both sides and the
+        # copy to a hidden temp name, fsync, atomic-replace, fsync the
+        # DEST dir, and only then drop the source: the unlink (source
+        # fs) must never become durable before the rename (dest fs),
+        # or a power loss would lose the file on both sides and the
         # roll-forward would wrongly classify it as already moved
-        import shutil  # noqa: PLC0415
-
         tmp = os.path.join(
             os.path.dirname(dst),
             "." + os.path.basename(dst) + "._publish_tmp",
@@ -1203,10 +1034,6 @@ def _move_staged_files(src: str, dst: str) -> None:
     drops the sources)."""
     if not os.path.isdir(src):
         return  # fully moved by an earlier attempt
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        fsync_dir,
-    )
-
     touched: set[str] = set()
     for root, _dirs, files in os.walk(src):
         rel = os.path.relpath(root, src)
@@ -1228,131 +1055,70 @@ def _publish_staged(
     staging: str,
     _test_crash_after: str | None = None,
     known_committed: bool = False,
+    plan: dict | None = None,
 ) -> None:
-    """Commit and publish a staged batch — or roll an already-committed
-    one forward (recovery path; idempotent). ``known_committed`` is
-    set by RECOVERY callers who observed the staging's ``_committed``
-    marker before calling: for them a staging that has vanished was
-    finished by a racing sibling (benign). The OWNER path leaves it
-    False, so a staging destroyed out from under the owner (a
-    generation flip replacing the index dir) raises instead of
-    misreporting the batch as ingested. Takes the index and
-    corpus advisory locks (in that fixed order, with patience), runs
-    swap-crash recovery on EVERY publish target under them — including
-    the corpus, for both the compact and z-order suffix pairs (ADVICE
-    r9 high: the corpus was the one append target never recovered
-    first, so appending beside a crashed swap's ``._compact_old``
-    snapshot split-brained it) — then creates the ``_committed`` marker
-    (THE commit point) and moves the staged files into place."""
-    import shutil  # noqa: PLC0415
+    """Commit and publish a staged batch, or roll an already-committed
+    one forward (recovery path; idempotent). Takes the index and corpus
+    advisory locks (in that fixed order, with patience) and runs
+    swap-crash recovery on every publish target under them, the
+    corpus included for both the compact and z-order suffix pairs
+    (appending beside a crashed swap's ``._compact_old`` snapshot
+    would split-brain it). Then it commits (flush, ``_committed``),
+    moves the staged files into place and touches the keyed batch's
+    external commit marker.
 
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        recover_swap_crash,
-        release_compaction_lock,
-        resolve_current,
-    )
-
-    try:
-        with open(os.path.join(staging, _PUBLISH_PLAN)) as f:
-            plan = json.load(f)
-        # snapshot the commit state TOGETHER with the plan, before the
-        # lock wait: it disambiguates a staging that vanishes while we
-        # block (see below)
-        was_committed = os.path.exists(os.path.join(staging, _COMMITTED))
-    except FileNotFoundError:
-        # the plan is unreadable — either the final cleanup rmtree was
-        # already underway (plan deleted before the staged _committed,
-        # rmtree order is arbitrary) or a generation flip is
-        # destroying `_staged/` out from under us (same arbitrary
-        # order, so EVERY combination of dir-present/dir-gone and
-        # staged-_committed-present/absent is reachable in both
-        # causes). The one reliable discriminator is the EXTERNAL
-        # commit marker, touched only after ALL moves (a keyed
-        # staging's name IS the marker stem): marker present →
-        # publication finished, GC any remains. Otherwise recovery
-        # callers (known_committed) treat the staging as superseded —
-        # whatever is destroying it is the new authority — while the
-        # OWNER raises: returning quietly would report a batch as
-        # ingested that is in neither index nor corpus.
-        name = os.path.basename(staging)
-        marker_done = not name.startswith("nokey_") and os.path.exists(
-            _commit_marker_for_name(
-                os.path.dirname(os.path.dirname(staging)), name
-            )
-        )
-        if marker_done or known_committed:
-            if os.path.isdir(staging):
-                shutil.rmtree(staging, ignore_errors=True)
-            return
-        raise RuntimeError(
-            f"{staging} lost its publish plan before publication (a "
-            "generation flip replaced the index?) — the batch was "
-            "NOT ingested; re-deliver it"
-        ) from None
+    A staging that lost its plan or vanished before publication (a
+    generation flip replacing the index takes ``_staged/`` with it, in
+    arbitrary file order) is finished only if its batch is accounted
+    for: ``known_committed`` (set by recovery, which saw
+    ``_committed``), a keyed batch's external marker (touched only
+    after every move), or an unkeyed staging seen committed with its
+    plan. Otherwise the OWNER raises: returning quietly would report a
+    batch as ingested that is in neither index nor corpus."""
+    name = os.path.basename(staging)
     index_dir = os.path.dirname(os.path.dirname(staging))
+    plan = plan or staged_commit.read_plan(staging)
+    # the commit state is snapshotted with the plan, before the lock wait
+    was_committed = plan is not None and staged_commit.is_committed(staging)
+
+    def vanished() -> None:
+        if name.startswith("nokey_"):
+            done = known_committed or was_committed
+        else:
+            done = known_committed or os.path.exists(
+                _commit_marker_for_name(index_dir, name)
+            )
+        if not done:
+            raise RuntimeError(
+                f"{staging} was destroyed before publication (a "
+                "generation flip replaced the index?) — the batch was "
+                "NOT ingested; re-deliver it"
+            )
+
+    if plan is None:
+        vanished()
+        shutil.rmtree(staging, ignore_errors=True)
+        return
     clean_path = plan["corpus_root"].rstrip("/")
     locks = []
     try:
-        locks.append(_acquire_patiently(index_dir))
+        locks.append(staged_commit.acquire_patiently(index_dir))
         os.makedirs(os.path.dirname(clean_path), exist_ok=True)
-        locks.append(_acquire_patiently(clean_path))
+        locks.append(staged_commit.acquire_patiently(clean_path))
         if not os.path.isdir(staging):
-            # the staging vanished while we waited for the locks. A
-            # KEYED batch has the precise discriminator: a sibling
-            # that finished the publication touched the commit marker
-            # BEFORE the staging rmtree, so marker-present means done
-            # and marker-absent means the staging was DESTROYED
-            # unpublished (a prepare_corpus generation flip replacing
-            # the index dir took `_staged/` with it) — raise, so the
-            # caller redelivers into the new generation instead of
-            # believing a batch ingested that is in neither index nor
-            # corpus. UNKEYED batches have no marker; there
-            # `was_committed` (snapshotted with the plan read) is the
-            # best available signal: only the owner publishes an
-            # uncommitted staging, so uncommitted-and-vanished is the
-            # destroyed case, while committed-and-vanished is either
-            # a sibling's finished roll-forward or a flip that
-            # superseded the whole life — indistinguishable, and the
-            # quiet return matches the flip's replace-wholesale
-            # semantics.
-            if plan["batch_id"] is not None:
-                if os.path.exists(
-                    _commit_marker(
-                        index_dir, plan["batch_id"], plan["stream"]
-                    )
-                ):
-                    return
-                if known_committed:
-                    # recovery caller, keyed marker ABSENT: whatever
-                    # destroyed the committed staging (a generation
-                    # flip) superseded the whole lifecycle — return
-                    # quietly, matching the FileNotFoundError branch's
-                    # supersede semantics (ADVICE r11: raising here
-                    # made a pure reader's entry recovery fail
-                    # spuriously depending on timing, since
-                    # recover_staged_batches only tolerates
-                    # LockPatienceExhausted)
-                    return
-            elif was_committed or known_committed:
-                return
-            raise RuntimeError(
-                f"{staging} disappeared before publication (a "
-                "generation flip replaced the index?) — the batch "
-                "was NOT ingested; re-deliver it"
-            )
+            vanished()
+            return
         for part in plan["index_parts"]:
             recover_swap_crash(os.path.join(index_dir, part))
         recover_swap_crash(clean_path)
         recover_swap_crash(clean_path, "._zorder_tmp", "._zorder_old")
-        committed = os.path.join(staging, _COMMITTED)
-        if not os.path.exists(committed):
-            atomic_write_file(committed, "committed\n")  # commit point
-        _crash_if(_test_crash_after, "commit")
+        if not staged_commit.is_committed(staging):
+            staged_commit.commit(staging, _test_crash_after)
         for part in plan["index_parts"]:
             _move_staged_files(
                 os.path.join(staging, part), os.path.join(index_dir, part)
             )
-            _crash_if(_test_crash_after, f"move:{part}")
+            staged_commit._crash_if(_test_crash_after, f"move:{part}")
         # resolve the corpus target at MOVE time, not plan time: a
         # versioned corpus may have flipped its pointer since the
         # crash, and a roll-forward must land in the CURRENT version
@@ -1360,28 +1126,32 @@ def _publish_staged(
         if os.path.exists(os.path.join(clean_path, "_CURRENT")):
             target = resolve_current(clean_path)
         _move_staged_files(os.path.join(staging, "corpus"), target)
-        _crash_if(_test_crash_after, "move:corpus")
-        for ex in plan.get("similarity_indexes", []):
+        staged_commit._crash_if(_test_crash_after, "move:corpus")
+        for ex in plan["similarity_indexes"]:
             _publish_similarity_index(staging, ex)
-            _crash_if(_test_crash_after, f"move:{ex['staged']}")
+            staged_commit._crash_if(_test_crash_after, f"move:{ex['staged']}")
         if plan["batch_id"] is not None:
             _touch_marker(index_dir, plan["batch_id"], plan["stream"])
-        _crash_if(_test_crash_after, "marker")
+        staged_commit._crash_if(_test_crash_after, "marker")
         # ignore_errors: a sibling's committed-without-plan GC can
-        # interleave with this rmtree (both deleters are cleaning the
-        # same fully-published dir) — neither must crash on the
-        # other's progress
+        # interleave with this rmtree over the same published dir
         shutil.rmtree(staging, ignore_errors=True)
     finally:
         for lock in reversed(locks):
             release_compaction_lock(lock)
 
 
+def _roll_forward(staging: str, plan: dict) -> None:
+    """Recovery's publish of a staging it saw committed."""
+    _publish_staged(staging, known_committed=True, plan=plan)
+
+
 def _publish_similarity_index(staging: str, ex: dict) -> None:
     """Publish one staged similarity-index part under the index's own
     lock (see ``stored_index.publish_delta``)."""
     stored_index.publish_delta(
-        os.path.join(staging, ex["staged"]), ex, _acquire_patiently
+        os.path.join(staging, ex["staged"]), ex,
+        staged_commit.acquire_patiently,
     )
 
 
@@ -1398,145 +1168,27 @@ def _similarity_roots(ann_index_dir, ivf_index_dir):
 def recover_staged_batches(
     index_dir: str, strict: bool = False
 ) -> dict[str, int]:
-    """Classify every leftover staging dir — the recovery half of the
-    transactional commit, run by ``ingest_batch``,
-    ``read_recorded_manifest``, and ``compact_corpus_index`` on entry:
+    """Roll forward or discard every leftover batch staging under
+    ``index_dir`` (``staged_commit.recover``). Run by ``ingest_batch``,
+    ``read_recorded_manifest`` and ``compact_corpus_index`` on entry.
+    A keyed name whose batch has not committed may be staged again by a
+    redelivery, so its lock file is kept.
 
-    * ``_committed`` present → the batch IS committed; roll the
-      remaining moves forward (idempotent) so index, corpus, stats,
-      and manifest become visible together;
-    * no marker, staging flock live → a sibling process is mid-ingest;
-      leave it alone;
-    * no marker, holder dead → a pre-commit crash; nothing of the
-      batch was ever published, discard the staging wholesale (its
-      redelivery admits normally — lossless). The discard happens
-      WHILE HOLDING the staging's own flock: a probe-then-rmtree
-      would race a same-key ingest acquiring the (momentarily free)
-      lock between the probe and the delete, gutting a LIVE staging
-      mid-stage.
+    Returns {rolled_forward, discarded, in_flight}. ``strict`` makes a
+    committed-but-unpublishable staging (lock patience exhausted)
+    re-raise instead of counting as in_flight: the ADMISSION path must
+    not probe an index missing committed rows (it would re-admit their
+    duplicates), while pure readers (manifest replay, compaction
+    entry) may proceed."""
 
-    Returns {rolled_forward, discarded, in_flight}. ``strict`` makes
-    a committed-but-unpublishable staging (lock patience exhausted)
-    re-raise instead of counting as in_flight — the ADMISSION path
-    must not proceed past invisible committed rows, while pure
-    readers (manifest replay, compaction entry) may."""
-    import shutil  # noqa: PLC0415
+    def reusable(name: str) -> bool:
+        return not name.startswith("nokey_") and not os.path.exists(
+            _commit_marker_for_name(index_dir, name)
+        )
 
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_flock,
-        flock_is_live,
-        release_flock,
+    return staged_commit.recover(
+        index_dir, _roll_forward, reusable=reusable, strict=strict
     )
-
-    out = {"rolled_forward": 0, "discarded": 0, "in_flight": 0}
-    base = os.path.join(index_dir, _STAGED_ROOT)
-    if not os.path.isdir(base):
-        return out
-    for name in sorted(os.listdir(base)):
-        d = os.path.join(base, name)
-        if not os.path.isdir(d):
-            # leftover sibling lock files are GC'd once their address
-            # can never be re-acquired: an unkeyed (uuid-named)
-            # address is never reused at all, and a KEYED address
-            # whose commit marker exists is short-circuited by the
-            # manifest replay before any re-acquire (without this, a
-            # long-running stream leaves one lock file per batch
-            # forever and every recovery pays a listdir over the
-            # ever-growing set). ACQUIRE-then-unlink-while-held,
-            # never probe-then-unlink: a bare unlink could erase the
-            # directory entry of a lock a concurrent acquirer just
-            # flocked, making their live lock invisible to every
-            # later checker.
-            if name.endswith("._alive.lock"):
-                stem = name[: -len("._alive.lock")]
-                committed_key = os.path.exists(
-                    _commit_marker_for_name(index_dir, stem)
-                )
-                if not (stem.startswith("nokey_") or committed_key):
-                    continue  # keyed, uncommitted: address may be reused
-                try:
-                    held = acquire_flock(d, purpose="GC'd")
-                except (RuntimeError, FileNotFoundError):
-                    continue  # live holder, or already GC'd
-                try:
-                    if not os.path.isdir(os.path.join(base, stem)):
-                        try:
-                            os.unlink(d)
-                        except FileNotFoundError:
-                            pass
-                finally:
-                    release_flock(held)
-            continue
-        if os.path.exists(os.path.join(d, _COMMITTED)):
-            try:
-                _publish_staged(d, known_committed=True)
-            except LockPatienceExhausted:
-                # ONLY the patience type is tolerated (the staging's
-                # live owner is mid-publish, or a long compaction
-                # holds the index/corpus lock): the batch is committed
-                # and WILL roll forward on the next touch — aborting a
-                # reader's entry recovery over it would turn a
-                # transient lock hold into a spurious failure. Any
-                # other publish error propagates as itself. Under
-                # ``strict`` (the ADMISSION path) even the patience
-                # case re-raises: a committed batch's index rows are
-                # corpus truth, and a batch that probes before they
-                # are visible would re-admit its duplicates — lossless
-                # to fail loudly, lossy to proceed.
-                if strict:
-                    raise
-                out["in_flight"] += 1
-                continue
-            out["rolled_forward"] += 1
-            continue
-        # in-flight probe checks BOTH lock locations (the in-dir path
-        # is the pre-relocation convention — one long-running old
-        # holder must not have its live staging discarded)
-        if flock_is_live(_alive_lock_path(d)) or flock_is_live(
-            os.path.join(d, "_alive.lock")
-        ):
-            out["in_flight"] += 1
-            continue
-        try:
-            held = acquire_flock(_alive_lock_path(d), purpose="recovered")
-        except RuntimeError:
-            out["in_flight"] += 1  # acquired between probe and here
-            continue
-        try:
-            # re-check under the held lock: the owner may have
-            # committed — or a LEGACY in-dir-lock holder (which our
-            # sibling flock does not exclude) may have gone live —
-            # between the probe and our acquisition
-            if os.path.exists(os.path.join(d, _COMMITTED)):
-                try:
-                    _publish_staged(d, known_committed=True)
-                    out["rolled_forward"] += 1
-                except LockPatienceExhausted:
-                    if strict:
-                        raise
-                    out["in_flight"] += 1
-            elif flock_is_live(os.path.join(d, "_alive.lock")):
-                out["in_flight"] += 1
-            elif os.path.isdir(d):
-                # ignore_errors: the one deleter that can race this
-                # discard is a sibling's POST-publication GC (it holds
-                # no alive lock, and its rmtree may have deleted the
-                # staged _committed before we classified) — both want
-                # the dir gone, and two concurrent rmtrees over one
-                # tree throw ENOENT/ENOTEMPTY at each other (the r12
-                # 4-stream chaos soak hit both shapes)
-                shutil.rmtree(d, ignore_errors=True)
-                out["discarded"] += 1
-                if name.startswith("nokey_"):
-                    # dead unkeyed staging: drop its never-reused
-                    # lock address too, while still holding it
-                    try:
-                        os.unlink(_alive_lock_path(d))
-                    except FileNotFoundError:
-                        pass
-        finally:
-            release_flock(held)
-    return out
 
 
 # per-batch manifest parquet schema — fixed so replay reads and
@@ -1555,16 +1207,6 @@ _MANIFEST_KEYS = [
 _MANIFEST_SCHEMA = "stream string, batch_id long, " + ", ".join(
     f"{k} long" for k in _MANIFEST_KEYS
 )
-
-
-def _legacy_marker(index_dir: str, batch_id: int, stream: str) -> str:
-    """The short-lived in-manifests marker location (pre-relocation)
-    — defined beside :func:`_commit_marker` so the migration shim and
-    the current scheme can never silently diverge."""
-    tag = hashlib.md5(stream.encode()).hexdigest()[:10]
-    return os.path.join(
-        index_dir, "manifests", f"_committed_{tag}_{int(batch_id)}"
-    )
 
 
 def _touch_marker(index_dir: str, batch_id: int, stream: str) -> None:
@@ -1586,16 +1228,12 @@ def _commit_marker(index_dir: str, batch_id: int, stream: str) -> str:
     Without the marker every batch — including the common non-replay
     case — paid a full scan of the ever-growing manifests parquet
     before doing any work."""
-    tag = hashlib.md5(stream.encode()).hexdigest()[:10]
-    return _commit_marker_for_name(index_dir, f"{tag}_{int(batch_id)}")
+    return _commit_marker_for_name(index_dir, _staging_name(batch_id, stream))
 
 
 def _commit_marker_for_name(index_dir: str, name: str) -> str:
-    """Marker path from the KEYED staging-dir name — the stem and the
-    staging name are the same ``{tag}_{batch_id}`` string by
-    construction (:func:`_new_staging_dir`), and this helper is the
-    single place that knows the layout (used by the key-derived
-    lookups in ``_publish_staged`` and ``recover_staged_batches``)."""
+    """Marker path from a keyed staging name: the marker and the
+    staging share the ``{tag}_{batch_id}`` name (:func:`_staging_name`)."""
     return os.path.join(index_dir, "_commit_markers", name)
 
 
@@ -1610,42 +1248,18 @@ def _recover_index_part(index_dir: str, part: str) -> None:
     live dir and the next compaction delete the snapshot as post-swap
     garbage, destroying the pre-crash rows. The lock serializes the
     destructive rename/rmtree against a LIVE compaction and against
-    concurrent recoverers (two streams sharing one index); a crashed
-    holder's flock released with its process (kernel-owned liveness),
-    so the crash that created the leftovers cannot also wedge their
-    recovery. Contention waits briefly — a sibling's recovery is
-    sub-second, and raising 'retry after the maintenance window' at
-    it would be misleading; a genuinely long hold (a real compaction)
-    still surfaces as the loud error."""
-    import time  # noqa: PLC0415
-
+    concurrent recoverers; a crashed holder's flock released with its
+    process, so the crash that created the leftovers cannot also wedge
+    their recovery. Contention waits briefly (a sibling's recovery is
+    sub-second); a genuinely long hold (a real compaction) still
+    surfaces as the loud error."""
     path = os.path.join(index_dir, part)
     if not (
         os.path.exists(path + "._compact_tmp")
         or os.path.exists(path + "._compact_old")
     ):
         return
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        acquire_compaction_lock,
-        recover_swap_crash,
-        release_compaction_lock,
-    )
-
-    lock = None
-    for attempt in range(20):  # ~10 s of patience, then loud
-        try:
-            lock = acquire_compaction_lock(index_dir)
-            break
-        except RuntimeError:
-            # a sibling may have finished the recovery while we waited
-            if not (
-                os.path.exists(path + "._compact_tmp")
-                or os.path.exists(path + "._compact_old")
-            ):
-                return
-            if attempt == 19:
-                raise
-            time.sleep(0.5)
+    lock = acquire_compaction_lock_patiently(index_dir)
     try:
         recover_swap_crash(path)
     finally:
@@ -1661,15 +1275,10 @@ def _manifest_rows_path(index_dir: str) -> str | None:
 
 
 def _read_manifest_rows(spark: SparkSession, index_dir: str):
-    """The manifests parquet, schema-normalized: rows written before
-    the stream column existed read as ``stream = ''`` (their implied
-    key) instead of poisoning the dir with a mixed schema that
-    resolves nondeterministically by file footer."""
+    """The manifests parquet in its fixed column order."""
     df = spark.read.option("mergeSchema", "true").parquet(
         _manifest_rows_path(index_dir)
     )
-    if "stream" not in df.columns:
-        df = df.withColumn("stream", F.lit(""))
     return df.select(
         F.coalesce(F.col("stream"), F.lit("")).alias("stream"),
         "batch_id",
@@ -1678,18 +1287,11 @@ def _read_manifest_rows(spark: SparkSession, index_dir: str):
 
 
 def _read_stats_rows(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The stats parquet, schema-normalized (the manifests-read
-    discipline): rows written before the (stream, batch_id) key
-    existed read with NULL keys — their implied class, seed and
-    correction rows — instead of leaving a mixed-schema dir whose
-    footer-resolved schema could silently drop the keys."""
+    """The stats parquet in its fixed column order (seed and
+    correction rows carry a NULL batch_id)."""
     df = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(index_dir, "stats")
     )
-    if "stream" not in df.columns:
-        df = df.withColumn("stream", F.lit(None).cast("string"))
-    if "batch_id" not in df.columns:
-        df = df.withColumn("batch_id", F.lit(None).cast("long"))
     return df.select(
         "stream", "batch_id", "docs", "tokens",
         "text_sketch", "token_sketch",
@@ -1717,7 +1319,7 @@ def regenerate_commit_markers(spark: SparkSession, index_dir: str) -> int:
     """Rebuild the O(1) marker set from the manifest ROWS (the rows
     are the durable record; markers are a cache). Called after
     compaction's manifests swap, and usable as a one-shot backfill
-    for indexes whose batches committed before markers existed.
+    of lost markers.
     Returns the number of markers present afterwards."""
     if _manifest_rows_path(index_dir) is None:
         return 0
@@ -1778,14 +1380,7 @@ def read_recorded_manifest(
     # roll-forward); cheap when no staging exists (one listdir)
     recover_staged_batches(index_dir)
     if not os.path.exists(_commit_marker(index_dir, batch_id, stream)):
-        # run crash recovery first: a legacy in-manifests marker of a
-        # swap-crashed dir rides back with the restored rows
-        _recover_index_part(index_dir, "manifests")
-        if not os.path.exists(_legacy_marker(index_dir, batch_id, stream)):
-            return None
-        # marker written by the short-lived in-manifests layout:
-        # honor it and migrate to the swap-safe location
-        _touch_marker(index_dir, batch_id, stream)
+        return None
     if _manifest_rows_path(index_dir) is None:
         # stale marker without any manifest rows (manual deletion) —
         # treat as never committed rather than crashing the replay
@@ -1881,7 +1476,7 @@ def seed_index_from_prepared(
     checkpoint, which belong to the replaced life
     (:func:`_clear_prior_life`).
 
-    Quarantine lifecycle (r10 verdict item 6): docs tagged
+    Quarantine lifecycle: docs tagged
     ``split='quarantined'`` stay IN the dedup index (``raw_survivors``
     carries them — they were admitted, and they must keep convicting
     tomorrow's redelivered duplicates) but are EXCLUDED from the
@@ -1929,7 +1524,7 @@ def corpus_stats(spark: SparkSession, index_dir: str) -> dict[str, int]:
     affordable way to keep live distinct-token / distinct-text
     counts over a growing corpus.
 
-    Keyed rows (ingest batches, r12) dedupe here the way manifest
+    Keyed rows (ingest batches) dedupe here the way manifest
     rows dedupe in their replay read: a SIGKILLed publication
     replayed wholesale appends a second stats row for the same
     (stream, batch_id), and without the dedupe the census drifted by
@@ -1975,7 +1570,7 @@ def reconcile_corpus_duplicates(
     census_from_corpus: bool | str = False,
 ) -> dict:
     """Deep-maintenance reconciliation of the TWO corpus anomalies
-    optimistic multi-writer ingest can leave (both caught by the r12
+    optimistic multi-writer ingest can leave (both caught by the
     4-stream chaos soak):
 
     * cross-writer race — two concurrent ``ingest_batch`` calls
@@ -2029,20 +1624,20 @@ def reconcile_corpus_duplicates(
     with a MEASURED true-up: append one correction row making the
     census equal the post-rewrite non-quarantined corpus exactly.
     ``census_from_corpus="external"`` — for the ``build_corpus_index``
-    EXTERNAL-seed lifecycle (r12 verdict item 3: the seed docs are
-    censused but live outside ``corpus_path``, so neither pure
+    EXTERNAL-seed lifecycle (the seed docs are censused but live
+    outside ``corpus_path``, so neither pure
     measurement nor loser arithmetic covers composed-replay drift
     there) — trues the census up to seed-rows + measured
     non-quarantined ``corpus_path``: the seed subtotal is the sum of
     the UNTAGGED unkeyed stats rows (seed rows carry NULL
     stream/batch_id; correction rows are tagged
-    stream=``__correction__`` since r13 precisely so this
+    stream=``__correction__`` precisely so this
     decomposition is well-defined), and the keyed + correction
     accounting of the corpus_path domain is replaced wholesale by the
     measurement. The external corpus is NEVER rescanned — its census
     is the immutable seed row, which no ingest path can drift.
     Arithmetic alone can go off by one under composed replay races
-    (the r12 soak's third finding: two replays of one batch can
+    (two replays of one batch can
     admit DIFFERENT verdict sets — one convicting a cross-stream
     duplicate the other raced past — while the keyed stats dedupe
     keeps only one run's summary, so no per-row accounting of the
@@ -2055,22 +1650,17 @@ def reconcile_corpus_duplicates(
     similarity-index rows of removed docs stay until the next deep
     index pass (probes answer by corpus doc ids, which no longer
     include the losers)."""
-    import shutil  # noqa: PLC0415
-
     from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
         _flip_pointer,
-        recover_swap_crash,
-        release_compaction_lock,
-        resolve_current,
     )
 
     corpus_path = corpus_path.rstrip("/")
     locks = []
     try:
-        locks.append(_acquire_patiently(index_dir))
-        locks.append(_acquire_patiently(corpus_path))
-        # recovery-first, mirroring _publish_staged (ADVICE r13-input,
-        # medium): this pass runs FIRST in the deep order, so it is
+        locks.append(staged_commit.acquire_patiently(index_dir))
+        locks.append(staged_commit.acquire_patiently(corpus_path))
+        # recovery-first, mirroring _publish_staged: this pass runs
+        # FIRST in the deep order, so it is
         # the reader that trips over a predecessor's crashed flat swap
         # — a leftover ._compact_old beside a live dir would make this
         # pass's own os.rename(corpus, old) fail ENOTEMPTY, and an old
@@ -2103,8 +1693,8 @@ def reconcile_corpus_duplicates(
             from pyspark.sql.window import Window  # noqa: PLC0415
 
             # row_number, not a doc_id filter: a replayed publication
-            # leaves two PHYSICAL copies of the SAME doc_id (the r12
-            # 4-stream soak's second finding), which an equality
+            # leaves two PHYSICAL copies of the SAME doc_id, which an
+            # equality
             # filter would keep both of. One row survives per digest
             # — the min-doc_id one; extra copies of any doc_id
             # collapse with it. Both frames materialized BEFORE the
@@ -2158,8 +1748,8 @@ def reconcile_corpus_duplicates(
                     F.col("doc_id") != F.col("_keep")
                 ).dropDuplicates(["doc_id"])
                 if has_split:
-                    # null-safe (ADVICE r13-input, low): a plain
-                    # != also drops NULL splits, silently excluding
+                    # null-safe: a plain != also drops NULL splits,
+                    # silently excluding
                     # such rows from loser subtraction
                     non_q = non_q.filter(
                         ~F.col("split").eqNullSafe("quarantined")
@@ -2175,7 +1765,7 @@ def reconcile_corpus_duplicates(
                 d_docs = -int(loss["docs"])
                 d_tokens = -int(loss["tokens"])
                 if d_docs or d_tokens:
-                    # tagged (r13): corrections must be separable
+                    # tagged: corrections must be separable
                     # from seed rows for the external measured mode;
                     # batch_id stays NULL so the census's unkeyed
                     # class still sums them as-is
@@ -2199,8 +1789,8 @@ def reconcile_corpus_duplicates(
             # rows + measured corpus_path for the external-seed
             # lifecycle ("external").
             live = spark.read.parquet(target)
-            # null-safe (ADVICE r13-input, low): a NULL split is not
-            # quarantined and must stay in the measured census
+            # null-safe: a NULL split is not quarantined and must stay
+            # in the measured census
             non_q_live = (
                 live.filter(~F.col("split").eqNullSafe("quarantined"))
                 if has_split
@@ -2217,11 +1807,11 @@ def reconcile_corpus_duplicates(
             base_docs = base_tokens = 0
             if census_from_corpus == "external":
                 # Seed subtotal = the UNTAGGED unkeyed rows. Correction
-                # rows written BEFORE the r13 `__correction__` tagging
+                # rows written before the `__correction__` tagging
                 # carry the same NULL/NULL key; counting them as seed
                 # mass would true the census up to a permanently wrong
-                # total on a ledger with pre-r13 reconciliations
-                # (ADVICE r13, low). Legacy corrections are ledger-mode
+                # total on a ledger with such reconciliations. Untagged
+                # corrections are ledger-mode
                 # LOSER SUBTRACTIONS — always non-positive, while a
                 # seed row is a real census contribution (docs ≥ 0 and
                 # tokens ≥ 0) — so the sign separates the classes
@@ -2307,11 +1897,10 @@ def compact_corpus_index(
     * ``bands`` → full-row dedupe + ``LSH_BUCKET_CAP`` re-cap;
       ``rep_shingles`` → dedupe by doc_id;
     * ``stats`` → rows preserved verbatim (the mergeable counters);
-      ``manifests`` → rows preserved with the schema normalized
-      (pre-stream-column rows gain ``stream = ''``), then the O(1)
+      ``manifests`` → one row per (stream, batch_id), then the O(1)
       commit markers are REGENERATED from the retained rows — they
       live outside the swapped dir, and rebuilding them here also
-      backfills markers for batches committed before markers existed.
+      backfills lost markers.
       Files collapsed to the byte target in both.
 
     Buckets regrow from post-compaction appends (their count restarts,
@@ -2329,8 +1918,6 @@ def compact_corpus_index(
 
     from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
         acquire_compaction_lock,
-        recover_swap_crash,
-        release_compaction_lock,
     )
 
     meta = read_index_manifest(index_dir)
@@ -2350,14 +1937,10 @@ def compact_corpus_index(
             df.dropDuplicates(), ["band", "band_hash"], LSH_BUCKET_CAP
         ),
         "rep_shingles": lambda df: df.dropDuplicates(["doc_id"]),
-        # schema-normalized like manifests (rows written before the
-        # r12 (stream, batch_id) key read with null keys) so the
-        # rewrite leaves ONE schema; rows preserved verbatim — the
+        # rows preserved verbatim in the fixed column order — the
         # replay dedupe happens at corpus_stats read time, where the
         # winner rule lives
         "stats": lambda _df: _read_stats_rows(spark, index_dir),
-        # schema-normalized (pre-stream-column rows gain stream='')
-        # so the rewrite leaves ONE schema behind, not a mixed dir;
         # deduped to ONE row per (stream, batch_id) with the same
         # winner rule read_recorded_manifest replays (appended desc,
         # full counter tuple as tie-break) — crash-duplicated keys
@@ -2403,8 +1986,7 @@ def compact_corpus_index(
                 "files_after": len(_files(path)),
             }
         # markers are a CACHE of the manifest rows — regenerate them
-        # after the manifests swap (this also backfills markers for
-        # rows committed before markers existed)
+        # after the manifests swap (this also backfills lost markers)
         regenerate_commit_markers(spark, index_dir)
     finally:
         release_compaction_lock(lock)

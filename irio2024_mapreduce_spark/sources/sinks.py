@@ -99,7 +99,7 @@ def compact_parquet(
     atomic ``os.replace``. Returns {files_before, files_after,
     bytes}.
 
-    CONCURRENT WRITERS LOSE DATA (ADVICE r8): the rewrite snapshots
+    CONCURRENT WRITERS LOSE DATA: the rewrite snapshots
     ``path`` at ``spark.read`` time, so files appended between that
     read and the rename pair (e.g. by a running ``ingest_batch``)
     are deleted with the old dir. Compaction therefore requires
@@ -113,8 +113,8 @@ def compact_parquet(
     it would silently flatten the layout and lose partition pruning
     for every downstream reader — refused loudly instead.
 
-    ``zorder_cols`` FUSES the two maintenance passes (r9 verdict item
-    4): daily appends both fragment the file set AND erode z-order
+    ``zorder_cols`` FUSES the two maintenance passes: daily appends
+    both fragment the file set AND erode z-order
     clustering, and running ``rewrite_zordered`` after
     ``compact_parquet`` paid two full corpus rewrites per maintenance
     window for one layout goal. With it set, the SAME single rewrite
@@ -453,7 +453,7 @@ def recover_swap_crash(
 
 # ------------------------------------------------------- versioned layout
 # The readers-never-blocked answer the flat compactor's docstring
-# points at (r8 verdict item 6): the dataset lives in version dirs
+# points at: the dataset lives in version dirs
 # `root/v<N>` and readers resolve ONE small pointer file. Compaction
 # writes a brand-new version dir and flips the pointer with an atomic
 # os.replace — there is no rename gap, a reader between any two steps
@@ -628,9 +628,8 @@ def compact_parquet_versioned(
 def reraise_if_vanished_input(e: BaseException, index_dir: str) -> None:
     """Classify a Spark-job failure whose root cause is input files
     vanishing under ``index_dir`` mid-job — the lock-free races the
-    r12 multi-process chaos soak surfaced (tools/chaos_ingest.py:
-    raw Py4JJavaErrors where the protocol owed its documented
-    retryables):
+    multi-process chaos soak (tools/chaos_ingest.py) surfaced as raw
+    Py4JJavaErrors where the protocol owed its documented retryables:
 
     * a maintenance compaction SWAPPED an index part while this
       reader's scan had its file list (the entry check_not_compacting
@@ -638,9 +637,9 @@ def reraise_if_vanished_input(e: BaseException, index_dir: str) -> None:
     * a ``prepare_corpus`` generation flip replaced the index dir —
       including ``_staged/`` — while a batch was staging;
     * a full index build's orphan GC removed the version dirs a
-      lock-free rebuild snapshot was still reading (ADVICE r12, low —
-      the reason this lives in the shared module: ingest AND the
-      index-maintenance entry points classify the same way).
+      lock-free rebuild snapshot was still reading (the reason this
+      lives in the shared module: ingest AND the index-maintenance
+      entry points classify the same way).
 
     All are pre-commit (manifest rows/flips are written last), so the
     operation is losslessly retryable; re-raise with the protocol's
@@ -659,7 +658,7 @@ def reraise_if_vanished_input(e: BaseException, index_dir: str) -> None:
             # a staged write whose dir was destroyed under it (a
             # generation flip taking `_staged/` away mid-write)
             # surfaces from Hadoop's committer as these two shapes,
-            # not as FileNotFound (r12 4-stream soak, third form)
+            # not as FileNotFound
             "Mkdirs failed to create",
             "Failed to rename",
         )
@@ -755,8 +754,7 @@ def run_lockfree_read(index_dir: str, attempt):
     it (a maintenance fold dropping just-folded delta dirs, a version
     swap's GC), then classifying the failure to the protocol's
     documented retryable via :func:`reraise_if_vanished_input` instead
-    of leaking a raw Py4JJavaError (ADVICE r14, medium: probes were
-    the one lock-free reader without this boundary)."""
+    of leaking a raw Py4JJavaError."""
     try:
         return attempt()
     except RuntimeError:
@@ -822,7 +820,7 @@ def publish_delta_marker(staged_dir: str, target: str) -> None:
 
 
 def consume_fold_crash_flag(kind: str) -> None:
-    """FAULT INJECTION for the chaos soak (VERDICT r13 item 6): die
+    """FAULT INJECTION for the chaos soak: die
     like a SIGKILL between a maintenance fold's dynamic-partition
     append and its delta-root drop — the one crash window the
     single-process kill matrices pin but the multi-process soak had

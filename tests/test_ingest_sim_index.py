@@ -307,7 +307,7 @@ def test_strict_entry_recovery_fails_loudly_on_held_lock(
     a committed predecessor whose index rows are not yet visible — a
     batch probing then would re-admit the predecessor's duplicates.
     Entry recovery is strict: lock patience exhaustion re-raises."""
-    from irio2024_mapreduce_spark.plans import ingest as ingest_mod
+    from irio2024_mapreduce_spark.sources import staged_commit
     from irio2024_mapreduce_spark.sources.sinks import (
         LockPatienceExhausted,
         acquire_compaction_lock,
@@ -319,8 +319,8 @@ def test_strict_entry_recovery_fails_loudly_on_held_lock(
     with pytest.raises(SimulatedCrash):
         _ingest(spark, idx, out, ann, ivf, crash="commit")
     monkeypatch.setattr(
-        ingest_mod,
-        "_acquire_patiently",
+        staged_commit,
+        "acquire_patiently",
         lambda path: acquire_compaction_lock_patiently(path, 2, 0.05),
     )
     lock = acquire_compaction_lock(idx)

@@ -1,7 +1,7 @@
 """Maintenance-during-ingest liveness (r11 verdict item 6).
 
 ``ingest_batch``'s strict entry re-raises ``LockPatienceExhausted``
-(~10 s patience, ``plans/ingest.py::_acquire_patiently``), so the
+(~10 s patience, ``sources/staged_commit.py::acquire_patiently``), so the
 no-starvation claim decomposes into two measurable facts plus one
 composition pin:
 
@@ -54,7 +54,7 @@ from irio2024_mapreduce_spark.sources.sinks import (
     LockPatienceExhausted,
 )
 
-# ingest publish patience: _acquire_patiently's defaults (40 × 0.25 s)
+# ingest publish patience: staged_commit.acquire_patiently's defaults (40 × 0.25 s)
 INGEST_PATIENCE_S = 40 * 0.25
 
 WORDS = (

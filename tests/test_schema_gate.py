@@ -21,10 +21,10 @@ import pytest
 
 from irio2024_mapreduce_spark.plans.ingest import (
     _SCHEMA_SIDECAR,
-    _STAGED_ROOT,
     build_corpus_index,
     ingest_batch,
 )
+from irio2024_mapreduce_spark.sources.staged_commit import STAGED_ROOT
 
 BASE_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -97,7 +97,7 @@ def _assert_rejected_cleanly(spark, idx, out, ids_before, batch_id):
     staged, the key still free."""
     assert _corpus_ids(spark, out) == ids_before
     assert _manifest_count(spark, idx, batch_id) == 0
-    staged = os.path.join(idx, _STAGED_ROOT)
+    staged = os.path.join(idx, STAGED_ROOT)
     assert not os.path.isdir(staged) or os.listdir(staged) == []
 
 

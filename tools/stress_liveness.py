@@ -37,7 +37,7 @@ WORDS = (
 
 EMB_DIM = 64
 
-PATIENCE_S = 40 * 0.25  # plans/ingest.py::_acquire_patiently defaults
+PATIENCE_S = 40 * 0.25  # sources/staged_commit.py::acquire_patiently defaults
 INGEST_PUBLISH_BOUND_S = 2.0
 
 
