@@ -32,6 +32,8 @@ hash-checked.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,92 +142,62 @@ def _cap_blocks_lowcard(rows: DataFrame, keys: list[str], cap: int) -> DataFrame
     return rows.join(F.broadcast(ok), keys, "inner")
 
 
-
-
 def _tokens(col: str = "text") -> Column:
     return F.split(col, " ")
 
 
 def _collapse_reps(
-    raw: DataFrame,
-    hash_col: Column,
-    shape: str = "exchange_first",
-    nbytes: int | None = None,
+    raw: DataFrame, hash_col: Column, nbytes: int | None = None
 ) -> DataFrame:
-    """Exact-duplicate collapse shared by every dedup family:
-    one representative row ``(_h, doc_id, text)`` per distinct
-    ``hash_col`` value — min ``doc_id`` wins, and the winner's text is
-    (by hash equality) THE group's text. All eight call sites route
-    through here; the SHAPE per site was decided by interleaved A/B
-    over the full build+exec wall (tools/ab_r15_collapse.py, r15 —
-    VERDICT r14 items 1+2; parity-gated, all shapes hash-identical):
+    """Exact-duplicate collapse shared by every dedup family: one
+    representative row per distinct ``hash_col`` value — the group's
+    min ``doc_id`` — carrying ``raw``'s columns plus the hash as
+    ``_h`` (Catalyst prunes whatever a caller does not read).
 
-    * ``exchange_first`` (r14 default, kept where it measured best:
-      the minhash and simhash families): ONE user-pinned exchange on
-      the collapse key BEFORE the groupBy — the agg's hash
-      requirement is satisfied by the user exchange, AQE never
-      coalesces user-numbered repartitions so downstream shingle/vote
-      compute keeps its parallelism. The full raw text shuffles once;
-      there is no map-side partial agg (the measured fixture dup
-      factor is 1.002, so partial agg collapses nothing anyway).
-    * ``agg_first`` (ngram posting family): groupBy first — partial
-      agg collapses duplicates map-side (2·corpus/d shuffle bytes at
-      dup factor d, the winning trade whenever d > 2) — then a hash
-      exchange on doc_id respreads the reps for the shingle stage
-      (no round-robin, so no sortBeforeRepartition pass).
-    * ``ids_semi`` (incremental corpus index; guide §3.2/§8 decide-
-      on-proxies): winners = groupBy(hash).agg(min(doc_id)) — a
-      HASH-aggregate over (hex, long) rows with map-side partials;
-      the text NEVER enters an aggregation buffer or its sort. The
-      winners' ids semi-join back (broadcast at fixture scale, SMJ on
-      doc_id at corpus scale) and one doc_id exchange spreads the
-      reps. Two scans of the input, but the only corpus-sized shuffle
-      carries winners' text exactly once at ANY dup factor.
-
-    ``nbytes`` (the input's on-disk footprint, when the caller knows
-    its table) sizes the pinned exchanges to the DATA instead of the
-    core count via :func:`exchange_width` (VERDICT r14 item 6) —
-    locally this floors at the session parallelism, so bench behavior
-    is unchanged; at corpus scale the width grows with bytes instead
-    of leaving AQE-uncoalesced 128-partition exchanges to hold TBs.
+    * Winners by id: ``groupBy(_h).agg(min(doc_id))`` runs over
+      ``(hash, doc_id)`` rows only, a hash aggregate with map-side
+      partials. Text never enters an aggregation buffer or its sort,
+      so no dup factor can make the collapse buffer or spill document
+      bodies.
+    * Null-safe attach: the raw rows semi-join back on ``doc_id`` AND
+      a null-safe ``_h``. A row survives only as its own hash group's
+      winner, so a ``doc_id`` reused across two texts cannot bring a
+      second row for one hash, and the NULL-text group (NULL ``_h``)
+      keeps its one winner like any other group.
+    * One spread: a hash exchange on ``doc_id`` spreads the reps for
+      the per-doc shingle work downstream. ``nbytes`` (the input's
+      on-disk footprint, when the caller knows its table) sizes it to
+      the data via :func:`exchange_width`; locally that floors at the
+      session parallelism.
     """
-    spark = raw.sparkSession
-    width = exchange_width(spark, nbytes)
-    if shape == "agg_first":
-        return (
-            raw.groupBy(hash_col.alias("_h"))
-            .agg(
-                F.min("doc_id").alias("doc_id"),
-                F.first("text").alias("text"),
-            )
-            .repartition(width, "doc_id")
-        )
-    if shape == "ids_semi":
-        win = (
-            raw.select(hash_col.alias("_h"), "doc_id")
-            .groupBy("_h")
-            .agg(F.min("doc_id").alias("doc_id"))
-        )
-        return (
-            raw.join(win.select("doc_id"), "doc_id", "semi")
-            .select(hash_col.alias("_h"), "doc_id", "text")
-            .repartition(width, "doc_id")
-        )
-    return (
-        raw.repartition(width, hash_col)
-        .groupBy(hash_col.alias("_h"))
-        .agg(F.min("doc_id").alias("doc_id"), F.first("text").alias("text"))
+    hashed = raw.withColumn("_h", hash_col)
+    winners = hashed.groupBy(F.col("_h").alias("_wh")).agg(
+        F.min("doc_id").alias("_wid")
+    )
+    return hashed.join(
+        winners,
+        (F.col("doc_id") == F.col("_wid"))
+        & F.col("_h").eqNullSafe(F.col("_wh")),
+        "semi",
+    ).repartition(exchange_width(raw.sparkSession, nbytes), "doc_id")
+
+
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, shingles), tokens split once per doc
+    (see :func:`_shingles_from`)."""
+    return docs.withColumn("_toks", _tokens()).select(
+        "doc_id", _shingles_from(F.col("_toks")).alias("shingles")
     )
 
 
 def _shingles_from(toks: Column, n: int = 3) -> Column:
     """Distinct n-token shingles ('w1 w2 w3') from a pre-materialized
     token-array COLUMN. Call sites must project ``F.split(text)`` into
-    its own column first (r14, guide §1.2 per-task work): passing the
-    split expression directly inlines it into the transform lambda,
-    where the interpreted higher-order-function path re-splits the
-    whole text once PER SHINGLE — O(len·n_shingles) per doc instead of
-    O(len). The two references here (sequence bound + slice) also keep
+    its own column first: passing the split expression directly
+    inlines it into the transform lambda, where the interpreted
+    higher-order-function path re-splits the whole text once PER
+    SHINGLE — O(len·n_shingles) per doc instead of O(len). The two
+    references here (sequence bound + slice) also keep
     CollapseProject from folding the token projection back into the
     lambda (multi-use non-cheap alias), pinned by tests/test_plans.py.
     """
@@ -274,23 +246,21 @@ def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH_BUCKET_CAP (boilerplate corpora) are dropped before the
     self-join, bounding candidates per doc at cap·bands.
 
-    Exact duplicates are collapsed FIRST (group by sha2, min doc_id
-    as representative): a group of d identical docs forms a d-clique
-    in every LSH band, so candidate pairs grow with d² — measured 34×
-    runtime for 10× data on a duplicate-heavy corpus before this
-    collapse, 1.2× after (tools/stress_scale.py). Identical docs
-    don't need MinHash; the hash collapse catches them in one linear
-    aggregation, and near-dup pairs are reported between distinct
-    contents' representatives.
+    Exact duplicates are collapsed FIRST (:func:`_collapse_reps` on
+    sha2, min doc_id as representative): a group of d identical docs
+    forms a d-clique in every LSH band, so candidate pairs grow with
+    d² — measured 34× runtime for 10× data on a duplicate-heavy
+    corpus before this collapse, 1.2× after (tools/stress_scale.py).
+    Identical docs don't need MinHash; the hash collapse catches them
+    in one linear aggregation, and near-dup pairs are reported
+    between distinct contents' representatives.
     """
-    docs = (
+    docs = _shingle_sets(
         _collapse_reps(
             load_table(spark, sf_dir, "documents"),
             F.sha2("text", 256),
             nbytes=table_bytes(sf_dir, "documents"),
         )
-        .withColumn("_toks", _tokens())
-        .select("doc_id", _shingles_from(F.col("_toks")).alias("shingles"))
     )
     pairs = _minhash_candidates(docs)
     raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -313,8 +283,8 @@ def _verify_candidate_pairs(pairs: DataFrame, raw: DataFrame) -> DataFrame:
             )
         ).alias("m"),
     ).select("pair", "m.role", "m.doc_id")
-    # Spread the candidate rows on the PAIR key before attaching text
-    # (r15): `pairs` arrives from a dropDuplicates exchange that AQE
+    # Spread the candidate rows on the PAIR key before attaching text:
+    # `pairs` arrives from a dropDuplicates exchange that AQE
     # coalesces to ~1 partition at small candidate volume, and the
     # text attach is a broadcast join (raw fits locally), which
     # PRESERVES that partitioning — so the expensive per-candidate
@@ -352,102 +322,67 @@ def _verify_candidate_pairs(pairs: DataFrame, raw: DataFrame) -> DataFrame:
     )
 
 
+# Seeded min-hash permutation ``i`` of an element hash ``x``, per LSH
+# hash family. The family's name is also the SQL function hashing one
+# string (a shingle, a band slice). xxhash64 is the production family:
+# one string hash per shingle, then K re-hashes of the 8-byte longs
+# (Spark 4's ANSI mode forbids the long overflow of cheaper affine
+# permutations). md5 is the DuckDB-expressible family of the oracle
+# twins: fixed-length lowercase hex orders lexicographically exactly
+# like the 128-bit number it encodes, so ``array_min`` over md5 hex IS
+# a min-hash, at about 10x the hashing cost (33 md5 calls per shingle).
+_MINHASH_PERM_SQL = {
+    "xxhash64": "xxhash64({i}, x)",
+    "md5": "md5(concat('{i}:', x))",
+}
+
+
 def _band_rows(
-    docs: DataFrame, bucket_cap: int = LSH_BUCKET_CAP
+    docs: DataFrame,
+    bucket_cap: int = LSH_BUCKET_CAP,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """(doc_id, shingles) → capped LSH band rows (doc_id, band,
-    band_hash) — the shared signature/banding front-end of
-    :func:`_minhash_candidates` (corpus self-join) and the
-    incremental band index (:func:`corpus_index_bands`)."""
-    # One xxhash64 pass over the shingle STRINGS, then K re-hashes of
-    # the resulting 8-byte longs (xxhash64 seeded by the perm id):
-    # ~K× cheaper than K salted string hashes — fixed-width hashing
-    # instead of repeated string traversal — and entirely map-side (no
-    # shuffle to build signatures). Wrapping affine permutations would
-    # be cheaper still but ANSI mode (Spark 4 default) forbids long
-    # overflow.
-    #
-    # Both the K-min-hash array and the band structs are built as
-    # SINGLE F.expr strings, not Python loops over Column objects: the
-    # loop form issued hundreds of py4j round-trips per plan build
-    # (several SECONDS of driver time for this query alone) and minted
-    # the matching pile of JavaObject refs whose later detach storms
-    # are the SCALE.md round-5 transient; one SQL string is one py4j
-    # call, parsed JVM-side into the IDENTICAL expression tree (int
-    # literals, element_at indices, concat_ws all parse to the same
-    # typed nodes the loop form produced — parity pinned by tests and
-    # the stable recall numbers).
+    band_hash) under hash ``family`` (see ``_MINHASH_PERM_SQL``) — the
+    signature/banding front end of :func:`_minhash_candidates` (corpus
+    self-join), the incremental band index (:func:`corpus_index_bands`)
+    and its batch probe. Both families share every line but the hash
+    calls, so the md5 twins differ from the graded path only there.
+
+    The K-min-hash array and the band structs are each ONE ``F.expr``
+    string, not Python loops over Column objects: the loop form issued
+    hundreds of py4j round-trips per plan build (seconds of driver
+    time) and minted as many JavaObject refs; one SQL string is one
+    py4j call that parses JVM-side into the identical expression tree.
+    Signatures are built map-side; no shuffle."""
     mins = ", ".join(
-        f"array_min(transform(h, x -> xxhash64({i}, x)))"
+        "array_min(transform(h, x -> %s))"
+        % _MINHASH_PERM_SQL[family].format(i=i)
         for i in range(MINHASH_PERMS)
     )
-    sig = docs.select(
-        "doc_id",
-        "shingles",
-        F.transform("shingles", lambda s: F.xxhash64(s)).alias("h"),
-    ).select("doc_id", "shingles", F.expr(f"array({mins})").alias("sig"))
-    # Band rows carry ONLY (doc_id, band, band_hash) — the shingle
-    # arrays must not ride through the 8× explode, the join, or the
-    # pair dedup (at 100 TB they're the document bodies, effectively).
     bands = ", ".join(
-        "named_struct('band', {b}, 'band_hash', "
-        "xxhash64(concat_ws(',', {elems})))".format(
-            b=b,
-            elems=", ".join(
-                f"element_at(sig, {b * LSH_ROWS + r + 1})"
-                for r in range(LSH_ROWS)
-            ),
+        f"named_struct('band', {b}, 'band_hash', {family}(concat_ws(',', "
+        + ", ".join(
+            f"element_at(sig, {b * LSH_ROWS + r + 1})" for r in range(LSH_ROWS)
         )
+        + ")))"
         for b in range(LSH_BANDS)
     )
-    banded = sig.select(
-        "doc_id", F.expr(f"explode(array({bands}))").alias("bh")
-    ).select("doc_id", "bh.band", "bh.band_hash")
-
+    # band rows carry ONLY (doc_id, band, band_hash): the shingle
+    # arrays must not ride through the 8x explode, the join or the pair
+    # dedup (at corpus scale they are the document bodies, effectively)
+    banded = (
+        docs.select(
+            "doc_id",
+            F.expr(f"transform(shingles, s -> {family}(s))").alias("h"),
+        )
+        .select("doc_id", F.expr(f"array({mins})").alias("sig"))
+        .select("doc_id", F.expr(f"explode(array({bands}))").alias("bh"))
+        .select("doc_id", "bh.band", "bh.band_hash")
+    )
     # hot-bucket guard BEFORE the self-join (see LSH_BUCKET_CAP);
     # checkpoint_input: the signature pipeline above is the expensive
     # part and must compute once, not once per cap consumer
-    return _cap_buckets(
-        banded, ["band", "band_hash"], bucket_cap, checkpoint_input=True
-    )
-
-
-def _md5_band_rows(
-    docs: DataFrame, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
-    """The DuckDB-EXPRESSIBLE twin of :func:`_band_rows`: min-hash
-    over md5 HEX STRINGS instead of seeded xxhash64 longs. Works
-    because fixed-length lowercase hex orders lexicographically
-    exactly like the 128-bit number it encodes, so
-    ``array_min(md5(...))`` IS a min-hash — and DuckDB computes the
-    identical md5/list_min, making the whole LSH pipeline (signature,
-    banding, hot-bucket cap, candidate join) oracle-checkable.
-    ~an order of magnitude more hashing cost than the xxhash64 form
-    (33 md5 calls per shingle vs 1 string hash + 32 long re-hashes),
-    which is why the GRADED dedup_near keeps the fast path and this
-    backs the local-oracle twin `dedup_near_md5`."""
-    base = docs.select(
-        "doc_id", F.expr("transform(shingles, s -> md5(s))").alias("h")
-    )
-    mins = ", ".join(
-        f"array_min(transform(h, x -> md5(concat('{i}:', x))))"
-        for i in range(MINHASH_PERMS)
-    )
-    sig = base.select("doc_id", F.expr(f"array({mins})").alias("sig"))
-    bands = ", ".join(
-        "named_struct('band', {b}, 'band_hash', "
-        "md5(concat_ws(',', {elems})))".format(
-            b=b,
-            elems=", ".join(
-                f"element_at(sig, {b * LSH_ROWS + r + 1})"
-                for r in range(LSH_ROWS)
-            ),
-        )
-        for b in range(LSH_BANDS)
-    )
-    banded = sig.select(
-        "doc_id", F.expr(f"explode(array({bands}))").alias("bh")
-    ).select("doc_id", "bh.band", "bh.band_hash")
     return _cap_buckets(
         banded, ["band", "band_hash"], bucket_cap, checkpoint_input=True
     )
@@ -463,9 +398,7 @@ def dedup_near_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against an independent engine instead of rows-only.
     NULL-text docs are excluded on both sides (no shingle mass; see
     corpus_index_bands for the [""]-shingle hazard)."""
-    # same collapse + pre-split token shape as dedup_near (the twins
-    # must keep identical pipeline structure)
-    docs = (
+    docs = _shingle_sets(
         _collapse_reps(
             load_table(spark, sf_dir, "documents").filter(
                 F.col("text").isNotNull()
@@ -473,31 +406,31 @@ def dedup_near_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("text"),
             nbytes=table_bytes(sf_dir, "documents"),
         )
-        .withColumn("_toks", _tokens())
-        .select("doc_id", _shingles_from(F.col("_toks")).alias("shingles"))
     )
-    pairs = _band_pair_join(_md5_band_rows(docs))
+    pairs = _minhash_candidates(docs, family="md5")
     raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return _verify_candidate_pairs(pairs, raw)
 
 
-def _band_pair_join(banded: DataFrame) -> DataFrame:
-    """Capped band rows → deduplicated candidate pairs (doc_a,
-    doc_b). ONE implementation shared by the graded xxhash64 path
-    (:func:`_minhash_candidates`) and the md5 oracle twin
-    (:func:`dedup_near_md5`) — the twins exist to prove 'only the
-    hash family differs', so the join itself must be literally the
-    same code (a fix applied to one copy would silently break that
-    guarantee).
+def _minhash_candidates(
+    docs: DataFrame,
+    bucket_cap: int = LSH_BUCKET_CAP,
+    family: str = "xxhash64",
+) -> DataFrame:
+    """(doc_id, shingles) → deduplicated candidate pairs (doc_a,
+    doc_b): the capped band rows of :func:`_band_rows` self-joined on
+    (band, band_hash). One implementation for the graded xxhash64
+    path and the md5 oracle twin, so a fix to one is a fix to both.
 
     The localCheckpoint materializes the band rows ONCE before the
     self-join: both join sides otherwise instantiate the whole
-    signature pipeline (K minhashes per shingle — the expensive
-    part) as separate subtrees, and no exchange reuse rescues it
-    because the planner broadcasts one side. Band rows are just
-    (doc_id, band, band_hash) — cheap to hold; lazy, so the join's
+    signature pipeline as separate subtrees, and no exchange reuse
+    rescues it because the planner broadcasts one side. Band rows are
+    just (doc_id, band, band_hash), cheap to hold; lazy, so the join's
     own action materializes it."""
-    banded = banded.localCheckpoint(eager=False)
+    banded = _band_rows(docs, bucket_cap, family).localCheckpoint(
+        eager=False
+    )
     return (
         banded.alias("l")
         .join(
@@ -512,15 +445,6 @@ def _band_pair_join(banded: DataFrame) -> DataFrame:
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-
-
-def _minhash_candidates(
-    docs: DataFrame, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
-    """(doc_id, shingles) → deduplicated candidate pairs
-    (doc_a, doc_b) via MinHash signatures + LSH banding, with the
-    hot-bucket cap applied before the band self-join."""
-    return _band_pair_join(_band_rows(docs, bucket_cap))
 
 
 # ---------------------------------------------------------------- simhash
@@ -620,7 +544,7 @@ def _simhash_chunk_pairs(
     # hot-bucket guard BEFORE the self-join (see LSH_BUCKET_CAP)
     chunks = _cap_buckets(chunks, ["chunk", "chunk_val"], bucket_cap)
     # one materialization of the signature pipeline for both join
-    # sides (see _band_pair_join) — chunk rows are 4 small rows
+    # sides (see _minhash_candidates) — chunk rows are 4 small rows
     # per doc
     chunks = chunks.localCheckpoint(eager=False)
     l, r = chunks.alias("l"), chunks.alias("r")
@@ -784,53 +708,31 @@ def _ngram_posting_join_docs(
 ) -> DataFrame:
     """Frame-level form of :func:`_ngram_posting_join` — the leakage
     quarantine (operators.llm_prep) runs the same machinery over an
-    arbitrary tagged corpus, not just the fixture table."""
-    # agg_first collapse (r15 A/B: 1.90 vs exchange_first's 2.13 s
-    # min, 2.27 vs 3.00 median full-wall — this family evaluates the
-    # collapse subtree under the block cap's TWO consumers, so the
-    # map-side-collapsed partial-agg form repeats less work), tokens
-    # split ONCE per doc (_shingles_from), and the len_band block cap
-    # applied BEFORE shingling: the cap decision needs only len_band,
-    # so its sizes subtree prunes to a slim (doc_id, len_band)
-    # projection and the shingle arrays are built a single time, only
-    # for admitted docs.
-    docs = (
-        _collapse_reps(raw, F.sha2("text", 256), "agg_first", nbytes)
-        .withColumn("_toks", _tokens())
-        .select(
-            "doc_id",
-            "_toks",
-            (F.size("_toks") / 8).cast("long").alias("len_band"),
+    arbitrary tagged corpus, not just the fixture table. The collapse
+    already spreads the reps on doc_id, so the postings skip their
+    own respread."""
+    reps = _collapse_reps(raw, F.sha2("text", 256), nbytes)
+    return _posting_self_join(
+        _side_postings(
+            reps,
+            respread=False,
+            block_cap=PAIRWISE_BLOCK_CAP,
+            posting_cap=posting_cap,
         )
     )
-    docs = _cap_blocks_lowcard(docs, ["len_band"], PAIRWISE_BLOCK_CAP)
-    docs = docs.select(
-        "doc_id",
-        _shingles_from(F.col("_toks")).alias("shingles"),
-        "len_band",
-    )
-    # Posting-list formulation: explode to (band, shingle, doc) and
-    # equi-join on (band, shingle), counting shared shingles per pair.
-    # Identical exact Jaccard (|A∩B| from the join, |A∪B| = |A|+|B|−∩
-    # — shingle sets are distinct by construction), but the work is
-    # proportional to Σ per-shingle posting-list², not band² array
-    # intersections: measured 25 s → join-bound seconds at sf0.1, and
-    # at 100 TB the hot path is a shuffle on (band, shingle) instead
-    # of an all-pairs nested loop per band.
-    posting = docs.select(
-        "doc_id",
-        "len_band",
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("sh"),
-    )
-    # hot-shingle guard (see NGRAM_POSTING_CAP): (band, shingle) is
-    # high-cardinality, so the groupBy+hash-join cap applies
-    posting = _cap_buckets(posting, ["len_band", "sh"], posting_cap)
-    # one materialization of the shingle pipeline for both join sides
-    # (see _minhash_candidates); posting rows carry the shingle
-    # strings, i.e. ~3× corpus tokens — MEMORY_AND_DISK spillable, and
-    # strictly cheaper than recomputing the collapse+shingle+cap
-    # subtree twice
+
+
+def _posting_self_join(posting: DataFrame) -> DataFrame:
+    """(len_band, sh) self-join of posting rows: one row per shingle
+    that a pair (l.doc_id < r.doc_id) of the same length band shares.
+    Work is proportional to Σ per-shingle posting-list², not band²
+    array intersections, and at corpus scale the hot path is a shuffle
+    on (band, shingle) instead of an all-pairs nested loop per band.
+
+    The localCheckpoint is one materialization of the shingle pipeline
+    for both join sides: posting rows carry the shingle strings (~3x
+    corpus tokens; MEMORY_AND_DISK spillable), strictly cheaper than
+    recomputing the collapse+shingle+cap subtree twice."""
     posting = posting.localCheckpoint(eager=False)
     l, r = posting.alias("l"), posting.alias("r")
     return l.join(
@@ -838,6 +740,33 @@ def _ngram_posting_join_docs(
         (F.col("l.len_band") == F.col("r.len_band"))
         & (F.col("l.sh") == F.col("r.sh"))
         & (F.col("l.doc_id") < F.col("r.doc_id")),
+    )
+
+
+def _shared_jaccard(joined: DataFrame) -> DataFrame:
+    """Posting-join rows (sides aliased ``l`` and ``r``, one row per
+    shared shingle) → (doc_a, doc_b, jaccard) for the pairs whose
+    3-gram Jaccard, rounded to 6 places like every oracle, is ≥ 0.5.
+    |A∩B| is the row count and |A∪B| = |A| + |B| − |A∩B| (shingle sets
+    are distinct by construction), so no shingle array is compared."""
+    return (
+        joined.groupBy(
+            F.col("l.doc_id").alias("doc_a"),
+            F.col("r.doc_id").alias("doc_b"),
+            F.col("l.n_sh").alias("n_a"),
+            F.col("r.n_sh").alias("n_b"),
+        )
+        .agg(F.count("*").alias("n_shared"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                F.col("n_shared")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
+                6,
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
@@ -870,28 +799,7 @@ def ngram_jaccard_pairs_docs(
     """Frame-level form of :func:`dedup_ngram_jaccard`: (doc_a, doc_b,
     jaccard) pairs of exact-dup representatives with 3-gram Jaccard
     >= 0.5, over any (doc_id, text) frame — same banding and caps."""
-    shared = (
-        _ngram_posting_join_docs(raw, nbytes=nbytes)
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.n_sh").alias("n_a"),
-            F.col("r.n_sh").alias("n_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
-    )
-    return (
-        shared.select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
+    return _shared_jaccard(_ngram_posting_join_docs(raw, nbytes=nbytes))
 
 
 # ------------------------------------------------------------- incremental
@@ -934,58 +842,65 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _side_postings(side: DataFrame, respread: bool = True) -> DataFrame:
-    """(doc_id, len_band, n_sh, sh) posting rows under the same
-    banding and hot-shingle cap as dedup_ngram_jaccard — but NOT its
-    PAIRWISE_BLOCK_CAP band cap.
+def _side_postings(
+    side: DataFrame,
+    respread: bool = True,
+    block_cap: int | None = None,
+    posting_cap: int = NGRAM_POSTING_CAP,
+) -> DataFrame:
+    """(doc_id, text) → posting rows (doc_id, len_band, n_sh, sh): one
+    row per distinct 3-gram ``sh`` of a doc with ``n_sh`` shingles in
+    length band ``len_band`` (n_tokens div 8), with (len_band, sh)
+    buckets longer than ``posting_cap`` dropped (see
+    NGRAM_POSTING_CAP). NULL-text docs have a NULL len_band and drop
+    out at the cap's inner join.
 
-    The repartition before the shingle projection is load-bearing:
-    after an exact-collapse aggregate, AQE coalesces the (tiny,
-    hash-count-sized) output to ONE partition, and the expensive
-    part — building ~L shingle strings per doc and exploding them —
-    would then run on a single task (measured 2.7 s single-task vs
-    0.3 s spread at sf0.1; same guard as _ngram_posting_join).
-    Callers whose ``side`` is already spread over the full
-    parallelism by a user-pinned exchange (corpus_index_postings's
-    pre-shuffled collapse) pass ``respread=False`` to skip the then-
-    redundant extra exchange — partitioning never affects results.
+    ``block_cap`` additionally drops whole length bands above it
+    BEFORE shingling — only the all-pairs verify twin
+    (:func:`dedup_ngram_jaccard`) passes it, with PAIRWISE_BLOCK_CAP.
+    The cap decision needs only len_band, so its sizes subtree prunes
+    to a slim (doc_id, len_band) projection and shingles are built
+    once, for admitted docs only. The corpus index, the incremental
+    probe and the keep-first kill set pass no band cap: their fan-out
+    is bounded per (band, shingle) by the posting cap alone, and at
+    corpus scale EVERY length band exceeds any fixed constant, so a
+    band cap would silently disable near-dedup for the whole corpus
+    (tools/stress_incremental.py at 100x distinct docs: the
+    band-capped index collapsed to empty).
 
-    Why no PAIRWISE_BLOCK_CAP here: that cap exists for the
-    all-pairs VERIFY twin, where a length band of b docs costs O(b²)
-    comparisons; this posting join's fan-out is bounded per
-    (band, shingle) by NGRAM_POSTING_CAP alone. At corpus scale
-    EVERY length band exceeds any fixed constant, so a band cap here
-    would silently disable near-dedup for the whole corpus — found
-    empirically by tools/stress_incremental.py at 100× distinct
-    docs, where the band-capped index collapsed to empty and the
-    probe got *faster* with more data."""
-    # hash repartition on doc_id (r14): deterministic spread without
-    # round-robin's per-partition input sort; tokens split once per
-    # doc and shingles built from the projected array (_shingles_from)
+    ``respread`` hash-repartitions ``side`` on doc_id first: AQE
+    coalesces a small upstream exchange (an aggregate's, a join's) to
+    ONE partition, and the expensive part — building ~L shingle strings
+    per doc and exploding them — would then run on a single task
+    (measured 2.7 s single-task vs 0.3 s spread at sf0.1). Callers
+    whose ``side`` comes straight from :func:`_collapse_reps` (already
+    spread on doc_id) pass False; partitioning never affects results.
+
+    The cap runs without ``checkpoint_input``: measured at sf0.1, the
+    double execution under the cap's two consumers costs less than the
+    checkpoint's own materialization here (4.4 s vs 4.8-5.2 s)."""
     if respread:
         side = side.repartition(
             side.sparkSession.sparkContext.defaultParallelism, "doc_id"
         )
-    sh = (
-        side
-        .withColumn("_toks", _tokens())
-        .select(
-            "doc_id",
-            _shingles_from(F.col("_toks")).alias("shingles"),
-            (F.size("_toks") / 8).cast("long").alias("len_band"),
-        )
+    docs = side.withColumn("_toks", _tokens()).select(
+        "doc_id",
+        "_toks",
+        (F.size("_toks") / 8).cast("long").alias("len_band"),
     )
-    posting = sh.select(
+    if block_cap is not None:
+        docs = _cap_blocks_lowcard(docs, ["len_band"], block_cap)
+    posting = docs.select(
+        "doc_id",
+        "len_band",
+        _shingles_from(F.col("_toks")).alias("shingles"),
+    ).select(
         "doc_id",
         "len_band",
         F.size("shingles").alias("n_sh"),
         F.explode("shingles").alias("sh"),
     )
-    # no checkpoint_input: A/B-measured at sf0.1 — the double
-    # execution under the cap's two consumers costs less than the
-    # checkpoint's own materialization + planning here (4.4 s vs
-    # 4.8-5.2 s full-query)
-    return _cap_buckets(posting, ["len_band", "sh"], NGRAM_POSTING_CAP)
+    return _cap_buckets(posting, ["len_band", "sh"], posting_cap)
 
 
 def near_dup_kill_ids(
@@ -998,10 +913,8 @@ def near_dup_kill_ids(
     Pairs come from the corpus posting index (:func:`_side_postings`
     — the same banded, ``NGRAM_POSTING_CAP``-capped machinery the
     incremental ingest probe uses, and deliberately NOT
-    ``dedup_ngram_jaccard``'s ``PAIRWISE_BLOCK_CAP``: at corpus scale
-    every length band exceeds any fixed block constant, so a band cap
-    here would silently disable near-dedup for the whole corpus —
-    see the `_side_postings` docstring).
+    ``dedup_ngram_jaccard``'s ``PAIRWISE_BLOCK_CAP``, which would
+    silently disable near-dedup at corpus scale).
 
     Keep-first semantics: the min-doc_id member of every qualifying
     pair always survives; kills do not cascade (a doc whose only
@@ -1017,52 +930,16 @@ def near_dup_kill_ids(
     of S-curve recall instead of posting-exact intersection counts.
     Same keep-first kill rule either way.
     """
+    nn = deduped.filter(F.col("text").isNotNull())
     if family == "lsh":
-        nn = deduped.filter(F.col("text").isNotNull())
-        sh = (
-            nn.repartition(
-                nn.sparkSession.sparkContext.defaultParallelism, "doc_id"
-            )
-            .withColumn("_toks", _tokens())
-            .select(
-                "doc_id", _shingles_from(F.col("_toks")).alias("shingles")
-            )
-        )
+        par = nn.sparkSession.sparkContext.defaultParallelism
+        sh = _shingle_sets(nn.repartition(par, "doc_id"))
         pairs = _verify_candidate_pairs(
             _minhash_candidates(sh), nn.select("doc_id", "text")
         )
-        return (
-            pairs.select(
-                F.greatest("doc_a", "doc_b").alias("doc_id")
-            ).distinct()
-        )
-    posting = _side_postings(
-        deduped.filter(F.col("text").isNotNull())
-    ).localCheckpoint(eager=False)  # both sides of the self-join
-    l, r = posting.alias("l"), posting.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.len_band") == F.col("r.len_band"))
-            & (F.col("l.sh") == F.col("r.sh"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.n_sh").alias("n_a"),
-            F.col("r.n_sh").alias("n_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
-        .filter(
-            F.round(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                6,
-            )
-            >= 0.5
-        )
-    )
+    else:
+        pairs = _shared_jaccard(_posting_self_join(_side_postings(nn)))
+    # every pair has doc_a < doc_b, so doc_b is the larger side
     return pairs.select(F.col("doc_b").alias("doc_id")).distinct()
 
 
@@ -1078,13 +955,7 @@ def corpus_index_postings(corpus: DataFrame) -> DataFrame:
     (len_band, sh), hashes by _h) and only appended to — the daily
     increment then never scans corpus text. tools/stress_incremental.py
     measures exactly that split."""
-    # ids_semi collapse (r15 A/B on dedup_incremental: 2.14/2.40 s
-    # min/median vs exchange_first's 2.48/2.72): the winners
-    # aggregation is a HashAggregate over (hex, long) — the corpus
-    # text never enters an agg buffer — and the output arrives spread
-    # on doc_id, which is exactly what _side_postings(respread=False)
-    # wants.
-    reps = _collapse_reps(corpus, F.md5("text"), "ids_semi")
+    reps = _collapse_reps(corpus, F.md5("text"))
     return _side_postings(reps, respread=False)
 
 
@@ -1093,9 +964,7 @@ def _exact_dup_ids(
 ) -> DataFrame:
     """Exact-dup doc_ids of a hashed batch: byte-identical to a
     corpus digest (semi join) OR to an EARLIER (smaller doc_id) doc
-    in the same batch. ONE implementation shared by the n-gram and
-    LSH verdict cores — the LSH twin's docstring promises this stage
-    is 'identical to the n-gram path', so it must be the same code.
+    in the same batch.
 
     Materialized once (lazy localCheckpoint): three consumers (the
     survivors anti-join, the final verdict join, and transitively
@@ -1117,6 +986,64 @@ def _exact_dup_ids(
     )
 
 
+def _admission_verdicts(
+    batch: DataFrame,
+    corpus_hashes: DataFrame,
+    near_ids_of: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The verdict core both incremental families share. Each batch
+    doc gets, in precedence order: ``exact_dup`` (md5 equal to a
+    corpus digest or to an earlier doc of the batch, see
+    :func:`_exact_dup_ids`), ``near_dup`` (its doc_id is in
+    ``near_ids_of(survivors)``, where ``survivors`` are the batch's
+    (doc_id, text) rows that are no exact dup), else ``admitted``."""
+    batch_h = batch.select("doc_id", "text", F.md5("text").alias("_h"))
+    exact_ids = _exact_dup_ids(batch_h, corpus_hashes)
+    survivors = batch_h.join(exact_ids, "doc_id", "anti").select(
+        "doc_id", "text"
+    )
+    return (
+        batch.select("doc_id")
+        .join(exact_ids.withColumn("_e", F.lit(1)), "doc_id", "left")
+        .join(
+            near_ids_of(survivors).withColumn("_n", F.lit(1)),
+            "doc_id",
+            "left",
+        )
+        .select(
+            "doc_id",
+            F.when(F.col("_e") == 1, "exact_dup")
+            .when(F.col("_n") == 1, "near_dup")
+            .otherwise("admitted")
+            .alias("verdict"),
+        )
+    )
+
+
+def _recap_touched(
+    stored: DataFrame, probe: DataFrame, keys: list[str], cap: int
+) -> DataFrame:
+    """Re-apply a bucket cap to a STORED index at probe time. The
+    stored index is capped per append only, so across many daily
+    appends a hot bucket can outgrow ``cap``. Pruning the stored side
+    to the buckets ``probe`` touches (a broadcast semi-join keeps
+    whole stored buckets, so counts equal corpus-wide counts) and
+    re-capping restores the invariant without a corpus-sized pass.
+
+    Honest limit: a stored bucket reflects what per-append capping
+    RETAINED — an append whose own contribution exceeded the cap was
+    dropped wholesale at append time, so a stored bucket can
+    under-count the raw corpus and survive a re-cap that a from-raw
+    rebuild would drop. The error is one-sided in the cap's own
+    direction (hot buckets lose MORE rows, never gain), so fan-out
+    stays bounded; it is not bit-equal to a fresh rebuild when any
+    single append overflowed the cap."""
+    touched = probe.select(*keys).distinct()
+    return _cap_buckets(
+        stored.join(F.broadcast(touched), keys, "semi"), keys, cap
+    )
+
+
 def _incremental_verdicts(
     batch: DataFrame,
     corpus_hashes: DataFrame,
@@ -1126,84 +1053,30 @@ def _incremental_verdicts(
     """Admission verdicts for a batch against a (possibly
     pre-materialized) corpus index — the shared core of
     :func:`dedup_incremental` (index derived on the fly) and the
-    index-backed probe path (index read from parquet).
+    index-backed probe path (index read from parquet). Near dups are
+    survivors whose banded, capped postings share a Jaccard ≥ 0.5
+    with a corpus representative's.
 
     ``recap_stored`` re-applies ``NGRAM_POSTING_CAP`` to the
-    batch-touched slice of ``corpus_postings`` before probing — the
-    guard against hot buckets that outgrew the per-append cap across
-    many daily appends (ADVICE r8). Callers that just BUILT the
-    posting side capped (the graded on-the-fly query) pass False: the
-    re-cap is provably a no-op there and skipping it saves a second
-    window pass over the postings."""
-    batch_h = batch.select("doc_id", "text", F.md5("text").alias("_h"))
-    exact_ids = _exact_dup_ids(batch_h, corpus_hashes)
+    batch-touched slice of ``corpus_postings`` before probing (see
+    :func:`_recap_touched`). Callers that just BUILT the posting side
+    capped (the graded on-the-fly query) pass False: the re-cap is
+    provably a no-op there and skipping it saves a second pass over
+    the postings."""
 
-    # near: survivors vs corpus reps, banded capped posting join
-    survivors = batch_h.join(exact_ids, "doc_id", "anti").select(
-        "doc_id", "text"
-    )
-    bp = _side_postings(survivors).select(
-        F.col("doc_id").alias("b_id"),
-        "len_band",
-        "sh",
-        F.col("n_sh").alias("n_b"),
-    )
-    cp = corpus_postings.select(
-        F.col("doc_id").alias("c_id"),
-        "len_band",
-        "sh",
-        F.col("n_sh").alias("n_c"),
-    )
-    if recap_stored:
-        # The STORED index is capped per append only — across many
-        # daily appends a hot (len_band, sh) bucket grows past
-        # NGRAM_POSTING_CAP (ADVICE r8). Restore the cap at probe
-        # time WITHOUT a corpus-sized pass: prune the stored side to
-        # the buckets this batch touches (the broadcast semi-join
-        # keeps whole STORED buckets), then re-apply the cap. Honest
-        # limit: the stored bucket reflects what per-append capping
-        # RETAINED — an append whose own contribution exceeded the
-        # cap was dropped wholesale at append time, so a stored
-        # bucket can under-count the raw corpus and survive a re-cap
-        # a from-raw rebuild would drop. The error is one-sided in
-        # the cap's own direction (hot stop-word buckets lose MORE
-        # rows, never gain), so fan-out stays bounded; it is not
-        # bit-equal to a fresh rebuild when any single append
-        # overflowed the cap.
-        bkeys = bp.select("len_band", "sh").distinct()
-        cp = _cap_buckets(
-            cp.join(F.broadcast(bkeys), ["len_band", "sh"], "semi"),
-            ["len_band", "sh"],
-            NGRAM_POSTING_CAP,
-        )
-    near_ids = (
-        bp.join(cp, ["len_band", "sh"])
-        .groupBy("b_id", "c_id", "n_b", "n_c")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(
-            F.round(
-                F.col("n_shared")
-                / (F.col("n_b") + F.col("n_c") - F.col("n_shared")),
-                6,
+    def near_ids(survivors: DataFrame) -> DataFrame:
+        bp = _side_postings(survivors)
+        cp = corpus_postings
+        if recap_stored:
+            cp = _recap_touched(
+                cp, bp, ["len_band", "sh"], NGRAM_POSTING_CAP
             )
-            >= 0.5
+        pairs = _shared_jaccard(
+            bp.alias("l").join(cp.alias("r"), ["len_band", "sh"])
         )
-        .select(F.col("b_id").alias("doc_id"))
-        .distinct()
-    )
+        return pairs.select(F.col("doc_a").alias("doc_id")).distinct()
 
-    return (
-        batch.select("doc_id")
-        .join(exact_ids.withColumn("_e", F.lit(1)), "doc_id", "left")
-        .join(near_ids.withColumn("_n", F.lit(1)), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("_e") == 1, "exact_dup")
-            .when(F.col("_n") == 1, "near_dup")
-            .otherwise("admitted")
-            .alias("verdict"),
-        )
-    )
+    return _admission_verdicts(batch, corpus_hashes, near_ids)
 
 
 def corpus_index_bands(corpus: DataFrame) -> DataFrame:
@@ -1220,13 +1093,7 @@ def corpus_index_bands(corpus: DataFrame) -> DataFrame:
     # and match them at Jaccard 1.0. The n-gram posting path drops
     # these via its NULL len_band join key; here the filter is
     # explicit.
-    reps = _collapse_reps(
-        corpus.filter(F.col("text").isNotNull()), F.md5("text")
-    )
-    sh = reps.withColumn("_toks", _tokens()).select(
-        "doc_id", _shingles_from(F.col("_toks")).alias("shingles")
-    )
-    return _band_rows(sh)
+    return _band_rows(corpus_index_rep_shingles(corpus))
 
 
 def corpus_index_rep_shingles(corpus: DataFrame) -> DataFrame:
@@ -1235,13 +1102,10 @@ def corpus_index_rep_shingles(corpus: DataFrame) -> DataFrame:
     point-lookup join against this (at 100 TB: stored bucketed by
     doc_id, so the probe reads only candidate buckets) — band
     membership alone is a hash coincidence; admission decisions
-    verify TRUE Jaccard."""
-    reps = _collapse_reps(
-        corpus.filter(F.col("text").isNotNull()), F.md5("text")
-    )
-    return reps.withColumn("_toks", _tokens()).select(
-        "doc_id", _shingles_from(F.col("_toks")).alias("shingles")
-    )
+    verify TRUE Jaccard. NULL-text docs are excluded (see
+    :func:`corpus_index_bands`)."""
+    non_null = corpus.filter(F.col("text").isNotNull())
+    return _shingle_sets(_collapse_reps(non_null, F.md5("text")))
 
 
 def _incremental_lsh_verdicts(
@@ -1253,91 +1117,61 @@ def _incremental_lsh_verdicts(
 ) -> DataFrame:
     """LSH-family admission verdicts for a batch against a (possibly
     pre-materialized) corpus band index — the MinHash sibling of
-    :func:`_incremental_verdicts`. Stages, all batch-keyed:
+    :func:`_incremental_verdicts`, with the same exact-dup prefix,
+    stored-index re-cap (on LSH_BUCKET_CAP) and verdict core. Near
+    dups, all batch-keyed:
 
-    1. exact md5 semi-join (vs corpus + earlier-in-batch), identical
-       to the n-gram path;
-    2. survivors' capped band rows equi-join the corpus band index on
+    1. survivors' capped band rows equi-join the corpus band index on
        (band, band_hash) → candidate (batch, rep) pairs;
-    3. candidates verify exact shingle Jaccard ≥ 0.5 via a point
+    2. candidates verify exact shingle Jaccard ≥ 0.5 via a point
        fetch of the candidate reps' shingle sets — precision 1 by
        construction, recall bounded by the banding (seeded-hash
        semantics, so rows-only + recall tests, same declaration as
        dedup_near).
     """
-    batch_h = batch.select("doc_id", "text", F.md5("text").alias("_h"))
-    exact_ids = _exact_dup_ids(batch_h, corpus_hashes)
 
-    # NULL-text survivors skip the band probe (no shingle mass — see
-    # corpus_index_bands); they reach "admitted" through the final
-    # left join like every un-flagged doc
-    survivors = (
-        batch_h.join(exact_ids, "doc_id", "anti")
-        .filter(F.col("text").isNotNull())
-        .withColumn("_toks", _tokens())
-        .select("doc_id", _shingles_from(F.col("_toks")).alias("shingles"))
-    )
-    # the survivor shingle sets feed BOTH the band probe and the
-    # Jaccard verify — one (batch-sized) materialization
-    survivors = survivors.localCheckpoint(eager=False)
-    bb = _band_rows(survivors).select(
-        F.col("doc_id").alias("b_id"), "band", "band_hash"
-    )
-    cb = corpus_bands.select(
-        F.col("doc_id").alias("c_id"), "band", "band_hash"
-    )
-    if recap_stored:
-        # same stored-index re-cap as the n-gram path (ADVICE r8): a
-        # hot (band, band_hash) bucket in the appended band index can
-        # outgrow LSH_BUCKET_CAP; prune to batch-touched buckets
-        # (whole buckets survive ⇒ counts equal corpus-wide counts)
-        # and re-cap, batch-keyed. Skipped by callers that just built
-        # the band side capped (provable no-op).
-        cbkeys = bb.select("band", "band_hash").distinct()
-        cb = _cap_buckets(
-            cb.join(F.broadcast(cbkeys), ["band", "band_hash"], "semi"),
-            ["band", "band_hash"],
-            LSH_BUCKET_CAP,
+    def near_ids(survivors: DataFrame) -> DataFrame:
+        # NULL-text survivors skip the band probe (no shingle mass — see
+        # corpus_index_bands) and reach "admitted" like every unflagged
+        # doc. The shingle sets feed both the band probe and the
+        # Jaccard verify: one (batch-sized) materialization.
+        sh = _shingle_sets(
+            survivors.filter(F.col("text").isNotNull())
+        ).localCheckpoint(eager=False)
+        bb = _band_rows(sh)
+        cb = corpus_bands
+        if recap_stored:
+            cb = _recap_touched(
+                cb, bb, ["band", "band_hash"], LSH_BUCKET_CAP
+            )
+        return (
+            bb.alias("b")
+            .join(cb.alias("c"), ["band", "band_hash"])
+            .select(
+                F.col("b.doc_id").alias("b_id"),
+                F.col("c.doc_id").alias("c_id"),
+            )
+            .dropDuplicates(["b_id", "c_id"])
+            .join(
+                sh.select(
+                    F.col("doc_id").alias("b_id"),
+                    F.col("shingles").alias("sh_b"),
+                ),
+                "b_id",
+            )
+            .join(
+                corpus_shingles.select(
+                    F.col("doc_id").alias("c_id"),
+                    F.col("shingles").alias("sh_c"),
+                ),
+                "c_id",
+            )
+            .filter(F.round(_jaccard(F.col("sh_b"), F.col("sh_c")), 6) >= 0.5)
+            .select(F.col("b_id").alias("doc_id"))
+            .distinct()
         )
-    candidates = (
-        bb.join(cb, ["band", "band_hash"])
-        .select("b_id", "c_id")
-        .dropDuplicates(["b_id", "c_id"])
-    )
-    near_ids = (
-        candidates.join(
-            survivors.select(
-                F.col("doc_id").alias("b_id"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "b_id",
-        )
-        .join(
-            corpus_shingles.select(
-                F.col("doc_id").alias("c_id"),
-                F.col("shingles").alias("sh_c"),
-            ),
-            "c_id",
-        )
-        .filter(
-            F.round(_jaccard(F.col("sh_b"), F.col("sh_c")), 6) >= 0.5
-        )
-        .select(F.col("b_id").alias("doc_id"))
-        .distinct()
-    )
 
-    return (
-        batch.select("doc_id")
-        .join(exact_ids.withColumn("_e", F.lit(1)), "doc_id", "left")
-        .join(near_ids.withColumn("_n", F.lit(1)), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("_e") == 1, "exact_dup")
-            .when(F.col("_n") == 1, "near_dup")
-            .otherwise("admitted")
-            .alias("verdict"),
-        )
-    )
+    return _admission_verdicts(batch, corpus_hashes, near_ids)
 
 
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1472,7 +1306,7 @@ ORACLE_SQL = {
         ) WHERE cosine >= 0.4
     """,
     # dedup_near / dedup_simhash: seeded-xxhash LSH isn't expressible in
-    # DuckDB SQL → rows-only forever. r9 swaps the GRADED row to the
+    # DuckDB SQL → rows-only forever. The GRADED near-dedup row is the
     # md5-hash-family twin dedup_near_md5 (below): the identical LSH
     # pipeline — signatures, banding, hot-bucket cap, candidate join,
     # exact-Jaccard verify — under a DuckDB-computable hash family, so
@@ -1487,9 +1321,9 @@ ORACLE_SQL = {
 RETIRED_TWIN_QUERIES = {
     "dedup_simhash_md5": dedup_simhash_md5,
 }
-# band-slice SQL derived from LSH_ROWS exactly the way _md5_band_rows
+# band-slice SQL derived from LSH_ROWS exactly the way _band_rows
 # derives its element_at slice — a hardcoded `sig[4*b+1..+4]` here
-# would silently break the twin if LSH_ROWS ever changed (ADVICE r7)
+# would silently break the twin if LSH_ROWS ever changed
 _MD5_BAND_SLICE_SQL = " || ',' || ".join(
     f"sig[{LSH_ROWS}*g.b+{r + 1}]" for r in range(LSH_ROWS)
 )
@@ -1500,9 +1334,9 @@ RETIRED_TWIN_ORACLES: dict[str, str] = {}
 # (lexicographic min of fixed-length hex == numeric min), 8×4
 # banding, the hot-bucket cap, the candidate self-join, and the
 # exact-Jaccard verify — every stage the production dedup_near runs,
-# hash-checked with an independent hash-family instance. GRADED from
-# r9 (moved into ORACLE_SQL below): the driver artifact now carries
-# the full near-dedup hash-check directly.
+# hash-checked with an independent hash-family instance. GRADED (in
+# ORACLE_SQL below): the driver artifact carries the full near-dedup
+# hash-check directly.
 _DEDUP_NEAR_MD5_ORACLE = f"""
         WITH reps AS (
             SELECT MIN(doc_id) AS doc_id, MIN(text) AS text
@@ -1559,29 +1393,27 @@ ORACLE_SQL["dedup_near_md5"] = _DEDUP_NEAR_MD5_ORACLE
 
 QUERIES = {
     "dedup_exact": dedup_exact,
-    # r9: the GRADED near-dedup row is the md5 hash family — the
+    # the GRADED near-dedup row is the md5 hash family — the
     # identical pipeline under a DuckDB-computable hash, so the
-    # driver hash-checks every LSH stage (the last rows-only row
-    # with a known promotion recipe, per the r8 verdict). The
-    # xxhash64 production default retires to rows-only below.
+    # driver hash-checks every LSH stage. The xxhash64 production
+    # default is rows-only (RETIRED_ROWS_ONLY_QUERIES below).
     "dedup_near_md5": dedup_near_md5,
     "dedup_ngram_jaccard": dedup_ngram_jaccard,
     "dedup_embedding": dedup_embedding,
-    # registered r6 (event_tumbling retired to make room): the
-    # incremental ingest path deserves driver-visible verification
+    # the incremental ingest path, with driver-visible verification
     "dedup_incremental": dedup_incremental,
 }
 
-# dedup_simhash retired from the driver window r8 to admit
-# bm25_search / quality_funnel (both full-oracle): its driver row was
+# dedup_simhash is out of the driver window (it made room for the
+# full-oracle bm25_search / quality_funnel): its driver row was
 # rows-only (seeded xxhash64 not SQL-expressible) while its COMPLETE
 # pipeline — votes → bit-sum → chunks → hamming verify — is
 # hash-checked every test run via the md5-hash-family twin
 # dedup_simhash_md5 above, plus the precision assertions in
 # tests/test_dedup.py. Still benched (bench.py HEADLINE) so the
 # candidate-cap perf guard survives the retirement.
-# dedup_near joined it in r9 when its md5 twin took the graded slot:
-# the xxhash64 family is the production default (cheaper hashing at
+# dedup_near joined it when its md5 twin took the graded slot: the
+# xxhash64 family is the production default (cheaper hashing at
 # identical plan shape) and keeps its determinism/recall/precision
 # tests (tests/test_dedup.py) and its bench series.
 RETIRED_ROWS_ONLY_QUERIES = {

@@ -9,10 +9,11 @@ column helpers its report query is hash-verified with):
    and decontaminating a pool that still CONTAINS the benchmark
    would convict every benchmark doc of matching itself.
 1. **exact dedup** — one representative (min doc_id) per distinct
-   text via groupBy(sha2)+min + semi-join (the same groupBy-agg
-   shape ``dedup_exact`` uses — NOT a window partitioned by the
+   sha2 digest via ``dedup._collapse_reps``, the collapse every dedup
+   family shares: winner ids from a groupBy over (digest, doc_id),
+   rows attached by semi-join — NOT a window partitioned by the
    digest, which would buffer a heavily-duplicated text's whole
-   group inside one WindowExec task; see dedup._cap_buckets).
+   group inside one WindowExec task; see dedup._cap_buckets.
    NULL-text rows pass through untouched (the funnel owns them) so
    every kill is attributed to exactly one stage.
 2. **near dedup** — keep-first 3-gram-Jaccard ≥ 0.5 kill set from
@@ -55,7 +56,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irio2024_mapreduce_spark.operators.dedup import near_dup_kill_ids
+from irio2024_mapreduce_spark.operators.dedup import (
+    _collapse_reps,
+    near_dup_kill_ids,
+)
 from irio2024_mapreduce_spark.operators.llm_prep import (
     contaminated_ids,
     pack_docs,
@@ -318,13 +322,10 @@ def _prepare_corpus_impl(
     # stage 1: exact dedup (NULL texts exempt — the funnel kills and
     # counts them; exempting keeps stage attribution disjoint)
     non_null = pool.filter(F.col("text").isNotNull())
-    keep_ids = (
-        non_null.groupBy(F.sha2("text", 256))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    deduped = non_null.join(keep_ids, "doc_id", "semi").unionByName(
-        pool.filter(F.col("text").isNull())
+    deduped = (
+        _collapse_reps(non_null, F.sha2("text", 256))
+        .drop("_h")
+        .unionByName(pool.filter(F.col("text").isNull()))
     )
     after_dedup = deduped.count()
 

@@ -774,3 +774,39 @@ def test_dedup_incremental_lsh_null_text_admits(spark):
     # 3-grams: J = 8/9 >= 0.5 — and an 8/9-Jaccard pair is near-
     # certain under 8x4 banding (p = 1-(1-(8/9)^4)^8 ≈ 0.9998)
     assert got[39] == "near_dup"
+
+
+def test_collapse_reps_reused_doc_id_keeps_one_rep_per_hash(spark):
+    """A doc_id reused across two texts must not bring a second
+    representative for one hash: the winner attach matches on
+    (doc_id, _h), not doc_id alone. Doc 5 wins the 'a b c d' group
+    but its other row ('x y z w') loses to doc 3, and the NULL-text
+    group keeps its min doc_id."""
+    from irio2024_mapreduce_spark.operators.dedup import (
+        _collapse_reps,
+        corpus_index_postings,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (3, "x y z w"),
+            (5, "a b c d"),
+            (5, "x y z w"),
+            (7, "a b c d"),
+            (9, None),
+            (11, None),
+        ],
+        "doc_id long, text string",
+    )
+    reps = {
+        (r["doc_id"], r["text"])
+        for r in _collapse_reps(docs, F.md5("text")).collect()
+    }
+    assert reps == {(3, "x y z w"), (5, "a b c d"), (9, None)}
+    owners = {
+        r["doc_id"]
+        for r in corpus_index_postings(docs)
+        .filter(F.col("sh") == "x y z")
+        .collect()
+    }
+    assert owners == {3}

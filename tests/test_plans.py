@@ -12,6 +12,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from irio2024_mapreduce_spark.operators.relational import (
     agg_groupby,
     agg_rollup,
@@ -473,20 +475,21 @@ def test_candidate_verify_is_spread_on_the_pair_key(spark, sf_dir):
     assert "REPARTITION_BY_NUM" in pair_exchanges[0], pair_exchanges[0]
 
 
-def test_incremental_collapse_has_no_sort_aggregate(spark, sf_dir):
+@pytest.mark.parametrize(
+    "index_part", ["corpus_index_postings", "corpus_index_rep_shingles"]
+)
+def test_incremental_collapse_has_no_sort_aggregate(spark, sf_dir, index_part):
     """r15 pin (VERDICT r14 item 2): the incremental corpus index's
     exact-dup collapse aggregates winner IDS only — a HashAggregate
     over (hex, long) — and attaches text by semi-join, so corpus text
     never enters an aggregation buffer. SortAggregate must not
     reappear in the corpus_index_postings subtree (it was 8 nodes of
     the r14 dedup_incremental plan; 0 after — plans/r15/)."""
-    from irio2024_mapreduce_spark.operators.dedup import (
-        corpus_index_postings,
-    )
+    from irio2024_mapreduce_spark.operators import dedup
     from irio2024_mapreduce_spark.sources.tables import load_table
 
     plan = plan_of(
-        corpus_index_postings(load_table(spark, sf_dir, "documents"))
+        getattr(dedup, index_part)(load_table(spark, sf_dir, "documents"))
     )
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan

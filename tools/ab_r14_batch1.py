@@ -91,7 +91,7 @@ def old_dedup_near(spark, sf):
 
 def old_dedup_near_md5(spark, sf):
     docs = old_near_docs(spark, sf, F.md5("text"), True)
-    pairs = D._band_pair_join(D._md5_band_rows(docs))
+    pairs = D._minhash_candidates(docs, family="md5")
     raw = load_table(spark, sf, "documents").select("doc_id", "text")
     return old_verify_pairs(pairs, raw)
 

@@ -334,7 +334,7 @@ def _curve_diagnostics(spark, stage: str) -> dict:
         .select("doc_id", dd._shingles().alias("shingles"))
     )
     bsz = (
-        dd._md5_band_rows(docs, bucket_cap=1 << 60)
+        dd._band_rows(docs, bucket_cap=1 << 60, family="md5")
         .groupBy("band", "band_hash")
         .agg(F.count("*").alias("n"))
         .localCheckpoint(eager=True)
