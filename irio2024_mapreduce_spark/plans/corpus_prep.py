@@ -49,6 +49,7 @@ here collects to the driver except the manifest's counts.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -72,8 +73,9 @@ from irio2024_mapreduce_spark.operators.text_analysis import funnel_verdict
 from irio2024_mapreduce_spark.sources import staged_commit
 from irio2024_mapreduce_spark.sources.sinks import (
     SimulatedCrash,
-    fsync_dir,
+    mark_swap_ready,
     release_compaction_lock,
+    replace_dataset,
 )
 from irio2024_mapreduce_spark.sources.tables import load_table
 
@@ -85,13 +87,10 @@ BENCHMARK_STRIPE = 8
 # prepare_corpus's three artifacts (corpus, packs, and the seeded ingest
 # index) are one staged commit (``sources.staged_commit``) under
 # ``{out_dir}/_staged/prep_{uuid}/``. What is prep's own: the target
-# list, and publication by swapping each target into place with
-# roll-forwardable directory renames (tmp/old suffixes). The swaps are
-# directory renames, so out_dir and index_dir must live on one
-# filesystem (EXDEV surfaces loudly; a committed generation retries
-# after the operator moves the target).
-_PREP_TMP = "._prep_tmp"
-_PREP_OLD = "._prep_old"
+# list, and publication by moving each staged part into place with
+# ``sinks.replace_dataset``. The moves are directory renames, so out_dir
+# and index_dir must live on one filesystem (EXDEV surfaces loudly; a
+# committed generation retries after the operator moves the target).
 
 
 def _commit_and_publish(
@@ -116,14 +115,10 @@ def _commit_and_publish(
 def _publish_prepared(
     staging: str, plan: dict, _test_crash_after: str | None = None
 ) -> None:
-    """Swap every staged artifact into place — idempotent, so a crash
-    at any rename resumes here on the next roll-forward. Per-target
-    protocol (deterministic state classification):
-
-      rename(staged → target._prep_tmp)     # skipped if already done
-      rename(target → target._prep_old)     # skipped for gen 1 / done
-      rename(target._prep_tmp → target)
-      rmtree(target._prep_old)
+    """Swap every staged artifact into place with
+    ``sinks.replace_dataset`` — idempotent, so a crash at any step
+    resumes here on the next roll-forward. Each target's fill moves the
+    committed staged part in as the new contents (:func:`_move_in`).
 
     Locking is two-level: ONE whole-publication lock on ``out_dir``
     serializes concurrent generation flips (per-target locks alone
@@ -138,27 +133,26 @@ def _publish_prepared(
     try:
         for name, target in plan["targets"]:
             src = os.path.join(staging, name)
-            tmp, old = target + _PREP_TMP, target + _PREP_OLD
             os.makedirs(os.path.dirname(target), exist_ok=True)
             lock = staged_commit.acquire_patiently(target)
             try:
-                if os.path.isdir(src) and not os.path.exists(tmp):
-                    os.rename(src, tmp)
-                if os.path.exists(tmp):
-                    if os.path.exists(target):
-                        if os.path.exists(old):  # defensive; unreachable
-                            shutil.rmtree(old)
-                        os.rename(target, old)
-                    os.rename(tmp, target)
-                    fsync_dir(os.path.dirname(target))
-                if os.path.exists(old):
-                    shutil.rmtree(old)
+                replace_dataset(target, functools.partial(_move_in, src))
             finally:
                 release_compaction_lock(lock)
             staged_commit._crash_if(_test_crash_after, f"swap:{name}")
     finally:
         release_compaction_lock(pub_lock)
     shutil.rmtree(staging, ignore_errors=True)
+
+
+def _move_in(src: str, tmp: str) -> None:
+    """The fill of a prep swap: the committed staged part ``src``
+    becomes ``tmp``. It is marked ready before it moves, so any
+    process's swap recovery rolls a crashed generation's part forward
+    instead of dropping it. A part already moved is absent."""
+    if os.path.isdir(src):
+        mark_swap_ready(src)
+        os.rename(src, tmp)
 
 
 def recover_prepared(out_dir: str) -> dict[str, int]:

@@ -79,6 +79,8 @@ from irio2024_mapreduce_spark.operators import stored_index
 from irio2024_mapreduce_spark.operators.text_analysis import funnel_verdict
 from irio2024_mapreduce_spark.sources import staged_commit
 from irio2024_mapreduce_spark.sources.sinks import (
+    SWAP_OLD,
+    SWAP_TMP,
     SimulatedCrash,
     acquire_compaction_lock_patiently,
     atomic_write_file,
@@ -86,7 +88,7 @@ from irio2024_mapreduce_spark.sources.sinks import (
     fsync_dir,
     recover_swap_crash,
     release_compaction_lock,
-    resolve_current,
+    replace_dataset,
     reraise_if_vanished_input as _reraise_if_vanished_input,
 )
 
@@ -193,7 +195,7 @@ def _clear_prior_life(index_dir: str) -> None:
         # recovery would otherwise RESTORE after the clear,
         # resurrecting the replaced life's exactly-once records or
         # stats rows
-        for suffix in ("", "._compact_tmp", "._compact_old"):
+        for suffix in ("", SWAP_TMP, SWAP_OLD):
             p = os.path.join(index_dir, part + suffix)
             if os.path.exists(p):
                 shutil.rmtree(p)
@@ -691,17 +693,11 @@ def _staging_name(batch_id: int | None, stream: str) -> str:
     return f"{hashlib.md5(stream.encode()).hexdigest()[:10]}_{int(batch_id)}"
 
 
-def _resolve_live_corpus(clean_path: str) -> tuple[str, bool]:
-    """(live data dir behind a versioned ``_CURRENT`` pointer — the
-    dir the append targets, split-partitioned?) for a corpus's
-    ``clean_documents.parquet``."""
-    target = clean_path
-    if os.path.exists(os.path.join(clean_path, "_CURRENT")):
-        target = resolve_current(clean_path)
-    is_split = os.path.isdir(target) and any(
-        d.startswith("split=") for d in os.listdir(target)
+def _is_split_layout(clean_path: str) -> bool:
+    """Is a corpus's ``clean_documents.parquet`` split-partitioned?"""
+    return os.path.isdir(clean_path) and any(
+        d.startswith("split=") for d in os.listdir(clean_path)
     )
-    return target, is_split
 
 
 def _first_parquet_file(path: str) -> str | None:
@@ -766,8 +762,8 @@ def _validate_batch_schema(
             f"schema_policy must be 'strict' or 'evolve', got {policy!r}"
         )
     clean_path = os.path.join(corpus_dir, "clean_documents.parquet")
-    target, is_split = _resolve_live_corpus(clean_path)
-    if not os.path.isdir(target):
+    is_split = _is_split_layout(clean_path)
+    if not os.path.isdir(clean_path):
         return None  # no live corpus yet — the first write defines the shape
     sidecar = os.path.join(clean_path, _SCHEMA_SIDECAR)
     live: dict[str, str] | None = None
@@ -778,7 +774,7 @@ def _validate_batch_schema(
         except (OSError, ValueError, KeyError):
             live = None  # corrupt sidecar → re-prime from the data
     if live is None:
-        if _first_parquet_file(target) is None:
+        if _first_parquet_file(clean_path) is None:
             return None  # empty dataset — nothing to drift from
         # re-prime from the mergeSchema UNION of every committed
         # footer, not one arbitrary file: an evolved corpus re-primed
@@ -789,7 +785,7 @@ def _validate_batch_schema(
         live = {
             f.name: f.dataType.simpleString()
             for f in spark.read.option("mergeSchema", "true")
-            .parquet(target)
+            .parquet(clean_path)
             .schema.fields
             if not (is_split and f.name == "split")
         }
@@ -814,7 +810,7 @@ def _validate_batch_schema(
     if added or dropped or retyped:
         raise RuntimeError(
             "ingest schema gate: batch shape drifts from the live "
-            f"corpus at {target} — added={added} dropped={dropped} "
+            f"corpus at {clean_path} — added={added} dropped={dropped} "
             f"retyped={retyped}. Nothing was staged and the batch key "
             "was not consumed: fix the producer and redeliver (or pass "
             "schema_policy='evolve' to admit additive columns)."
@@ -898,8 +894,7 @@ def _stage_batch(
     # write shape matches (the split tag is content-addressed —
     # llm_prep.split_docs — so appended docs land in the SAME split
     # the one-shot build would give them)
-    target, is_split_layout = _resolve_live_corpus(clean_path)
-    if is_split_layout:
+    if _is_split_layout(clean_path):
         from irio2024_mapreduce_spark.operators.llm_prep import (  # noqa: PLC0415
             split_docs,
         )
@@ -1061,11 +1056,10 @@ def _publish_staged(
     one forward (recovery path; idempotent). Takes the index and corpus
     advisory locks (in that fixed order, with patience) and runs
     swap-crash recovery on every publish target under them, the
-    corpus included for both the compact and z-order suffix pairs
-    (appending beside a crashed swap's ``._compact_old`` snapshot
-    would split-brain it). Then it commits (flush, ``_committed``),
-    moves the staged files into place and touches the keyed batch's
-    external commit marker.
+    corpus included (appending beside a crashed swap's
+    ``._compact_old`` snapshot would split-brain it). Then it commits
+    (flush, ``_committed``), moves the staged files into place and
+    touches the keyed batch's external commit marker.
 
     A staging that lost its plan or vanished before publication (a
     generation flip replacing the index takes ``_staged/`` with it, in
@@ -1111,7 +1105,6 @@ def _publish_staged(
         for part in plan["index_parts"]:
             recover_swap_crash(os.path.join(index_dir, part))
         recover_swap_crash(clean_path)
-        recover_swap_crash(clean_path, "._zorder_tmp", "._zorder_old")
         if not staged_commit.is_committed(staging):
             staged_commit.commit(staging, _test_crash_after)
         for part in plan["index_parts"]:
@@ -1119,13 +1112,7 @@ def _publish_staged(
                 os.path.join(staging, part), os.path.join(index_dir, part)
             )
             staged_commit._crash_if(_test_crash_after, f"move:{part}")
-        # resolve the corpus target at MOVE time, not plan time: a
-        # versioned corpus may have flipped its pointer since the
-        # crash, and a roll-forward must land in the CURRENT version
-        target = clean_path
-        if os.path.exists(os.path.join(clean_path, "_CURRENT")):
-            target = resolve_current(clean_path)
-        _move_staged_files(os.path.join(staging, "corpus"), target)
+        _move_staged_files(os.path.join(staging, "corpus"), clean_path)
         staged_commit._crash_if(_test_crash_after, "move:corpus")
         for ex in plan["similarity_indexes"]:
             _publish_similarity_index(staging, ex)
@@ -1255,8 +1242,7 @@ def _recover_index_part(index_dir: str, part: str) -> None:
     surfaces as the loud error."""
     path = os.path.join(index_dir, part)
     if not (
-        os.path.exists(path + "._compact_tmp")
-        or os.path.exists(path + "._compact_old")
+        os.path.exists(path + SWAP_TMP) or os.path.exists(path + SWAP_OLD)
     ):
         return
     lock = acquire_compaction_lock_patiently(index_dir)
@@ -1593,11 +1579,9 @@ def reconcile_corpus_duplicates(
 
     1. duplicate removal — group the live corpus by ``sha2(text)``;
        each >1 group keeps its LOWEST doc_id (ingest's earlier-doc
-       rule) and the rest are dropped in one filtered rewrite. Flat
-       corpora swap through the compactor's own ``._compact_tmp`` /
-       ``._compact_old`` suffix pair, so every existing
-       ``recover_swap_crash`` call already recovers a crash here;
-       versioned corpora write version N+1 and flip the pointer.
+       rule) and the rest are dropped in one filtered rewrite,
+       published with ``sinks.replace_dataset``, so every existing
+       ``recover_swap_crash`` call already recovers a crash here.
     2. census correction — one stats row negating the non-quarantined
        docs that lost ENTIRELY (one subtraction per distinct lost
        doc_id; replay copies of a surviving doc subtract nothing —
@@ -1650,10 +1634,6 @@ def reconcile_corpus_duplicates(
     similarity-index rows of removed docs stay until the next deep
     index pass (probes answer by corpus doc ids, which no longer
     include the losers)."""
-    from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
-        _flip_pointer,
-    )
-
     corpus_path = corpus_path.rstrip("/")
     locks = []
     try:
@@ -1661,20 +1641,11 @@ def reconcile_corpus_duplicates(
         locks.append(staged_commit.acquire_patiently(corpus_path))
         # recovery-first, mirroring _publish_staged: this pass runs
         # FIRST in the deep order, so it is
-        # the reader that trips over a predecessor's crashed flat swap
-        # — a leftover ._compact_old beside a live dir would make this
-        # pass's own os.rename(corpus, old) fail ENOTEMPTY, and an old
-        # WITHOUT a live dir (crash between the two renames) means
-        # corpus_path itself is absent until restored
+        # the reader that trips over a predecessor's crashed swap
+        # — an old WITHOUT a live dir (crash between the two renames)
+        # means corpus_path itself is absent until restored
         recover_swap_crash(corpus_path)
-        recover_swap_crash(corpus_path, "._zorder_tmp", "._zorder_old")
-        versioned = os.path.exists(
-            os.path.join(corpus_path, "_CURRENT")
-        )
-        target = (
-            resolve_current(corpus_path) if versioned else corpus_path
-        )
-        art = spark.read.parquet(target)
+        art = spark.read.parquet(corpus_path)
         has_split = "split" in art.columns
         art_d = art.withColumn("_d", F.sha2("text", 256))
         winners = (
@@ -1716,23 +1687,7 @@ def reconcile_corpus_duplicates(
             writer = survivors.write.mode("overwrite")
             if has_split:
                 writer = writer.partitionBy("split")
-            if versioned:
-                cur_n = int(os.path.basename(target)[1:])
-                new_dir = os.path.join(corpus_path, f"v{cur_n + 1}")
-                if os.path.exists(new_dir):
-                    shutil.rmtree(new_dir)
-                writer.parquet(new_dir)
-                _flip_pointer(corpus_path, cur_n + 1)  # commit point
-                target = new_dir
-            else:
-                tmp = corpus_path + "._compact_tmp"
-                old = corpus_path + "._compact_old"
-                if os.path.exists(tmp):
-                    shutil.rmtree(tmp)
-                writer.parquet(tmp)
-                os.rename(corpus_path, old)
-                os.rename(tmp, corpus_path)
-                shutil.rmtree(old)
+            replace_dataset(corpus_path, writer.parquet)
             if not census_from_corpus:
                 # phase 2 (ledger mode): census correction for the
                 # non-quarantined DOCS that lost entirely — one
@@ -1788,7 +1743,7 @@ def reconcile_corpus_duplicates(
             # measured corpus_path for self-contained corpora; seed
             # rows + measured corpus_path for the external-seed
             # lifecycle ("external").
-            live = spark.read.parquet(target)
+            live = spark.read.parquet(corpus_path)
             # null-safe: a NULL split is not quarantined and must stay
             # in the measured census
             non_q_live = (
@@ -1906,15 +1861,14 @@ def compact_corpus_index(
     Buckets regrow from post-compaction appends (their count restarts,
     as it would after any rebuild), so ``recap_stored`` stays the
     default for stored-index probes; compaction bounds how much work
-    that guard does. Swap per part is the flat compactor's
-    tmp/old double-rename with the same crash signatures and
-    recovery; the advisory lock is taken on ``index_dir`` and
-    ``ingest_batch`` honors it, so a scheduled compaction and a
-    late-running ingest fail loudly instead of losing appends.
+    that guard does. Each part is published with
+    ``sinks.replace_dataset``, like the corpus compaction; the advisory
+    lock is taken on ``index_dir`` and ``ingest_batch`` honors it, so
+    a scheduled compaction and a late-running ingest fail loudly
+    instead of losing appends.
     Returns per-part {rows_before, rows_after, files_before,
     files_after}."""
     import glob as _glob
-    import shutil as _shutil
 
     from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
         acquire_compaction_lock,
@@ -1963,7 +1917,6 @@ def compact_corpus_index(
     try:
         for name, transform in transforms.items():
             path = os.path.join(index_dir, name)
-            tmp, old = path + "._compact_tmp", path + "._compact_old"
             # crash recovery — THE shared classification (held lock
             # satisfies recover_swap_crash's exclusion contract)
             recover_swap_crash(path)
@@ -1975,10 +1928,9 @@ def compact_corpus_index(
             df = spark.read.parquet(path)
             rows_before = df.count()
             out = transform(df)
-            out.repartition(n_out).write.mode("overwrite").parquet(tmp)
-            os.rename(path, old)
-            os.rename(tmp, path)
-            _shutil.rmtree(old)
+            replace_dataset(
+                path, out.repartition(n_out).write.mode("overwrite").parquet
+            )
             report[name] = {
                 "rows_before": rows_before,
                 "rows_after": spark.read.parquet(path).count(),

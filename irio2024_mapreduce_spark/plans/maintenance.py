@@ -336,15 +336,11 @@ def _maybe_compact_corpus(
 ) -> dict:
     from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
         compact_parquet,
-        compact_parquet_versioned,
-        resolve_current,
     )
 
-    versioned = os.path.exists(os.path.join(corpus_path, "_CURRENT"))
-    data = resolve_current(corpus_path) if versioned else corpus_path
-    if not os.path.isdir(data):
-        return {"ran": False, "reason": f"{data} does not exist"}
-    n, ideal, _ = _frag_signal(data, target_bytes)
+    if not os.path.isdir(corpus_path):
+        return {"ran": False, "reason": f"{corpus_path} does not exist"}
+    n, ideal, _ = _frag_signal(corpus_path, target_bytes)
     if n <= max_files and n <= frag_ratio * ideal:
         return {
             "ran": False,
@@ -354,8 +350,7 @@ def _maybe_compact_corpus(
                 "append count (see module docstring calibration)"
             ),
         }
-    fn = compact_parquet_versioned if versioned else compact_parquet
-    out = fn(
+    out = compact_parquet(
         spark,
         corpus_path,
         target_file_bytes=target_bytes,

@@ -149,36 +149,29 @@ def rewrite_zordered(
     bits: int = ZORDER_DEFAULT_BITS,
     n_files: int | None = None,
 ) -> dict[str, int]:
-    """Maintenance form: re-cluster an existing dataset in place with
-    the flat compactor's crash-safe double-rename swap and advisory
-    writer lock (see ``sinks.compact_parquet`` for the signatures and
-    the concurrent-writer contract — identical here)."""
-    import os as _os
-    import shutil as _shutil
-
+    """Maintenance form: re-cluster an existing dataset in place,
+    published with ``sinks.replace_dataset`` under the advisory writer
+    lock (see ``sinks.compact_parquet`` for the concurrent-writer
+    contract — identical here)."""
     from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
         acquire_compaction_lock,
-        recover_swap_crash,
         release_compaction_lock,
+        replace_dataset,
     )
+
+    out: dict[str, int] = {}
+
+    def fill(tmp: str) -> None:
+        df = spark.read.parquet(path)
+        out["rows"] = df.count()
+        write_zordered(df, tmp, cols, bits, n_files)
 
     lock = acquire_compaction_lock(path)
     try:
-        tmp, old = path.rstrip("/") + "._zorder_tmp", path.rstrip(
-            "/"
-        ) + "._zorder_old"
-        recover_swap_crash(
-            path.rstrip("/"), "._zorder_tmp", "._zorder_old"
-        )
-        df = spark.read.parquet(path)
-        rows = df.count()
-        write_zordered(df, tmp, cols, bits, n_files)
-        _os.rename(path, old)
-        _os.rename(tmp, path)
-        _shutil.rmtree(old)
-        return {"rows": rows}
+        replace_dataset(path, fill)
     finally:
         release_compaction_lock(lock)
+    return out
 
 
 def pruning_stats(

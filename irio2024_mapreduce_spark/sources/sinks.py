@@ -12,6 +12,10 @@ bucket keys skip their shuffle entirely.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -68,6 +72,16 @@ def write_bucketed_table(
     writer.saveAsTable(table)
 
 
+def _parquet_files(path: str) -> list[str]:
+    return [
+        f
+        for f in glob.glob(
+            os.path.join(path, "**", "*.parquet"), recursive=True
+        )
+        if os.path.isfile(f)
+    ]
+
+
 def compact_parquet(
     spark,
     path: str,
@@ -87,17 +101,12 @@ def compact_parquet(
     (the same 128 MiB the scan-side ``maxPartitionBytes`` is tuned
     to, so post-compaction one file ≈ one split ≈ one task).
 
-    Swap semantics on a plain filesystem: write to a sibling temp
-    dir, then TWO renames (path→old, tmp→path). Each rename is
-    atomic but the pair is not — a reader in the gap sees a missing
-    dataset, and a crash between them leaves the data under
-    ``._compact_old``. Both are recovered here: stale temp dirs are
-    cleaned on entry and an orphaned old dir (crash signature: old
-    exists, path missing) is renamed back before compacting. For
-    readers that must never hit the gap, use the versioned layout
-    (:func:`compact_parquet_versioned`) whose pointer flip is one
-    atomic ``os.replace``. Returns {files_before, files_after,
-    bytes}.
+    The rewrite is published with :func:`replace_dataset`: a crash at
+    any step is finished or undone by the next writer's
+    :func:`recover_swap_crash`, and a reader caught between its two
+    renames sees a missing dataset (classified retryable by
+    :func:`reraise_if_vanished_input`). Returns {files_before,
+    files_after, bytes}.
 
     CONCURRENT WRITERS LOSE DATA: the rewrite snapshots
     ``path`` at ``spark.read`` time, so files appended between that
@@ -124,95 +133,98 @@ def compact_parquet(
     properties restored. ``zorder_bits`` defaults to
     ``layout.ZORDER_DEFAULT_BITS``.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
+    path = path.rstrip("/")
+    stats: dict[str, int] = {}
+
+    def fill(tmp: str) -> None:
+        hive_dirs = [
+            d
+            for d in os.listdir(path)
+            if "=" in d and os.path.isdir(os.path.join(path, d))
+        ]
+        if hive_dirs and not partition_by:
+            raise ValueError(
+                f"{path} is hive-partitioned ({hive_dirs[0]}, ...): pass "
+                "partition_by= or the compaction would flatten the layout "
+                "and lose partition pruning"
+            )
+        data_files = _parquet_files(path)
+        stats["files_before"] = len(data_files)
+        stats["bytes"] = sum(os.path.getsize(f) for f in data_files)
+        n_out = max(1, -(-stats["bytes"] // target_file_bytes))  # ceil
+        df = spark.read.parquet(path)
+        lead = [F.col(c) for c in (partition_by or [])]
+        if zorder_cols:
+            # ONE range shuffle on (partition cols, z-key) + an
+            # in-partition sort give the byte target AND the z-curve
+            # tiling together
+            from irio2024_mapreduce_spark.sources.layout import (  # noqa: PLC0415
+                ZORDER_DEFAULT_BITS,
+                zorder_key,
+            )
+
+            zkey = zorder_key(
+                df, zorder_cols, zorder_bits or ZORDER_DEFAULT_BITS
+            )
+            df = (
+                df.withColumn("_zkey", zkey)
+                .repartitionByRange(n_out, *lead, F.col("_zkey"))
+                .sortWithinPartitions(*(partition_by or []), "_zkey")
+                .drop("_zkey")
+            )
+        elif partition_by:
+            # RANGE-partition on (partition cols, row hash): ranges
+            # keep a partition's rows on contiguous tasks (each task
+            # writes into at most a couple of hive dirs, so total files
+            # stay ~n_out) while the trailing hash splits a HOT
+            # partition across as many tasks as its bytes deserve —
+            # plain repartition(n_out, *partition_by) would collapse
+            # each hive dir onto ONE task and write one arbitrarily
+            # large file per partition, ignoring the byte target.
+            salt = F.xxhash64(*[F.col(c) for c in df.columns])
+            df = df.repartitionByRange(n_out, *lead, salt)
+        else:
+            # repartition (round-robin shuffle) — not coalesce:
+            # coalesce narrows without rebalancing, so one fat input
+            # file would keep its skew and produce one fat output file
+            df = df.repartition(n_out)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
 
     lock = acquire_compaction_lock(path)
     try:
-        return _compact_flat(
-            spark, path, target_file_bytes, partition_by, _glob, _os,
-            _shutil, zorder_cols, zorder_bits,
-        )
+        replace_dataset(path, fill)
     finally:
         release_compaction_lock(lock)
-
-
-def _compact_flat(
-    spark, path, target_file_bytes, partition_by, _glob, _os, _shutil,
-    zorder_cols=None, zorder_bits=None,
-) -> dict[str, int]:
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    recover_swap_crash(path.rstrip("/"))
-
-    hive_dirs = [
-        d
-        for d in _os.listdir(path)
-        if "=" in d and _os.path.isdir(_os.path.join(path, d))
-    ]
-    if hive_dirs and not partition_by:
-        raise ValueError(
-            f"{path} is hive-partitioned ({hive_dirs[0]}, ...): pass "
-            "partition_by= or the compaction would flatten the layout "
-            "and lose partition pruning"
-        )
-
-    data_files = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*.parquet"),
-                            recursive=True)
-        if _os.path.isfile(f)
-    ]
-    files_before = len(data_files)
-    total_bytes = sum(_os.path.getsize(f) for f in data_files)
-    n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
-
-    # repartition (round-robin shuffle) — not coalesce: coalesce
-    # narrows without rebalancing, so one fat input file would keep
-    # its skew and produce one fat output file. Partitioned datasets
-    # RANGE-partition on (partition cols, row hash): ranges keep a
-    # partition's rows on contiguous tasks (each task writes into at
-    # most a couple of hive dirs, so total files stay ~n_out) while
-    # the trailing hash splits a HOT partition across as many tasks
-    # as its bytes deserve — plain repartition(n_out, *partition_by)
-    # would collapse each hive dir onto ONE task and write one
-    # arbitrarily large file per partition, ignoring the byte target.
-    df = spark.read.parquet(path)
-    _shape_for_write(
-        df, n_out, partition_by, zorder_cols, zorder_bits
-    ).parquet(tmp)
-    _os.rename(path, old)
-    _os.rename(tmp, path)
-    _shutil.rmtree(old)
-
-    files_after = len(
-        [
-            f
-            for f in _glob.glob(
-                _os.path.join(path, "**", "*.parquet"), recursive=True
-            )
-            if _os.path.isfile(f)
-        ]
-    )
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "bytes": total_bytes,
-    }
+    stats["files_after"] = len(_parquet_files(path))
+    return stats
 
 
 def fsync_dir(path: str) -> None:
     """fsync a DIRECTORY: makes a just-renamed entry durable. Rename
     atomicity orders the VISIBLE states; only the directory fsync
     orders them against power loss."""
-    import os as _os
-
-    fd = _os.open(path, _os.O_RDONLY | _os.O_DIRECTORY)
+    fd = os.open(path, os.O_RDONLY | os.O_DIRECTORY)
     try:
-        _os.fsync(fd)
+        os.fsync(fd)
     finally:
-        _os.close(fd)
+        os.close(fd)
+
+
+def flush_tree(root: str) -> None:
+    """fsync every file and directory under ``root``. A commit point
+    written after this cannot become durable ahead of the data it
+    commits, so a power loss never rolls truncated files forward."""
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            fd = os.open(os.path.join(dirpath, name), os.O_RDONLY)
+            try:
+                os.fsync(fd)
+            finally:
+                os.close(fd)
+        fsync_dir(dirpath)
 
 
 def atomic_write_file(path: str, content: str) -> None:
@@ -220,54 +232,115 @@ def atomic_write_file(path: str, content: str) -> None:
     durably: write a sibling temp file, flush + fsync, ``os.replace``,
     fsync the parent dir — a crash leaves either no file or the
     complete file, and once this returns the file survives power
-    loss. THE single definition of the commit-file shape (pointer
-    flips, index manifests, staged-batch commit markers all use it —
-    four private copies had already started to diverge on fsync)."""
-    import os as _os
-
+    loss. THE single definition of the commit-file shape (swap-ready
+    markers, index manifests, staged-batch commit markers all use
+    it)."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         f.write(content)
         f.flush()
-        _os.fsync(f.fileno())
-    _os.replace(tmp, path)
-    fsync_dir(_os.path.dirname(path) or ".")
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    fsync_dir(os.path.dirname(path) or ".")
 
 
-def _shape_for_write(
-    df, n_out, partition_by=None, zorder_cols=None, zorder_bits=None
-):
-    """The compacted rewrite's (shaped_frame, writer) — shared by the
-    flat and versioned compactors so the zorder/partition/plain
-    branches cannot diverge between them. zorder_cols fuses z-order
-    re-clustering into the same single rewrite: ONE range shuffle on
-    (partition cols, z-key) + an in-partition sort give the byte
-    target AND the z-curve tiling together."""
-    if zorder_cols:
-        from irio2024_mapreduce_spark.sources.layout import (  # noqa: PLC0415
-            ZORDER_DEFAULT_BITS,
-            zorder_key,
-        )
+# ------------------------------------------------------------ publication
+SWAP_TMP = "._compact_tmp"
+SWAP_OLD = "._compact_old"
+SWAP_READY = "_SWAP_READY"
 
-        zkey = zorder_key(df, zorder_cols, zorder_bits or ZORDER_DEFAULT_BITS)
-        lead = [F.col(c) for c in (partition_by or [])]
-        shaped = (
-            df.withColumn("_zkey", zkey)
-            .repartitionByRange(n_out, *lead, F.col("_zkey"))
-            .sortWithinPartitions(*(partition_by or []), "_zkey")
-            .drop("_zkey")
+
+def _crash_if(point: str | None, here: str) -> None:
+    if point == here:
+        raise SimulatedCrash(here)
+
+
+def mark_swap_ready(tmp: str) -> None:
+    """Flush ``tmp`` and write its ``_SWAP_READY`` marker, the commit
+    point of :func:`replace_dataset`. A no-op on a dir already
+    marked."""
+    ready = os.path.join(tmp, SWAP_READY)
+    if not os.path.exists(ready):
+        flush_tree(tmp)
+        atomic_write_file(ready, "ready\n")
+
+
+def replace_dataset(
+    path: str, fill, _test_crash_after: str | None = None
+) -> None:
+    """Replace the dataset dir ``path`` with what ``fill(tmp)`` writes
+    into the sibling dir ``tmp``: THE publish step of every in-place
+    rewrite (compaction, z-order rewrite, corpus reconciliation, index
+    compaction, corpus-prep generation flips). It is the output commit
+    of MapReduce — write privately, then make the result visible in
+    one step. The caller holds ``path``'s compaction lock.
+
+    1. :func:`recover_swap_crash` settles any earlier crash;
+    2. ``fill(tmp)`` writes the new contents (a fill that creates no
+       ``tmp`` leaves ``path`` as it is);
+    3. every file and dir under ``tmp`` is flushed, then
+       ``tmp/_SWAP_READY`` is written: the commit point;
+    4. ``path`` is renamed to its ``old`` sibling and ``tmp`` to
+       ``path``, and the parent dir is fsynced;
+    5. ``old`` is removed.
+
+    Steps 4-5 are what recovery runs for a ready ``tmp``, so a crash
+    before the commit point leaves the old contents and a crash after
+    it the new ones. ``_test_crash_after`` names a step (``fill``,
+    ``ready``, ``old``, ``new``) after which :class:`SimulatedCrash` is
+    raised, leaving the state a process kill there would."""
+    path = path.rstrip("/")
+    tmp = path + SWAP_TMP
+    recover_swap_crash(path)
+    fill(tmp)
+    _crash_if(_test_crash_after, "fill")
+    if not os.path.isdir(tmp):
+        return
+    mark_swap_ready(tmp)
+    _crash_if(_test_crash_after, "ready")
+    _settle_swap(path, _test_crash_after)
+
+
+def recover_swap_crash(path: str) -> None:
+    """THE crash classification of :func:`replace_dataset`, run first by
+    every writer (and recovery-first reader) of a rewritable dataset:
+
+    * ``tmp`` with ``_SWAP_READY`` is committed: rolled forward;
+    * ``tmp`` without it is a failed write: dropped;
+    * ``old`` beside a live ``path`` is post-swap garbage: dropped;
+    * ``old`` with no ``path`` is the pre-swap truth: restored.
+
+    Callers must hold — or have excluded via the advisory lock — any
+    concurrent writer of ``path``. A root in the removed versioned
+    layout (a ``_CURRENT`` pointer over ``v<N>`` dirs) is refused:
+    appending beside ``v<N>`` would leave a dataset nothing can read."""
+    path = path.rstrip("/")
+    if os.path.exists(os.path.join(path, "_CURRENT")):
+        raise ValueError(
+            f"{path} is in the removed versioned layout (_CURRENT over "
+            "v<N> dirs), which Spark cannot read as one dataset: move "
+            f"{path}/v<N>/* up into {path} (N is the number in "
+            "_CURRENT), then delete _CURRENT and the older v* dirs"
         )
-        writer = shaped.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        return writer
-    if partition_by:
-        salt = F.xxhash64(*[F.col(c) for c in df.columns])
-        shaped = df.repartitionByRange(
-            n_out, *[F.col(c) for c in partition_by], salt
-        )
-        return shaped.write.mode("overwrite").partitionBy(*partition_by)
-    return df.repartition(n_out).write.mode("overwrite")
+    _settle_swap(path)
+
+
+def _settle_swap(path: str, crash_at: str | None = None) -> None:
+    tmp, old = path + SWAP_TMP, path + SWAP_OLD
+    if os.path.exists(os.path.join(tmp, SWAP_READY)):
+        if os.path.exists(path):
+            os.rename(path, old)
+            _crash_if(crash_at, "old")
+        os.rename(tmp, path)
+        fsync_dir(os.path.dirname(path) or ".")
+        _crash_if(crash_at, "new")
+    elif os.path.exists(tmp):
+        shutil.rmtree(tmp)
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
 
 
 # ---------------------------------------------------------------- locking
@@ -423,206 +496,6 @@ def check_not_compacting(path: str) -> None:
             "held): appends during a compaction are deleted with "
             "the old snapshot — retry after the maintenance window"
         )
-
-
-def recover_swap_crash(
-    path: str,
-    tmp_suffix: str = "._compact_tmp",
-    old_suffix: str = "._compact_old",
-) -> None:
-    """THE swap crash-recovery classification, defined once for every
-    tmp/old double-rename site (flat compactor, index compactor,
-    z-order rewriter via its suffix pair, and the ingest drivers'
-    recovery-first reads): a stale tmp is a failed write (drop); an
-    old dir beside a live dir is post-swap garbage (drop); an old dir
-    without a live dir is the pre-swap truth (restore). Callers must
-    hold — or have excluded via the advisory lock — any concurrent
-    compactor."""
-    import os as _os
-    import shutil as _shutil
-
-    tmp, old = path + tmp_suffix, path + old_suffix
-    if _os.path.exists(tmp):
-        _shutil.rmtree(tmp)
-    if _os.path.exists(old):
-        if _os.path.exists(path):
-            _shutil.rmtree(old)
-        else:
-            _os.rename(old, path)
-
-
-# ------------------------------------------------------- versioned layout
-# The readers-never-blocked answer the flat compactor's docstring
-# points at: the dataset lives in version dirs
-# `root/v<N>` and readers resolve ONE small pointer file. Compaction
-# writes a brand-new version dir and flips the pointer with an atomic
-# os.replace — there is no rename gap, a reader between any two steps
-# sees either the old complete version or the new complete version.
-# A crash before the flip leaves an unreferenced version dir that the
-# next compaction garbage-collects; a crash after the flip already
-# committed. The previous version is retained for readers that
-# resolved the pointer just before the flip (grace: one version).
-_CURRENT_POINTER = "_CURRENT"
-
-
-def resolve_current(root: str) -> str:
-    """Path of the current version dir — what every reader scans.
-    One tiny file read. Compaction never mutates a pointed-at dir
-    (it writes a NEW version and flips); appenders (the ingest
-    driver) may ADD files to the current dir, with the same
-    reader-visibility semantics as flat-layout appends — which is
-    why compaction and appends share the advisory lock."""
-    import os as _os
-
-    with open(_os.path.join(root, _CURRENT_POINTER)) as f:
-        return _os.path.join(root, f"v{int(f.read().strip())}")
-
-
-def read_current(spark, root: str):
-    return spark.read.parquet(resolve_current(root))
-
-
-def _flip_pointer(root: str, version: int) -> None:
-    """Atomic pointer update (see :func:`atomic_write_file` — readers
-    see old or new content, never a partial write)."""
-    import os as _os
-
-    atomic_write_file(
-        _os.path.join(root, _CURRENT_POINTER), str(version)
-    )
-
-
-def init_versioned(root: str) -> str:
-    """Adopt a dataset into the versioned layout. A flat parquet dir
-    becomes ``root/v1`` (one rename — do this in the same maintenance
-    window as a compaction, it has the flat layout's swap caveat) and
-    the pointer is written; an already-versioned root is a no-op.
-    Returns the current version dir.
-
-    Crash-recoverable like the compactors' swaps: the staging dir IS
-    the signature. A crash can land (a) after the root→staging rename
-    (root missing), (b) after the empty-root mkdir, or (c) after the
-    staging→v1 rename but before the pointer write — a re-run detects
-    each state and resumes the adoption instead of raising on the
-    first rename."""
-    import os as _os
-
-    pointer = _os.path.join(root, _CURRENT_POINTER)
-    if _os.path.exists(pointer):
-        return resolve_current(root)
-    staging = root.rstrip("/") + "._v1_staging"
-    v1 = _os.path.join(root, "v1")
-    if _os.path.exists(staging):
-        # crashed mid-adoption at (a) or (b): resume from the staging
-        # — but REFUSE if someone re-materialized data at root in the
-        # meantime (adopting the stale staging over it would point
-        # readers at pre-crash data and orphan the fresh files)
-        if _os.path.isdir(root) and _os.listdir(root):
-            raise RuntimeError(
-                f"crashed adoption staging {staging!r} exists but "
-                f"{root!r} is non-empty — resolve which dataset is "
-                "current before re-running init_versioned"
-            )
-    elif _os.path.isdir(v1):
-        # crashed at (c): data already in place, only the pointer is
-        # missing
-        _flip_pointer(root, 1)
-        return v1
-    else:
-        # fresh adoption: the first two steps; the shared tail below
-        # finishes, so every crash point resumes the SAME code path
-        _os.rename(root, staging)
-    _os.makedirs(root, exist_ok=True)
-    _os.rename(staging, v1)
-    _flip_pointer(root, 1)
-    return v1
-
-
-def compact_parquet_versioned(
-    spark,
-    root: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: list[str] | None = None,
-    zorder_cols: list[str] | None = None,
-    zorder_bits: int | None = None,
-) -> dict[str, int]:
-    """Compaction for a versioned dataset: read the current version,
-    write the compacted rewrite as version N+1 (a plain parquet write
-    — no renames of live data at all), flip the pointer atomically,
-    and garbage-collect everything older than version N (N itself is
-    the one-version reader grace). Readers are NEVER blocked and
-    never see a missing dataset. Same writer-exclusion caveat as the
-    flat compactor for concurrent APPENDS: appends must target a new
-    version or hold off during the window (the advisory lock is
-    taken here too). ``zorder_cols`` fuses z-order re-clustering into
-    the same rewrite (see :func:`compact_parquet`).
-
-    Returns {files_before, files_after, bytes, version}."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    lock = acquire_compaction_lock(root)
-    try:
-        cur = resolve_current(root)
-        cur_n = int(_os.path.basename(cur)[1:])
-
-        hive_dirs = [
-            d
-            for d in _os.listdir(cur)
-            if "=" in d and _os.path.isdir(_os.path.join(cur, d))
-        ]
-        if hive_dirs and not partition_by:
-            raise ValueError(
-                f"{cur} is hive-partitioned ({hive_dirs[0]}, ...): pass "
-                "partition_by= or the compaction would flatten the "
-                "layout and lose partition pruning"
-            )
-
-        def _files(d):
-            return [
-                f
-                for f in _glob.glob(
-                    _os.path.join(d, "**", "*.parquet"), recursive=True
-                )
-                if _os.path.isfile(f)
-            ]
-
-        files_before = len(_files(cur))
-        total_bytes = sum(_os.path.getsize(f) for f in _files(cur))
-        n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
-
-        new_n = cur_n + 1
-        new_dir = _os.path.join(root, f"v{new_n}")
-        if _os.path.exists(new_dir):  # unreferenced crash leftover
-            _shutil.rmtree(new_dir)
-
-        df = spark.read.parquet(cur)
-        _shape_for_write(
-            df, n_out, partition_by, zorder_cols, zorder_bits
-        ).parquet(new_dir)
-
-        _flip_pointer(root, new_n)  # the commit point
-
-        # GC: drop versions older than the grace version (cur_n), and
-        # any unreferenced future dirs from older crashed runs
-        for d in _os.listdir(root):
-            if (
-                d.startswith("v")
-                and d[1:].isdigit()
-                and _os.path.isdir(_os.path.join(root, d))
-                and int(d[1:]) < cur_n
-            ):
-                _shutil.rmtree(_os.path.join(root, d))
-
-        return {
-            "files_before": files_before,
-            "files_after": len(_files(new_dir)),
-            "bytes": total_bytes,
-            "version": new_n,
-        }
-    finally:
-        release_compaction_lock(lock)
 
 
 def reraise_if_vanished_input(e: BaseException, index_dir: str) -> None:

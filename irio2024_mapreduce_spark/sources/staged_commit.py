@@ -65,9 +65,7 @@ PUBLISH_PLAN = "_publish_plan.json"
 _ALIVE = "._alive.lock"
 
 
-def _crash_if(point: str | None, here: str) -> None:
-    if point == here:
-        raise sinks.SimulatedCrash(here)
+_crash_if = sinks._crash_if
 
 
 def acquire_patiently(
@@ -162,14 +160,7 @@ def commit(staging: str, crash_at: str | None = None) -> None:
     """Flush every staged file and directory, then write the commit
     point."""
     _crash_if(crash_at, "stage")
-    for dirpath, _dirs, files in os.walk(staging):
-        for name in files:
-            fd = os.open(os.path.join(dirpath, name), os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        sinks.fsync_dir(dirpath)
+    sinks.flush_tree(staging)
     sinks.atomic_write_file(os.path.join(staging, COMMITTED), "committed\n")
     _crash_if(crash_at, "commit")
 

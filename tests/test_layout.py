@@ -5,6 +5,7 @@ only its leading column), and the maintenance rewrite's lock/swap."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -156,6 +157,7 @@ def test_zorder_key_all_null_column_degrades_to_constant(spark):
 def test_rewrite_zordered_swaps_and_recovers(spark, xy, tmp_path):
     from irio2024_mapreduce_spark.sources.sinks import (
         acquire_compaction_lock,
+        mark_swap_ready,
     )
 
     p = str(tmp_path / "ds")
@@ -163,11 +165,14 @@ def test_rewrite_zordered_swaps_and_recovers(spark, xy, tmp_path):
     rep = rewrite_zordered(spark, p, ["x", "y"], n_files=4)
     assert rep["rows"] == 1_000
     assert spark.read.parquet(p).count() == 1_000
-    assert not os.path.exists(p + "._zorder_tmp")
-    assert not os.path.exists(p + "._zorder_old")
+    assert not os.path.exists(p + "._compact_tmp")
+    assert not os.path.exists(p + "._compact_old")
 
-    # crash signature: data renamed away, swap incomplete → restored
-    os.rename(p, p + "._zorder_old")
+    # crash signature: data renamed away, swap incomplete → rolled
+    # forward from the ready tmp
+    shutil.copytree(p, p + "._compact_tmp")
+    mark_swap_ready(p + "._compact_tmp")
+    os.rename(p, p + "._compact_old")
     rep = rewrite_zordered(spark, p, ["x"], n_files=2)
     assert rep["rows"] == 1_000
 

@@ -127,13 +127,14 @@ def test_ingest_rolls_crashed_generation_flip_forward(spark, tmp_path):
     permanent split-brain. The ingest publish now rolls any committed
     generation forward FIRST, so the batch lands in the completed NEW
     generation."""
-    from irio2024_mapreduce_spark.plans.corpus_prep import (
-        _PREP_OLD,
-        _PREP_TMP,
-    )
     from irio2024_mapreduce_spark.plans.ingest import (
         ingest_batch,
         read_recorded_manifest,
+    )
+    from irio2024_mapreduce_spark.sources.sinks import (
+        SWAP_OLD,
+        SWAP_TMP,
+        mark_swap_ready,
     )
 
     fx_a = _fixture(tmp_path, "a", GEN_A)
@@ -145,15 +146,17 @@ def test_ingest_rolls_crashed_generation_flip_forward(spark, tmp_path):
             spark, fx_b, out, index_dir=idx, _test_crash_after="commit"
         )
     # hand-craft the worst mid-swap state: corpus target MISSING, old
-    # generation under ._prep_old, new generation under ._prep_tmp
+    # generation under ._compact_old, new generation under a ready
+    # ._compact_tmp
     staging = next(
         os.path.join(out, "_staged", n)
         for n in os.listdir(os.path.join(out, "_staged"))
         if os.path.isdir(os.path.join(out, "_staged", n))
     )
     clean = os.path.join(out, "clean_documents.parquet")
-    os.rename(os.path.join(staging, "corpus"), clean + _PREP_TMP)
-    os.rename(clean, clean + _PREP_OLD)
+    mark_swap_ready(os.path.join(staging, "corpus"))
+    os.rename(os.path.join(staging, "corpus"), clean + SWAP_TMP)
+    os.rename(clean, clean + SWAP_OLD)
     assert not os.path.exists(clean)  # the gap
 
     # an ingest batch arrives NOW: doc 500 is fresh text
@@ -171,8 +174,8 @@ def test_ingest_rolls_crashed_generation_flip_forward(spark, tmp_path):
     # the batch rides the COMPLETED new generation — not a fresh dir
     # destined for destruction
     assert clean_ids == set(GEN_B) | {500}
-    assert not os.path.exists(clean + _PREP_OLD)
-    assert not os.path.exists(clean + _PREP_TMP)
+    assert not os.path.exists(clean + SWAP_OLD)
+    assert not os.path.exists(clean + SWAP_TMP)
     # ... and its index rows live in the new generation's index
     hashes = spark.read.parquet(os.path.join(idx, "hashes")).count()
     assert hashes == len(GEN_B) + 1

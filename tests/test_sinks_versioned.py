@@ -1,7 +1,6 @@
-"""Versioned compaction (r8 verdict item 6): readers resolve a
-pointer file, compaction writes a NEW version dir and flips the
-pointer atomically — no rename gap, no missing-dataset window — plus
-the advisory compaction lock the ingest writer honors (ADVICE r8)."""
+"""Flat compaction and the advisory compaction lock the ingest writer
+honors. The crash matrix of the compactor's publish step lives in
+``test_replace_dataset.py``."""
 
 from __future__ import annotations
 
@@ -13,11 +12,6 @@ from irio2024_mapreduce_spark.sources.sinks import (
     acquire_compaction_lock,
     check_not_compacting,
     compact_parquet,
-    compact_parquet_versioned,
-    compaction_lock_path,
-    init_versioned,
-    read_current,
-    resolve_current,
 )
 
 
@@ -26,62 +20,6 @@ def _grow(spark, path, appends=4, rows=50):
         spark.range(i * rows, (i + 1) * rows).selectExpr(
             "id", "id * 2 AS val"
         ).repartition(4).write.mode("append").parquet(path)
-
-
-def test_versioned_adopt_compact_and_read(spark, tmp_path):
-    root = str(tmp_path / "data")
-    _grow(spark, root)
-    before = spark.read.parquet(root).count()
-
-    cur = init_versioned(root)
-    assert resolve_current(root) == cur and cur.endswith("v1")
-    assert read_current(spark, root).count() == before
-    # idempotent adoption
-    assert init_versioned(root) == cur
-
-    old_version_dir = resolve_current(root)
-    stats = compact_parquet_versioned(spark, root, target_file_bytes=1 << 30)
-    assert stats["version"] == 2
-    assert stats["files_after"] < stats["files_before"]
-    assert resolve_current(root).endswith("v2")
-    assert read_current(spark, root).count() == before
-    assert (
-        read_current(spark, root).selectExpr("sum(val)").collect()[0][0]
-        == spark.read.parquet(resolve_current(root))
-        .selectExpr("sum(val)")
-        .collect()[0][0]
-    )
-    # reader grace: a reader that resolved v1 just before the flip
-    # still has a complete dataset to finish its scan on
-    assert spark.read.parquet(old_version_dir).count() == before
-
-    # a second compaction GCs the grace version from the first
-    compact_parquet_versioned(spark, root, target_file_bytes=1 << 30)
-    assert resolve_current(root).endswith("v3")
-    assert not os.path.exists(os.path.join(root, "v1"))
-    assert os.path.exists(os.path.join(root, "v2"))  # new grace
-    assert read_current(spark, root).count() == before
-
-
-def test_versioned_crash_before_flip_recovers(spark, tmp_path):
-    """An unreferenced v{N+1} (crash after the rewrite, before the
-    pointer flip) never becomes visible and is replaced by the next
-    compaction run."""
-    root = str(tmp_path / "data")
-    _grow(spark, root, appends=2)
-    init_versioned(root)
-    before = read_current(spark, root).count()
-
-    # simulate the crash leftover: a partial v2 with garbage
-    os.makedirs(os.path.join(root, "v2"))
-    with open(os.path.join(root, "v2", "part-junk.parquet"), "w") as f:
-        f.write("not parquet")
-    assert resolve_current(root).endswith("v1")  # pointer untouched
-    assert read_current(spark, root).count() == before
-
-    stats = compact_parquet_versioned(spark, root, target_file_bytes=1 << 30)
-    assert stats["version"] == 2
-    assert read_current(spark, root).count() == before
 
 
 def test_compaction_lock_excludes_writers_and_compactors(spark, tmp_path):
@@ -106,54 +44,6 @@ def test_compaction_lock_excludes_writers_and_compactors(spark, tmp_path):
     check_not_compacting(root)  # the leftover lock file blocks nobody
 
 
-def test_ingest_appends_into_versioned_corpus(spark, tmp_path):
-    """A corpus adopted into the versioned layout keeps taking daily
-    ingest appends: ingest_batch targets the CURRENT version dir, and
-    read_current sees old + new docs across a compaction."""
-    from irio2024_mapreduce_spark.plans.ingest import (
-        build_corpus_index,
-        ingest_batch,
-    )
-
-    def frame(rows):
-        return spark.createDataFrame(
-            [(i, t, "en", "src0", len(t)) for i, t in rows],
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        )
-
-    t0 = (
-        "the ancient library kept thousands of scrolls catalogued by "
-        "patient scribes over centuries"
-    )
-    t1 = (
-        "the mountain trail crossed seven wooden bridges before "
-        "reaching the snowy summit ridge"
-    )
-    t2 = (
-        "the night train rattled past sleeping towns carrying mail "
-        "and quiet travellers north"
-    )
-    idx = str(tmp_path / "idx")
-    out = str(tmp_path / "corpus")
-    corpus_path = os.path.join(out, "clean_documents.parquet")
-    build_corpus_index(spark, frame([(1, t0)]), idx)
-
-    m1 = ingest_batch(spark, frame([(10, t1)]), idx, out)
-    assert m1["appended"] == 1
-    init_versioned(corpus_path)
-    m2 = ingest_batch(spark, frame([(20, t2)]), idx, out)
-    assert m2["appended"] == 1
-    assert {
-        r["doc_id"] for r in read_current(spark, corpus_path).collect()
-    } == {10, 20}
-
-    compact_parquet_versioned(spark, corpus_path, target_file_bytes=1 << 30)
-    assert {
-        r["doc_id"] for r in read_current(spark, corpus_path).collect()
-    } == {10, 20}
-
-
 def test_flat_compactor_still_recovers_and_compacts(spark, tmp_path):
     """The flat path kept its semantics after the lock refactor."""
     path = str(tmp_path / "flat")
@@ -162,52 +52,6 @@ def test_flat_compactor_still_recovers_and_compacts(spark, tmp_path):
     stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
     assert stats["files_after"] < stats["files_before"]
     assert spark.read.parquet(path).count() == before_rows
-
-
-def test_init_versioned_crash_recovery(spark, tmp_path):
-    """Every crash point of the three-step adoption must be resumable
-    by re-running init_versioned — the staging dir is the signature
-    (the pre-fix code raised FileNotFoundError on the first rename
-    and left no dataset at root)."""
-    # crash (a): after rename(root, staging) — root missing entirely
-    root = str(tmp_path / "a")
-    _grow(spark, root, appends=1)
-    n = spark.read.parquet(root).count()
-    os.rename(root, root + "._v1_staging")
-    cur = init_versioned(root)
-    assert cur.endswith("v1") and read_current(spark, root).count() == n
-
-    # crash (b): after the empty-root mkdir
-    root = str(tmp_path / "b")
-    _grow(spark, root, appends=1)
-    os.rename(root, root + "._v1_staging")
-    os.makedirs(root)
-    cur = init_versioned(root)
-    assert cur.endswith("v1") and read_current(spark, root).count() == n
-
-    # crash (c): data renamed into v1 but the pointer never written
-    root = str(tmp_path / "c")
-    _grow(spark, root, appends=1)
-    os.rename(root, root + "._v1_staging")
-    os.makedirs(root)
-    os.rename(root + "._v1_staging", os.path.join(root, "v1"))
-    cur = init_versioned(root)
-    assert cur.endswith("v1") and read_current(spark, root).count() == n
-
-
-def test_init_versioned_refuses_stale_adoption_over_fresh_data(
-    spark, tmp_path
-):
-    """If an operator re-materialized the dataset at root after a
-    crash, resuming the adoption would install the STALE pre-crash
-    staging as v1 over it — init_versioned must refuse instead."""
-    root = str(tmp_path / "d")
-    _grow(spark, root, appends=1)
-    os.rename(root, root + "._v1_staging")
-    # someone recreates fresh data at root
-    _grow(spark, root, appends=1, rows=7)
-    with pytest.raises(RuntimeError, match="non-empty"):
-        init_versioned(root)
 
 
 def test_crashed_holder_lock_releases_with_its_process(spark, tmp_path):
