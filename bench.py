@@ -74,19 +74,19 @@ HEADLINE = [
     # added r8 when they entered the graded window (29-query totals
     # not comparable to r7's 27; compare per-query + the r01 subset).
     # dedup_simhash stays ABOVE despite its r8 retirement from the
-    # driver window: it's resolved from RETIRED_ROWS_ONLY_QUERIES so
+    # driver window: it's resolved from registry.retired_queries() so
     # the candidate-cap perf guard keeps its cross-round series.
     "bm25_search",
     "quality_funnel",
     # added r9 when it took the graded near-dedup slot (30-query
     # totals not comparable to r8's 29). dedup_near stays ABOVE
     # despite its r9 retirement (resolved from
-    # RETIRED_ROWS_ONLY_QUERIES) — it anchors the r01 subset and the
-    # xxhash64-family perf series.
+    # registry.retired_queries()) — it anchors the R01_COMPARABLE
+    # subset and the xxhash64-family perf series.
     "dedup_near_md5",
     # added r12 when it took the graded ANN slot (31-query totals not
     # comparable to r11's 30). similarity_ann stays ABOVE despite its
-    # r12 retirement (resolved from similarity.RETIRED_TWIN_QUERIES)
+    # retirement (resolved from registry.retired_queries())
     # — it anchors the LSH-family perf series; this entry measures
     # the STORED-index probe (fixture build amortized: first
     # iteration builds, min-of-N reports the cached-probe cost, which
@@ -94,7 +94,7 @@ HEADLINE = [
     "probe_ann_index",
     # added r13 when it took the graded IVF slot (32-query totals not
     # comparable to r12's 31). similarity_ivf stays ABOVE despite its
-    # r13 retirement (resolved from similarity.RETIRED_TWIN_QUERIES)
+    # retirement (resolved from registry.retired_queries())
     # — it anchors the IVF-family perf series; this entry measures
     # the STORED-index probe (fixture build amortized, same
     # discipline as probe_ann_index).
@@ -263,16 +263,9 @@ def main() -> None:
         "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(registry.queries())
     # retired-but-still-benched queries (perf series continuity across
-    # driver-window retirements) — explicit merge, registry wins
-    from irio2024_mapreduce_spark.operators import dedup as _dedup
-    from irio2024_mapreduce_spark.operators import similarity as _sim
-
-    for _name, _fn in _dedup.RETIRED_ROWS_ONLY_QUERIES.items():
-        qs.setdefault(_name, _fn)
-    for _name, _fn in _sim.RETIRED_TWIN_QUERIES.items():
-        qs.setdefault(_name, _fn)
+    # driver-window retirements); a registered name wins
+    qs = {**registry.retired_queries(), **registry.queries()}
 
     # warm-up: pay JVM/codegen init outside the timings
     spark.range(1_000_000).selectExpr("sum(id)").collect()

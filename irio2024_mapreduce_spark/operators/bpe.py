@@ -1,8 +1,8 @@
 """BPE-style subword tokenizer — train + apply as a Spark pipeline.
 
-`token_count` (operators/text_analysis.py) estimates tokens with a
-BPE-ish regex; real pipelines APPLY a trained merge table. This module
-does both halves the way a 100 TB pipeline would:
+A regex token estimate is not a tokenizer: real pipelines APPLY a
+trained merge table. This module does both halves the way a 100 TB
+pipeline would:
 
 * **Train** — word frequencies come from a distributed
   ``groupBy(word).count()`` (partial aggregation map-side; only

@@ -99,36 +99,32 @@ def boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MAX_CC_ITERATIONS = 10
 
-# Probe-only toggle (tools/stress_cc_ivf.py): True (default) runs
-# connected components on the COLLAPSED exact-dup representative
-# graph (round-5 form — the label loop never sees duplicate members);
-# False runs the legacy member-graph propagation for A/B comparison.
-# The result is IDENTICAL either way — only the rows the loop touches
-# differ.
-CC_REP_SEEDING = True
-
 # observability: rounds the last dedup_clusters call needed (includes
 # the final no-change confirmation round) — read by tests/probes, never
 # by query logic
 _LAST_CC_ROUNDS = 0
 
 
-def _ckpt_rdd(df: DataFrame):
-    """Underlying JVM RDD of a ``localCheckpoint(eager=False)`` frame
-    (its logical plan is a LogicalRDD from creation, before any job
-    runs). Held so the CC loop can free a round's blocks the moment a
-    later round's materialization makes them dead — local-checkpoint
-    blocks otherwise persist until the JVM collects the py4j refs,
-    and loaded bench runs showed 9-12 live block sets by late rounds
-    (the recurring dedup_clusters transient)."""
-    return df._jdf.queryExecution().logical().rdd()
+def _ckpt_rdds(df: DataFrame) -> list:
+    """JVM RDDs of the ``localCheckpoint`` leaves of ``df``'s logical
+    plan; for a ``localCheckpoint(eager=False)`` frame that is its own
+    RDD (its plan is a LogicalRDD from creation, before any job runs).
+    Held so the CC loop can free checkpoint blocks the moment a later
+    materialization makes them dead — local-checkpoint blocks
+    otherwise persist until the JVM collects the py4j refs, and loaded
+    bench runs showed 9-12 live block sets by late rounds."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return [
+        leaf.rdd()
+        for leaf in (leaves.apply(k) for k in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    ]
 
 
 def _doc_rep(docs_raw: DataFrame) -> DataFrame:
     """doc_id → exact-dup representative (min doc_id per sha2(text))
     for the whole corpus — the attachment that maps every member onto
-    the collapsed rep graph's labels. Factored out as the seam the
-    r15 A/B (tools/ab_r15_ccdocrep.py) swaps shapes through.
+    the collapsed rep graph's labels.
 
     Shape: the 32-byte (doc_id, hash) rows are materialized once
     (lazy checkpoint) because `reps` and the doc→rep join are two
@@ -146,17 +142,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster + cluster size. Smallest-label propagation with pointer
     jumping; fixpoint = components.
 
-    **Collapsed-graph CC (round-5 form, CC_REP_SEEDING=True):** the
-    propagation runs on the exact-dup REPRESENTATIVE graph only. The
-    near-dup edge source (``dedup_ngram_jaccard``) already collapses
-    byte-identical texts and emits pairs between representatives, so
-    every exact d-clique is ONE node in the graph — at a 100×
-    replicated corpus the label loop touches ~1/100th of the rows the
-    member-graph form did (measured 43 s → see SCALE.md), and exact
-    duplicates receive their cluster label afterwards through one
-    doc→rep→label join. The fixpoint is identical: a component's
-    label is the min rep id, and the min rep id IS the min doc id of
-    the whole member set (each rep is its clique's min).
+    **Collapsed-graph CC:** the propagation runs on the exact-dup
+    REPRESENTATIVE graph only. The near-dup edge source
+    (``dedup_ngram_jaccard``) already collapses byte-identical texts
+    and emits pairs between representatives, so every exact d-clique
+    is ONE node in the graph — at a 100× replicated corpus the label
+    loop touches ~1/100th of the rows a member graph would (measured
+    43 s → see SCALE.md), and exact duplicates receive their cluster
+    label afterwards through one doc→rep→label join. The fixpoint is
+    the member graph's: a component's label is the min rep id, and
+    the min rep id IS the min doc id of the whole member set (each rep
+    is its clique's min).
 
     Each iteration is a shuffle-bounded join (edges ⋈ labels) — no
     driver-side graph. Iterations are bounded by near-component
@@ -164,32 +160,26 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Edges come from the oracle-checked ``dedup_ngram_jaccard`` pair
     set so the component structure is hash-verifiable end-to-end (the
-    DuckDB oracle rebuilds the identical edges and takes their
-    transitive closure with a recursive CTE).
+    DuckDB oracle rebuilds the identical edges, adds the exact-dup
+    rep↔member edges, and takes their transitive closure with a
+    recursive CTE).
 
-    ``CC_REP_SEEDING=False`` (probe-only baseline) runs the legacy
-    member-graph propagation: every doc is a node, exact cliques are
-    rep↔dup star edges, everyone self-labels.
+    Checkpoint hygiene: when the loop converges, only two checkpoints
+    stay persisted — the converged labels (``half``) and ``_doc_rep``'s
+    ``hashed``, both read by the final action. The edges, the pair
+    generation's checkpoints under them and every earlier round's
+    labels are freed as soon as they are dead.
     """
     near_pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     docs_raw = load_table(spark, sf_dir, "documents")
     doc_rep = _doc_rep(docs_raw)
 
-    if CC_REP_SEEDING:
-        pairs = near_pairs
-    else:
-        # legacy member graph: rep↔duplicate star edges pull exact
-        # twins into the propagation itself
-        exact_pairs = doc_rep.filter(
-            F.col("doc_id") != F.col("rep")
-        ).select(
-            F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-        )
-        pairs = near_pairs.unionByName(exact_pairs)
     edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        near_pairs.select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+        )
         .unionByName(
-            pairs.select(
+            near_pairs.select(
                 F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
             )
         )
@@ -200,11 +190,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iterative-DataFrame blowup). Lazy: the first convergence count
     # triggers it, folding edge materialization into iteration 1's job.
     edges = edges.localCheckpoint(eager=False)
-    members = edges.select(F.col("src").alias("doc_id")).distinct()
-    labels = members.select("doc_id", F.col("doc_id").alias("label"))
+    labels = (
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .select("doc_id", F.col("doc_id").alias("label"))
+    )
 
     global _LAST_CC_ROUNDS
-    converged = False
     # block bookkeeping: `stale_half` is the previous round's `half`
     # checkpoint (consumed once this round's convergence count
     # materializes the labels built from it); `labels_ckpt` is the
@@ -246,19 +238,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             # lazy, so the count is still the round's single action
             .localCheckpoint(eager=False)
         )
-        # convergence check on the PROPAGATION half (r14 opt): the
-        # propagation fixpoint (no label has a smaller closed-
-        # neighborhood min) IS the component fixpoint — by induction
-        # from each component-min node m (label(m) = m always, its
-        # neighbors' fixpoint labels equal m, and so on outward), so
-        # no-change-here equals the old post-jump no-change check,
-        # round for round (the jump only lowers labels a propagation
-        # already moved: half.label changed ⇒ new_labels.label
-        # changed, and an unchanged half makes the jump the
-        # identity). Checking BEFORE the jump skips the final
-        # round's jump join + checkpoint — computed work the old
-        # shape always threw away (guide §1.2: don't compute what
-        # you discard).
+        # convergence check on the PROPAGATION half: the propagation
+        # fixpoint (no label has a smaller closed-neighborhood min) IS
+        # the component fixpoint — by induction from each
+        # component-min node m (label(m) = m always, its neighbors'
+        # fixpoint labels equal m, and so on outward), so
+        # no-change-here equals a post-jump no-change check, round for
+        # round (the jump only lowers labels a propagation already
+        # moved: half.label changed ⇒ new_labels.label changed, and an
+        # unchanged half makes the jump the identity). Checking BEFORE
+        # the jump skips the final round's jump join + checkpoint —
+        # work a post-jump check would throw away.
         changed = (
             half.filter(F.col("label") != F.col("_old")).limit(1).count()
         )
@@ -269,26 +259,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             stale_half.unpersist(False)
             stale_half = None
         if changed == 0:
-            converged = True
             _LAST_CC_ROUNDS = _round + 1
-            # half's content equals labels' (no row changed): the
-            # post-loop plan keeps reading `labels`, so half's fresh
-            # blocks are immediately dead
-            _ckpt_rdd(half).unpersist(False)
-            if CC_REP_SEEDING and _round > 0:
-                # the edge graph is dead once labels' lineage is
-                # truncated: the rep-seeding post-loop plan reads only
-                # labels + doc_rep (whose `hashed` checkpoint
-                # materializes at the final action and must stay). The
-                # legacy path still reads `members` — derived from
-                # edges — in its singleton anti-join, so edges must
-                # survive there. Round-0 convergence (empty/trivial
-                # near-dup graph) must ALSO keep edges: `labels` is
-                # then still the un-checkpointed members-derived frame
-                # whose lineage reads the edge blocks — freeing them
-                # would force the whole pair-generation subtree to
-                # recompute at the final action (ADVICE r14).
-                _ckpt_rdd(edges).unpersist(False)
             break
         # this round moved labels: the previous labels blocks have no
         # further consumer (the jump below reads only `half`)
@@ -309,49 +280,38 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("label"), F.coalesce("jlabel", F.col("label"))
                 ).alias("label"),
             )
-            # lazy checkpoint: the NEXT round's convergence count (or
-            # the post-loop action) is the materializing job
+            # lazy checkpoint: the NEXT round's convergence count is
+            # the materializing job
             .localCheckpoint(eager=False)
         )
-        stale_half = _ckpt_rdd(half)
-        labels_ckpt = _ckpt_rdd(new_labels)
+        (stale_half,) = _ckpt_rdds(half)
+        (labels_ckpt,) = _ckpt_rdds(new_labels)
         labels = new_labels.select("doc_id", "label")
-    if not converged:
+    else:
         raise RuntimeError(
             "dedup_clusters: label propagation did not converge in "
             f"{MAX_CC_ITERATIONS} iterations — component diameter exceeds "
             "2^iterations; raise MAX_CC_ITERATIONS"
         )
+    # converged: `half` is materialized with its lineage truncated, and
+    # it carries the final labels (no row changed this round), so the
+    # post-loop plan reads it, and the edges, the pair checkpoints they
+    # were built from and the labels checkpoint `half` read are dead
+    for rdd in [*_ckpt_rdds(edges), *_ckpt_rdds(near_pairs), labels_ckpt]:
+        if rdd is not None:
+            rdd.unpersist(False)
 
-    if CC_REP_SEEDING:
-        # attach every doc to its rep's component label; a rep outside
-        # the near graph labels its clique by itself. This is the ONLY
-        # corpus-sized step after the (tiny) rep-graph propagation.
-        rep_labels = labels.select(
-            F.col("doc_id").alias("rep"), "label"
-        )
-        doc_labels = doc_rep.join(rep_labels, "rep", "left").select(
-            "doc_id", F.coalesce("label", F.col("rep")).alias("label")
-        )
-        per_cluster = doc_labels.groupBy("label").agg(
-            F.count("*").alias("cluster_size"),
-            F.min("doc_id").alias("canonical_doc"),
-        )
-    else:
-        clusters = labels.groupBy("label").agg(
-            F.count("*").alias("cluster_size"),
-            F.min("doc_id").alias("canonical_doc"),
-        )
-        # include singleton docs (no edges at all) for the full picture
-        all_docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        singletons = all_docs.join(members, "doc_id", "left_anti").select(
-            F.col("doc_id").alias("label"),
-            F.lit(1).cast("long").alias("cluster_size"),
-            F.col("doc_id").alias("canonical_doc"),
-        )
-        per_cluster = clusters.select(
-            "label", "cluster_size", "canonical_doc"
-        ).unionByName(singletons)
+    # attach every doc to its rep's component label; a rep outside the
+    # near graph labels its clique by itself. This is the ONLY
+    # corpus-sized step after the (tiny) rep-graph propagation.
+    rep_labels = half.select(F.col("doc_id").alias("rep"), "label")
+    doc_labels = doc_rep.join(rep_labels, "rep", "left").select(
+        "doc_id", F.coalesce("label", F.col("rep")).alias("label")
+    )
+    per_cluster = doc_labels.groupBy("label").agg(
+        F.count("*").alias("cluster_size"),
+        F.min("doc_id").alias("canonical_doc"),
+    )
     return (
         per_cluster.select(
             F.col("canonical_doc"),

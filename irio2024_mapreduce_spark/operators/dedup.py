@@ -1312,14 +1312,25 @@ ORACLE_SQL = {
     # exact-Jaccard verify — under a DuckDB-computable hash family, so
     # the driver artifact carries a full hash-check for the near-dedup
     # logic. The xxhash64 family stays the documented production
-    # default (~2× cheaper hashing; RETIRED_ROWS_ONLY_QUERIES below)
-    # and keeps its determinism/recall/precision tests + bench series.
+    # default (~2× cheaper hashing; rows-only in RETIRED_TWIN_QUERIES
+    # below) and keeps its determinism/recall/precision tests + bench series.
 }
 
-# Local-oracle twins (never registered — driver window full at 50):
-# verified every test run by tests/test_retired_twins.py.
+# Ungraded pool (driver window full at 50), run every test run by
+# tests/test_retired_twins.py. dedup_simhash_md5 is oracle-checked:
+# the only oracle check of the benched SimHash pipeline (votes →
+# bit-sum → chunks → hamming verify). dedup_simhash and dedup_near
+# have no oracle entry, so they are rows-only: seeded xxhash64 is not
+# SQL-expressible, and their md5-hash-family twins carry the hash
+# check. The xxhash64 family is the production default (cheaper
+# hashing at identical plan shape); it keeps its
+# determinism/recall/precision tests (tests/test_dedup.py) and its
+# bench series (bench.py HEADLINE), which also keeps the
+# candidate-cap perf guard.
 RETIRED_TWIN_QUERIES = {
     "dedup_simhash_md5": dedup_simhash_md5,
+    "dedup_simhash": dedup_simhash,
+    "dedup_near": dedup_near,
 }
 # band-slice SQL derived from LSH_ROWS exactly the way _band_rows
 # derives its element_at slice — a hardcoded `sig[4*b+1..+4]` here
@@ -1396,29 +1407,12 @@ QUERIES = {
     # the GRADED near-dedup row is the md5 hash family — the
     # identical pipeline under a DuckDB-computable hash, so the
     # driver hash-checks every LSH stage. The xxhash64 production
-    # default is rows-only (RETIRED_ROWS_ONLY_QUERIES below).
+    # default is rows-only (RETIRED_TWIN_QUERIES above).
     "dedup_near_md5": dedup_near_md5,
     "dedup_ngram_jaccard": dedup_ngram_jaccard,
     "dedup_embedding": dedup_embedding,
     # the incremental ingest path, with driver-visible verification
     "dedup_incremental": dedup_incremental,
-}
-
-# dedup_simhash is out of the driver window (it made room for the
-# full-oracle bm25_search / quality_funnel): its driver row was
-# rows-only (seeded xxhash64 not SQL-expressible) while its COMPLETE
-# pipeline — votes → bit-sum → chunks → hamming verify — is
-# hash-checked every test run via the md5-hash-family twin
-# dedup_simhash_md5 above, plus the precision assertions in
-# tests/test_dedup.py. Still benched (bench.py HEADLINE) so the
-# candidate-cap perf guard survives the retirement.
-# dedup_near joined it when its md5 twin took the graded slot: the
-# xxhash64 family is the production default (cheaper hashing at
-# identical plan shape) and keeps its determinism/recall/precision
-# tests (tests/test_dedup.py) and its bench series.
-RETIRED_ROWS_ONLY_QUERIES = {
-    "dedup_simhash": dedup_simhash,
-    "dedup_near": dedup_near,
 }
 
 ORACLE_SQL_INCREMENTAL = {

@@ -143,11 +143,11 @@ def event_session_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# event_tumbling retired from the driver window in r6 (tumbling is
-# event_sliding with step == size — the windowing family stays
-# driver-graded through E18/E19) to admit dedup_incremental; still
-# implemented and locally oracle-verified every test run
-# (tests/test_retired_twins.py).
+# event_tumbling is ungraded: tumbling is event_sliding with step ==
+# size, so the windowing family stays driver-graded through E18/E19.
+# It stays implemented and locally oracle-verified every test run
+# (tests/test_retired_twins.py), and is the batch reference of the
+# streaming parity test in tests/test_streaming.py.
 RETIRED_TWIN_ORACLES = {
     "event_tumbling": """
         SELECT time_bucket(INTERVAL '1 hour', ts)                    AS window_start,

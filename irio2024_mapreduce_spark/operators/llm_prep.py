@@ -65,7 +65,7 @@ EMAIL_PATTERN = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 IPV4_PATTERN = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
 PHONE_PATTERN = "[0-9]{3}[- ][0-9]{3}[- ][0-9]{4}"
 
-# same explicit ASCII whitespace class as fingerprint/text_analysis:
+# explicit ASCII whitespace class, not \s:
 # Java's \s includes \x0b, RE2's does not — spell it out so both
 # engines normalize identically
 _WS_PATTERN = "[ \\t\\n\\x0b\\f\\r]+"
@@ -368,7 +368,7 @@ def _decontam_grams_from(toks: Column, n: int = DECONTAM_NGRAM) -> Column:
     both run the exact conviction rule the driver oracle hash-checks.
 
     Call sites must project ``F.split(text)`` into its own column
-    first (r14, guide §1.2 per-task work): passing the split
+    first (per-task work): passing the split
     expression directly inlines it into the transform lambda, where
     the interpreted higher-order-function path re-splits the whole
     text once PER GRAM — O(len·n_grams) per doc instead of O(len).
@@ -775,8 +775,8 @@ def leakage_quarantine_ids(
 ) -> DataFrame:
     """doc_ids of the TRAIN-side members whose duplicate group leaks
     into an eval split — the ACTING half of :func:`split_leakage`'s
-    audit (r9 verdict item 5: the audit counted leaks, nothing removed
-    them). Quarantining exactly these ids zeroes every train↔eval
+    audit (the audit only counts leaks; this removes them).
+    Quarantining exactly these ids zeroes every train↔eval
     leakage cell while leaving the eval sets UNTOUCHED (eval
     composition must stay stable across maintenance; train is the
     side that can afford to shrink):
@@ -949,10 +949,8 @@ CORPUS_SPLIT_ORACLE = f"""
 """
 
 
-# Registered driver surface (r7): decontaminate is the flagship
-# train-test hygiene operator — it took the window slot freed by
-# retiring fingerprint (a near-twin of dedup_exact's digest grouping;
-# see operators/text_analysis.py).
+# Registered driver surface: decontaminate is the flagship train-test
+# hygiene operator.
 QUERIES = {
     "decontaminate": decontaminate,
 }

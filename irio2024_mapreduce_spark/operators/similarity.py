@@ -12,17 +12,17 @@ Two paths:
   Corpus vectors are bucketed by an H-bit signature (H deterministic
   pseudo-random hyperplanes: splitmix64-derived float constants, so
   the "random" planes are cluster-reproducible AND injectable into
-  the DuckDB oracle verbatim — full oracle row since r7); queries
+  the DuckDB oracle verbatim, so it has a full oracle row); queries
   probe their own bucket plus multi-probe flips. Recall vs the exact
   path is asserted in tests. The IVF variant swaps the signature for
   a k-means assignment — same plan shape (bucket equi-join),
-  different bucketing function. Full oracle row since r9: the Lloyd
-  fixpoint is deterministic, so the trained centroids are constants
+  different bucketing function. It has a full oracle row too: the
+  Lloyd fixpoint is deterministic, so the trained centroids are constants
   of (data, code) — ``ivf_centroids_for`` replays the training
   outside Spark (bit-exact pure-Python xxh64 sample selection + the
   same ``_train_rows`` numpy loop) and ``ivf_oracle_for`` injects
-  them into the DuckDB SQL, the same recipe that promoted
-  similarity_ann in r7.
+  them into the DuckDB SQL, the same constant-injection recipe as
+  similarity_ann's hyperplanes.
 """
 
 from __future__ import annotations
@@ -85,7 +85,7 @@ def _dot(a: Column, b: Column) -> Column:
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`_dot` (r14 opt): the Column form costs
+    """SQL-text twin of :func:`_dot`: the Column form costs
     ~15 py4j round-trips per call (zip_with + two lambda conversions +
     arithmetic), and the signature/score builders call it hundreds of
     times per plan — profiling showed >1.5 s of a similarity_ann build
@@ -213,7 +213,7 @@ def _planes_matrix(bits: int | None = None) -> Column:
     expression string. Two reasons: (a) constant-folds to one Literal
     node so every projection is ONE ``transform`` over it — 32
     separate per-plane dot expressions made plan/codegen cost dominate
-    at small data (the r01 similarity lesson); (b) one py4j call —
+    at small data; (b) one py4j call —
     building it from 2048 nested ``F.lit``/``F.array`` calls spent
     ~6 s of driver time on py4j round-trips alone. The ``D`` suffix
     parses each component as DOUBLE (bare decimals parse as DECIMAL)."""
@@ -223,12 +223,12 @@ def _planes_matrix(bits: int | None = None) -> Column:
 def _all_projections_sql(vec: str, bits: int | None = None) -> str:
     """array<double> of dot(vec, plane) for every table's planes.
 
-    SQL text (r14 opt): the Column form (``F.transform`` + ``_dot``
+    SQL text: the Column form (``F.transform`` + ``_dot``
     lambdas) and its siblings below cost thousands of py4j
     round-trips per similarity_ann plan build (~1.8 s measured,
     tools/profile_build_phases.py); each f-string parses JVM-side
     into the identical expression tree the Column chain produced —
-    the same move as :func:`_planes_matrix` (the r01 lesson),
+    the same move as :func:`_planes_matrix`,
     extended to the whole signature/probe surface. Result parity is
     pinned by the stored-index bit-parity tests and the oracle gate."""
     return f"transform({_planes_sql(bits)}, pl -> {_dot_sql(vec, 'pl')})"
@@ -389,10 +389,10 @@ def _ann_join_score(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Bucket equi-join + cosine + per-query top-k — shared by the
     on-the-fly path and the stored-index probe.
 
-    ONE shuffle (r14): the r13 plan paid two exchanges — a
+    ONE shuffle: a separate dedupe would pay two exchanges — a
     dropDuplicates hash-agg on (query, neighbor) for pairs colliding
     in several tables/probes, then the top-k window on (query). The
-    dedupe + rank + cap now run as a single groupBy(query_id)
+    dedupe + rank + cap run as a single groupBy(query_id)
     aggregation: sort the candidate structs (desc cosine via a
     negated sort key, ties to the smallest neighbor — the exact
     window order), then fold keep-FIRST-per-neighbor up to TOP_K.
@@ -496,7 +496,7 @@ def _train_quantizer_numpy(
     centroid constants are the Spark-trained centroids by
     construction, not by re-implementation)."""
     rows = _train_rows(sample_rows, k)
-    # one parsed literal frame (r14 opt): createDataFrame of the k
+    # one parsed literal frame: createDataFrame of the k
     # centroid rows cost ~0.28 s of driver time per build (py4j
     # serialization + local-relation setup); the inline() literal is
     # one expression string with the same exact values (repr + D
@@ -534,7 +534,7 @@ def _train_rows(
     global _LAST_IVF_ROUNDS
     rows = sorted(sample_rows, key=lambda r: r["_k"])
     # validity mirrors _is_finite_vector: non-finite elements are
-    # excluded from TRAINING too (ADVICE r14) — a NaN/inf sample
+    # excluded from TRAINING too — a NaN/inf sample
     # element would poison the centroid mean, and the inline() literal
     # frame renders non-finite doubles as nanD/infD which do not parse
     # (createDataFrame used to accept the poisoned centroid silently;
@@ -708,9 +708,9 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIXPOINT in numpy under the IVF_ITERATIONS cap. This is the
     standard IVF training topology (sample → small-machine k-means →
     distributed assignment): a distributed Lloyd round over a
-    broadcastable sample is pure scheduler overhead — the pre-round-5
-    form paid IVF_ITERATIONS Spark jobs (and, before that, corpus
-    passes) to move 2 MB of math that a vectorized driver loop does in
+    broadcastable sample is pure scheduler overhead — a distributed
+    loop pays IVF_ITERATIONS Spark jobs (or corpus passes) to move
+    2 MB of math that a vectorized driver loop does in
     milliseconds.
 
     At 100 TB: training cost is CONSTANT (the sample bound), the
@@ -826,13 +826,13 @@ def py_query_probes(
 ) -> list[tuple[int, list[float], int, int]]:
     """Engine-free replay of ``_ann_query_probes`` for a DRIVER-SIDE
     query list — (query_id, qv, qtbl, probe) tuples, bit-identical to
-    the Spark expression tree (r13): the stored-index probe's query
+    the Spark expression tree: the stored-index probe's query
     side is driver-bounded BY DESIGN (the probe list is collected to
     build the path list anyway), and signing ten vectors through the
     32×64-double planes literal cost ~1.3 s of analyze/codegen per
     call versus microseconds of Python.
 
-    Bit-parity argument, mirror of the r7 oracle recipe: projections
+    Bit-parity argument, mirror of the ANN oracle recipe: projections
     are ``_fold_dot`` (the proven left-fold replay of ``_dot``); the
     signature sums the same power-of-two masks on the same
     ``proj > 0`` predicate (integer adds, exact); flip planes sort
@@ -894,7 +894,7 @@ def py_query_cells(
     """Engine-free replay of ``_query_cells`` for a DRIVER-SIDE query
     list against COLLECTED centroids (k ≤ MAX_CELLS rows — bounded) —
     (query_id, qv, cell) tuples, bit-identical to the Spark window
-    (r13, the ``py_query_probes`` rationale: the stored probe already
+    (the ``py_query_probes`` rationale: the stored probe already
     collects the distinct probed cells, so the query side is
     driver-bounded by design and the broadcast-join + window plan was
     pure per-call overhead).
@@ -946,8 +946,8 @@ def ivf_centroids_for(
     :func:`xxh64`), float32→float64 casts are exact, and the numpy
     loop is literally the same code — the returned centroids equal
     the ones the Spark query trains, making them injectable into the
-    DuckDB oracle as constants (the r7 `similarity_ann` recipe, where
-    the injected constants were the splitmix64 hyperplanes).
+    DuckDB oracle as constants (the `similarity_ann` recipe, where
+    the injected constants are the splitmix64 hyperplanes).
 
     ``train_min_id`` replays a CORPUS-ONLY training set (filter
     ``vec_id >= train_min_id`` BEFORE the hash sort, exactly like
@@ -985,7 +985,7 @@ def ivf_oracle_for(
 
     With ``train_min_id`` the injected centroids replay corpus-only
     training — the oracle of ``probe_ivf_index`` (the STORED-index
-    production path, r13): the assignment/probe/top-k SQL is
+    production path): the assignment/probe/top-k SQL is
     identical because the stored probe shares the fly query's exact
     scoring code; only the trained constants move."""
     cents = ivf_centroids_for(sf_dir, train_min_id)
@@ -1317,12 +1317,11 @@ QUANTIZE_ORACLE = f"""
 """
 
 def probe_ann_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graded stored-index ANN path (r11 verdict item 5): the fly
-    twin ``similarity_ann`` retired to RETIRED_TWIN_QUERIES in its
-    favor, so the driver now grades the production machinery — build
-    → versioned data dirs → atomic manifest → point-read probe — that
-    rounds 10-11 built. Same oracle SQL: stored-probe == on-the-fly
-    bit parity is pinned by tests/test_ann_index.py. Lazy import —
+    """Graded stored-index ANN path: build → versioned data dirs →
+    atomic manifest → point-read probe. It holds the graded slot in
+    place of the on-the-fly ``similarity_ann``, now in the retired
+    pool, and shares its oracle SQL: stored-probe == on-the-fly bit
+    parity is pinned by tests/test_ann_index.py. Lazy import —
     ann_index imports from this module."""
     from irio2024_mapreduce_spark.operators.ann_index import (  # noqa: PLC0415
         probe_ann_index_fixture,
@@ -1332,12 +1331,11 @@ def probe_ann_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def probe_ivf_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graded stored-index IVF path (r12 verdict item 6): the fly
-    twin ``similarity_ivf`` retired to RETIRED_TWIN_QUERIES in its
-    favor, so the driver now grades the production machinery — build
-    → cell-partitioned versioned dirs → atomic manifest → dir-pruned
-    nprobe probe — that rounds 9-12 built and maintained. The oracle
-    is ``ivf_oracle_for(sf_dir, train_min_id=N_QUERIES)``: same full
+    """Graded stored-index IVF path: build → cell-partitioned
+    versioned dirs → atomic manifest → dir-pruned nprobe probe. It
+    holds the graded slot in place of the on-the-fly
+    ``similarity_ivf``, now in the retired pool. The oracle is
+    ``ivf_oracle_for(sf_dir, train_min_id=N_QUERIES)``: same full
     pipeline SQL, centroids replayed over corpus-only training (the
     production build trains on what it stores). Lazy import —
     ivf_index imports from this module."""
@@ -1348,15 +1346,21 @@ def probe_ivf_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_ivf_index_fixture(spark, sf_dir)
 
 
-# Never-registered local-oracle queries (driver window is full at
-# 50): verified every test run by tests/test_retired_twins.py.
-# similarity_ann retired in r12 when probe_ann_index (the stored-index
-# production path) took its graded slot — bit parity between the two
-# is additionally pinned by tests/test_ann_index.py. similarity_ivf
-# followed in r13 when probe_ivf_index took its slot the same way
-# (parity: tests/test_ivf_index.py::test_build_probe_parity_with_fly);
-# its oracle is DATA-DEPENDENT, so the retired entry is the builder
-# itself (test_retired_twins calls it per sf_dir).
+def _stored_ivf_oracle_for(sf_dir: str) -> str:
+    """probe_ivf_index's oracle: the shared IVF pipeline SQL with
+    centroids replayed over CORPUS-ONLY training (train_min_id =
+    N_QUERIES) — what build_ivf_index trains in the stored path."""
+    return ivf_oracle_for(sf_dir, train_min_id=N_QUERIES)
+
+
+# Ungraded local-oracle queries (the driver window is full at 50),
+# verified every test run by tests/test_retired_twins.py. The
+# on-the-fly similarity_ann and similarity_ivf gave their graded
+# slots to the stored-index probes above and stay here as their
+# parity references (tests/test_ann_index.py,
+# tests/test_ivf_index.py::test_build_probe_parity_with_fly).
+# Data-dependent oracles are builders sf_dir -> SQL, resolved by the
+# registry only when an oracle is asked for.
 RETIRED_TWIN_QUERIES = {
     "quantize_embeddings": quantize_embeddings,
     "similarity_ann": similarity_ann,
@@ -1388,18 +1392,16 @@ ORACLE_SQL = {
               ON q.vec_id < {N_QUERIES} AND c.vec_id >= {N_QUERIES}
         ) WHERE rank <= {TOP_K}
     """,
-    # similarity_ann graduated to a FULL oracle row in r7: the
-    # hyperplanes were never engine-bound hashes — they are Python
-    # splitmix64 float constants, injectable into SQL verbatim (see
-    # _ann_oracle). similarity_ivf followed in r9: no SQL replays the
-    # Lloyd loop, but none has to — the loop is DETERMINISTIC, so the
-    # trained centroids are constants of the (data, code) pair, and
-    # ivf_oracle_for replays the training outside Spark (bit-exact
+    # The ANN hyperplanes are Python splitmix64 float constants,
+    # injected into the SQL verbatim (see _ann_oracle). No SQL replays
+    # the IVF Lloyd loop, but none has to: the loop is deterministic,
+    # so the trained centroids are constants of the (data, code) pair,
+    # and ivf_oracle_for replays the training outside Spark (bit-exact
     # xxh64 sample selection + the same numpy fixpoint) and injects
-    # them. In r12 the graded ANN slot moved to the STORED-index
-    # probe (probe_ann_index) — same SQL, since stored == fly by
-    # pinned bit parity.
+    # them. The stored probes share the on-the-fly SQL, since stored
+    # == fly by pinned bit parity.
     "probe_ann_index": _ann_oracle(),
+    "probe_ivf_index": _stored_ivf_oracle_for,
 }
 
 # The driver grades oracles at sf0.01 (driver contract); local
@@ -1407,35 +1409,6 @@ ORACLE_SQL = {
 # oracles for whatever SF it checks via registry.oracle_sql_for.
 DRIVER_ORACLE_SF = "/root/testdata/sf0.01"
 
-
-def _stored_ivf_oracle_for(sf_dir: str) -> str:
-    """probe_ivf_index's oracle: the shared IVF pipeline SQL with
-    centroids replayed over CORPUS-ONLY training (train_min_id =
-    N_QUERIES) — what build_ivf_index trains in the stored path."""
-    return ivf_oracle_for(sf_dir, train_min_id=N_QUERIES)
-
-
-SF_DEPENDENT_ORACLES = {"probe_ivf_index": _stored_ivf_oracle_for}
-
-_LAZY_DRIVER_ORACLES: dict[str, str] = {}
-
-
-def lazy_driver_oracles() -> dict[str, str]:
-    """probe_ivf_index's oracle is DATA-DEPENDENT (the trained
-    centroids are injected as SQL constants), so building it reads
-    the driver-SF embeddings and replays the full Lloyd fixpoint.
-    Built on the FIRST ``registry.oracle_sql()`` call and cached —
-    doing it at module import made every process that touches the
-    operators package (each pytest run, each tool, every
-    ``registry.queries()`` caller) pay the training cost whether or
-    not it ever looks at an oracle."""
-    if not _LAZY_DRIVER_ORACLES and os.path.exists(
-        os.path.join(DRIVER_ORACLE_SF, "embeddings.parquet")
-    ):
-        _LAZY_DRIVER_ORACLES["probe_ivf_index"] = _stored_ivf_oracle_for(
-            DRIVER_ORACLE_SF
-        )
-    return dict(_LAZY_DRIVER_ORACLES)
 
 QUERIES = {
     "similarity_topk": similarity_topk,

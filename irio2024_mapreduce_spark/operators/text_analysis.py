@@ -1,5 +1,5 @@
 """Text-analysis operator pack — SURVEY.md §2.3 E24 plus the
-language-ID / quality-score / token-count / fingerprint operators a
+language-ID / quality-score / repetition / retrieval operators a
 training-data pipeline needs.
 
 Everything is built-in SQL functions (regex, list ops, md5) — no
@@ -28,12 +28,6 @@ STOPWORDS = {
     "de": ["der", "die", "und", "das", "von", "mit", "den", "ist", "im", "ein"],
     "fr": ["le", "la", "les", "des", "et", "est", "dans", "pour", "que", "une"],
 }
-
-# BPE-ish token pattern: word pieces OR single non-space symbols —
-# a public approximation of byte-pair tokenizer pre-splitting.
-# Explicit ASCII whitespace class, not \s — Java's \s includes \x0b,
-# RE2's doesn't, and this pattern runs on both engines.
-BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 \\t\\n\\x0b\\f\\r]"
 
 PUNCT_CLASS = "[!-/:-@\\[-`{-~]"
 
@@ -77,8 +71,8 @@ def text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed with pure integer arithmetic: ``(10000·Σx) div n``) —
     float AVG aggregates are summed in engine/partition-dependent
     order, and a last-ulp divergence flips the rounded value under the
-    driver's canonicalization (r01 hash-fail lesson). Integer div is
-    bit-identical everywhere.
+    driver's canonicalization (a graded hash once failed this way).
+    Integer div is bit-identical everywhere.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = _ws_tokens()
@@ -136,9 +130,9 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword ratio, mean token length, repetition (1 - TTR).
 
     ``stopword_ratio`` counts stopword OCCURRENCES over tokens (the
-    quantity C4/Gopher-style filters threshold) — the pre-r8 form
-    counted distinct stopword TYPES, which caps the 'ratio' at
-    |stoplist|/n_tokens and punishes long documents regardless of
+    quantity C4/Gopher-style filters threshold). Counting distinct
+    stopword TYPES instead would cap the 'ratio' at
+    |stoplist|/n_tokens and punish long documents regardless of
     density. The presence-threshold form lives where presence is the
     semantics: funnel_verdict's no_stopwords rule."""
     docs = load_table(spark, sf_dir, "documents")
@@ -456,61 +450,11 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     )
 
 
-def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace tokens + BPE-ish regex token estimate, plus corpus
-    totals — the 'how many training tokens is this corpus' query."""
-    docs = load_table(spark, sf_dir, "documents")
-    per_doc = docs.select(
-        "lang",
-        F.size(_ws_tokens()).cast("long").alias("ws_tokens"),
-        F.size(
-            F.regexp_extract_all("text", F.lit(BPE_ISH_PATTERN), F.lit(0))
-        ).cast("long").alias("bpe_tokens"),
-    )
-    return (
-        per_doc.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("ws_tokens").alias("total_ws_tokens"),
-            F.sum("bpe_tokens").alias("total_bpe_tokens"),
-            _scaled_mean("bpe_tokens").alias("avg_bpe_tokens_x10k"),
-        )
-        .orderBy("lang")
-    )
-
-
-def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprints: md5 content hash of the
-    whitespace-normalized lowercased text + a shape signature
-    (first/last token, token count). The order-sensitive rolling-hash
-    variant is :func:`rolling_hash` (not portable to the SQL oracle;
-    unit-tested)."""
-    docs = load_table(spark, sf_dir, "documents")
-    # explicit ASCII whitespace class — \s is engine-dependent (\x0b)
-    norm = F.lower(F.regexp_replace("text", "[ \\t\\n\\x0b\\f\\r]+", " "))
-    toks = _ws_tokens()
-    return docs.select(
-        "doc_id",
-        F.md5(norm.cast("binary")).alias("content_md5"),
-        # NULL text → NULL signature, matching the oracle's || chain
-        # (concat_ws would silently skip the NULL args and emit "",
-        # which the hash harness distinguishes from NULL)
-        F.when(F.col("text").isNull(), F.lit(None)).otherwise(
-            F.concat_ws(
-                ":",
-                F.element_at(toks, 1),
-                F.element_at(toks, -1),
-                F.size(toks).cast("string"),
-            )
-        ).alias("shape_sig"),
-    )
-
-
 def rolling_hash(tokens: Column) -> Column:
     """Order-sensitive 64-bit document fingerprint: left fold of
-    ``h ← xxhash64(h, token)`` over the token sequence (the rolling-
-    hash variant of :func:`fingerprint` — permutations of the same
-    tokens produce different hashes, unlike a bag-of-words digest).
+    ``h ← xxhash64(h, token)`` over the token sequence — permutations
+    of the same tokens produce different hashes, unlike a bag-of-words
+    digest.
     Chained xxhash64 instead of the classic ``h*31+c`` polynomial
     because ANSI mode forbids wrapping long arithmetic. Not portable
     to the SQL oracle; covered by unit tests."""
@@ -534,7 +478,7 @@ _LANG_CASE = " ".join(
 ORACLE_SQL = {
     # Scaled-integer means + CAST(SUM AS BIGINT): DuckDB SUM(BIGINT)
     # returns HUGEINT and float AVG is order-dependent — both hash-
-    # diverged under the driver in r01. Integer `//` is exact.
+    # diverged under the driver. Integer `//` is exact.
     "text_analysis": f"""
         WITH t AS (
             SELECT lang, source, n_chars,
@@ -691,30 +635,21 @@ QUERIES = {
     "text_analysis": text_analysis,
     "lang_id": lang_id,
     "quality_score": quality_score,
-    # registered r8 (sketches + dedup_simhash retired to make room):
-    # both hash-match DuckDB locally at 3 SFs since r7; promoting them
-    # lifts the driver artifact's oracle-row count at zero capability
-    # loss (the retirees' logic stays verified every test run — see
-    # RETIRED_ROWS_ONLY_QUERIES in misc.py / dedup.py).
+    # both hash-match DuckDB locally at 3 SFs; they took the slots of
+    # two rows-only queries (sketches, dedup_simhash), which stay
+    # verified every test run in the retired pools of misc.py / dedup.py
     "quality_funnel": quality_funnel,
     "bm25_search": bm25_search,
 }
 
-# token_count retired from the driver window in r6 (its tokenizer
-# surface duplicates text_analysis's) to make room for the
-# stream-stream join; fingerprint retired r7 (md5-per-doc surface is
-# a near-twin of dedup_exact's digest grouping) to admit
-# decontaminate. Both still implemented and locally oracle-verified
-# every test run (tests/test_retired_twins.py).
+# Ungraded local-oracle extras (the driver window is full), verified
+# every test run by tests/test_retired_twins.py.
 RETIRED_TWIN_QUERIES = {
-    "token_count": token_count,
-    "fingerprint": fingerprint,
+    # Gopher-style intra-document repetition signals
     "quality_repetition": quality_repetition,
-    # r8: CCNet-style unigram-LM improbability scoring (window full —
-    # local-oracle extra)
+    # CCNet-style unigram-LM improbability scoring
     "quality_unigram_lm": quality_unigram_lm,
-    # r8: per-doc TF-IDF keyword extraction, rational idf (window
-    # full — local-oracle extra)
+    # per-doc TF-IDF keyword extraction, rational idf
     "tfidf_topk_terms": tfidf_topk_terms,
 }
 
@@ -786,10 +721,9 @@ def _sql_topgram(n: int) -> str:
         END"""
 
 
-# promoted to the graded window r8 — the f-string constants
-# (FUNNEL_*, BM25_*) are injected exactly as the local harness always
-# injected them, so the driver sees the same SQL the 3-SF local sweep
-# hash-matched.
+# the f-string constants (FUNNEL_*, BM25_*) are injected exactly as
+# the local harness injects them, so the driver sees the same SQL the
+# 3-SF local sweep hash-matched.
 ORACLE_SQL["bm25_search"] = _bm25_oracle()
 ORACLE_SQL["quality_funnel"] = f"""
         WITH tagged AS (
@@ -902,27 +836,5 @@ RETIRED_TWIN_ORACLES = {
                {_sql_topgram(3)} AS top3gram_char_frac,
                {_sql_topgram(4)} AS top4gram_char_frac
         FROM t
-    """,
-    "fingerprint": """
-        SELECT doc_id,
-               md5(lower(regexp_replace(text, '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))) AS content_md5,
-               string_split(text, ' ')[1] || ':' ||
-               string_split(text, ' ')[-1] || ':' ||
-               len(string_split(text, ' '))::VARCHAR              AS shape_sig
-        FROM documents
-    """,
-    "token_count": f"""
-        WITH t AS (
-            SELECT lang,
-                   len(string_split(text, ' '))::BIGINT AS ws_tokens,
-                   len(regexp_extract_all(text, '{BPE_ISH_PATTERN}'))::BIGINT
-                       AS bpe_tokens
-            FROM documents
-        )
-        SELECT lang, COUNT(*) AS n_docs,
-               CAST(SUM(ws_tokens) AS BIGINT)  AS total_ws_tokens,
-               CAST(SUM(bpe_tokens) AS BIGINT) AS total_bpe_tokens,
-               {_SCALED_MEAN_SQL.format(c="bpe_tokens")} AS avg_bpe_tokens_x10k
-        FROM t GROUP BY lang ORDER BY lang
     """,
 }

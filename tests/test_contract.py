@@ -125,16 +125,11 @@ def test_bench_headline_queries_are_registered():
     # time instead so retiring a twin can't silently break the bench
     import bench
 
-    from irio2024_mapreduce_spark.operators import dedup, similarity
-
-    # dedup_simhash (r8) and similarity_ann (r12) were retired from
-    # the driver window but stay benched (perf-series continuity) —
-    # bench resolves them from the retired pools, so the benchable
-    # surface is the union
+    # dedup_simhash and similarity_ann left the driver window but stay
+    # benched (perf-series continuity) — bench resolves them from the
+    # retired pool, so the benchable surface is the union
     assert set(bench.HEADLINE) <= (
-        set(registry.queries())
-        | set(dedup.RETIRED_ROWS_ONLY_QUERIES)
-        | set(similarity.RETIRED_TWIN_QUERIES)
+        set(registry.queries()) | set(registry.retired_queries())
     )
     # the r01-comparable subtotal must cover EXACTLY the rounds-1/2
     # HEADLINE (no swaps, drops, or duplicates) — else the cross-round

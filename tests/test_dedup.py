@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from irio2024_mapreduce_spark.operators.dedup import (
@@ -467,20 +469,58 @@ def test_cap_buckets_checkpoint_input_is_behavior_preserving(spark):
     assert {b for b, _ in on} == {0, 1, 2}
 
 
-def test_cc_rep_seeding_parity_with_member_graph(spark, sf_dir, monkeypatch):
-    """The collapsed rep-graph propagation (CC_REP_SEEDING=True, the
-    shipping form) and the legacy member-graph form must produce
-    identical cluster histograms — the equivalence the A/B probe
-    (tools/stress_cc_ivf.py) relies on, asserted here on real data."""
-    from irio2024_mapreduce_spark.operators import chunking
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    monkeypatch.setattr(chunking, "CC_REP_SEEDING", True)
-    fast = sorted(map(tuple, chunking.dedup_clusters(spark, sf_dir).collect()))
-    monkeypatch.setattr(chunking, "CC_REP_SEEDING", False)
-    legacy = sorted(
-        map(tuple, chunking.dedup_clusters(spark, sf_dir).collect())
-    )
-    assert fast == legacy and len(fast) > 0
+
+def _write_no_pair_docs(sf_dir) -> str:
+    """A documents table with no near-dup pair (every doc has its own
+    vocabulary) plus one exact duplicate, so the label loop converges
+    in round 0."""
+    import pandas as pd
+
+    texts = [
+        " ".join(f"w{d}x{i}" for i in range(24)) for d in range(12)
+    ]
+    texts.append(texts[0])
+    pd.DataFrame(
+        {
+            "doc_id": list(range(len(texts))),
+            "text": texts,
+            "lang": "en",
+            "source": "web",
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(sf_dir / "documents.parquet", index=False)
+    return str(sf_dir)
+
+
+@pytest.mark.parametrize("corpus", ["fixture", "no_near_pairs"])
+def test_dedup_clusters_frees_dead_checkpoints(
+    spark, sf_dir, tmp_path, corpus
+):
+    """After the final action only the converged labels and
+    ``_doc_rep``'s ``hashed`` stay persisted — the edges, the pair
+    generation's checkpoints and every earlier round's labels are
+    freed, also when the loop converges in round 0 — and repeated runs
+    in one long-lived session do not accumulate checkpoint blocks."""
+    from irio2024_mapreduce_spark.operators import chunking
+    from irio2024_mapreduce_spark.session import drain_driver_backlog
+
+    d = sf_dir if corpus == "fixture" else _write_no_pair_docs(tmp_path)
+    before = _persisted_rdd_ids(spark)
+    rows = chunking.dedup_clusters(spark, d).collect()
+    assert len(_persisted_rdd_ids(spark) - before) <= 2
+    if corpus == "no_near_pairs":
+        assert chunking._LAST_CC_ROUNDS == 1
+        assert sorted(map(tuple, rows)) == [(1, 11, 1), (2, 1, 0)]
+
+    counts = []
+    for _ in range(3):
+        chunking.dedup_clusters(spark, d).collect()
+        drain_driver_backlog(spark)
+        counts.append(len(_persisted_rdd_ids(spark)))
+    assert max(counts[1:]) <= counts[0], counts
 
 
 def test_dedup_incremental_semantics(spark, sf_dir):

@@ -2,9 +2,11 @@
 from the driver contract (the driver grades only the first 50
 registry entries — see registry.DRIVER_QUERY_WINDOW).
 
-Each retired twin is run on Spark and compared against its DuckDB
-oracle with the same row-count / column / value-hash discipline as
-tools/check_oracle.py.
+The pool is read only through the registry: ``retired_queries()``,
+with its oracles from ``retired_oracle_sql_for(sf_dir)``. Each retired
+query with an oracle is run on Spark and compared against it with the
+same row-count / column / value-hash discipline as
+tools/check_oracle.py; the rest is checked rows-only.
 """
 
 from __future__ import annotations
@@ -12,82 +14,15 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from irio2024_mapreduce_spark.operators import (
-    advanced,
-    chunking,
-    dedup,
-    events,
-    llm_prep,
-    misc,
-    multimodal,
-    similarity,
-    text_analysis,
-)
+from conftest import SF_DIR
+from irio2024_mapreduce_spark import registry
 from irio2024_mapreduce_spark.sources.tables import TABLE_NAMES
 from tools.check_oracle import value_hash
 
-RETIRED = {
-    **{
-        name: (misc.RETIRED_TWIN_QUERIES[name], misc.RETIRED_TWIN_ORACLES[name])
-        for name in misc.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            advanced.RETIRED_TWIN_QUERIES[name],
-            advanced.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in advanced.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            text_analysis.RETIRED_TWIN_QUERIES[name],
-            text_analysis.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in text_analysis.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            llm_prep.RETIRED_TWIN_QUERIES[name],
-            llm_prep.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in llm_prep.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            multimodal.RETIRED_TWIN_QUERIES[name],
-            multimodal.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in multimodal.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            events.RETIRED_TWIN_QUERIES[name],
-            events.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in events.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            chunking.RETIRED_TWIN_QUERIES[name],
-            chunking.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in chunking.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            similarity.RETIRED_TWIN_QUERIES[name],
-            similarity.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in similarity.RETIRED_TWIN_QUERIES
-    },
-    **{
-        name: (
-            dedup.RETIRED_TWIN_QUERIES[name],
-            dedup.RETIRED_TWIN_ORACLES[name],
-        )
-        for name in dedup.RETIRED_TWIN_QUERIES
-    },
-}
+RETIRED = registry.retired_queries()
+RETIRED_ORACLES = registry.retired_oracle_sql_for(SF_DIR)
+ORACLE_CHECKED = sorted(RETIRED_ORACLES)
+ROWS_ONLY = sorted(set(RETIRED) - set(RETIRED_ORACLES))
 
 
 @pytest.fixture(scope="module")
@@ -103,109 +38,73 @@ def duck(sf_dir):
 
 
 def test_retired_set_is_exactly_the_documented_twins():
-    assert set(RETIRED) == {
-        "string_funcs2",
-        "null_handling",
-        "agg_cube",
-        "window_lag_lead",
-        # never-registered (window full at 50): local-oracle-only
+    assert set(ORACLE_CHECKED) == {
+        # local-oracle extras with no graded twin (the window is full)
         "unpivot_measures",
-        # retired r6 to admit streaming_click_purchase_join (its
-        # tokenizer surface duplicates text_analysis's)
-        "token_count",
-        # never-registered r6 additions (window still full): PII
-        # scrubbing + distributed sequence packing + source mixing
+        "quality_unigram_lm",
+        "tfidf_topk_terms",
+        "importance_resample",
+        "multimodal_audio",
+        "boilerplate_chunks",
+        # the only DuckDB checks of pipeline building blocks
         "pii_scrub",
         "pack_sequences",
         "source_mix",
-        # retired r7 to admit decontaminate (md5-per-doc surface is a
-        # near-twin of dedup_exact's digest grouping)
-        "fingerprint",
-        # r7: Gopher-style intra-document repetition quality signals
-        # (quality_funnel + bm25_search graduated from this set to the
-        # graded driver window in r8)
-        "quality_repetition",
-        # r8: CCNet-style unigram-LM improbability quality scoring
-        # (integer-exact perplexity proxy; window full)
-        "quality_unigram_lm",
-        # r8: per-doc TF-IDF keyword extraction (rational idf, the
-        # bm25 float discipline; window full)
-        "tfidf_topk_terms",
-        # r7: DSIR-style hashed-ngram importance resampling
-        "importance_resample",
-        # r9: stratified content-addressed train/val/test holdout
-        # (append-stable split; window full)
         "corpus_split",
-        # r9: train<->eval duplicate-leakage audit over the split
-        # (exact digests agg-only + the capped ngram-jaccard pairs)
         "split_leakage",
-        # r9: per-vector symmetric int8 embedding quantization — the
-        # 4x memory lever for the 100 TB ANN path (window full)
+        "quality_repetition",
         "quantize_embeddings",
-        # retired r12 when probe_ann_index (the stored-index
-        # production path) took its graded slot — bit parity between
-        # the two is pinned in tests/test_ann_index.py, and this set
-        # keeps the fly twin locally verified every run
+        # the on-the-fly references of the stored-index probes (parity
+        # pinned in tests/test_ann_index.py and tests/test_ivf_index.py);
+        # similarity_ivf's oracle is a builder (sf_dir -> sql): the
+        # injected centroids are data-dependent
         "similarity_ann",
-        # retired r13 when probe_ivf_index (the stored-index
-        # production path) took its graded slot, same discipline —
-        # stored/fly parity pinned in tests/test_ivf_index.py; this
-        # oracle entry is a CALLABLE (sf_dir -> sql): the injected
-        # centroids are data-dependent
         "similarity_ivf",
-        # r7: md5-hash-family SimHash twin (dedup_near_md5 graduated
-        # from this set to the graded driver window in r9 — it now
-        # carries the near-dedup hash-check in the driver artifact)
+        # the only oracle check of the benched SimHash pipeline
         "dedup_simhash_md5",
-        # r6: real stdlib WAV decode over JVM-built PCM payloads
-        "multimodal_audio",
-        # retired r6 to admit dedup_incremental to the graded window
-        # (tumbling is event_sliding with step == size)
+        # the batch reference of tests/test_streaming.py's parity test
         "event_tumbling",
-        # r6: C4-style cross-document boilerplate registry
-        "boilerplate_chunks",
     }
-
-
-# Rows-only retirees (r8): queries deregistered from the driver
-# window whose driver row was rows-only anyway — no oracle exists by
-# design, so parity here is a smoke check; their REAL verification is
-# elsewhere and keeps running every test run (sketches: error bounds
-# vs in-row exact twins, tests/test_advanced.py; dedup_simhash:
-# precision tests in tests/test_dedup.py + the full-pipeline md5 twin
-# dedup_simhash_md5 oracle-checked above).
-RETIRED_ROWS_ONLY = {
-    **misc.RETIRED_ROWS_ONLY_QUERIES,
-    **dedup.RETIRED_ROWS_ONLY_QUERIES,
-}
 
 
 def test_rows_only_retirees_are_exactly_the_documented_set():
-    # dedup_near joined r9 when its md5 twin took the graded slot —
-    # the xxhash64 family stays the production default, verified by
-    # tests/test_dedup.py determinism/recall/precision + bench series
-    assert set(RETIRED_ROWS_ONLY) == {
-        "sketches",
-        "dedup_simhash",
-        "dedup_near",
-    }
+    # no oracle by design; their real verification is elsewhere and
+    # runs every test run (sketches: error bounds vs in-row exact twins,
+    # tests/test_advanced.py; dedup_simhash / dedup_near: the
+    # determinism/recall/precision tests in tests/test_dedup.py, plus
+    # their md5-hash-family twins' oracles)
+    assert set(ROWS_ONLY) == {"sketches", "dedup_simhash", "dedup_near"}
 
 
-@pytest.mark.parametrize("name", sorted(RETIRED_ROWS_ONLY))
+def test_retired_names_are_not_registered():
+    assert not set(RETIRED) & set(registry.queries())
+
+
+def test_listing_queries_trains_nothing(monkeypatch):
+    """Registration never resolves a data-dependent oracle: with the
+    IVF quantizer replay broken, both pools still list."""
+    from irio2024_mapreduce_spark.operators import similarity
+
+    def boom(*args, **kwargs):
+        raise AssertionError("IVF training ran at registration")
+
+    monkeypatch.setattr(similarity, "ivf_centroids_for", boom)
+    assert "probe_ivf_index" in registry.queries()
+    assert set(registry.retired_queries()) == set(RETIRED)
+
+
+@pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_retiree_still_runs(name, spark, sf_dir):
-    df = RETIRED_ROWS_ONLY[name](spark, sf_dir)
+    df = RETIRED[name](spark, sf_dir)
     assert df.count() > 0
 
 
-@pytest.mark.parametrize("name", sorted(RETIRED))
+@pytest.mark.parametrize("name", ORACLE_CHECKED)
 def test_retired_twin_matches_oracle(name, spark, sf_dir, duck):
-    fn, sql = RETIRED[name]
-    if callable(sql):  # data-dependent oracle (similarity_ivf)
-        sql = sql(sf_dir)
-    sdf = fn(spark, sf_dir)
+    sdf = RETIRED[name](spark, sf_dir)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(sql)
+    res = duck.execute(RETIRED_ORACLES[name])
     d_cols = [d[0] for d in res.description]
     d_rows = res.fetchall()
     assert sorted(s_cols) == sorted(d_cols)

@@ -258,11 +258,7 @@ def main() -> None:
 
     from irio2024_mapreduce_spark import registry
 
-    qs = dict(registry.queries())
-    from irio2024_mapreduce_spark.operators import dedup as _d
-
-    for _n, _f in _d.RETIRED_ROWS_ONLY_QUERIES.items():
-        qs.setdefault(_n, _f)
+    qs = {**registry.retired_queries(), **registry.queries()}
 
     fams = [
         ("dedup_near", old_dedup_near, qs["dedup_near"]),

@@ -71,15 +71,8 @@ def main() -> None:
     names = args.queries or DEFAULT_QUERIES
 
     spark = get_spark()
-    qs = dict(registry.queries())
-    # retired twins are bench surface too
-    from irio2024_mapreduce_spark.operators import dedup as _dedup
-    from irio2024_mapreduce_spark.operators import similarity as _sim
-
-    for _n, _f in _dedup.RETIRED_ROWS_ONLY_QUERIES.items():
-        qs.setdefault(_n, _f)
-    for _n, _f in _sim.RETIRED_TWIN_QUERIES.items():
-        qs.setdefault(_n, _f)
+    # retired queries are bench surface too; a registered name wins
+    qs = {**registry.retired_queries(), **registry.queries()}
 
     sc = spark.sparkContext
     # warm-up

@@ -51,14 +51,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    qs = dict(registry.queries())
-    from irio2024_mapreduce_spark.operators import dedup as _dedup
-    from irio2024_mapreduce_spark.operators import similarity as _sim
-
-    for _n, _f in _dedup.RETIRED_ROWS_ONLY_QUERIES.items():
-        qs.setdefault(_n, _f)
-    for _n, _f in _sim.RETIRED_TWIN_QUERIES.items():
-        qs.setdefault(_n, _f)
+    qs = {**registry.retired_queries(), **registry.queries()}
 
     names = (
         args.queries.split(",") if args.queries else list(bench.HEADLINE)

@@ -40,14 +40,7 @@ def main() -> None:
         "split", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(registry.queries())
-    from irio2024_mapreduce_spark.operators import dedup as _dedup
-    from irio2024_mapreduce_spark.operators import similarity as _sim
-
-    for _n, _f in _dedup.RETIRED_ROWS_ONLY_QUERIES.items():
-        qs.setdefault(_n, _f)
-    for _n, _f in _sim.RETIRED_TWIN_QUERIES.items():
-        qs.setdefault(_n, _f)
+    qs = {**registry.retired_queries(), **registry.queries()}
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     for name in names:

@@ -100,8 +100,6 @@ def _last_stage_id(spark) -> int:
 
 def run_one(corpus: str) -> None:
     from irio2024_mapreduce_spark import registry
-    from irio2024_mapreduce_spark.operators import dedup as D
-    from irio2024_mapreduce_spark.operators import similarity as S
     from irio2024_mapreduce_spark.session import (
         drain_driver_backlog,
         get_spark,
@@ -112,11 +110,7 @@ def run_one(corpus: str) -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    qs = dict(registry.queries())
-    for _n, _f in D.RETIRED_ROWS_ONLY_QUERIES.items():
-        qs.setdefault(_n, _f)
-    for _n, _f in S.RETIRED_TWIN_QUERIES.items():
-        qs.setdefault(_n, _f)
+    qs = {**registry.retired_queries(), **registry.queries()}
     out = {
         "cpus": spark.sparkContext.defaultParallelism,
         "n_docs": N_DOCS,

@@ -514,13 +514,9 @@ def main() -> None:
         stage = build_scaled_corpus(spark, base, n)
         probe_queries = QUERIES
 
-    qs = dict(registry.queries())
-    # retired-but-still-probed queries (dedup_near/dedup_simhash left
-    # the graded window but keep their scale series)
-    from irio2024_mapreduce_spark.operators import dedup as _dedup
-
-    for _n, _f in _dedup.RETIRED_ROWS_ONLY_QUERIES.items():
-        qs.setdefault(_n, _f)
+    # ungraded queries (dedup_near, dedup_simhash) keep their scale
+    # series; a registered name wins
+    qs = {**registry.retired_queries(), **registry.queries()}
     out: dict[str, dict[str, float]] = {}
     for name in probe_queries:
         times = {}
