@@ -13,9 +13,10 @@ Associative aggregates (sum/count/min/max) compose exactly; results
 are identical to the direct groupBy (asserted in tests).
 
 Where the lever is actually load-bearing (measured,
-`tools/stress_skew.py` + SCALE.md round-6): NOT built-in aggregates —
-Catalyst's partial-aggregation phase absorbs even a 50%-of-all-rows
-hot key, and salting those just adds a shuffle — but ``group-map
+`tools/stress_skew.py` + SCALE.md, "skewed-key probe"): NOT built-in
+aggregates — Catalyst's partial-aggregation phase absorbs even a
+50%-of-all-rows hot key, and salting those just adds a shuffle — but
+``group-map
 applyInPandas``, which has NO partial phase: the hot key's entire row
 set ships to ONE task as one Arrow group. Naive full salting there
 backfires 8× (it multiplies the long tail's group count by
@@ -95,7 +96,8 @@ def skew_aware_group_apply(
     keys' rows get a per-row salt spreading each over ``buckets``
     tasks; ALL other keys keep salt 0, so the long tail's group count
     — and therefore its per-group Python-crossing overhead, the term
-    that makes naive full salting 8× SLOWER (SCALE.md round-6) — is
+    that makes naive full salting 8× SLOWER (SCALE.md, skewed-key
+    probe) — is
     exactly what direct ``applyInPandas`` pays. A final JVM aggregate
     merges the ≤``buckets`` partials per key; for cold keys it's a
     1-row-in/1-row-out pass-through.

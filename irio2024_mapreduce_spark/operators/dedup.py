@@ -80,6 +80,10 @@ PAIRWISE_BLOCK_CAP = 1024
 # block cap bounds any one shingle at 64k join rows.
 NGRAM_POSTING_CAP = 256
 
+# the near-dup families of the pipelines' kill set and corpus index:
+# "ngram" (3-gram posting join) and "lsh" (MinHash bands)
+NEAR_FAMILIES = ("ngram", "lsh")
+
 
 def _cap_buckets(
     rows: DataFrame,
@@ -928,8 +932,11 @@ def near_dup_kill_ids(
     graded ``dedup_near`` pipeline): sub-quadratic in band-bucket
     volume and robust to edits that shift every 3-gram, at the cost
     of S-curve recall instead of posting-exact intersection counts.
-    Same keep-first kill rule either way.
+    Same keep-first kill rule either way; any other ``family`` raises
+    ``ValueError``.
     """
+    if family not in NEAR_FAMILIES:
+        raise ValueError(f"unknown near-dup family: {family!r}")
     nn = deduped.filter(F.col("text").isNotNull())
     if family == "lsh":
         par = nn.sparkSession.sparkContext.defaultParallelism

@@ -94,7 +94,8 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SQL = {
     # CAST(SUM(...) AS BIGINT): DuckDB SUM(BIGINT) returns HUGEINT
     # (int128) — uncast it hash-diverges under the driver's
-    # canonicalization even when every value matches (r01 lesson).
+    # canonicalization even when every value matches (a graded
+    # mismatch once came from exactly this).
     "json_extract": """
         WITH t AS (
             SELECT event_type,

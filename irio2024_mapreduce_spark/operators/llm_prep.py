@@ -401,12 +401,22 @@ def _exploded_grams(docs: DataFrame, *keep: str) -> DataFrame:
     )
 
 
-def contaminated_ids(train: DataFrame, benchmark: DataFrame) -> DataFrame:
+def benchmark_ngram_digests(benchmark: DataFrame) -> DataFrame:
+    """The held-out benchmark as a distinct {DECONTAM_NGRAM}-gram md5
+    digest set: the probe side of :func:`contaminated_ids`, and the
+    stored decontamination half of the ingest index. Benchmarks are
+    eval-corpus-sized (thousands of docs), so the set is tiny and
+    every probe broadcasts it. A NULL-text benchmark doc adds the
+    digest of the empty gram, which only an empty training text can
+    emit."""
+    return _exploded_grams(benchmark).select("g").distinct()
+
+
+def contaminated_ids(train: DataFrame, bench_grams: DataFrame) -> DataFrame:
     """doc_ids of ``train`` docs sharing ≥ 1 {DECONTAM_NGRAM}-gram
-    with any ``benchmark`` doc. The benchmark side is eval-corpus-
-    sized (tiny), so the membership probe is a broadcast semi-join —
-    the training side never shuffles at all."""
-    bench_grams = _exploded_grams(benchmark).select("g").distinct()
+    digest with ``bench_grams`` (:func:`benchmark_ngram_digests`). The
+    digest set is eval-corpus-sized, so the membership probe is a
+    broadcast semi-join — the training side never shuffles at all."""
     return (
         _exploded_grams(train, "doc_id")
         .join(F.broadcast(bench_grams), "g", "semi")
@@ -432,7 +442,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     hit_ids = contaminated_ids(
         docs.filter(F.col("doc_id") % 10 != 8),
-        docs.filter(F.col("doc_id") % 10 == 8),
+        benchmark_ngram_digests(docs.filter(F.col("doc_id") % 10 == 8)),
     )
     return (
         docs.filter(F.col("doc_id") % 10 != 8)

@@ -9,7 +9,7 @@ plain pixel striding. The image rows of the synthesized media table
 carry REAL P6 payloads, so the graded pipeline exercises real
 bytes → dimensions end-to-end (and, because the payload is
 reconstructible in SQL, the whole pipeline is DuckDB-oracle-checked).
-Video frame sampling (r7) decodes REAL uncompressed-AVI payloads the
+Video frame sampling decodes REAL uncompressed-AVI payloads the
 same way — AVI is a RIFF container like WAV, so the stdlib chunk
 walker extends to it: parse ``avih`` for dims/frame count, walk
 ``movi`` for raw ``00db`` frame chunks. Compressed video (MP4/H.264)
@@ -44,7 +44,7 @@ DECODED_SCHEMA = (
 
 def _try_import_pil():
     """Import-guard for Pillow: returns the ``PIL.Image`` module or
-    ``None``. Since r6 the graded pipeline decodes REAL bytes with
+    ``None``. The graded pipeline decodes REAL bytes with
     the stdlib decoders (P6/BMP images, PCM-WAV audio, uncompressed
     AVI video — see the module header); Pillow, when present, only
     widens the accepted image formats."""
@@ -158,7 +158,8 @@ def _resize_ppm(payload: bytes, target: tuple[int, int]) -> bytes:
     no codec: pick source row sy = y*h//th and column sx = x*w//tw
     for each target pixel. Vectorized with numpy fancy indexing: the
     per-pixel Python loop was the multimodal pipeline's whole 100×
-    cost (tw·th·3 Python iterations per image — SCALE.md round-7)."""
+    cost (tw·th·3 Python iterations per image — SCALE.md, "multimodal
+    decode at 100×")."""
     import numpy as np  # noqa: PLC0415 — executor-side import
 
     w, h, off = _parse_ppm(payload)
@@ -564,7 +565,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling stage over the video table: one payload row
     explodes to FRAMES_PER_VIDEO frame rows inside the pandas batch
     (mapInPandas may return more rows than it got — the frame
-    extraction shape). REAL decode (r7): payloads are genuine
+    extraction shape). REAL decode: payloads are genuine
     uncompressed-AVI bytes and every column — dims, total frame
     count, sampled indices, frame hashes — comes out of the stdlib
     RIFF walker. Oracle-checked: the fixture's frame count is
@@ -672,7 +673,7 @@ ORACLE_SQL = {
             FROM media WHERE media_type = 'image/ppm'
         ) ORDER BY stage, group_key
     """,
-    # frames stage (r7, REAL decode): the decoder reads back exactly
+    # frames stage (REAL decode): the decoder reads back exactly
     # what the fixture encodes — total frames t = 4 + n_chars % 20,
     # dims 4x2, frame i's sampled index (i*t)//4, and each frame a
     # uniform fill chr(97 + (doc_id + index) % 26), so frame-hash

@@ -212,6 +212,10 @@ FUNNEL_MAX_REPETITION_X10K = 6000  # 1 - TTR, scaled ×10⁴
 FUNNEL_MIN_STOPWORDS = 1  # at least one English stopword
 
 
+# funnel_verdict's kill verdicts, in rule order ('pass' survives)
+FUNNEL_RULES = ("null_text", "too_short", "too_repetitive", "no_stopwords")
+
+
 def funnel_verdict(text_col: str = "text"):
     """The funnel's first-failing-rule verdict as a Column — single
     source of truth shared by :func:`quality_funnel` (the report

@@ -1,7 +1,7 @@
 """End-to-end corpus preparation — the materializing pipeline a
 training-data team actually runs, composed from the oracle-checked
-operator stages (single source of truth: each stage reuses the same
-column helpers its report query is hash-verified with):
+operator stages (each stage reuses the same column helpers its report
+query is hash-verified with):
 
 0. **benchmark holdout** — the eval stripe (doc_id % 10 == 8, the
    same fixture role ``decontaminate`` is hash-checked with) is
@@ -16,20 +16,9 @@ column helpers its report query is hash-verified with):
    group inside one WindowExec task; see dedup._cap_buckets.
    NULL-text rows pass through untouched (the funnel owns them) so
    every kill is attributed to exactly one stage.
-2. **near dedup** — keep-first 3-gram-Jaccard ≥ 0.5 kill set from
-   ``dedup.near_dup_kill_ids`` (the incremental machinery's banded,
-   posting-capped corpus index; no band cap, so it stays live at
-   corpus scale).
-3. **quality funnel** — `funnel_verdict` first-failing-rule tagging;
-   only 'pass' docs survive.
-4. **decontamination** — ``llm_prep.contaminated_ids`` against the
-   held-out benchmark stripe: any surviving doc sharing one 13-token
-   n-gram with the benchmark is removed. Runs on RAW text (the same
-   bytes the benchmark side grams over), before the scrubber
-   rewrites anything.
-5. **PII scrub** — `scrub_text`'s chained JVM regexp_replace;
-   ``n_chars`` is RECOMPUTED from the scrubbed text so the shipped
-   length column describes the shipped bytes.
+2-5. **the cleaning chain** shared with the daily ``plans.ingest``
+   (``plans.cleaning``): keep-first near dedup → quality funnel →
+   decontamination against the stripe's 13-gram digests → PII scrub.
 6. **sequence packing** — `pack_docs` two-phase distributed prefix
    sum over the CLEANED text's token counts.
 
@@ -40,11 +29,9 @@ manifest tiles ``docs_in`` exactly: every input doc is held out,
 killed by exactly one stage, or shipped.
 
 Scale shape: stages 0-1 are map-only filters plus one agg on 32-byte
-digests; stage 2 is the capped posting self-join (the measured
-dedup_ngram_jaccard/incremental surface); stage 3 is map-only; stage
-4 is a broadcast semi-join probe (training side never shuffles);
-stage 5 is map-only; stage 6 is the pinned two-phase scan. Nothing
-here collects to the driver except the manifest's counts.
+digests; stages 2-5 are the chain's (see ``plans.cleaning``); stage 6
+is the pinned two-phase scan. Nothing here collects to the driver
+except the manifest's counts.
 """
 
 from __future__ import annotations
@@ -54,28 +41,29 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from irio2024_mapreduce_spark.operators.dedup import (
+    NEAR_FAMILIES,
     _collapse_reps,
-    near_dup_kill_ids,
 )
 from irio2024_mapreduce_spark.operators.llm_prep import (
-    contaminated_ids,
+    benchmark_ngram_digests,
     pack_docs,
     pack_docs_bpe,
     quarantine_split_docs,
-    scrub_text,
     split_docs,
 )
-from irio2024_mapreduce_spark.operators.text_analysis import funnel_verdict
+from irio2024_mapreduce_spark.plans.cleaning import clean_docs
+from irio2024_mapreduce_spark.plans.ingest import _trainable, _write_index
 from irio2024_mapreduce_spark.sources import staged_commit
 from irio2024_mapreduce_spark.sources.sinks import (
     SimulatedCrash,
     mark_swap_ready,
     release_compaction_lock,
     replace_dataset,
+    reraise_if_vanished_input,
 )
 from irio2024_mapreduce_spark.sources.tables import load_table
 
@@ -187,10 +175,6 @@ def prepare_corpus(
     re-raised as the documented retryable (the regeneration is
     all-staged: nothing published before the commit marker, so a
     retry is lossless)."""
-    from irio2024_mapreduce_spark.plans.ingest import (  # noqa: PLC0415
-        _reraise_if_vanished_input,
-    )
-
     try:
         return _prepare_corpus_impl(
             spark, sf_dir, out_dir, tokenizer_merges, index_dir,
@@ -200,9 +184,9 @@ def prepare_corpus(
     except RuntimeError:
         raise  # already protocol-classified
     except Exception as e:
-        _reraise_if_vanished_input(e, out_dir)
+        reraise_if_vanished_input(e, out_dir)
         if index_dir is not None:
-            _reraise_if_vanished_input(e, index_dir)
+            reraise_if_vanished_input(e, index_dir)
         raise
 
 
@@ -275,6 +259,13 @@ def _prepare_corpus_impl(
 
     ``_test_crash_after`` is fault injection for the
     kill-at-every-step test — production callers never pass it."""
+    # argument checks before any recovery or Spark action: a typo'd
+    # family would otherwise run the default family (or fail only at
+    # index seeding, after the corpus and packs are staged)
+    if near_family not in NEAR_FAMILIES:
+        raise ValueError(f"unknown near_family: {near_family!r}")
+    if quarantine_leaks and not holdout_split:
+        raise ValueError("quarantine_leaks requires holdout_split=True")
     if index_dir is not None:
         # the index swap renames whole directories: an index_dir that
         # IS out_dir (or nests either way) would carry the
@@ -323,51 +314,15 @@ def _prepare_corpus_impl(
     )
     after_dedup = deduped.count()
 
-    # stage 2: near dedup over the exact-collapse survivors. The kill
-    # set is materialized once (lazily) — it is batch-small relative
-    # to the corpus, and the anti-join's build side.
-    near_kills = near_dup_kill_ids(
-        deduped, family=near_family
-    ).localCheckpoint(eager=False)
-    near_deduped = deduped.join(near_kills, "doc_id", "anti")
-    after_near = near_deduped.count()
-
-    # stage 3: quality funnel
-    tagged = near_deduped.withColumn("_verdict", funnel_verdict())
-    kills = {
-        r["_verdict"]: r["cnt"]
-        for r in tagged.groupBy("_verdict").agg(F.count("*").alias("cnt")).collect()
-    }
-    survivors = tagged.filter(F.col("_verdict") == "pass").drop("_verdict")
-    after_funnel = survivors.count()
-
-    # stage 4: decontamination vs the held-out benchmark (raw text on
-    # both sides — the scrubber hasn't rewritten anything yet)
-    contam_ids = contaminated_ids(survivors, benchmark).localCheckpoint(
+    # stages 2-5: the shared cleaning chain. The benchmark digest set
+    # is built once, for its probe and for the seeded index.
+    bench_grams = benchmark_ngram_digests(benchmark).localCheckpoint(
         eager=False
     )
-    decontaminated = survivors.join(contam_ids, "doc_id", "anti")
-    after_decontam = decontaminated.count()
-
-    # stage 5: PII scrub — text replaced by clean_text, n_chars
-    # recomputed from the scrubbed bytes (a carried-forward n_chars
-    # would describe text the artifact no longer contains)
-    cleaned = scrub_text(decontaminated).select(
-        "doc_id",
-        F.col("clean_text").alias("text"),
-        (F.col("n_emails") + F.col("n_ips") + F.col("n_phones")).alias(
-            "n_redactions"
-        ),
-        F.length("clean_text").cast("long").alias("n_chars"),
-        *[
-            c
-            for c in decontaminated.columns
-            if c not in ("doc_id", "text", "n_chars")
-        ],
+    survivors, cleaned, counts = clean_docs(
+        deduped, near_family, bench_grams
     )
     clean_path = os.path.join(out_dir, "clean_documents.parquet")
-    if quarantine_leaks and not holdout_split:
-        raise ValueError("quarantine_leaks requires holdout_split=True")
     # every artifact goes to PRIVATE staging first (no reader sees a
     # partial generation); the downstream stages read the STAGED
     # artifacts, exactly as they used to read the live ones
@@ -414,27 +369,17 @@ def _prepare_corpus_impl(
 
         if index_dir is not None:
             # seed the ingest index from the SHIPPED corpus: dedup
-            # keys over the pre-scrub text (ingest's convention),
+            # keys over the pre-scrub survivors (ingest's convention),
             # stats row over the shipped bytes — seeded into STAGING
             # as a complete index dir, swapped in with the others.
-            # Import here to keep the one-shot driver importable
-            # without the ingest module.
-            from irio2024_mapreduce_spark.plans.ingest import (  # noqa: PLC0415
-                seed_index_from_prepared,
-            )
-
-            seed_index_from_prepared(
-                spark,
-                decontaminated,
-                cleaned,
+            # The benchmark digest set rides along so the DAILY
+            # pipeline keeps the decontamination guarantee.
+            _write_index(
                 os.path.join(staging, "index"),
-                family=near_family,
-                # the held-out eval stripe's digest set rides along so
-                # the DAILY pipeline keeps the decontamination
-                # guarantee — without it, ingested batches could
-                # reintroduce eval-set 13-grams that stage 4 just
-                # removed
-                benchmark=benchmark,
+                near_family,
+                survivors,
+                _trainable(cleaned),
+                bench_grams,
             )
 
         _commit_and_publish(
@@ -487,12 +432,10 @@ def _prepare_corpus_impl(
         "docs_in": docs_in,
         "benchmark_held_out": docs_in - pool_n,
         "exact_dups_removed": pool_n - after_dedup,
-        "near_dups_removed": after_dedup - after_near,
-        "killed_null_text": kills.get("null_text", 0),
-        "killed_too_short": kills.get("too_short", 0),
-        "killed_too_repetitive": kills.get("too_repetitive", 0),
-        "killed_no_stopwords": kills.get("no_stopwords", 0),
-        "contaminated_removed": after_funnel - after_decontam,
+        # near_dups, the four killed_* and contaminated_removed, in
+        # that order
+        "near_dups_removed": counts.pop("near_dups"),
+        **counts,
         # `or 0` on tokens below: F.sum is NULL over an empty packed
         # frame (count/countDistinct return 0) — reachable under
         # holdout_split when every shipped doc hashed into val/test

@@ -1,17 +1,20 @@
 """Incremental ingest driver — the DAILY production path that
 complements ``plans.corpus_prep``'s one-shot build: admit a new batch
 against STORED corpus indexes (the corpus text is never re-scanned),
-clean the admitted docs with the same funnel/scrub stages the one-shot
-pipeline ships, then append the survivors to the corpus artifact AND
-append their index rows — so tomorrow's batch dedups against today's
-admissions.
+run the admitted docs through the cleaning chain the one-shot
+pipeline ships (``plans.cleaning``), then append the survivors to the
+corpus artifact AND append their index rows — so tomorrow's batch
+dedups against today's admissions.
 
 Index layout under ``index_dir`` (both halves append-only, exactly the
 production story ``dedup.corpus_index_postings`` documents):
 
 * ``hashes/``   — distinct md5 digests of corpus text (exact-dup half)
 * ``postings/`` — banded, ``NGRAM_POSTING_CAP``-capped shingle posting
-  rows of the exact-collapse representatives (near-dup half)
+  rows of the exact-collapse representatives (near-dup half; the
+  ``lsh`` family stores ``bands/`` + ``rep_shingles/`` instead)
+* ``benchmark_ngrams/`` — the held-out benchmark's 13-gram digest set,
+  when the index was built with one (the decontamination probe)
 * plus the bookkeeping: ``stats/`` (mergeable per-batch counters),
   ``manifests/`` (exactly-once rows keyed by (stream, batch_id)),
   ``_commit_markers/`` (their O(1) existence cache — outside the
@@ -21,11 +24,11 @@ production story ``dedup.corpus_index_postings`` documents):
 
 Scale shape: every step is batch-keyed — the verdict joins probe the
 stored index with hash lookups (``dedup._incremental_verdicts``, the
-same core the oracle-checked ``dedup_incremental`` runs), the funnel
-and scrub are map-only, and the appends are partition-parallel parquet
-writes of batch-sized frames. Nothing corpus-sized moves.
-``tools/stress_incremental.py`` measures the probe's ~flat cost at
-100× corpus.
+same core the oracle-checked ``dedup_incremental`` runs), the
+cleaning chain runs over the batch-sized admitted frame, and the
+appends are partition-parallel parquet writes of batch-sized frames.
+Nothing corpus-sized moves. ``tools/stress_incremental.py`` measures
+the probe's ~flat cost at 100× corpus.
 
 Durability: ``ingest_batch`` is transactional through the staged-commit
 protocol of ``sources.staged_commit``, shared with ``plans.corpus_prep``.
@@ -68,15 +71,13 @@ from irio2024_mapreduce_spark.operators.dedup import (
     corpus_index_hashes,
     corpus_index_postings,
     corpus_index_rep_shingles,
-    near_dup_kill_ids,
 )
 from irio2024_mapreduce_spark.operators.llm_prep import (
     DECONTAM_NGRAM,
-    _exploded_grams,
-    scrub_text,
+    benchmark_ngram_digests,
 )
 from irio2024_mapreduce_spark.operators import stored_index
-from irio2024_mapreduce_spark.operators.text_analysis import funnel_verdict
+from irio2024_mapreduce_spark.plans.cleaning import clean_docs
 from irio2024_mapreduce_spark.sources import staged_commit
 from irio2024_mapreduce_spark.sources.sinks import (
     SWAP_OLD,
@@ -234,57 +235,73 @@ def build_corpus_index(
     eval-set contamination that ``prepare_corpus`` stage 4 removed.
 
     Writes a small JSON manifest recording family + constants; every
-    later open validates against it. Returns per-part row counts."""
-    counts: dict[str, int] = {}
-    parts: dict[str, DataFrame] = {
-        "hashes": corpus_index_hashes(corpus)
+    later open validates against it. Returns per-part row counts.
+
+    The stats row describes ``corpus`` as given (pre-scrub bytes,
+    NULL texts excluded to match the ingest stats convention); callers
+    holding the raw/cleaned pair should seed via
+    :func:`seed_index_from_prepared`, whose stats row covers the
+    shipped scrubbed text."""
+    names = _write_index(
+        index_dir,
+        family,
+        corpus,
+        corpus.filter(F.col("text").isNotNull()),
+        None if benchmark is None else benchmark_ngram_digests(benchmark),
+    )
+    return {
+        f"{name}_rows": spark.read.parquet(
+            os.path.join(index_dir, name)
+        ).count()
+        for name in names
     }
+
+
+def _index_parts(docs: DataFrame, family: str) -> dict[str, DataFrame]:
+    """The dedup index's data parts over ``docs``' raw text: the md5
+    ``hashes`` half plus the ``family`` near-dup half (``postings``,
+    or ``bands`` + ``rep_shingles``). Raises on an unknown family
+    before any writer touches the index."""
     if family == "ngram":
-        parts["postings"] = corpus_index_postings(corpus)
+        near = {"postings": corpus_index_postings(docs)}
     elif family == "lsh":
-        parts["bands"] = corpus_index_bands(corpus)
-        parts["rep_shingles"] = corpus_index_rep_shingles(corpus)
+        near = {
+            "bands": corpus_index_bands(docs),
+            "rep_shingles": corpus_index_rep_shingles(docs),
+        }
     else:
         raise ValueError(f"unknown index family: {family!r}")
-    if benchmark is not None:
-        parts["benchmark_ngrams"] = benchmark_ngram_digests(benchmark)
-    # destructive clear only AFTER the arguments validated above — a
-    # typo'd family must not wipe the live index's exactly-once state
-    # while leaving its data in place
+    return {"hashes": corpus_index_hashes(docs), **near}
+
+
+def _write_index(
+    index_dir: str,
+    family: str,
+    docs: DataFrame,
+    census: DataFrame,
+    bench_grams: DataFrame | None,
+) -> list[str]:
+    """The one writer of a fresh index (``build_corpus_index``,
+    ``seed_index_from_prepared`` and ``prepare_corpus``'s staged seed):
+    the dedup parts over ``docs``, the benchmark digest set when given,
+    a stats row over ``census``, then the manifest. Every part is
+    overwrite: a rebuild replaces the index wholesale, including the
+    exactly-once records, stream checkpoint and stats rows of the
+    replaced life (:func:`_clear_prior_life`). A fresh stats row is
+    required because HLL state cannot be recomputed later without a
+    rescan. Returns the data part names."""
+    parts = _index_parts(docs, family)
+    if bench_grams is not None:
+        parts["benchmark_ngrams"] = bench_grams
+    # destructive clear only AFTER _index_parts validated the family — a
+    # typo must not wipe the live index's exactly-once state while
+    # leaving its data in place
     _clear_prior_life(index_dir)
     for name, df in parts.items():
-        path = os.path.join(index_dir, name)
-        df.write.mode("overwrite").parquet(path)
-        counts[f"{name}_rows"] = spark.read.parquet(path).count()
-    # a fresh stats row over THIS corpus: the clear removed the prior
-    # life's rows (they described a corpus this index no longer
-    # serves), and by the 100 TB premise HLL state can't be
-    # recomputed later without a rescan — so the rebuild must leave
-    # corpus_stats describing exactly what it indexed. Convention
-    # note: this path receives the corpus AS IT EXISTS (the contract
-    # above says pre-scrub bytes of an already-shipped corpus), so
-    # the stats describe those bytes; callers holding the raw/cleaned
-    # PAIR should seed via seed_index_from_prepared, whose stats row
-    # covers the shipped scrubbed text. Null-text docs are excluded
-    # to match the ingest stats convention (cleaned frames carry no
-    # nulls).
-    _append_stats_row(
-        corpus.filter(F.col("text").isNotNull()), index_dir, mode="overwrite"
-    )
-    _write_index_manifest(index_dir, family, benchmark is not None)
-    return counts
-
-
-def benchmark_ngram_digests(benchmark: DataFrame) -> DataFrame:
-    """The held-out benchmark as a distinct {DECONTAM_NGRAM}-gram md5
-    digest set — the stored decontamination half of the ingest index.
-    Benchmarks are eval-corpus-sized (thousands of docs), so the
-    stored set is tiny and every probe broadcasts it."""
-    return (
-        _exploded_grams(benchmark.filter(F.col("text").isNotNull()))
-        .select("g")
-        .distinct()
-    )
+        df.write.mode("overwrite").parquet(os.path.join(index_dir, name))
+    _append_stats_row(census, index_dir, mode="overwrite")
+    _write_index_manifest(index_dir, family, bench_grams is not None)
+    return list(parts)
 
 
 # _reraise_if_vanished_input lives in sources/sinks.py (shared with the
@@ -488,74 +505,25 @@ def _ingest_batch_impl(
         "semi",
     )
 
-    # INTRA-batch near dedup: the corpus probe above checks each
-    # batch doc against the CORPUS only (exact dups within the batch
-    # self-convict via the earlier-doc rule, but two near-dup docs
-    # co-arriving in one batch would both admit). The admitted frame
-    # is already exact-collapsed, so the one-shot pipeline's
-    # keep-first kill set applies directly; kills are charged to
-    # near_dups alongside the corpus-probe convictions.
-    intra_kills = near_dup_kill_ids(
-        admitted, family=family
-    ).localCheckpoint(eager=False)
-    intra_near = intra_kills.count()
-    admitted = admitted.join(intra_kills, "doc_id", "anti")
-
-    # quality funnel over the admitted docs (same first-failing-rule
-    # column the one-shot pipeline and the graded query use)
-    tagged = admitted.withColumn("_verdict", funnel_verdict())
-    kills = {
-        r["_verdict"]: r["cnt"]
-        for r in tagged.groupBy("_verdict")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    survivors = tagged.filter(F.col("_verdict") == "pass").drop("_verdict")
-
-    # decontamination vs the STORED benchmark digest set (without
-    # this, batches appended after the one-shot build would
-    # silently reintroduce eval-set 13-gram contamination that
-    # prepare_corpus stage 4 removed). Same stage order as the
-    # one-shot pipeline — funnel first, decontaminate on raw text
-    # before the scrubber rewrites anything. The digest set is
-    # eval-corpus-sized, so the probe is a broadcast semi-join; the
-    # batch side never shuffles.
-    contaminated_removed = 0
-    if manifest_meta.get("decontaminate"):
-        bench_grams = spark.read.parquet(
-            os.path.join(index_dir, "benchmark_ngrams")
-        )
-        contam_ids = (
-            _exploded_grams(survivors, "doc_id")
-            .join(F.broadcast(bench_grams), "g", "semi")
-            .select("doc_id")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        contaminated_removed = contam_ids.count()
-        survivors = survivors.join(contam_ids, "doc_id", "anti")
-
-    # survivors feeds the scrub (corpus write) AND the index builders
-    # (raw text) — one batch-sized materialization, not 4-5 re-runs of
-    # the admit-join + funnel subtree per consumer
-    survivors = survivors.localCheckpoint(eager=False)
-
-    # scrub (n_chars recomputed from the shipped bytes, same policy
-    # as prepare_corpus); checkpointed once for its three consumers
-    # (corpus append, count, stats row)
-    cleaned = scrub_text(survivors).select(
-        "doc_id",
-        F.col("clean_text").alias("text"),
-        (F.col("n_emails") + F.col("n_ips") + F.col("n_phones")).alias(
-            "n_redactions"
-        ),
-        F.length("clean_text").cast("long").alias("n_chars"),
-        *[
-            c
-            for c in survivors.columns
-            if c not in ("doc_id", "text", "n_chars")
-        ],
-    ).localCheckpoint(eager=False)
+    # the shared cleaning chain (plans.cleaning) over the admitted
+    # docs. Its near-dup stage is the INTRA-batch kill: the probe above
+    # checks each batch doc against the CORPUS only (exact dups within
+    # the batch self-convict via the earlier-doc rule, but two near-dup
+    # docs co-arriving in one batch would both admit), and its kills
+    # are charged to near_dups beside the probe's convictions. The
+    # decontamination stage probes the STORED benchmark digest set, so
+    # a batch cannot reintroduce eval-set 13-grams the one-shot build
+    # removed.
+    survivors, cleaned, counts = clean_docs(
+        admitted,
+        family,
+        spark.read.parquet(os.path.join(index_dir, "benchmark_ngrams"))
+        if manifest_meta.get("decontaminate")
+        else None,
+    )
+    # the scrubbed frame has three consumers (corpus append, count,
+    # stats row): one batch-sized materialization
+    cleaned = cleaned.localCheckpoint(eager=False)
 
     # SCHEMA GATE: the corpus append is schema-blind at write
     # time — parquet happily lands files of any shape next to the live
@@ -597,15 +565,11 @@ def _ingest_batch_impl(
         )
 
     appended = cleaned.count()
+    counts["near_dups"] += by_verdict.get("near_dup", 0)
     manifest = {
         "batch_in": batch_in,
         "exact_dups": by_verdict.get("exact_dup", 0),
-        "near_dups": by_verdict.get("near_dup", 0) + intra_near,
-        "killed_null_text": kills.get("null_text", 0),
-        "killed_too_short": kills.get("too_short", 0),
-        "killed_too_repetitive": kills.get("too_repetitive", 0),
-        "killed_no_stopwords": kills.get("no_stopwords", 0),
-        "contaminated_removed": contaminated_removed,
+        **counts,
         "appended": appended,
     }
 
@@ -842,14 +806,7 @@ def _stage_batch(
     under the index's lock), so their publication is pure renames
     too."""
     clean_path = os.path.join(corpus_dir, "clean_documents.parquet")
-    parts: dict[str, DataFrame] = {
-        "hashes": corpus_index_hashes(survivors)
-    }
-    if family == "ngram":
-        parts["postings"] = corpus_index_postings(survivors)
-    else:
-        parts["bands"] = corpus_index_bands(survivors)
-        parts["rep_shingles"] = corpus_index_rep_shingles(survivors)
+    parts = _index_parts(survivors, family)
     # keyed stats row: a SIGKILLed publication can be replayed
     # wholesale (the marker is the last artifact to land), appending
     # a SECOND stats row for the same batch — unkeyed rows made that
@@ -1320,35 +1277,6 @@ def regenerate_commit_markers(spark: SparkSession, index_dir: str) -> int:
     return len(keys)
 
 
-def record_manifest(
-    spark: SparkSession,
-    index_dir: str,
-    batch_id: int,
-    manifest: dict,
-    stream: str = "",
-) -> None:
-    """Persist one batch's manifest row keyed by (``stream``,
-    ``batch_id``) — the exactly-once commit record for
-    :func:`ingest_batch` — then touch the O(1) commit marker. A crash
-    between the row append and the marker touch means the replay
-    reprocesses the batch (admission is idempotent; the duplicate
-    manifest row is audit noise, not corpus corruption)."""
-    # crash recovery BEFORE appending: creating a fresh live dir
-    # beside a swap-crashed snapshot would split-brain the record
-    # (readers prefer the near-empty live dir; the next compaction
-    # deletes the snapshot as post-swap garbage)
-    _recover_index_part(index_dir, "manifests")
-    row = (
-        stream,
-        int(batch_id),
-        *[int(manifest[k]) for k in _MANIFEST_KEYS],
-    )
-    spark.createDataFrame([row], _MANIFEST_SCHEMA).write.mode(
-        "append"
-    ).parquet(os.path.join(index_dir, "manifests"))
-    _touch_marker(index_dir, batch_id, stream)
-
-
 def read_recorded_manifest(
     spark: SparkSession,
     index_dir: str,
@@ -1454,13 +1382,12 @@ def seed_index_from_prepared(
     ingest's dedup convention) and its stats row, so ``ingest_batch``
     continues the corpus from day one. ``benchmark`` (the held-out
     eval stripe) additionally stores its n-gram digest set so every
-    future batch decontaminates — ``prepare_corpus`` passes it
-    automatically. EVERY part is overwrite — seeding is day-zero, so
-    a re-run of the build replaces the index wholesale (an appended
-    stats row here would double-count corpus_stats on every build
-    retry) — including the exactly-once manifests and the stream
-    checkpoint, which belong to the replaced life
-    (:func:`_clear_prior_life`).
+    future batch decontaminates. ``prepare_corpus(index_dir=...)``
+    seeds through the same writer (:func:`_write_index`), with the
+    digest set its own probe used. EVERY part is overwrite — seeding
+    is day-zero, so a re-run of the build replaces the index wholesale
+    (an appended stats row here would double-count corpus_stats on
+    every build retry).
 
     Quarantine lifecycle: docs tagged
     ``split='quarantined'`` stay IN the dedup index (``raw_survivors``
@@ -1468,39 +1395,25 @@ def seed_index_from_prepared(
     tomorrow's redelivered duplicates) but are EXCLUDED from the
     stats census — ``corpus_stats`` drives training-size accounting,
     and a quarantined doc is shipped for review, not trainable."""
-    if family not in ("ngram", "lsh"):
-        # validate BEFORE the destructive clear — a typo'd family must
-        # not wipe the live index's exactly-once state
-        raise ValueError(f"unknown index family: {family!r}")
-    if "split" in cleaned.columns:
-        # null-safe, matching reconcile_corpus_duplicates' census
-        # modes: a NULL split is not quarantined and belongs in the
-        # census — a plain != here would seed a census the measured
-        # true-up (which includes NULL splits) later "corrects"
-        cleaned = cleaned.filter(
-            ~F.col("split").eqNullSafe("quarantined")
-        )
-    _clear_prior_life(index_dir)
-    corpus_index_hashes(raw_survivors).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "hashes")
+    _write_index(
+        index_dir,
+        family,
+        raw_survivors,
+        _trainable(cleaned),
+        None if benchmark is None else benchmark_ngram_digests(benchmark),
     )
-    if family == "ngram":
-        corpus_index_postings(raw_survivors).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_dir, "postings"))
-    else:  # "lsh" — the only other family the entry guard admits
-        corpus_index_bands(raw_survivors).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "bands")
-        )
-        corpus_index_rep_shingles(raw_survivors).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_dir, "rep_shingles"))
-    if benchmark is not None:
-        benchmark_ngram_digests(benchmark).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_dir, "benchmark_ngrams"))
-    _append_stats_row(cleaned, index_dir, mode="overwrite")
-    _write_index_manifest(index_dir, family, benchmark is not None)
+
+
+def _trainable(cleaned: DataFrame) -> DataFrame:
+    """``cleaned`` without its ``split='quarantined'`` docs: the frame a
+    seeded stats row counts. Null-safe, matching
+    reconcile_corpus_duplicates' census modes: a NULL split is not
+    quarantined and belongs in the census — a plain != here would seed
+    a census the measured true-up (which includes NULL splits) later
+    "corrects"."""
+    if "split" not in cleaned.columns:
+        return cleaned
+    return cleaned.filter(~F.col("split").eqNullSafe("quarantined"))
 
 
 def corpus_stats(spark: SparkSession, index_dir: str) -> dict[str, int]:

@@ -23,7 +23,7 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
-# r14 (guide §1.2 step 1 / §7.2 duplicated subtrees): explode() over a
+# Duplicated subtrees under explode(): explode() over a
 # projected array column makes InferFiltersFromGenerate add a
 # ``size(col) > 0`` filter, which PushDownPredicates then rewrites
 # through the defining Project — re-substituting the FULL array-building
@@ -55,7 +55,7 @@ def ensure_session_confs(spark: SparkSession, force: bool = False) -> None:
       runtime-settable, so pinning it here reaches sessions that never
       went through :func:`get_spark`).
     """
-    # r14 opt: set once per SparkSession object — this runs on EVERY
+    # Set once per SparkSession object — this runs on EVERY
     # load_table call (several per query build, 3 py4j round-trips
     # each), which profiling showed as measurable driver time across
     # a 32-query battery. The flag rides on the Python session object;
@@ -63,7 +63,7 @@ def ensure_session_confs(spark: SparkSession, force: bool = False) -> None:
     # the same values once (idempotent). Tools that deliberately
     # mutate these confs mid-session (tools/ab_r14_batch1.py) restore
     # them themselves — or call this with ``force=True`` to re-pin
-    # without reaching into the private flag (ADVICE r14).
+    # without reaching into the private flag.
     if not force and getattr(spark, "_irio_confs_ensured", False):
         return
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -83,8 +83,8 @@ def drain_driver_backlog(spark: SparkSession | None = None) -> None:
     generational GC happens to fire MID-build — at which point the
     detach RPCs serialize on the same py4j gateway connection the
     build needs and wall time inflates 3-30× with no JVM-side
-    signature (root-caused in SCALE.md round-5; measured stats_pack
-    50-78 s vs 1.6-3.1 s at sf0.001). Call between queries in any
+    signature (root-caused in SCALE.md, "py4j GC bursts"; measured
+    stats_pack 50-78 s vs 1.6-3.1 s at sf0.001). Call between queries in any
     multi-query driver loop (bench.py and tools/check_oracle.py do).
 
     Pass ``spark`` to ALSO trigger a JVM collection: detaching the

@@ -40,7 +40,7 @@ TABLE_NAMES = (
 # region/nation are fixed-size in TPC-H-style schemas.
 BROADCAST_SAFE = ("region", "nation")
 
-# r14 opt: schema-inference memo. ``spark.read.parquet`` without a
+# Schema-inference memo. ``spark.read.parquet`` without a
 # schema reads parquet footers and runs mergeSchemas on EVERY call —
 # profiling showed ~0.1 s per load_table call, several calls per
 # query build, on every timed bench iteration. The first read of a
@@ -48,7 +48,7 @@ BROADCAST_SAFE = ("region", "nation")
 # explicitly (``spark.read.schema(s).parquet``), exactly what a
 # catalog-backed table does in production. This memoizes METADATA
 # only — every query still scans the parquet data itself. Keyed by
-# (absolute path, mtime_ns) — ADVICE r14: a table rewritten in place
+# (absolute path, mtime_ns): a table rewritten in place
 # with an evolved schema during one process lifetime invalidates the
 # entry (explicit-schema parquet reads don't fail on drift; dropped
 # columns would silently come back as NULLs). The stat is one syscall
@@ -66,7 +66,7 @@ _SIZE_CACHE: dict[tuple[str, int], int] = {}
 def table_bytes(sf_dir: str, name: str) -> int:
     """Total on-disk bytes of one table's parquet files (memoized per
     (path, mtime)). Used to size user-pinned exchanges to the DATA,
-    not the core count (guide §2.1; VERDICT r14 item 6)."""
+    not the core count."""
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     try:
         mtime = os.stat(path).st_mtime_ns
@@ -102,8 +102,7 @@ def exchange_width(spark: SparkSession, nbytes: int | None) -> int:
     holds ~EXCHANGE_TARGET_BYTES of the input, floored at the session
     parallelism (never BELOW core count — small inputs still want
     every core on the expression-heavy stages these exchanges feed).
-    ``nbytes`` None/0 (no size known) falls back to the parallelism —
-    the pre-r15 behavior."""
+    ``nbytes`` None/0 (no size known) falls back to the parallelism."""
     p = spark.sparkContext.defaultParallelism
     if not nbytes:
         return p

@@ -20,7 +20,7 @@ scenario pins for the batch form and
 Delivery is at-least-once at the TRANSPORT level (foreachBatch commits
 the checkpoint AFTER the handler returns, so a crash between
 ``ingest_batch``'s appends and the commit re-delivers that batch on
-restart) but EXACTLY-once at the RECORD level from r9: the handler
+restart) but EXACTLY-once at the RECORD level: the handler
 passes the Structured Streaming ``batch_id`` through to
 ``ingest_batch`` together with the checkpoint path as the stream
 identity, and each batch's manifest row is persisted keyed by
@@ -53,7 +53,7 @@ from irio2024_mapreduce_spark.plans.ingest import ingest_batch
 
 def default_checkpoint_dir(index_dir: str, source_dir: str) -> str:
     """Deterministic per-(index, source) checkpoint location, beside
-    the index it feeds. A fresh tempdir default (pre-r9) made every
+    the index it feeds. A fresh tempdir default (the earlier form) made every
     invocation a NEW stream that re-delivered all of ``source_dir``;
     the docs self-convicted (no duplicate admissions) but each rerun
     appended another full set of duplicate md5/posting index rows and

@@ -62,7 +62,7 @@ OUTPUT_SCHEMA = (
 # µs → timestamp conversion is a stateless JVM projection AFTER the
 # stateful op — pd.to_datetime on tiny per-key frames is pure
 # per-crossing overhead the 100× probe pays ~2 M times (measured in
-# SCALE.md round-7).
+# SCALE.md, "sessionizer Python-crossing cost").
 _PY_OUTPUT_SCHEMA = (
     "user_id long, session_start_us long, session_last_us long, "
     "n_events long, sum_value double"

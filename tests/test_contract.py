@@ -171,3 +171,63 @@ def test_bench_summary_line_fits_driver_tail_capture():
         "load_avg_end": [99.99, 99.99, 99.99],
     }
     assert len(json.dumps(worst)) < 1800
+
+
+def test_tool_imports_resolve():
+    """Every package name that ``tools/*.py``, ``bench.py`` and
+    ``perfbench/*.py`` import, and every attribute they read off an
+    imported package module (``D._band_rows``), exists: a helper moved
+    or deleted in the package must take its tool callers along. The
+    scripts are only parsed, never run."""
+    import ast
+    import glob
+    import importlib
+    import os
+    import types
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = (
+        glob.glob(os.path.join(root, "tools", "*.py"))
+        + [os.path.join(root, "bench.py")]
+        + glob.glob(os.path.join(root, "perfbench", "*.py"))
+    )
+    n, missing = 0, []
+    for f in sorted(files):
+        with open(f) as fh:
+            tree = ast.parse(fh.read())
+        mods = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).startswith("irio2024_mapreduce_spark"):
+                for a in node.names:
+                    n += 1
+                    try:
+                        m = importlib.import_module(node.module)
+                        mods[a.asname or a.name] = (
+                            getattr(m, a.name)
+                            if hasattr(m, a.name)
+                            else importlib.import_module(
+                                f"{node.module}.{a.name}"
+                            )
+                        )
+                    except ImportError:
+                        missing.append((f, node.module, a.name))
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith("irio2024_mapreduce_spark"):
+                        n += 1
+                        mods[a.asname or a.name] = importlib.import_module(
+                            a.name
+                        )
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and isinstance(mods.get(node.value.id), types.ModuleType)
+            ):
+                n += 1
+                if not hasattr(mods[node.value.id], node.attr):
+                    missing.append((f, node.value.id, node.attr))
+    assert n > 0
+    assert missing == [], missing

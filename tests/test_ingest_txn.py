@@ -517,7 +517,10 @@ def test_manifest_replay_is_deterministic(spark, tmp_path):
                killed_null_text=0, killed_too_short=0,
                killed_too_repetitive=0, killed_no_stopwords=0,
                contaminated_removed=0)
-    ingest_mod.record_manifest(spark, idx, 2, dup, stream="s")
+    row = ("s", 2, *[int(dup[k]) for k in ingest_mod._MANIFEST_KEYS])
+    spark.createDataFrame([row], ingest_mod._MANIFEST_SCHEMA).write.mode(
+        "append"
+    ).parquet(os.path.join(idx, "manifests"))
     assert _manifest_rows_for(spark, idx, 2, "s") == 2
 
     replayed = read_recorded_manifest(spark, idx, 2, stream="s")
