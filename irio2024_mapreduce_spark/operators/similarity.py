@@ -184,16 +184,12 @@ ANN_PROBE_BITS = 6
 
 
 def _masks_sql(bits: int | None = None) -> str:
-    bits = bits or ANN_PLANES
-    return "array(" + ", ".join(f"{1 << p}L" for p in range(bits)) + ")"
-
-
-def _masks(bits: int | None = None) -> Column:
     # single parsed literal — used many times per plan; per-element
     # F.lit calls would multiply py4j round-trips. ``bits`` overrides
     # the engine default — the stored-index resize path re-derives
     # signatures at a corpus-sized H (operators.ann_index).
-    return F.expr(_masks_sql(bits))
+    bits = bits or ANN_PLANES
+    return "array(" + ", ".join(f"{1 << p}L" for p in range(bits)) + ")"
 
 
 def _planes_sql(bits: int | None = None) -> str:

@@ -380,6 +380,7 @@ def _prepare_corpus_impl(
                 survivors,
                 _trainable(cleaned),
                 bench_grams,
+                seed_in_corpus=True,
             )
 
         _commit_and_publish(

@@ -19,8 +19,8 @@ production story ``dedup.corpus_index_postings`` documents):
   ``manifests/`` (exactly-once rows keyed by (stream, batch_id)),
   ``_commit_markers/`` (their O(1) existence cache — outside the
   compactor-swapped dirs), ``_stream_checkpoint/`` (Structured
-  Streaming offsets), and ``_index_manifest.json`` (family +
-  constants, validated on every open)
+  Streaming offsets), and ``_index_manifest.json`` (family,
+  constants and where the seed docs live, validated on every open)
 
 Scale shape: every step is batch-keyed — the verdict joins probe the
 stored index with hash lookups (``dedup._incremental_verdicts``, the
@@ -99,13 +99,16 @@ from irio2024_mapreduce_spark.sources.sinks import (
 # it; every subsequent open validates against it instead of trusting
 # the caller's `family` argument — a build-ngram/probe-lsh confusion
 # used to fail only via a missing-path read error deep inside Spark.
-# Version 2 is the staged-commit layout; an older index must be
-# rebuilt.
+# Version 3 adds where the seed docs live (``seed_in_corpus``) and the
+# census mass outside the corpus, which reconciliation needs; an older
+# index must be rebuilt.
 INDEX_MANIFEST_NAME = "_index_manifest.json"
-INDEX_FORMAT_VERSION = 2
+INDEX_FORMAT_VERSION = 3
 
 
-def _index_manifest(family: str, decontaminate: bool) -> dict:
+def _index_manifest(family: str) -> dict:
+    """The manifest fields every open checks: format version, family
+    and the engine constants that shaped the stored rows."""
     return {
         "version": INDEX_FORMAT_VERSION,
         "family": family,
@@ -115,16 +118,7 @@ def _index_manifest(family: str, decontaminate: bool) -> dict:
         "lsh_bucket_cap": LSH_BUCKET_CAP,
         "ngram_posting_cap": NGRAM_POSTING_CAP,
         "decontam_ngram": DECONTAM_NGRAM,
-        "decontaminate": decontaminate,
     }
-
-
-def _write_index_manifest(
-    index_dir: str, family: str, decontaminate: bool
-) -> None:
-    os.makedirs(index_dir, exist_ok=True)
-    with open(os.path.join(index_dir, INDEX_MANIFEST_NAME), "w") as f:
-        json.dump(_index_manifest(family, decontaminate), f, indent=1)
 
 
 def read_index_manifest(index_dir: str) -> dict:
@@ -134,7 +128,7 @@ def read_index_manifest(index_dir: str) -> dict:
     if not os.path.exists(path):
         raise ValueError(
             f"{index_dir} has no {INDEX_MANIFEST_NAME}: not a corpus "
-            "index built by build_corpus_index/seed_index_from_prepared "
+            "index built by build_corpus_index/prepare_corpus "
             "(rebuild it, or write the manifest for a legacy index)"
         )
     with open(path) as f:
@@ -145,11 +139,13 @@ def validate_index(index_dir: str, family: str) -> dict:
     """Check the stored manifest against the caller's expectation and
     the engine's CURRENT constants — a probe against an index built
     with different banding/cap constants would silently change
-    admission semantics. Returns the manifest."""
+    admission semantics, and an index of an older format lacks fields
+    the engine reads. Returns the manifest."""
     m = read_index_manifest(index_dir)
-    expected = _index_manifest(family, m.get("decontaminate", False))
     mismatches = {
-        k: (m.get(k), v) for k, v in expected.items() if m.get(k) != v
+        k: (m.get(k), v)
+        for k, v in _index_manifest(family).items()
+        if m.get(k) != v
     }
     if mismatches:
         detail = ", ".join(
@@ -211,16 +207,20 @@ def build_corpus_index(
 ) -> dict[str, int]:
     """One-time ingest-side index build over an existing corpus.
 
+    PRECONDITION: the seed docs live OUTSIDE any ``corpus_path`` that
+    ``ingest_batch`` writes. The manifest records this
+    (``seed_in_corpus: false``) with the seed's docs/tokens, and deep
+    reconciliation adds that seed census to what it measures at
+    ``corpus_path``. To seed from a corpus that lives at
+    ``corpus_path`` (the shipped ``clean_documents.parquet``), use
+    ``prepare_corpus(index_dir=...)``, which measures its seed in
+    place.
+
     ``corpus`` must carry PRE-scrub text: ``ingest_batch`` appends
     hashes/postings over the raw bytes tomorrow's duplicates will
-    carry, so seeding from scrubbed text (e.g. the shipped
-    ``clean_documents.parquet``) would mix conventions — future raw
-    duplicates of already-shipped docs would miss the exact-dup md5
-    probe and fall through to the weaker near-dup check. Callers
-    holding only the shipped artifact should seed via
-    ``prepare_corpus(index_dir=...)`` /
-    :func:`seed_index_from_prepared`, which receive the pre-scrub
-    survivors.
+    carry, so seeding from scrubbed text would mix conventions —
+    future raw duplicates of already-shipped docs would miss the
+    exact-dup md5 probe and fall through to the weaker near-dup check.
 
     ``family`` picks the near-dup half: ``"ngram"`` (3-gram posting
     rows — precise on token-level edits) or ``"lsh"`` (MinHash band
@@ -234,20 +234,16 @@ def build_corpus_index(
     it, batches appended after the one-shot build could reintroduce
     eval-set contamination that ``prepare_corpus`` stage 4 removed.
 
-    Writes a small JSON manifest recording family + constants; every
-    later open validates against it. Returns per-part row counts.
-
     The stats row describes ``corpus`` as given (pre-scrub bytes,
-    NULL texts excluded to match the ingest stats convention); callers
-    holding the raw/cleaned pair should seed via
-    :func:`seed_index_from_prepared`, whose stats row covers the
-    shipped scrubbed text."""
+    NULL texts excluded to match the ingest stats convention). Returns
+    per-part row counts."""
     names = _write_index(
         index_dir,
         family,
         corpus,
         corpus.filter(F.col("text").isNotNull()),
         None if benchmark is None else benchmark_ngram_digests(benchmark),
+        seed_in_corpus=False,
     )
     return {
         f"{name}_rows": spark.read.parquet(
@@ -280,16 +276,22 @@ def _write_index(
     docs: DataFrame,
     census: DataFrame,
     bench_grams: DataFrame | None,
+    seed_in_corpus: bool,
 ) -> list[str]:
-    """The one writer of a fresh index (``build_corpus_index``,
-    ``seed_index_from_prepared`` and ``prepare_corpus``'s staged seed):
-    the dedup parts over ``docs``, the benchmark digest set when given,
-    a stats row over ``census``, then the manifest. Every part is
-    overwrite: a rebuild replaces the index wholesale, including the
-    exactly-once records, stream checkpoint and stats rows of the
-    replaced life (:func:`_clear_prior_life`). A fresh stats row is
-    required because HLL state cannot be recomputed later without a
-    rescan. Returns the data part names."""
+    """The one writer of a fresh index (``build_corpus_index`` and
+    ``prepare_corpus``'s staged seed): the dedup parts over ``docs``,
+    the benchmark digest set when given, a stats row over ``census``,
+    then the manifest. Every part is overwrite: a rebuild replaces the
+    index wholesale, including the exactly-once records, stream
+    checkpoint and stats rows of the replaced life
+    (:func:`_clear_prior_life`). A fresh stats row is required because
+    HLL state cannot be recomputed later without a rescan.
+
+    ``seed_in_corpus`` says whether the ``census`` docs live at the
+    corpus path ingest appends to. When they do not, the manifest
+    keeps their docs/tokens as ``census_outside_corpus``: the part of
+    the census that :func:`reconcile_corpus_duplicates` cannot
+    measure. Returns the data part names."""
     parts = _index_parts(docs, family)
     if bench_grams is not None:
         parts["benchmark_ngrams"] = bench_grams
@@ -300,7 +302,24 @@ def _write_index(
     for name, df in parts.items():
         df.write.mode("overwrite").parquet(os.path.join(index_dir, name))
     _append_stats_row(census, index_dir, mode="overwrite")
-    _write_index_manifest(index_dir, family, bench_grams is not None)
+    outside = {"docs": 0, "tokens": 0}
+    if not seed_in_corpus:
+        seed = census.sparkSession.read.parquet(
+            os.path.join(index_dir, "stats")
+        ).first()
+        outside = {"docs": seed["docs"], "tokens": seed["tokens"]}
+    atomic_write_file(
+        os.path.join(index_dir, INDEX_MANIFEST_NAME),
+        json.dumps(
+            {
+                **_index_manifest(family),
+                "decontaminate": bench_grams is not None,
+                "seed_in_corpus": seed_in_corpus,
+                "census_outside_corpus": outside,
+            },
+            indent=1,
+        ),
+    )
     return list(parts)
 
 
@@ -1368,49 +1387,13 @@ def _stats_row_df(cleaned: DataFrame) -> DataFrame:
     )
 
 
-def seed_index_from_prepared(
-    spark: SparkSession,
-    raw_survivors: DataFrame,
-    cleaned: DataFrame,
-    index_dir: str,
-    family: str = "ngram",
-    benchmark: DataFrame | None = None,
-) -> None:
-    """Bridge from the one-shot build to the daily pipeline: write
-    the shipped corpus's ingest indexes (md5 hashes + the ``family``
-    near-dup half over ``raw_survivors`` — the PRE-scrub text,
-    ingest's dedup convention) and its stats row, so ``ingest_batch``
-    continues the corpus from day one. ``benchmark`` (the held-out
-    eval stripe) additionally stores its n-gram digest set so every
-    future batch decontaminates. ``prepare_corpus(index_dir=...)``
-    seeds through the same writer (:func:`_write_index`), with the
-    digest set its own probe used. EVERY part is overwrite — seeding
-    is day-zero, so a re-run of the build replaces the index wholesale
-    (an appended stats row here would double-count corpus_stats on
-    every build retry).
-
-    Quarantine lifecycle: docs tagged
-    ``split='quarantined'`` stay IN the dedup index (``raw_survivors``
-    carries them — they were admitted, and they must keep convicting
-    tomorrow's redelivered duplicates) but are EXCLUDED from the
-    stats census — ``corpus_stats`` drives training-size accounting,
-    and a quarantined doc is shipped for review, not trainable."""
-    _write_index(
-        index_dir,
-        family,
-        raw_survivors,
-        _trainable(cleaned),
-        None if benchmark is None else benchmark_ngram_digests(benchmark),
-    )
-
-
 def _trainable(cleaned: DataFrame) -> DataFrame:
-    """``cleaned`` without its ``split='quarantined'`` docs: the frame a
-    seeded stats row counts. Null-safe, matching
-    reconcile_corpus_duplicates' census modes: a NULL split is not
-    quarantined and belongs in the census — a plain != here would seed
-    a census the measured true-up (which includes NULL splits) later
-    "corrects"."""
+    """``cleaned`` without its ``split='quarantined'`` docs: the frame
+    every census row counts (the seed row and reconciliation's
+    measurement). A quarantined doc is shipped for review, not
+    trainable; it stays in the dedup index so it keeps convicting
+    redelivered duplicates. Null-safe: a NULL split is not quarantined
+    and belongs in the census."""
     if "split" not in cleaned.columns:
         return cleaned
     return cleaned.filter(~F.col("split").eqNullSafe("quarantined"))
@@ -1466,7 +1449,6 @@ def reconcile_corpus_duplicates(
     spark: SparkSession,
     index_dir: str,
     corpus_path: str,
-    census_from_corpus: bool | str = False,
 ) -> dict:
     """Deep-maintenance reconciliation of the TWO corpus anomalies
     optimistic multi-writer ingest can leave (both caught by the
@@ -1492,55 +1474,30 @@ def reconcile_corpus_duplicates(
 
     1. duplicate removal — group the live corpus by ``sha2(text)``;
        each >1 group keeps its LOWEST doc_id (ingest's earlier-doc
-       rule) and the rest are dropped in one filtered rewrite,
-       published with ``sinks.replace_dataset``, so every existing
+       rule) and the physical copies of that doc_id fold into one
+       row. The rest are dropped in one filtered rewrite, published
+       with ``sinks.replace_dataset``, so every existing
        ``recover_swap_crash`` call already recovers a crash here.
-    2. census correction — one stats row negating the non-quarantined
-       docs that lost ENTIRELY (one subtraction per distinct lost
-       doc_id; replay copies of a surviving doc subtract nothing —
-       their duplicated keyed stats rows already dedupe out of
-       ``corpus_stats``; quarantined docs never entered the census),
-       carrying the losers' own HLL sketches: union is
-       idempotent and the surviving copy contributes the identical
-       text/token values, so distinct estimates are untouched while
-       the exact sums true up. Loser-arithmetic by DEFAULT, not a
-       global corpus-vs-census measurement: ``corpus_stats`` may
-       legitimately cover docs that live outside ``corpus_path``
-       (``build_corpus_index`` seeds the index+census over an
-       existing corpus held elsewhere), so only what this pass itself
-       removed is its to subtract. A crash between the swap commit
-       and the correction append leaves the census high by that
-       pass's losers — advisory drift, bounded, erased wholesale by
-       the next ``prepare_corpus`` regeneration (which rewrites the
-       stats part) and never self-repeating (the rerun finds no dups
-       and appends nothing).
+    2. census true-up, one rule: the census must equal the census
+       outside the corpus (the index manifest's
+       ``census_outside_corpus`` — the seed of a ``build_corpus_index``
+       held elsewhere, zero for a ``prepare_corpus`` seed, which lives
+       at ``corpus_path``) plus the MEASURED non-quarantined
+       post-rewrite corpus (:func:`_stats_row_df` over
+       :func:`_trainable`, the same formula that writes every census
+       row). When ``corpus_stats`` differs, one ``__correction__`` row
+       appends the difference, carrying the measured corpus's HLL
+       sketches: union is idempotent, so distinct estimates stay
+       untouched while the exact sums true up. Measuring heals every
+       drift shape, including those that leave no physical duplicate
+       (two replays of one batch can admit DIFFERENT verdict sets
+       while the keyed stats dedupe keeps only one run's summary). A
+       crash between the swap and the correction append leaves the
+       census high until the next pass measures again.
 
-    ``census_from_corpus=True`` — for SELF-CONTAINED corpora (the
-    ``prepare_corpus``/``seed_index_from_prepared`` lifecycle, where
-    every censused doc lives in ``corpus_path``) — replaces phase 2
-    with a MEASURED true-up: append one correction row making the
-    census equal the post-rewrite non-quarantined corpus exactly.
-    ``census_from_corpus="external"`` — for the ``build_corpus_index``
-    EXTERNAL-seed lifecycle (the seed docs are censused but live
-    outside ``corpus_path``, so neither pure
-    measurement nor loser arithmetic covers composed-replay drift
-    there) — trues the census up to seed-rows + measured
-    non-quarantined ``corpus_path``: the seed subtotal is the sum of
-    the UNTAGGED unkeyed stats rows (seed rows carry NULL
-    stream/batch_id; correction rows are tagged
-    stream=``__correction__`` precisely so this
-    decomposition is well-defined), and the keyed + correction
-    accounting of the corpus_path domain is replaced wholesale by the
-    measurement. The external corpus is NEVER rescanned — its census
-    is the immutable seed row, which no ingest path can drift.
-    Arithmetic alone can go off by one under composed replay races
-    (two replays of one batch can
-    admit DIFFERENT verdict sets — one convicting a cross-stream
-    duplicate the other raced past — while the keyed stats dedupe
-    keeps only one run's summary, so no per-row accounting of the
-    kept summary matches the physical union). Measurement heals
-    every such shape idempotently; it is opt-in because it is only
-    CORRECT when the census's whole domain is the corpus dir.
+    An index of an older format, whose manifest does not say where its
+    seed lives, is refused by :func:`validate_index` before any lock
+    or read.
 
     Dedup-index rows of removed docs stay (conviction needs only
     SOME row per digest, and the survivor shares it); stored
@@ -1548,6 +1505,9 @@ def reconcile_corpus_duplicates(
     index pass (probes answer by corpus doc ids, which no longer
     include the losers)."""
     corpus_path = corpus_path.rstrip("/")
+    outside = validate_index(
+        index_dir, read_index_manifest(index_dir).get("family")
+    )["census_outside_corpus"]
     locks = []
     try:
         locks.append(staged_commit.acquire_patiently(index_dir))
@@ -1559,10 +1519,9 @@ def reconcile_corpus_duplicates(
         # means corpus_path itself is absent until restored
         recover_swap_crash(corpus_path)
         art = spark.read.parquet(corpus_path)
-        has_split = "split" in art.columns
         art_d = art.withColumn("_d", F.sha2("text", 256))
         winners = (
-            art_d.groupBy("_d")
+            art_d.groupBy(F.col("_d").alias("_wd"))
             .agg(
                 F.min("doc_id").alias("_keep"),
                 F.count("*").alias("_n"),
@@ -1570,151 +1529,51 @@ def reconcile_corpus_duplicates(
             .filter(F.col("_n") > 1)
             .localCheckpoint(eager=True)
         )
-        dup_groups = winners.count()
-        losers_removed = 0
-        d_docs = d_tokens = 0
+        groups = winners.agg(
+            F.count("*").alias("g"), F.sum("_n").alias("n")
+        ).first()
+        dup_groups = groups["g"]
+        losers_removed = (groups["n"] or 0) - dup_groups
         if dup_groups:
-            from pyspark.sql.window import Window  # noqa: PLC0415
-
-            # row_number, not a doc_id filter: a replayed publication
-            # leaves two PHYSICAL copies of the SAME doc_id, which an
-            # equality
-            # filter would keep both of. One row survives per digest
-            # — the min-doc_id one; extra copies of any doc_id
-            # collapse with it. Both frames materialized BEFORE the
-            # swap deletes the source files.
-            wd = Window.partitionBy("_d").orderBy("doc_id")
-            ranked = art_d.withColumn(
-                "_keep", F.min("doc_id").over(Window.partitionBy("_d"))
-            ).withColumn("_rn", F.row_number().over(wd))
-            losers = (
-                ranked.filter(F.col("_rn") > 1)
-                .localCheckpoint(eager=True)
-            )
-            losers_removed = losers.count()
+            # a row survives when its digest has no dup group or it is
+            # its group's min doc_id (null-safe, like _collapse_reps);
+            # the dropDuplicates folds the physical copies a replayed
+            # publication left of that doc_id
             survivors = (
-                ranked.filter(F.col("_rn") == 1)
-                .drop("_d", "_keep", "_rn")
-                .localCheckpoint(eager=True)
+                art_d.join(
+                    winners, F.col("_d").eqNullSafe(F.col("_wd")), "left"
+                )
+                .filter(
+                    F.col("_keep").isNull()
+                    | (F.col("doc_id") == F.col("_keep"))
+                )
+                .dropDuplicates(["doc_id", "_d"])
+                .select(*art.columns)
             )
             writer = survivors.write.mode("overwrite")
-            if has_split:
+            if "split" in art.columns:
                 writer = writer.partitionBy("split")
             replace_dataset(corpus_path, writer.parquet)
-            if not census_from_corpus:
-                # phase 2 (ledger mode): census correction for the
-                # non-quarantined DOCS that lost entirely — one
-                # subtraction per distinct lost doc_id (a doc_id
-                # never spans digests: same id ⇒ same text). Replay
-                # copies of a SURVIVING doc_id subtract nothing:
-                # their duplicated stats rows carry the same
-                # (stream, batch_id) key and dedupe out of
-                # corpus_stats at read, so the census already counts
-                # that doc exactly once. Quarantined docs never
-                # entered the census.
-                non_q = losers.filter(
-                    F.col("doc_id") != F.col("_keep")
-                ).dropDuplicates(["doc_id"])
-                if has_split:
-                    # null-safe: a plain != also drops NULL splits,
-                    # silently excluding
-                    # such rows from loser subtraction
-                    non_q = non_q.filter(
-                        ~F.col("split").eqNullSafe("quarantined")
-                    )
-                loss = non_q.agg(
-                    F.count("*").alias("docs"),
-                    F.coalesce(
-                        F.sum(F.size(F.split("text", " ")))
-                        .cast("long"),
-                        F.lit(0),
-                    ).alias("tokens"),
-                ).collect()[0]
-                d_docs = -int(loss["docs"])
-                d_tokens = -int(loss["tokens"])
-                if d_docs or d_tokens:
-                    # tagged: corrections must be separable
-                    # from seed rows for the external measured mode;
-                    # batch_id stays NULL so the census's unkeyed
-                    # class still sums them as-is
-                    correction = _stats_row_df(non_q).select(
-                        F.lit("__correction__").alias("stream"),
-                        "batch_id",
-                        F.lit(d_docs).cast("long").alias("docs"),
-                        F.lit(d_tokens).cast("long").alias("tokens"),
-                        "text_sketch",
-                        "token_sketch",
-                    )
-                    correction.write.mode("append").parquet(
-                        os.path.join(index_dir, "stats")
-                    )
-        if census_from_corpus:
-            # phase 2 (measured mode): make the census equal the
-            # measured truth exactly — runs even with zero dup
-            # groups, since replay races can drift the ledger without
-            # leaving physical duplicates (see the docstring). Truth =
-            # measured corpus_path for self-contained corpora; seed
-            # rows + measured corpus_path for the external-seed
-            # lifecycle ("external").
-            live = spark.read.parquet(corpus_path)
-            # null-safe: a NULL split is not quarantined and must stay
-            # in the measured census
-            non_q_live = (
-                live.filter(~F.col("split").eqNullSafe("quarantined"))
-                if has_split
-                else live
-            )
-            actual = non_q_live.agg(
-                F.count("*").alias("docs"),
-                F.coalesce(
-                    F.sum(F.size(F.split("text", " "))).cast("long"),
-                    F.lit(0),
-                ).alias("tokens"),
-            ).collect()[0]
-            census = corpus_stats(spark, index_dir)
-            base_docs = base_tokens = 0
-            if census_from_corpus == "external":
-                # Seed subtotal = the UNTAGGED unkeyed rows. Correction
-                # rows written before the `__correction__` tagging
-                # carry the same NULL/NULL key; counting them as seed
-                # mass would true the census up to a permanently wrong
-                # total on a ledger with such reconciliations. Untagged
-                # corrections are ledger-mode
-                # LOSER SUBTRACTIONS — always non-positive, while a
-                # seed row is a real census contribution (docs ≥ 0 and
-                # tokens ≥ 0) — so the sign separates the classes
-                # exactly; no migration write needed.
-                seed = (
-                    _read_stats_rows(spark, index_dir)
-                    .filter(
-                        F.col("batch_id").isNull()
-                        & F.col("stream").isNull()
-                        & (F.col("docs") >= 0)
-                        & (F.col("tokens") >= 0)
-                    )
-                    .agg(
-                        F.coalesce(F.sum("docs"), F.lit(0)).alias("d"),
-                        F.coalesce(F.sum("tokens"), F.lit(0)).alias("t"),
-                    )
-                    .collect()[0]
-                )
-                base_docs, base_tokens = int(seed["d"]), int(seed["t"])
-            d_docs = base_docs + int(actual["docs"]) - census["docs"]
-            d_tokens = (
-                base_tokens + int(actual["tokens"]) - census["tokens"]
-            )
-            if d_docs or d_tokens:
-                correction = _stats_row_df(non_q_live).select(
-                    F.lit("__correction__").alias("stream"),
-                    "batch_id",
-                    F.lit(d_docs).cast("long").alias("docs"),
-                    F.lit(d_tokens).cast("long").alias("tokens"),
-                    "text_sketch",
-                    "token_sketch",
-                )
-                correction.write.mode("append").parquet(
-                    os.path.join(index_dir, "stats")
-                )
+        # checkpointed: one corpus scan serves the comparison and the
+        # correction row's sketches
+        measured = _stats_row_df(
+            _trainable(spark.read.parquet(corpus_path))
+        ).localCheckpoint(eager=True)
+        live = measured.first()
+        census = corpus_stats(spark, index_dir)
+        d_docs = outside["docs"] + live["docs"] - census["docs"]
+        d_tokens = outside["tokens"] + live["tokens"] - census["tokens"]
+        if d_docs or d_tokens:
+            # tagged, batch_id NULL: the census's unkeyed class sums it
+            # as-is
+            measured.select(
+                F.lit("__correction__").alias("stream"),
+                "batch_id",
+                F.lit(d_docs).cast("long").alias("docs"),
+                F.lit(d_tokens).cast("long").alias("tokens"),
+                "text_sketch",
+                "token_sketch",
+            ).write.mode("append").parquet(os.path.join(index_dir, "stats"))
         ran = bool(dup_groups or d_docs or d_tokens)
         return {
             "ran": ran,

@@ -133,7 +133,6 @@ def maintain_corpus_index(
     imbalance_min_rows: int = 1024,
     target_file_bytes: int = 128 * 1024 * 1024,
     deep: bool = False,
-    census_from_corpus: bool | str = False,
 ) -> dict[str, dict]:
     """Run every tripped maintenance pass over the given artifacts, in
     dependency order: crashed-generation roll-forward → corpus
@@ -183,8 +182,7 @@ def maintain_corpus_index(
         recover_prepared(os.path.dirname(os.path.abspath(corpus_path)))
     if corpus_path and index_dir:
         report["corpus_reconcile"] = _maybe_reconcile_dups(
-            spark, index_dir, corpus_path, deep,
-            census_from_corpus=census_from_corpus,
+            spark, index_dir, corpus_path, deep
         )
     if index_dir:
         report["index_compaction"] = _maybe_compact_index(
@@ -216,9 +214,7 @@ def maintain_corpus_index(
     return report
 
 
-def _maybe_reconcile_dups(
-    spark, index_dir, corpus_path, deep, census_from_corpus=False,
-) -> dict:
+def _maybe_reconcile_dups(spark, index_dir, corpus_path, deep) -> dict:
     """Deep-only: the late-duplicate reconciliation (see
     :func:`plans.ingest.reconcile_corpus_duplicates`) needs a
     content-level corpus scan, which footers cannot gate — the shapes
@@ -235,10 +231,7 @@ def _maybe_reconcile_dups(
         reconcile_corpus_duplicates,
     )
 
-    return reconcile_corpus_duplicates(
-        spark, index_dir, corpus_path,
-        census_from_corpus=census_from_corpus,
-    )
+    return reconcile_corpus_duplicates(spark, index_dir, corpus_path)
 
 
 def _maybe_compact_index(

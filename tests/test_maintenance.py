@@ -502,8 +502,8 @@ def test_deep_reconcile_collapses_replayed_publication(spark, tmp_path):
 
 
 def test_deep_reconcile_measured_census_mode(spark, tmp_path):
-    """census_from_corpus=True (self-contained corpora — the
-    prepare_corpus lifecycle): the deep pass trues the census up to
+    """Self-contained corpora (the prepare_corpus lifecycle, whose
+    seed lives in the corpus): the deep pass trues the census up to
     the MEASURED non-quarantined corpus, healing ledger drift that
     leaves no physical duplicates (the r12 soak's off-by-one: two
     replays of one batch admitting different verdict sets while the
@@ -553,7 +553,7 @@ def test_deep_reconcile_measured_census_mode(spark, tmp_path):
 
     rec = maintain_corpus_index(
         spark, index_dir=idx, corpus_path=corpus, deep=True,
-        census_from_corpus=True, partition_by=["split"],
+        partition_by=["split"],
     )["corpus_reconcile"]
     assert rec["ran"] and rec["dup_groups"] == 0, rec
     assert rec["census_delta_docs"] == -1, rec
@@ -561,7 +561,7 @@ def test_deep_reconcile_measured_census_mode(spark, tmp_path):
     # idempotent
     rec2 = maintain_corpus_index(
         spark, index_dir=idx, corpus_path=corpus, deep=True,
-        census_from_corpus=True, partition_by=["split"],
+        partition_by=["split"],
     )["corpus_reconcile"]
     assert not rec2["ran"], rec2
 
@@ -653,14 +653,13 @@ def test_measured_census_counts_null_splits(spark, tmp_path):
 
     rec = maintain_corpus_index(
         spark, index_dir=idx, corpus_path=corpus, deep=True,
-        census_from_corpus=True, partition_by=["split"],
+        partition_by=["split"],
     )["corpus_reconcile"]
     # the NULL-split doc is counted by the measured true-up: +1
     assert rec["census_delta_docs"] == 1, rec
     assert corpus_stats(spark, idx)["docs"] == expected + 1
 
 
-@pytest.mark.slow  # r15: chaos/soak class, off the default gate path
 def test_external_seed_census_heals_composed_replay_drift(
     spark, tmp_path
 ):
@@ -669,11 +668,9 @@ def test_external_seed_census_heals_composed_replay_drift(
     batch admit DIFFERENT verdict sets (each convicted a different
     cross-stream duplicate), the physical corpus holds their UNION,
     but the keyed stats dedupe keeps only one run's summary: the
-    census is low by one with NO physical duplicate left for loser
-    arithmetic to see. Self-contained measured mode cannot run here
-    (the census's domain includes the external seed, which does not
-    live at corpus_path); the external measured mode reconciles as
-    seed-rows + measured(corpus_path)."""
+    census is low by one with NO physical duplicate left to count.
+    The plain deep pass heals it: the manifest's census outside the
+    corpus (the seed) plus the measured corpus_path."""
     from irio2024_mapreduce_spark.plans.ingest import (
         _stats_row_df,
         corpus_stats,
@@ -714,89 +711,70 @@ def test_external_seed_census_heals_composed_replay_drift(
     # 4 ingested docs + 4 external docs
     assert corpus_stats(spark, idx)["docs"] == 7
 
-    # ledger mode removes the physical copies of 201/202 but has no
-    # loser to subtract for 203 — census stays 7, truth is 8
+    # one deep pass removes the physical copies of 201/202 AND counts
+    # 203: census 4 (seed) + 4 (measured)
     rec = maintain_corpus_index(
         spark, index_dir=idx, corpus_path=corpus, deep=True
     )["corpus_reconcile"]
-    assert rec["losers_removed"] == 2 and rec["census_delta_docs"] == 0
-    assert spark.read.parquet(corpus).count() == 4
-    assert corpus_stats(spark, idx)["docs"] == 7  # the drift
-
-    # the external measured mode: seed rows + measured corpus_path
-    rec = maintain_corpus_index(
-        spark, index_dir=idx, corpus_path=corpus, deep=True,
-        census_from_corpus="external",
-    )["corpus_reconcile"]
+    assert rec["losers_removed"] == 2, rec
     assert rec["census_delta_docs"] == 1, rec
+    assert spark.read.parquet(corpus).count() == 4
     assert corpus_stats(spark, idx)["docs"] == 8
 
-    # idempotent: a second external measured pass finds nothing
+    # idempotent: a second deep pass finds nothing
     rec2 = maintain_corpus_index(
-        spark, index_dir=idx, corpus_path=corpus, deep=True,
-        census_from_corpus="external",
+        spark, index_dir=idx, corpus_path=corpus, deep=True
     )["corpus_reconcile"]
     assert not rec2["ran"], rec2
     assert corpus_stats(spark, idx)["docs"] == 8
 
 
-def test_external_seed_census_excludes_legacy_corrections(
-    spark, tmp_path
-):
-    """r14 (ADVICE, low): correction rows written BEFORE the r13
-    `__correction__` tagging carry the same NULL/NULL key as seed
-    rows. The external measured mode must not count them as seed
-    mass — legacy corrections are ledger-mode loser subtractions
-    (non-positive), so the sign separates the classes. Failing shape
-    first: with the pre-r14 filter, the -1-doc legacy row shrinks the
-    seed subtotal and the census trues up permanently low."""
-    from irio2024_mapreduce_spark.plans.ingest import (
-        _stats_row_df,
-        corpus_stats,
-    )
+def test_older_index_format_is_refused_before_any_write(spark, tmp_path):
+    """An index written before the manifest recorded where its seed
+    lives (format version 2) cannot tell reconciliation what part of
+    the census lies outside the corpus. Ingest and the deep pass must
+    refuse it with the rebuild error before touching the corpus."""
+    import json
+
+    from irio2024_mapreduce_spark.plans.ingest import INDEX_MANIFEST_NAME
 
     idx, out = str(tmp_path / "idx"), str(tmp_path / "corpus")
     build_corpus_index(spark, _docs(spark, range(100, 104)), idx)
     ingest_batch(
-        spark, _docs(spark, [200, 201, 202]), idx, out,
-        batch_id=1, stream="s",
+        spark, _docs(spark, [200, 201]), idx, out, batch_id=0, stream="s"
     )
     corpus = os.path.join(out, "clean_documents.parquet")
-    assert corpus_stats(spark, idx)["docs"] == 7
+    # a dup group, so a deep pass that got past the gate would rewrite
+    spark.read.parquet(corpus).filter("doc_id = 200").withColumn(
+        "doc_id", F.lit(9000).cast("long")
+    ).write.mode("append").parquet(corpus)
+    path = os.path.join(idx, INDEX_MANIFEST_NAME)
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["version"] = 2
+    manifest.pop("seed_in_corpus", None)
+    manifest.pop("census_outside_corpus", None)
+    with open(path, "w") as f:
+        json.dump(manifest, f)
 
-    # a LEGACY (pre-r13) correction: NULL stream, NULL batch_id,
-    # negative docs/tokens — as the old ledger-mode loser subtraction
-    # wrote it after removing one replay copy (the physical corpus is
-    # already correct; the ledger pairing row it complements was a
-    # keyed row, so the census today is exactly right at 7... until
-    # a seed-sum counts this row)
-    one = spark.read.parquet(corpus).limit(1)
-    _stats_row_df(one).select(
-        F.lit(None).cast("string").alias("stream"),
-        F.lit(None).cast("long").alias("batch_id"),
-        F.lit(-1).cast("long").alias("docs"),
-        F.lit(-5).cast("long").alias("tokens"),
-        "text_sketch", "token_sketch",
-    ).write.mode("append").parquet(os.path.join(idx, "stats"))
-    # ...and the keyed row it paired with (+1 doc, +5 tokens), so the
-    # census total is still the truth: 7 docs
-    _stats_row_df(one).select(
-        F.lit("legacy").alias("stream"),
-        F.lit(9).cast("long").alias("batch_id"),
-        F.lit(1).cast("long").alias("docs"),
-        F.lit(5).cast("long").alias("tokens"),
-        "text_sketch", "token_sketch",
-    ).write.mode("append").parquet(os.path.join(idx, "stats"))
-    assert corpus_stats(spark, idx)["docs"] == 7
+    def snapshot():
+        files = {}
+        for root, _, names in os.walk(out):
+            for n in names:
+                with open(os.path.join(root, n), "rb") as f:
+                    files[os.path.join(root, n)] = f.read()
+        return files
 
-    # the external measured pass must find NOTHING to correct: seed
-    # subtotal is the 4 positive NULL/NULL rows' docs, not 4 - 1
-    rec = maintain_corpus_index(
-        spark, index_dir=idx, corpus_path=corpus, deep=True,
-        census_from_corpus="external",
-    )["corpus_reconcile"]
-    assert rec["census_delta_docs"] == 0, rec
-    assert corpus_stats(spark, idx)["docs"] == 7
+    before = snapshot()
+    with pytest.raises(ValueError, match="version"):
+        ingest_batch(
+            spark, _docs(spark, [300]), idx, out, batch_id=1, stream="s"
+        )
+    with pytest.raises(ValueError, match="version"):
+        maintain_corpus_index(
+            spark, index_dir=idx, corpus_path=corpus, deep=True
+        )
+    assert snapshot() == before
 
 
 def test_fold_crash_flag_is_one_shot_sigkill_analog(tmp_path):

@@ -355,11 +355,11 @@ def run_stream_worker(root: str, batches: int, docs: int):
 def run_maint_worker(root: str, deep_fire: bool = False):
     """The scheduled maintenance loop; with ``deep_fire`` (r12
     verdict item 2) roughly every third pass runs the DEEP
-    reconciliation (measured census mode) DURING the kill phase —
-    racing live publishes and eating SIGKILLs mid-swap — instead of
-    deep passes existing only in the quiesced verifier. Each attempt
-    and completion appends to the fire log the orchestrator gates
-    on."""
+    reconciliation (duplicate removal + measured census true-up)
+    DURING the kill phase — racing live publishes and eating SIGKILLs
+    mid-swap — instead of deep passes existing only in the quiesced
+    verifier. Each attempt and completion appends to the fire log
+    the orchestrator gates on."""
     import random as _random
 
     from irio2024_mapreduce_spark.plans.maintenance import (
@@ -385,7 +385,7 @@ def run_maint_worker(root: str, deep_fire: bool = False):
                 partition_by=["split"],
                 ann_index_dir=ann, ivf_index_dir=ivf,
                 max_files_per_part=8, frag_ratio=2.0,
-                deep=deep, census_from_corpus=deep,
+                deep=deep,
             )
             if deep:
                 with open(log, "a") as f:
@@ -543,19 +543,15 @@ def _verify(root: str, streams: int, batches: int, docs: int) -> dict:
     # the documented deep pass FIRST: reconciles late cross-writer
     # duplicates (optimistic ingest can admit both copies of a text
     # whose two carriers probed before either published), trues up
-    # the census, and compacts the similarity indexes' redelivery
+    # the census to the measured corpus (prepare_corpus seeded it in
+    # place, so its manifest keeps no census outside the corpus), and
+    # compacts the similarity indexes' redelivery
     # duplicates — every corpus assertion below is a post-deep-pass
     # invariant
     maint = maintain_corpus_index(
         spark, index_dir=idx, corpus_path=corpus,
         partition_by=["split"],
         ann_index_dir=ann, ivf_index_dir=ivf, deep=True,
-        # this corpus is SELF-CONTAINED (prepare_corpus seeded it),
-        # so the deep pass's census true-up is the measured mode —
-        # replay races can drift the ledger by admitting different
-        # verdict sets across re-runs without leaving physical
-        # duplicates for the arithmetic to see
-        census_from_corpus=True,
     )
 
     art = spark.read.parquet(corpus)
