@@ -591,6 +591,9 @@ def main() -> None:
                 },
                 "detail": os.path.basename(detail_path),
                 "sf": sf_dir,
+                # the resolved local[N] width: a run that ignored
+                # $SPARK_GRAFT_CPUS shows here, not only in its walls
+                "cpus": sc.defaultParallelism,
                 # background load swings single runs 2×+ (see SCALE.md
                 # bench methodology) — the pre-session sample is the
                 # honest contention evidence

@@ -384,13 +384,6 @@ def _decontam_grams_from(toks: Column, n: int = DECONTAM_NGRAM) -> Column:
     )
 
 
-def _decontam_grams(n: int = DECONTAM_NGRAM) -> Column:
-    """Gram array straight off ``text``. Prefer
-    :func:`_decontam_grams_from` over a projected token column in
-    query paths — this form re-splits per gram (see above)."""
-    return _decontam_grams_from(F.split("text", " "), n)
-
-
 def _exploded_grams(docs: DataFrame, *keep: str) -> DataFrame:
     """(keep..., g) rows: one md5'd {DECONTAM_NGRAM}-gram per row,
     tokens split once per doc via the projected-column shape."""

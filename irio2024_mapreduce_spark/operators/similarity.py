@@ -221,9 +221,9 @@ def _all_projections_sql(vec: str, bits: int | None = None) -> str:
 
     SQL text: the Column form (``F.transform`` + ``_dot``
     lambdas) and its siblings below cost thousands of py4j
-    round-trips per similarity_ann plan build (~1.8 s measured,
-    tools/profile_build_phases.py); each f-string parses JVM-side
-    into the identical expression tree the Column chain produced —
+    round-trips per similarity_ann plan build (~1.8 s, measured in
+    the build span of tools/profiler.py layers); each f-string parses
+    JVM-side into the identical expression tree the Column chain produced —
     the same move as :func:`_planes_matrix`,
     extended to the whole signature/probe surface. Result parity is
     pinned by the stored-index bit-parity tests and the oracle gate."""
@@ -251,7 +251,7 @@ def _flip_masks_sql(projs: str, bits: int | None = None) -> str:
     below reference a tiny attribute instead of inlining the ranked
     subtree 36× per table — that duplication's eager
     per-transformation re-analysis dominated the plan-build wall
-    (tools/profile_build_phases.py)."""
+    (the build span of tools/profiler.py layers)."""
     bits = bits or ANN_PLANES
     # a signature narrower than the probe budget can't flip more
     # planes than it has — cap the fan-out (only reachable when a

@@ -41,7 +41,7 @@ EXCLUDED_RULES = (
 )
 
 
-def ensure_session_confs(spark: SparkSession, force: bool = False) -> None:
+def ensure_session_confs(spark: SparkSession) -> None:
     """Pin the runtime-settable confs correctness depends on, on an
     EXISTING session (the grading driver builds its own session, which
     won't have gone through :func:`get_spark`):
@@ -60,11 +60,9 @@ def ensure_session_confs(spark: SparkSession, force: bool = False) -> None:
     # each), which profiling showed as measurable driver time across
     # a 32-query battery. The flag rides on the Python session object;
     # a second Python wrapper around the same JVM session just re-sets
-    # the same values once (idempotent). Tools that deliberately
-    # mutate these confs mid-session (tools/ab_r14_batch1.py) restore
-    # them themselves — or call this with ``force=True`` to re-pin
-    # without reaching into the private flag.
-    if not force and getattr(spark, "_irio_confs_ensured", False):
+    # the same values once (idempotent). A tool that changes one of
+    # these confs mid-session restores it itself.
+    if getattr(spark, "_irio_confs_ensured", False):
         return
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -48,19 +48,22 @@ BROADCAST_SAFE = ("region", "nation")
 # explicitly (``spark.read.schema(s).parquet``), exactly what a
 # catalog-backed table does in production. This memoizes METADATA
 # only — every query still scans the parquet data itself. Keyed by
-# (absolute path, mtime_ns): a table rewritten in place
-# with an evolved schema during one process lifetime invalidates the
-# entry (explicit-schema parquet reads don't fail on drift; dropped
-# columns would silently come back as NULLs). The stat is one syscall
-# per load_table call, ~1000× cheaper than the footer inference it
-# replaces.
-_SCHEMA_CACHE: dict[tuple[str, int], object] = {}
+# absolute path, holding (mtime_ns, schema): a table rewritten in place
+# with an evolved schema replaces its entry (explicit-schema parquet
+# reads don't fail on drift; dropped columns would silently come back
+# as NULLs). The stat is one syscall per load_table call, ~1000×
+# cheaper than the footer inference it replaces. A rewrite inside a
+# nested partition dir (``t.parquet/k=v/part-*``) does not bump the
+# table dir's own mtime and goes unseen; catching it would take a walk
+# of every partition dir on every call, which is the per-call cost this
+# memo exists to avoid.
+_SCHEMA_CACHE: dict[str, tuple[int, object]] = {}
 
 
 # byte-size memo for the width helper below — one os.walk per
 # (path, mtime), the footprint a catalog's table statistics provide
-# in production
-_SIZE_CACHE: dict[tuple[str, int], int] = {}
+# in production; same key and staleness rule as the schema memo
+_SIZE_CACHE: dict[str, tuple[int, int]] = {}
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
@@ -72,9 +75,8 @@ def table_bytes(sf_dir: str, name: str) -> int:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
         return 0
-    key = (path, mtime)
-    nbytes = _SIZE_CACHE.get(key)
-    if nbytes is None:
+    cached_mtime, nbytes = _SIZE_CACHE.get(path, (None, 0))
+    if cached_mtime != mtime:
         nbytes = 0
         if os.path.isdir(path):
             for root, _dirs, files in os.walk(path):
@@ -83,7 +85,7 @@ def table_bytes(sf_dir: str, name: str) -> int:
                         nbytes += os.path.getsize(os.path.join(root, f))
         else:
             nbytes = os.path.getsize(path)
-        _SIZE_CACHE[key] = nbytes
+        _SIZE_CACHE[path] = (mtime, nbytes)
     return nbytes
 
 
@@ -134,14 +136,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
         mtime = -1  # let the Spark reader raise its own error
-    key = (path, mtime)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
+    cached_mtime, schema = _SCHEMA_CACHE.get(path, (None, None))
+    if cached_mtime == mtime:
+        df = spark.read.schema(schema).parquet(path)
+    else:
         df = spark.read.parquet(path)
         schema = df.schema
-        _SCHEMA_CACHE[key] = schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+        _SCHEMA_CACHE[path] = (mtime, schema)
     ts_type = next(
         (f.dataType.simpleString() for f in schema.fields if f.name == "ts"),
         None,

@@ -167,10 +167,27 @@ def test_bench_summary_line_fits_driver_tail_capture():
         "machine_canary_sec": 9999.999,
         "detail": "BENCH_DETAIL_last.json",
         "sf": "/root/testdata/sf0.1",
+        "cpus": 9999,
         "load_avg_start": [99.99, 99.99, 99.99],
         "load_avg_end": [99.99, 99.99, 99.99],
     }
     assert len(json.dumps(worst)) < 1800
+
+
+def test_tool_names_do_not_shadow_stdlib():
+    """A script run as ``python tools/x.py`` puts ``tools/`` on sys.path,
+    so a ``tools/profile.py`` would replace the stdlib ``profile`` that
+    pyspark's cProfile import loads, and every tool would fail at import."""
+    import glob
+    import os
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = {
+        os.path.splitext(os.path.basename(f))[0]
+        for f in glob.glob(os.path.join(root, "tools", "*.py"))
+    }
+    assert not names & set(sys.stdlib_module_names)
 
 
 def test_tool_imports_resolve():

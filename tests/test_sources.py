@@ -158,3 +158,32 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     plan = buf.getvalue()
     assert "PushedFilters: [" in plan and "GreaterThan(id,150)" in plan
     assert filtered.count() == 49
+
+
+def test_table_rewrites_replace_their_memo_entries(
+    spark, tmp_path, monkeypatch
+):
+    """A table rewritten in place three times, each time with an added
+    column: load_table sees every new column, and the schema and size
+    memos each hold one entry for the path, not one per rewrite."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from irio2024_mapreduce_spark.sources import tables as T
+
+    monkeypatch.setattr(T, "_SCHEMA_CACHE", {})
+    monkeypatch.setattr(T, "_SIZE_CACHE", {})
+    path = tmp_path / "region.parquet"
+    cols: dict[str, list[int]] = {}
+    for i, col in enumerate("abc"):
+        cols[col] = [1, 2, 3]
+        pq.write_table(pa.table(cols), path)
+        # distinct mtimes whatever the filesystem's timestamp granularity
+        os.utime(path, ns=(10**18 + i * 10**9,) * 2)
+        df = T.load_table(spark, str(tmp_path), "region")
+        assert df.columns == list(cols)
+        assert T.table_bytes(str(tmp_path), "region") == os.path.getsize(path)
+    assert len(T._SCHEMA_CACHE) == 1
+    assert len(T._SIZE_CACHE) == 1
