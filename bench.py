@@ -145,9 +145,8 @@ CANARY_REF_SEC = 0.250
 # comparable across rounds: replaying this over the r12 (clean) and
 # r13 (all load-flagged) sidecar pairs brings untouched queries to a
 # median ratio of 1.02 where the raw seconds read a phantom
-# 1.19-1.34× regression (tools/validate_canary_norm.py, artifact
-# tools/canary_norm_validation_r14.json). NEVER mix this with the
-# COLD reference: cold canaries measure JVM-cold state and
+# 1.19-1.34× regression (tools/validate_canary_norm.py). NEVER mix
+# this with the COLD reference: cold canaries measure JVM-cold state and
 # over-correct (0.33 cold vs 0.19 steady on the same host).
 CANARY_STEADY_REF_SEC = 0.164
 LOAD_FLAG = 4.0

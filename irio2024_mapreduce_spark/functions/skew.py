@@ -12,8 +12,8 @@ one user/null-key holds 10% of all rows, one reducer runs for hours).
 Associative aggregates (sum/count/min/max) compose exactly; results
 are identical to the direct groupBy (asserted in tests).
 
-Where the lever is actually load-bearing (measured,
-`tools/stress_skew.py` + SCALE.md, "skewed-key probe"): NOT built-in
+Where the lever is actually load-bearing (measured; SCALE.md,
+"skewed-key probe"): NOT built-in
 aggregates — Catalyst's partial-aggregation phase absorbs even a
 50%-of-all-rows hot key, and salting those just adds a shuffle — but
 ``group-map

@@ -9,7 +9,8 @@ with the corpus. ``resize_ann_index`` re-signs at the sizing rule
     H = log2(rows / bucket_target)
 
 which keeps bucket population, and so probe cost, about constant
-(``tools/stress_ann_index.py`` measures the bits-selectivity curve).
+(SCALE.md, "ANN signature bits": touched fraction 0.569 at
+H=8, 0.063 at H=12, 0.010 at H=16, recall 1.00 throughout).
 
 Layout ``rows_h{H}_v{N}/tbl=*/pb=*/``: the partition dir is the
 bucket's ``part_bits``-bit prefix ``pb = cb >> (H - part_bits)``, and

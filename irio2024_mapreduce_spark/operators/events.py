@@ -102,8 +102,8 @@ def event_session_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate via UpdatingSessions; this form trades that for one
     exchange on user_id + in-partition sort + two window passes and a
     final hash aggregate. Measured at 100× events (10 M rows,
-    alternating min-of-2 on identical staging,
-    ``tools/stress_session_forms.py``): islands 1.94 s vs native
+    alternating min-of-2 on identical staging; SCALE.md, "Session
+    forms A/B"): islands 1.94 s vs native
     3.14 s — 1.6× — so this is the recommended form at the 100 TB end,
     while the registered query keeps the native operator (same
     asymptote, streaming-parity showcase)."""

@@ -16,7 +16,7 @@ Appends assign new vectors to the stored centroids (map-only);
 ``rebuild_ivf_index`` re-trains once the corpus outgrows k ≈ √n.
 Training cost is constant (bounded sample, driver-side Lloyd), and a
 probe touches nprobe/k of the corpus, a fraction that shrinks as k
-grows (``tools/stress_ivf_index.py`` measures it).
+grows (SCALE.md, "stored IVF index").
 
 Manifest, versioning, deltas and commit protocol: ``stored_index``.
 """
@@ -45,6 +45,7 @@ from irio2024_mapreduce_spark.operators.similarity import (
     quant_abs_max,
     quant_code_col,
 )
+from irio2024_mapreduce_spark.sources.sinks import parquet_files
 
 # cells are capped so the bounded training sample keeps a few points
 # per centroid (IVF_TRAIN_MAX's rationale) and floored at the graded k
@@ -65,7 +66,7 @@ def footer_cell_counts(data_dir: str) -> dict[str, int]:
     import pyarrow.parquet as pq  # noqa: PLC0415
 
     counts: dict[str, int] = {}
-    for f in si.data_files(data_dir):
+    for f in parquet_files(data_dir):
         rel = os.path.relpath(os.path.dirname(f), data_dir)
         cell = next((s for s in rel.split(os.sep) if s.startswith("cell=")), "")
         counts[cell] = counts.get(cell, 0) + pq.ParquetFile(f).metadata.num_rows

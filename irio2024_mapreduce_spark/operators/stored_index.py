@@ -55,6 +55,7 @@ from irio2024_mapreduce_spark.sources.sinks import (
     atomic_write_file,
     consume_fold_crash_flag,
     fsync_dir,
+    parquet_files,
     publish_delta_marker,
     read_filelist,
     release_compaction_lock,
@@ -202,21 +203,6 @@ def _index_lock(index_dir: str):
 
 
 # ---------------------------------------------------------- file sets
-def data_files(path: str) -> set[str]:
-    """Committed parquet files under ``path``. ``_``/``.``-prefixed dirs
-    and files are skipped: Spark stages task attempts under
-    ``_temporary``, and a killed writer leaves truncated files there."""
-    out: set[str] = set()
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        out.update(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return out
-
-
 def deltas_root(index_dir: str, data: str) -> str:
     return os.path.join(index_dir, data + DELTAS_SUFFIX)
 
@@ -263,7 +249,9 @@ def corpus_files(fam: Family, index_dir: str, data: str) -> set[str]:
     vector: the layout's ``corpus_part`` plus the delta area's. The
     snapshot unit of a rewrite and of the footer recount."""
     layout = os.path.normpath(os.path.join(index_dir, data, fam.corpus_part))
-    return data_files(layout) | delta_files(index_dir, data, fam.corpus_part)
+    return set(parquet_files(layout)) | delta_files(
+        index_dir, data, fam.corpus_part
+    )
 
 
 def footer_rows(files, missing_ok: bool = False) -> int:
@@ -382,7 +370,7 @@ def publish_delta(staged_dir: str, ex: dict, acquire) -> None:
                     "crash window) but no SparkSession is active"
                 )
             staged = os.path.normpath(os.path.join(staged_dir, fam.corpus_part))
-            vecs = read_vectors(fam, spark, data_files(staged))
+            vecs = read_vectors(fam, spark, list(parquet_files(staged)))
             fam.write_vectors(spark, vecs, root, m, "append")
             write_filelist(spark, os.path.join(root, m["data"]))
         shutil.rmtree(staged_dir, ignore_errors=True)
@@ -625,7 +613,7 @@ def fixture_probe(
     )
     t0 = time.perf_counter()
     src = os.path.join(sf_dir, "embeddings.parquet")
-    n_total = footer_rows({src} if os.path.isfile(src) else data_files(src))
+    n_total = footer_rows([src] if os.path.isfile(src) else parquet_files(src))
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     idx = os.path.join(
         tempfile.gettempdir(), "spark_graft_fixtures",

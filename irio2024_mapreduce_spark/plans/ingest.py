@@ -27,8 +27,10 @@ stored index with hash lookups (``dedup._incremental_verdicts``, the
 same core the oracle-checked ``dedup_incremental`` runs), the
 cleaning chain runs over the batch-sized admitted frame, and the
 appends are partition-parallel parquet writes of batch-sized frames.
-Nothing corpus-sized moves. ``tools/stress_incremental.py`` measures
-the probe's ~flat cost at 100× corpus.
+Nothing corpus-sized moves: the probe's cost stays about flat at 100×
+corpus (SCALE.md, "incremental ingest dedup": 1.6 s → 4.2 s).
+``python tools/scale.py pipeline --docs N --batch-docs B --batches K``
+reports ``plans.ingest.jobs_per_batch`` and executor CPU at any N.
 
 Durability: ``ingest_batch`` is transactional through the staged-commit
 protocol of ``sources.staged_commit``, shared with ``plans.corpus_prep``.
@@ -87,6 +89,7 @@ from irio2024_mapreduce_spark.sources.sinks import (
     atomic_write_file,
     check_not_compacting,
     fsync_dir,
+    parquet_files,
     recover_swap_crash,
     release_compaction_lock,
     replace_dataset,
@@ -683,20 +686,6 @@ def _is_split_layout(clean_path: str) -> bool:
     )
 
 
-def _first_parquet_file(path: str) -> str | None:
-    """One committed data file of a dataset (hidden/staging subtrees
-    pruned), or None. Early-exit walk: one footer is all the schema
-    gate needs, so the cost is bounded regardless of dataset size."""
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(
-            d for d in dirs if not d.startswith(("_", "."))
-        )
-        for f in sorted(files):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                return os.path.join(root, f)
-    return None
-
-
 def _validate_batch_schema(
     spark: SparkSession,
     cleaned: DataFrame,
@@ -757,7 +746,8 @@ def _validate_batch_schema(
         except (OSError, ValueError, KeyError):
             live = None  # corrupt sidecar → re-prime from the data
     if live is None:
-        if _first_parquet_file(clean_path) is None:
+        # one committed file is enough: the walk stops at the first
+        if next(parquet_files(clean_path), None) is None:
             return None  # empty dataset — nothing to drift from
         # re-prime from the mergeSchema UNION of every committed
         # footer, not one arbitrary file: an evolved corpus re-primed
@@ -1006,18 +996,14 @@ def _move_staged_files(src: str, dst: str) -> None:
     if not os.path.isdir(src):
         return  # fully moved by an earlier attempt
     touched: set[str] = set()
-    for root, _dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue  # _SUCCESS / .crc bookkeeping stays behind
-            out_dir = dst if rel == "." else os.path.join(dst, rel)
-            os.makedirs(out_dir, exist_ok=True)
-            d = _move_file(
-                os.path.join(root, name), os.path.join(out_dir, name)
-            )
-            if d is not None:
-                touched.add(d)
+    # _SUCCESS / .crc bookkeeping stays behind
+    for f in list(parquet_files(src)):
+        rel = os.path.relpath(os.path.dirname(f), src)
+        out_dir = os.path.normpath(os.path.join(dst, rel))
+        os.makedirs(out_dir, exist_ok=True)
+        d = _move_file(f, os.path.join(out_dir, os.path.basename(f)))
+        if d is not None:
+            touched.add(d)
     for d in sorted(touched):
         fsync_dir(d)
 
@@ -1640,8 +1626,6 @@ def compact_corpus_index(
     instead of losing appends.
     Returns per-part {rows_before, rows_after, files_before,
     files_after}."""
-    import glob as _glob
-
     from irio2024_mapreduce_spark.sources.sinks import (  # noqa: PLC0415
         acquire_compaction_lock,
     )
@@ -1677,13 +1661,6 @@ def compact_corpus_index(
     }
     assert meta["family"] in ("ngram", "lsh")
 
-    def _files(path: str) -> list[str]:
-        return [
-            f
-            for f in _glob.glob(os.path.join(path, "*.parquet"))
-            if os.path.isfile(f)
-        ]
-
     report: dict[str, dict[str, int]] = {}
     lock = acquire_compaction_lock(index_dir)
     try:
@@ -1694,7 +1671,7 @@ def compact_corpus_index(
             recover_swap_crash(path)
             if not os.path.exists(path):
                 continue
-            before_files = _files(path)
+            before_files = list(parquet_files(path))
             total_bytes = sum(os.path.getsize(f) for f in before_files)
             n_out = max(1, -(-total_bytes // target_file_bytes))
             df = spark.read.parquet(path)
@@ -1707,7 +1684,7 @@ def compact_corpus_index(
                 "rows_before": rows_before,
                 "rows_after": spark.read.parquet(path).count(),
                 "files_before": len(before_files),
-                "files_after": len(_files(path)),
+                "files_after": sum(1 for _ in parquet_files(path)),
             }
         # markers are a CACHE of the manifest rows — regenerate them
         # after the manifests swap (this also backfills lost markers)

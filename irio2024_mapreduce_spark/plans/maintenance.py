@@ -20,9 +20,9 @@ Threshold rationale (each calibrated by a measured artifact):
   costs every reader f opens/tasks; trip when a part holds more than
   ``max_files_per_part`` parquet files OR more than ``frag_ratio`` ×
   its byte-ideal count (``ceil(bytes / target_file_bytes)``). The
-  z-order decay measurement (``tools/stress_zorder_r10.json``: skip
-  fraction 0.906 → 0.784 over five appended file sets → 0.908 after
-  ONE fused pass) calibrates the default: five file sets per
+  z-order decay measurement (SCALE.md, "fused
+  compact+z-order": skip fraction 0.906 → 0.784 over five appended
+  file sets → 0.908 after ONE fused pass) calibrates the default: five file sets per
   partition is where the decay became measurable, so the fused
   corpus pass uses the same file-count trip wire — appends are
   simultaneously what fragments the file set and what erodes the
@@ -67,7 +67,7 @@ import os
 from pyspark.sql import SparkSession
 
 from irio2024_mapreduce_spark.operators.stored_index import fold_and_recount
-from irio2024_mapreduce_spark.sources.sinks import run_lockfree_read
+from irio2024_mapreduce_spark.sources.sinks import parquet_files, run_lockfree_read
 
 # the index parts compact_corpus_index rewrites — file counts over
 # these are the fragmentation signal
@@ -82,22 +82,6 @@ _INDEX_PARTS = (
 )
 
 
-def _parquet_files(path: str) -> list[str]:
-    """All data files of a (possibly hive-partitioned) dataset."""
-    out = []
-    for root, dirs, files in os.walk(path):
-        # prune hidden/staging subtrees (_temporary, _staged, .crc dirs):
-        # a SIGKILLed append can leave truncated parquet under them, and
-        # counting/reading those would crash the maintenance pass.
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        out.extend(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return out
-
-
 def _frag_signal(
     path: str, target_file_bytes: int
 ) -> tuple[int, int, int]:
@@ -108,7 +92,7 @@ def _frag_signal(
     heuristic the locked rewrite re-derives anyway."""
     total = 0
     n = 0
-    for f in _parquet_files(path):
+    for f in parquet_files(path):
         try:
             total += os.path.getsize(f)
         except FileNotFoundError:

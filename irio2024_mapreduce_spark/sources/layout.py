@@ -45,6 +45,8 @@ import operator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irio2024_mapreduce_spark.sources.sinks import parquet_files
+
 ZORDER_DEFAULT_BITS = 8
 
 
@@ -183,17 +185,9 @@ def pruning_stats(
     range misses the predicate's [lo, hi] — exactly the decision a
     stats-honoring scan makes before opening the file. Returns
     {files, skippable, frac_skipped}."""
-    import glob as _glob
-    import os as _os
-
     import pyarrow.parquet as _pq
 
-    files = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*.parquet"),
-                            recursive=True)
-        if _os.path.isfile(f)
-    ]
+    files = list(parquet_files(path))
     skippable = 0
     for f in files:
         md = _pq.ParquetFile(f).metadata

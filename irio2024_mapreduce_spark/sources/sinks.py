@@ -12,7 +12,6 @@ bucket keys skip their shuffle entirely.
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 
@@ -72,14 +71,17 @@ def write_bucketed_table(
     writer.saveAsTable(table)
 
 
-def _parquet_files(path: str) -> list[str]:
-    return [
-        f
-        for f in glob.glob(
-            os.path.join(path, "**", "*.parquet"), recursive=True
-        )
-        if os.path.isfile(f)
-    ]
+def parquet_files(path: str):
+    """Committed parquet files under ``path``, in sorted walk order.
+    ``_``/``.``-prefixed dirs and files are skipped: Spark stages task
+    attempts under ``_temporary``, a killed writer leaves truncated
+    files there, and sidecars and staging dirs are hidden the same way.
+    THE one rule for what a dataset's data files are."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
 
 
 def compact_parquet(
@@ -148,7 +150,7 @@ def compact_parquet(
                 "partition_by= or the compaction would flatten the layout "
                 "and lose partition pruning"
             )
-        data_files = _parquet_files(path)
+        data_files = list(parquet_files(path))
         stats["files_before"] = len(data_files)
         stats["bytes"] = sum(os.path.getsize(f) for f in data_files)
         n_out = max(1, -(-stats["bytes"] // target_file_bytes))  # ceil
@@ -198,8 +200,17 @@ def compact_parquet(
         replace_dataset(path, fill)
     finally:
         release_compaction_lock(lock)
-    stats["files_after"] = len(_parquet_files(path))
+    stats["files_after"] = sum(1 for _ in parquet_files(path))
     return stats
+
+
+def fsync_file(path: str) -> None:
+    """fsync one file's data to stable storage."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def fsync_dir(path: str) -> None:
@@ -219,11 +230,7 @@ def flush_tree(root: str) -> None:
     commits, so a power loss never rolls truncated files forward."""
     for dirpath, _dirs, files in os.walk(root):
         for name in files:
-            fd = os.open(os.path.join(dirpath, name), os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
+            fsync_file(os.path.join(dirpath, name))
         fsync_dir(dirpath)
 
 
@@ -570,30 +577,34 @@ FILELIST_NAME = "_filelist.json"
 
 
 def write_filelist(spark, data_dir: str) -> dict:
-    """Walk ``data_dir`` ONCE (hidden paths pruned — only COMMITTED
-    files enter) and atomically (re)write its file-list sidecar.
-    Callers hold the dataset's writer lock, so the walk races nothing;
-    its cost is paid once per WRITE (build / maintenance cadence)
-    instead of once per probe. The schema is captured through the same
-    basePath read shape the probes use, so partition-column typing is
-    identical by construction."""
+    """List ``data_dir``'s committed files once (:func:`parquet_files`),
+    flush every listed file and every dir on the way to them, then
+    atomically (re)write the file-list sidecar. Every caller writes its
+    commit point (a manifest flip, a delta drop, a staged-dir removal)
+    after this, so the commit can never become durable ahead of the
+    Spark-written files it commits. Callers hold the dataset's writer
+    lock, so the walk races nothing; its cost is paid once per WRITE
+    (build / maintenance cadence) instead of once per probe. The schema
+    is captured through the same basePath read shape the probes use, so
+    partition-column typing is identical by construction."""
     import json as _json
-    import os as _os
 
     files: dict[str, list[str]] = {}
     first: str | None = None
-    for root, dirs, names in _os.walk(data_dir):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        keep = sorted(
-            n
-            for n in names
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        )
-        if keep:
-            rel = _os.path.relpath(root, data_dir)
-            files[rel] = keep
-            if first is None:
-                first = _os.path.join(root, keep[0])
+    for f in parquet_files(data_dir):
+        fsync_file(f)
+        root, name = os.path.split(f)
+        files.setdefault(os.path.relpath(root, data_dir), []).append(name)
+        first = first or f
+    # each file's dir and every one above it, up to data_dir's own
+    # entry in its parent (a build's version dir is new too)
+    dirs: set[str] = {".."} if files else set()
+    for rel in files:
+        while rel not in dirs:
+            dirs.add(rel)
+            rel = os.path.dirname(rel) or "."
+    for rel in sorted(dirs):
+        fsync_dir(os.path.normpath(os.path.join(data_dir, rel)))
     payload: dict = {"version": 1, "files": files}
     if first is not None:
         payload["schema"] = (
@@ -602,7 +613,7 @@ def write_filelist(spark, data_dir: str) -> dict:
             .schema.json()
         )
     atomic_write_file(
-        _os.path.join(data_dir, FILELIST_NAME),
+        os.path.join(data_dir, FILELIST_NAME),
         _json.dumps(payload, indent=1),
     )
     return payload
@@ -658,37 +669,26 @@ def publish_delta_marker(staged_dir: str, target: str) -> None:
     delta dir as uncommitted and its unlisted files as garbage, so
     visibility is whole batch or none. Runs under the caller's index
     lock."""
-    import os as _os
-    import shutil as _shutil
-
-    dst_side = _os.path.join(target, FILELIST_NAME)
-    if _os.path.exists(dst_side):
+    dst_side = os.path.join(target, FILELIST_NAME)
+    if os.path.exists(dst_side):
         return  # a sibling/predecessor already committed this batch
-    with open(_os.path.join(staged_dir, FILELIST_NAME)) as f:
+    with open(os.path.join(staged_dir, FILELIST_NAME)) as f:
         content = f.read()
     touched: set[str] = set()
-    for root, dirs, names in _os.walk(staged_dir):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        rel = _os.path.relpath(root, staged_dir)
-        for name in names:
-            if not name.endswith(".parquet") or name.startswith(
-                ("_", ".")
-            ):
-                continue
-            out_dir = (
-                target if rel == "." else _os.path.join(target, rel)
-            )
-            _os.makedirs(out_dir, exist_ok=True)
-            dst = _os.path.join(out_dir, name)
-            if not _os.path.exists(dst):
-                try:
-                    _os.link(_os.path.join(root, name), dst)
-                except OSError:
-                    _shutil.copy2(_os.path.join(root, name), dst)
-            touched.add(out_dir)
+    for src in parquet_files(staged_dir):
+        rel = os.path.relpath(os.path.dirname(src), staged_dir)
+        out_dir = os.path.normpath(os.path.join(target, rel))
+        os.makedirs(out_dir, exist_ok=True)
+        dst = os.path.join(out_dir, os.path.basename(src))
+        if not os.path.exists(dst):
+            try:
+                os.link(src, dst)
+            except OSError:
+                shutil.copy2(src, dst)
+        touched.add(out_dir)
     for d in sorted(touched):
         fsync_dir(d)
-    _os.makedirs(target, exist_ok=True)
+    os.makedirs(target, exist_ok=True)
     atomic_write_file(dst_side, content)  # THE commit point
 
 

@@ -215,7 +215,7 @@ def test_resize_snapshot_skips_inflight_temporary(spark, emb, tmp_path):
     task-attempt parquet under ``tbl=0/_temporary/``; baking it into
     the snapshot crashes the explicit-path read (or the footer
     arithmetic) on every subsequent rebuild — a permanent wedge."""
-    from irio2024_mapreduce_spark.operators.stored_index import data_files
+    from irio2024_mapreduce_spark.sources.sinks import parquet_files
 
     idx = str(tmp_path / "ann")
     corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
@@ -231,7 +231,7 @@ def test_resize_snapshot_skips_inflight_temporary(spark, emb, tmp_path):
         f.write(b"truncated, not parquet")
     assert not any(
         "_temporary" in p
-        for p in data_files(os.path.join(data_dir, "tbl=0"))
+        for p in parquet_files(os.path.join(data_dir, "tbl=0"))
     ), "in-flight task-attempt files leaked into the snapshot set"
     out = resize_ann_index(spark, idx)  # must not wedge on the junk
     # the junk file must not enter the no-op path's footer-delta

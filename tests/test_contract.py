@@ -152,7 +152,11 @@ def test_bench_summary_line_fits_driver_tail_capture():
     # stdout line outgrew the driver's ~2 KiB tail capture. The final
     # stdout line is now the compact summary only; pin its worst-case
     # size so a future field addition can't silently reintroduce the
-    # overflow. Worst case: every query at 9999.999 s.
+    # overflow. Worst case: every query at 9999.999 s. The worst case
+    # must carry every key of the line bench.py prints last, or the pin
+    # measures a smaller line than the real one.
+    import ast
+    import inspect
     import json
 
     import bench
@@ -165,12 +169,29 @@ def test_bench_summary_line_fits_driver_tail_capture():
         "queries": {name: 9999.999 for name in bench.HEADLINE},
         "transient_count": len(bench.HEADLINE),
         "machine_canary_sec": 9999.999,
+        "subset_canary_normalized_sec": 9999.999,
+        "canary_steady_median_sec": 9999.999,
+        "subset_steady_normalized_sec": 9999.999,
+        "load_flagged": False,  # longer than true
+        "stored_probe": {
+            q: {"build": 9999.999, "probe": 9999.999}
+            for q in ("probe_ann_index", "probe_ivf_index")
+        },
         "detail": "BENCH_DETAIL_last.json",
         "sf": "/root/testdata/sf0.1",
         "cpus": 9999,
         "load_avg_start": [99.99, 99.99, 99.99],
         "load_avg_end": [99.99, 99.99, 99.99],
     }
+    dumps = [
+        node for node in ast.walk(ast.parse(inspect.getsource(bench)))
+        if isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "json.dumps"
+        and node.args and isinstance(node.args[0], ast.Dict)
+    ]
+    last = max(dumps, key=lambda node: node.lineno)
+    printed = [ast.literal_eval(k) for k in last.args[0].keys]
+    assert set(worst) == set(printed)
     assert len(json.dumps(worst)) < 1800
 
 

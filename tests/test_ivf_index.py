@@ -201,9 +201,7 @@ def test_rebuild_snapshot_skips_inflight_temporary(spark, emb, tmp_path):
     from irio2024_mapreduce_spark.operators.ivf_index import (
         footer_cell_counts,
     )
-    from irio2024_mapreduce_spark.operators.stored_index import (
-        data_files as _data_files,
-    )
+    from irio2024_mapreduce_spark.sources.sinks import parquet_files
 
     idx = str(tmp_path / "ivf")
     corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
@@ -217,7 +215,7 @@ def test_rebuild_snapshot_skips_inflight_temporary(spark, emb, tmp_path):
     os.makedirs(tmp_dir)
     with open(os.path.join(tmp_dir, "part-crashed.parquet"), "wb") as f:
         f.write(b"truncated, not parquet")
-    assert not any("_temporary" in p for p in _data_files(data_dir)), (
+    assert not any("_temporary" in p for p in parquet_files(data_dir)), (
         "in-flight task-attempt files leaked into the snapshot set"
     )
     # the footer signals (imbalance, dup recount) must skip it too

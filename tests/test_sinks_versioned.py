@@ -54,6 +54,28 @@ def test_flat_compactor_still_recovers_and_compacts(spark, tmp_path):
     assert spark.read.parquet(path).count() == before_rows
 
 
+def test_compaction_counts_only_committed_files(spark, tmp_path):
+    """A killed writer's ``_temporary/**/part-*.parquet`` is not data:
+    it neither counts in ``files_before``/``bytes`` nor sizes the
+    output."""
+    path = str(tmp_path / "flat")
+    _grow(spark, path, appends=2)
+    committed = [
+        os.path.getsize(os.path.join(d, f))
+        for d, _dirs, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    junk = os.path.join(path, "_temporary", "0", "task_0")
+    os.makedirs(junk)
+    with open(os.path.join(junk, "part-00000-dead.parquet"), "wb") as f:
+        f.write(b"x" * 4096)  # truncated, not parquet
+    stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    assert stats["files_before"] == len(committed) == 8
+    assert stats["bytes"] == sum(committed)
+    assert spark.read.parquet(path).count() == 100
+
+
 def test_crashed_holder_lock_releases_with_its_process(spark, tmp_path):
     """Lock liveness is kernel-owned (flock): a leftover lock FILE
     whose holder died — SIGKILL skips every finally — blocks nobody,

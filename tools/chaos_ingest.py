@@ -52,7 +52,7 @@ is recorded as a violation with its traceback and fails the soak.
 Usage:
   python tools/chaos_ingest.py [--kills 20] [--streams 3]
       [--batches 6] [--docs 24] [--deep-fires-min 3]
-      [--out tools/chaos_ingest_r13.json]
+      [--out chaos_ingest.json]
 
 Internal (spawned by the orchestrator):
   python tools/chaos_ingest.py --role {ingest,stream,maint,prep}
@@ -895,10 +895,7 @@ def main() -> None:
     ap.add_argument("--fold-crashes-min", type=int, default=1)
     ap.add_argument("--deep-fire", type=int, default=0)
     ap.add_argument("--max-minutes", type=float, default=30.0)
-    ap.add_argument(
-        "--out",
-        default=os.path.join(REPO, "tools", "chaos_ingest_r13.json"),
-    )
+    ap.add_argument("--out", default="chaos_ingest.json")
     args = ap.parse_args()
     if args.role == "orchestrate":
         orchestrate(args)

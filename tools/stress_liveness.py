@@ -8,7 +8,7 @@ pinned test (tests/test_liveness.py) asserts both at fixture scale;
 this tool RECORDS them at a larger scale — per-pass, per-lock — so
 the bound is a measured artifact, not a docstring claim.
 
-Writes tools/stress_liveness_r12.json:
+Writes stress_liveness.json (``--out``) in the working dir:
   {"phases": {phase: {"locks": {basename: max_hold_s}, "wall_s": ..},
    "patience_budget_s": 10.0, "ingest_publish_bound_s": 2.0,
    "ok": bool}
@@ -27,8 +27,6 @@ import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 WORDS = (
     "river stone bridge meadow lantern harbor forest signal copper "
@@ -106,10 +104,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--batches", type=int, default=8)
     ap.add_argument("--docs", type=int, default=500)
-    ap.add_argument(
-        "--out",
-        default=os.path.join(REPO, "tools", "stress_liveness_r12.json"),
-    )
+    ap.add_argument("--out", default="stress_liveness.json")
     args = ap.parse_args()
 
     import tempfile

@@ -2,8 +2,7 @@
 (600k rows) clustered three ways and measure file-level pruning for
 single-axis and rectangle range predicates from parquet footers
 (`layout.pruning_stats` — the same min/max decision a stats-honoring
-scan makes). Writes one JSON line; artifact recorded as
-tools/stress_zorder_r{N}.json.
+scan makes). Prints one JSON line.
 
 Axes chosen to mirror the 100 TB corpus-query story: l_orderkey
 (time-ish monotone id — "recent slice"), l_partkey (entity id —

@@ -18,7 +18,7 @@ out ≈1.0× even though their RAW r13 seconds read 1.19-1.34× slower
 their true improvement (e.g. probe_ann_index ~0.76×, dedup_near_md5
 ~0.79×).
 
-Writes tools/canary_norm_validation_r{N}.json with per-query raw and
+Writes canary_norm_validation.json (``--out``) with per-query raw and
 normalized ratios, the untouched-median check, and a pass verdict:
 median normalized ratio of untouched queries within
 [1/TOLERANCE, TOLERANCE] (default 1.10 — idle-host half-medians
@@ -80,13 +80,7 @@ def main() -> int:
     ap.add_argument(
         "--probe", default=os.path.join(REPO, "BENCH_DETAIL_r13_idle*.json")
     )
-    ap.add_argument(
-        "--out",
-        default=os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "canary_norm_validation_r14.json",
-        ),
-    )
+    ap.add_argument("--out", default="canary_norm_validation.json")
     args = ap.parse_args()
     base_files = sorted(glob.glob(args.base))
     probe_files = sorted(glob.glob(args.probe))
