@@ -16,11 +16,11 @@ production story ``dedup.corpus_index_postings`` documents):
 * ``benchmark_ngrams/`` — the held-out benchmark's 13-gram digest set,
   when the index was built with one (the decontamination probe)
 * plus the bookkeeping: ``stats/`` (mergeable per-batch counters),
-  ``manifests/`` (exactly-once rows keyed by (stream, batch_id)),
-  ``_commit_markers/`` (their O(1) existence cache — outside the
-  compactor-swapped dirs), ``_stream_checkpoint/`` (Structured
-  Streaming offsets), and ``_index_manifest.json`` (family,
-  constants and where the seed docs live, validated on every open)
+  ``_commit_markers/`` (one file per committed (stream, batch_id):
+  the batch manifest as JSON, the exactly-once record),
+  ``_stream_checkpoint/`` (Structured Streaming offsets), and
+  ``_index_manifest.json`` (family, constants and where the seed docs
+  live, validated on every open)
 
 Scale shape: every step is batch-keyed — the verdict joins probe the
 stored index with hash lookups (``dedup._incremental_verdicts``, the
@@ -34,11 +34,12 @@ reports ``plans.ingest.jobs_per_batch`` and executor CPU at any N.
 
 Durability: ``ingest_batch`` is transactional through the staged-commit
 protocol of ``sources.staged_commit``, shared with ``plans.corpus_prep``.
-Every part (index halves, corpus docs, stats row, manifest row and the
-similarity-index deltas) is staged under ``{index_dir}/_staged/``; one
-``_committed`` file is the commit point; publication is then file moves
-into the live dirs, rolled forward by ``recover_staged_batches`` after
-any crash. A crash before the commit published nothing anywhere, so a
+Every part (index halves, corpus docs, stats row and the
+similarity-index deltas) is staged under ``{index_dir}/_staged/``, and
+the publish plan carries the batch manifest; one ``_committed`` file is
+the commit point; publication is then file moves into the live dirs,
+then the commit marker, rolled forward by ``recover_staged_batches``
+after any crash. A crash before the commit published nothing anywhere, so a
 redelivery admits the docs normally. A crash after it rolls forward to
 full visibility on the next touch of the index. A maintenance collision
 aborts before the commit, under the advisory locks.
@@ -88,6 +89,7 @@ from irio2024_mapreduce_spark.sources.sinks import (
     acquire_compaction_lock_patiently,
     atomic_write_file,
     check_not_compacting,
+    copy_file_durably,
     fsync_dir,
     parquet_files,
     recover_swap_crash,
@@ -103,10 +105,11 @@ from irio2024_mapreduce_spark.sources.sinks import (
 # the caller's `family` argument — a build-ngram/probe-lsh confusion
 # used to fail only via a missing-path read error deep inside Spark.
 # Version 3 adds where the seed docs live (``seed_in_corpus``) and the
-# census mass outside the corpus, which reconciliation needs; an older
-# index must be rebuilt.
+# census mass outside the corpus, which reconciliation needs. Version 4
+# keeps each batch manifest in its commit marker, not in a
+# ``manifests`` parquet part. An older index must be rebuilt.
 INDEX_MANIFEST_NAME = "_index_manifest.json"
-INDEX_FORMAT_VERSION = 3
+INDEX_FORMAT_VERSION = 4
 
 
 def _index_manifest(family: str) -> dict:
@@ -165,10 +168,10 @@ def validate_index(index_dir: str, family: str) -> dict:
 
 def _clear_prior_life(index_dir: str) -> None:
     """A (re)build replaces the index WHOLESALE — including the parts
-    the data writers don't overwrite: stale ``manifests`` rows +
-    ``_commit_markers`` would short-circuit the new life's first
-    batches (Structured Streaming numbers batches from 0 per
-    checkpoint), a stale ``_stream_checkpoint`` would skip
+    the data writers don't overwrite: stale ``_commit_markers`` would
+    short-circuit the new life's first batches (Structured Streaming
+    numbers batches from 0 per checkpoint), a stale
+    ``_stream_checkpoint`` would skip
     redelivering source files the new index has never seen, and stale
     ``stats`` rows would be merged into ``corpus_stats`` for docs the
     new corpus never ingested. Without this the docstring's 'replaces
@@ -182,7 +185,6 @@ def _clear_prior_life(index_dir: str) -> None:
     # only a LIVE compaction refuses)
     check_not_compacting(index_dir)
     for part in (
-        "manifests",
         "_commit_markers",
         "_stream_checkpoint",
         "stats",
@@ -304,7 +306,9 @@ def _write_index(
     _clear_prior_life(index_dir)
     for name, df in parts.items():
         df.write.mode("overwrite").parquet(os.path.join(index_dir, name))
-    _append_stats_row(census, index_dir, mode="overwrite")
+    _stats_row_df(census).write.mode("overwrite").parquet(
+        os.path.join(index_dir, "stats")
+    )
     outside = {"docs": 0, "tokens": 0}
     if not seed_in_corpus:
         seed = census.sparkSession.read.parquet(
@@ -397,10 +401,11 @@ def _ingest_batch_impl(
 
     ``batch_id`` (the Structured Streaming batch id, or any caller
     sequence number) makes the recorded manifest EXACTLY-once: the
-    manifest row persisted under ``{index_dir}/manifests`` is keyed by
-    (``stream``, ``batch_id``), and a replayed key short-circuits the
-    whole call (safe — the manifest is written LAST, so its presence
-    proves every earlier append of that batch landed). ``stream``
+    batch's commit marker under ``{index_dir}/_commit_markers`` is
+    keyed by (``stream``, ``batch_id``) and holds the manifest, and a
+    replayed key short-circuits the whole call (safe — the marker is
+    written LAST, so its presence proves every earlier append of that
+    batch landed). ``stream``
     namespaces the id: Structured Streaming numbers batches from 0
     PER CHECKPOINT, so a bare id is only unique within one stream —
     a second source dir (fresh checkpoint, ids from 0 again) would
@@ -613,8 +618,8 @@ def _ingest_batch_impl(
         )
         if prior is None:
             raise RuntimeError(
-                "staged batch rolled forward but no manifest row "
-                "found — inspect the index's manifests part"
+                "staged batch rolled forward but left no commit marker "
+                "— inspect the index's _commit_markers dir"
             ) from None
         return prior
     try:
@@ -652,7 +657,7 @@ def _ingest_batch_impl(
 # ------------------------------------------------- transactional commit
 # A batch is one staged commit (``sources.staged_commit``). What is
 # ingest's own: the keyed staging name, the publish by file moves, the
-# external commit markers, and the classification of a staging that
+# commit markers, and the classification of a staging that
 # vanished before its publication.
 
 # the ingest schema gate's authority sidecar, beside the corpus's
@@ -806,7 +811,8 @@ def _stage_batch(
     ivf_index_dir: str | None = None,
 ) -> None:
     """Write every part of the batch into ``staging`` (private — no
-    locks, no reader visibility), then the publish plan. The corpus
+    locks, no reader visibility), then the publish plan, which carries
+    ``manifest`` for the commit marker. The corpus
     part mirrors the LIVE corpus layout (split-partitioned corpora
     stage hive dirs; the move preserves relative paths), so
     publication is pure file renames. Similarity-index parts are
@@ -820,8 +826,8 @@ def _stage_batch(
     # wholesale (the marker is the last artifact to land), appending
     # a SECOND stats row for the same batch — unkeyed rows made that
     # census drift permanent. With the (stream, batch_id) key,
-    # corpus_stats dedupes replays at read exactly like the manifest
-    # rows; seed/correction rows stay unkeyed (null key ⇒ kept as-is)
+    # corpus_stats dedupes replays at read; seed/correction rows stay
+    # unkeyed (null key ⇒ kept as-is)
     parts["stats"] = _stats_row_df(cleaned).select(
         (
             F.lit(stream)
@@ -833,13 +839,6 @@ def _stage_batch(
         .alias("batch_id"),
         "docs", "tokens", "text_sketch", "token_sketch",
     )
-    if batch_id is not None:
-        row = (
-            stream,
-            int(batch_id),
-            *[int(manifest[k]) for k in _MANIFEST_KEYS],
-        )
-        parts["manifests"] = spark.createDataFrame([row], _MANIFEST_SCHEMA)
     # every staged part lands in its OWN subdir from frames whose
     # upstream checkpoints are already materialized (the manifest
     # counts forced them), so the writes are independent Spark jobs —
@@ -942,6 +941,7 @@ def _stage_batch(
     plan = {
         "stream": stream,
         "batch_id": None if batch_id is None else int(batch_id),
+        "manifest": manifest,
         "index_parts": [p for p in parts],
         "corpus_root": clean_path,
         "similarity_indexes": extras,
@@ -964,20 +964,11 @@ def _move_file(src: str, dst: str) -> str | None:
         # publish failure that must surface as itself
         if e.errno != errno.EXDEV:
             raise
-        # copy to a hidden temp name, fsync, atomic-replace, fsync the
-        # DEST dir, and only then drop the source: the unlink (source
-        # fs) must never become durable before the rename (dest fs),
-        # or a power loss would lose the file on both sides and the
-        # roll-forward would wrongly classify it as already moved
-        tmp = os.path.join(
-            os.path.dirname(dst),
-            "." + os.path.basename(dst) + "._publish_tmp",
-        )
-        with open(src, "rb") as fin, open(tmp, "wb") as fout:
-            shutil.copyfileobj(fin, fout)
-            fout.flush()
-            os.fsync(fout.fileno())
-        os.replace(tmp, dst)
+        # fsync the DEST dir before dropping the source: the unlink
+        # (source fs) must never become durable before the copy (dest
+        # fs), or a power loss would lose the file on both sides and
+        # the roll-forward would wrongly classify it as already moved
+        copy_file_durably(src, dst)
         fsync_dir(os.path.dirname(dst))
         os.unlink(src)
         return None
@@ -1020,14 +1011,15 @@ def _publish_staged(
     swap-crash recovery on every publish target under them, the
     corpus included (appending beside a crashed swap's
     ``._compact_old`` snapshot would split-brain it). Then it commits
-    (flush, ``_committed``), moves the staged files into place and
-    touches the keyed batch's external commit marker.
+    (flush, ``_committed``), moves the staged files into place and,
+    last, writes the keyed batch's commit marker: the plan's manifest
+    as JSON, the batch's one exactly-once record.
 
     A staging that lost its plan or vanished before publication (a
     generation flip replacing the index takes ``_staged/`` with it, in
     arbitrary file order) is finished only if its batch is accounted
     for: ``known_committed`` (set by recovery, which saw
-    ``_committed``), a keyed batch's external marker (touched only
+    ``_committed``), a keyed batch's commit marker (written only
     after every move), or an unkeyed staging seen committed with its
     plan. Otherwise the OWNER raises: returning quietly would report a
     batch as ingested that is in neither index nor corpus."""
@@ -1080,7 +1072,11 @@ def _publish_staged(
             _publish_similarity_index(staging, ex)
             staged_commit._crash_if(_test_crash_after, f"move:{ex['staged']}")
         if plan["batch_id"] is not None:
-            _touch_marker(index_dir, plan["batch_id"], plan["stream"])
+            marker = _commit_marker_for_name(index_dir, name)
+            if not os.path.isdir(os.path.dirname(marker)):
+                os.makedirs(os.path.dirname(marker), exist_ok=True)
+                fsync_dir(index_dir)
+            atomic_write_file(marker, json.dumps(plan["manifest"]))
         staged_commit._crash_if(_test_crash_after, "marker")
         # ignore_errors: a sibling's committed-without-plan GC can
         # interleave with this rmtree over the same published dir
@@ -1140,43 +1136,11 @@ def recover_staged_batches(
     )
 
 
-# per-batch manifest parquet schema — fixed so replay reads and
-# appends agree (a dict-inferred schema could reorder/retype columns)
-_MANIFEST_KEYS = [
-    "batch_in",
-    "exact_dups",
-    "near_dups",
-    "killed_null_text",
-    "killed_too_short",
-    "killed_too_repetitive",
-    "killed_no_stopwords",
-    "contaminated_removed",
-    "appended",
-]
-_MANIFEST_SCHEMA = "stream string, batch_id long, " + ", ".join(
-    f"{k} long" for k in _MANIFEST_KEYS
-)
-
-
-def _touch_marker(index_dir: str, batch_id: int, stream: str) -> None:
-    """Write the O(1) commit marker (single definition — the writer
-    and the cache regenerator must never diverge on location or
-    format)."""
-    marker = _commit_marker(index_dir, batch_id, stream)
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    with open(marker, "w") as f:
-        f.write("committed\n")
-
-
 def _commit_marker(index_dir: str, batch_id: int, stream: str) -> str:
-    """O(1) existence check for a committed (stream, batch_id): a
-    marker FILE under ``_commit_markers`` — deliberately OUTSIDE the
-    ``manifests`` parquet dir, which ``compact_corpus_index`` swaps
-    wholesale (markers living inside it would be deleted with the old
-    dir, silently reverting every batch to 'never committed').
-    Without the marker every batch — including the common non-replay
-    case — paid a full scan of the ever-growing manifests parquet
-    before doing any work."""
+    """The commit marker of (stream, batch_id): a file under
+    ``_commit_markers`` holding the batch manifest as JSON. One O(1)
+    existence check answers "did this batch commit?", so the common
+    non-replay path reads nothing else."""
     return _commit_marker_for_name(index_dir, _staging_name(batch_id, stream))
 
 
@@ -1214,26 +1178,6 @@ def _recover_index_part(index_dir: str, part: str) -> None:
         release_compaction_lock(lock)
 
 
-def _manifest_rows_path(index_dir: str) -> str | None:
-    """Where the manifest ROWS live, after crash recovery
-    (:func:`_recover_index_part`) has run: the live dir or None."""
-    _recover_index_part(index_dir, "manifests")
-    path = os.path.join(index_dir, "manifests")
-    return path if os.path.exists(path) else None
-
-
-def _read_manifest_rows(spark: SparkSession, index_dir: str):
-    """The manifests parquet in its fixed column order."""
-    df = spark.read.option("mergeSchema", "true").parquet(
-        _manifest_rows_path(index_dir)
-    )
-    return df.select(
-        F.coalesce(F.col("stream"), F.lit("")).alias("stream"),
-        "batch_id",
-        *_MANIFEST_KEYS,
-    )
-
-
 def _read_stats_rows(spark: SparkSession, index_dir: str) -> DataFrame:
     """The stats parquet in its fixed column order (seed and
     correction rows carry a NULL batch_id)."""
@@ -1246,42 +1190,6 @@ def _read_stats_rows(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def _dedupe_manifest_rows(df: DataFrame) -> DataFrame:
-    """One row per (stream, batch_id): the row read_recorded_manifest's
-    replay would pick (``appended`` desc, then every counter desc —
-    the crash-duplicated re-run row charges everything to exact_dups
-    with appended=0, so the original always wins)."""
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
-    w = Window.partitionBy("stream", "batch_id").orderBy(
-        *[F.col(k).desc() for k in _MANIFEST_KEYS[::-1]]
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def regenerate_commit_markers(spark: SparkSession, index_dir: str) -> int:
-    """Rebuild the O(1) marker set from the manifest ROWS (the rows
-    are the durable record; markers are a cache). Called after
-    compaction's manifests swap, and usable as a one-shot backfill
-    of lost markers.
-    Returns the number of markers present afterwards."""
-    if _manifest_rows_path(index_dir) is None:
-        return 0
-    keys = (
-        _read_manifest_rows(spark, index_dir)
-        .select("stream", "batch_id")
-        .distinct()
-        .collect()
-    )
-    for r in keys:
-        _touch_marker(index_dir, r["batch_id"], r["stream"])
-    return len(keys)
-
-
 def read_recorded_manifest(
     spark: SparkSession,
     index_dir: str,
@@ -1289,64 +1197,32 @@ def read_recorded_manifest(
     stream: str = "",
 ) -> dict | None:
     """The recorded manifest for (``stream``, ``batch_id``), or None
-    if the batch never committed (crashed before its manifest write ⇒
-    replay re-runs it; admission is idempotent so the corpus stays
-    clean and the re-run's manifest charges the docs to exact_dups).
-    The marker file makes the no-replay fast path O(1); the parquet
-    rows are read only when the marker says a prior commit exists."""
+    if the batch never committed (crashed before its marker ⇒ replay
+    re-runs it; admission is idempotent so the corpus stays clean and
+    the re-run's manifest charges the docs to exact_dups). The record
+    is the batch's commit marker, so no Spark job runs (``spark`` is
+    unused). A marker that is not a manifest (an index of an older
+    format, whose markers were empty) raises the rebuild error: it must
+    not read as "never committed"."""
     # a committed-but-unpublished batch must roll forward before the
-    # replay check (its marker and manifest rows land during the
-    # roll-forward); cheap when no staging exists (one listdir)
+    # replay check (its marker lands during the roll-forward); cheap
+    # when no staging exists (one listdir)
     recover_staged_batches(index_dir)
-    if not os.path.exists(_commit_marker(index_dir, batch_id, stream)):
+    path = _commit_marker(index_dir, batch_id, stream)
+    try:
+        with open(path) as f:
+            manifest = json.loads(f.read())
+    except FileNotFoundError:
         return None
-    if _manifest_rows_path(index_dir) is None:
-        # stale marker without any manifest rows (manual deletion) —
-        # treat as never committed rather than crashing the replay
-        return None
-    rows = (
-        _read_manifest_rows(spark, index_dir)
-        .filter(
-            (F.col("batch_id") == int(batch_id))
-            & (F.col("stream") == stream)
+    except ValueError:
+        manifest = None
+    if not isinstance(manifest, dict) or "batch_in" not in manifest:
+        raise ValueError(
+            f"commit marker {path} holds no batch manifest (an index of "
+            f"format version < {INDEX_FORMAT_VERSION}?) — rebuild the "
+            "index with the current engine constants"
         )
-        .collect()
-    )
-    if not rows:
-        return None
-    # a crash between the row append and the marker touch leaves TWO
-    # rows for the key (the original and the re-run's all-exact-dups
-    # row); an unordered collect would replay a nondeterministic one.
-    # Pick the row with the most appended docs (the original), with
-    # the full counter tuple as a deterministic tie-break.
-    r = max(
-        rows, key=lambda r: tuple(int(r[k]) for k in _MANIFEST_KEYS[::-1])
-    ).asDict()
-    r.pop("batch_id")
-    r.pop("stream")
-    return {k: int(v) for k, v in r.items()}
-
-
-def _append_stats_row(
-    cleaned: DataFrame, index_dir: str, mode: str = "append"
-) -> None:
-    """One MERGEABLE stats row per corpus increment: exact counters
-    plus HLL sketches (Apache DataSketches via ``hll_sketch_agg``) of
-    the distinct texts and distinct tokens contributed. Corpus-wide
-    stats then come from merging the rows (:func:`corpus_stats`) —
-    the 100 TB primitive: distinct counts over the whole corpus
-    WITHOUT ever rescanning it, at a few KB of state per batch. (The
-    crossJoin is two 1-row aggregates — bounded by construction.)
-
-    Recovery-first like the manifests path: stats is the other part
-    appended WITHOUT a prior read, so appending beside a crashed
-    swap's ``._compact_old`` snapshot would split-brain it and the
-    next compaction would delete every historical row — HLL state
-    that by the 100 TB premise can't be recomputed."""
-    _recover_index_part(index_dir, "stats")
-    _stats_row_df(cleaned).write.mode(mode).parquet(
-        os.path.join(index_dir, "stats")
-    )
+    return manifest
 
 
 def _stats_row_df(cleaned: DataFrame) -> DataFrame:
@@ -1392,15 +1268,19 @@ def corpus_stats(spark: SparkSession, index_dir: str) -> dict[str, int]:
     affordable way to keep live distinct-token / distinct-text
     counts over a growing corpus.
 
-    Keyed rows (ingest batches) dedupe here the way manifest
-    rows dedupe in their replay read: a SIGKILLed publication
+    Keyed rows (ingest batches) dedupe here: a SIGKILLed publication
     replayed wholesale appends a second stats row for the same
     (stream, batch_id), and without the dedupe the census drifted by
     one batch per replay, permanently. Docs-desc picks the original
     full admission over a re-run that re-convicted some docs; null
-    keys (seed rows, reconciliation corrections) are kept as-is."""
+    keys (seed rows, reconciliation corrections) are kept as-is.
+
+    Recovery-first: a compaction killed between its two ``stats``
+    renames leaves the rows under ``stats._compact_old``, which is
+    restored before the read."""
     from pyspark.sql.window import Window  # noqa: PLC0415
 
+    _recover_index_part(index_dir, "stats")
     stats = _read_stats_rows(spark, index_dir)
     keyed = stats.filter(F.col("batch_id").isNotNull())
     unkeyed = stats.filter(F.col("batch_id").isNull())
@@ -1446,7 +1326,7 @@ def reconcile_corpus_duplicates(
       publication serializes), so both copies land under different
       doc_ids;
     * replayed publication — a SIGKILL between a publish's corpus
-      move and its external marker touch, composed with the staging
+      move and its commit marker write, composed with the staging
       lost to a racing GC/flip, re-runs the whole batch: the same
       doc_ids land physically twice (the index parts' copies are the
       crash-replay duplicates maintenance already compacts; the
@@ -1502,8 +1382,12 @@ def reconcile_corpus_duplicates(
         # FIRST in the deep order, so it is
         # the reader that trips over a predecessor's crashed swap
         # — an old WITHOUT a live dir (crash between the two renames)
-        # means corpus_path itself is absent until restored
+        # means corpus_path itself is absent until restored. The
+        # census read below (corpus_stats) would recover ``stats``
+        # under the index lock, which this pass already holds, so the
+        # stats part is recovered here too
         recover_swap_crash(corpus_path)
+        recover_swap_crash(os.path.join(index_dir, "stats"))
         art = spark.read.parquet(corpus_path)
         art_d = art.withColumn("_d", F.sha2("text", 256))
         winners = (
@@ -1609,12 +1493,11 @@ def compact_corpus_index(
       (hot buckets lose more rows, never gain);
     * ``bands`` → full-row dedupe + ``LSH_BUCKET_CAP`` re-cap;
       ``rep_shingles`` → dedupe by doc_id;
-    * ``stats`` → rows preserved verbatim (the mergeable counters);
-      ``manifests`` → one row per (stream, batch_id), then the O(1)
-      commit markers are REGENERATED from the retained rows — they
-      live outside the swapped dir, and rebuilding them here also
-      backfills lost markers.
-      Files collapsed to the byte target in both.
+    * ``stats`` → rows preserved verbatim (the mergeable counters),
+      files collapsed to the byte target.
+
+    The commit markers live outside every swapped part, so the pass
+    leaves the exactly-once records untouched.
 
     Buckets regrow from post-compaction appends (their count restarts,
     as it would after any rebuild), so ``recap_stored`` stays the
@@ -1651,13 +1534,6 @@ def compact_corpus_index(
         # replay dedupe happens at corpus_stats read time, where the
         # winner rule lives
         "stats": lambda _df: _read_stats_rows(spark, index_dir),
-        # deduped to ONE row per (stream, batch_id) with the same
-        # winner rule read_recorded_manifest replays (appended desc,
-        # full counter tuple as tie-break) — crash-duplicated keys
-        # stop being a nondeterministic replay hazard after the pass
-        "manifests": lambda _df: _dedupe_manifest_rows(
-            _read_manifest_rows(spark, index_dir)
-        ),
     }
     assert meta["family"] in ("ngram", "lsh")
 
@@ -1686,9 +1562,6 @@ def compact_corpus_index(
                 "files_before": len(before_files),
                 "files_after": sum(1 for _ in parquet_files(path)),
             }
-        # markers are a CACHE of the manifest rows — regenerate them
-        # after the manifests swap (this also backfills lost markers)
-        regenerate_commit_markers(spark, index_dir)
     finally:
         release_compaction_lock(lock)
     return report

@@ -1,18 +1,17 @@
 """One maintenance entry point with thresholds.
 
-The repo grew five maintenance passes — ``compact_corpus_index``
+The repo has four maintenance passes — ``compact_corpus_index``
 (dedup-index small files + crash-replay dups + cross-append bucket
 caps), fused ``compact_parquet(zorder_cols=...)`` (corpus small files
 + z-order decay in ONE rewrite), ``resize_ann_index`` (signature
-width vs corpus size), ``rebuild_ivf_index`` (k ≈ √rows re-train),
-and ``regenerate_commit_markers`` (the O(1) replay cache) — and
-nothing that decided WHEN to run which. :func:`maintain_corpus_index`
-is that decision: it reads the manifests/stats/layout each pass
-already exposes, runs — in dependency order, under each pass's own
-existing lock — exactly the passes whose thresholds tripped, and
-returns a per-pass report (ran / skipped + the measured signal), so
-one scheduled call restores every invariant and an idle corpus costs
-only the threshold probes.
+width vs corpus size) and ``rebuild_ivf_index`` (k ≈ √rows re-train),
+plus the deep-only corpus duplicate reconciliation.
+:func:`maintain_corpus_index` decides WHEN to run which: it reads the
+stats/layout each pass already exposes, runs — in dependency order,
+under each pass's own existing lock — exactly the passes whose
+thresholds tripped, and returns a per-pass report (ran / skipped +
+the measured signal), so one scheduled call restores every invariant
+and an idle corpus costs only the threshold probes.
 
 Threshold rationale (each calibrated by a measured artifact):
 
@@ -27,9 +26,6 @@ Threshold rationale (each calibrated by a measured artifact):
   corpus pass uses the same file-count trip wire — appends are
   simultaneously what fragments the file set and what erodes the
   clustering, one signal covers both;
-* crash-replay duplicates — manifests rows > distinct (stream,
-  batch_id) keys means a crash duplicated rows that every replay
-  re-reads; any excess trips the index compaction;
 * ANN width drift — ``target_bits`` (H = log2(rows/bucket_target),
   the stored index's own sizing rule) re-derived at the CURRENT
   physical row count differing from the manifest's bits is exactly a
@@ -48,11 +44,7 @@ Threshold rationale (each calibrated by a measured artifact):
   cell rows > ``imbalance_ratio`` × the manifest's
   ``trained_imbalance`` baseline, floored at ``imbalance_min_rows``
   p99 rows), which FORCES a same-k re-train because stale centroids,
-  not k, are what degrade probe selectivity;
-* marker regeneration — any recorded (stream, batch_id) manifest key
-  missing its O(1) commit marker (e.g. markers created before the
-  cache existed, or a crash between row append and marker touch):
-  regenerate from the rows (the rows are the durable record).
+  not k, are what degrade probe selectivity.
 
 Reference parity note: the reference schedules ALL steps of a job to
 completion (/root/reference/mapreduce/coordinator/update_loop.py:149-154);
@@ -67,7 +59,7 @@ import os
 from pyspark.sql import SparkSession
 
 from irio2024_mapreduce_spark.operators.stored_index import fold_and_recount
-from irio2024_mapreduce_spark.sources.sinks import parquet_files, run_lockfree_read
+from irio2024_mapreduce_spark.sources.sinks import parquet_files
 
 # the index parts compact_corpus_index rewrites — file counts over
 # these are the fragmentation signal
@@ -77,7 +69,6 @@ _INDEX_PARTS = (
     "bands",
     "rep_shingles",
     "stats",
-    "manifests",
     "benchmark_ngrams",
 )
 
@@ -121,13 +112,11 @@ def maintain_corpus_index(
     """Run every tripped maintenance pass over the given artifacts, in
     dependency order: crashed-generation roll-forward → corpus
     duplicate reconciliation (deep only — the multi-writer race /
-    replay convergence pass) → dedup-index compaction (which
-    also regenerates the commit markers) → standalone marker
-    regeneration (only when compaction did NOT run) → corpus
-    compaction with fused z-order →
-    ANN resize → IVF rebuild. Each sub-pass takes its own advisory
-    lock exactly as when called directly; a pass whose threshold
-    isn't tripped is SKIPPED and says why. Idempotent: a second call
+    replay convergence pass) → dedup-index compaction → corpus
+    compaction with fused z-order → ANN resize → IVF rebuild. Each
+    sub-pass takes its own advisory lock exactly as when called
+    directly; a pass whose threshold isn't tripped is SKIPPED and says
+    why. Idempotent: a second call
     right after finds nothing tripped. Returns
     ``{pass_name: {"ran": bool, "reason": str, ...pass_result}}``.
 
@@ -173,12 +162,6 @@ def maintain_corpus_index(
             spark, index_dir, max_files_per_part, frag_ratio,
             target_file_bytes,
         )
-        if not report["index_compaction"]["ran"]:
-            # compaction regenerates markers itself; only probe the
-            # cache separately when the big pass was skipped
-            report["commit_markers"] = _maybe_regen_markers(
-                spark, index_dir
-            )
     if corpus_path:
         report["corpus_compaction"] = _maybe_compact_corpus(
             spark, corpus_path, partition_by, zorder_cols,
@@ -222,88 +205,26 @@ def _maybe_compact_index(
     spark, index_dir, max_files, frag_ratio, target_bytes
 ) -> dict:
     from irio2024_mapreduce_spark.plans.ingest import (  # noqa: PLC0415
-        _read_manifest_rows,
         compact_corpus_index,
     )
 
-    worst = ("", 0, 0)
     for part in _INDEX_PARTS:
         p = os.path.join(index_dir, part)
         if not os.path.isdir(p):
             continue
         n, ideal, _ = _frag_signal(p, target_bytes)
         if n > max_files or n > frag_ratio * ideal:
-            worst = (part, n, ideal)
-            break
-    dup_keys = 0
-    if not worst[0] and os.path.isdir(os.path.join(index_dir, "manifests")):
-        # lock-free read racing a generation flip's index reseed —
-        # classify through the shared boundary like every other
-        # lock-free reader
-        def _dup_keys() -> int:
-            mrows = _read_manifest_rows(spark, index_dir)
-            return (
-                mrows.count()
-                - mrows.select("stream", "batch_id").distinct().count()
+            out = compact_corpus_index(
+                spark, index_dir, target_file_bytes=target_bytes
             )
-
-        dup_keys = run_lockfree_read(index_dir, _dup_keys)
-    if not worst[0] and dup_keys == 0:
-        return {
-            "ran": False,
-            "reason": (
-                f"no part over {max_files} files or {frag_ratio}x "
-                "ideal; no crash-replay duplicate manifest keys"
-            ),
-        }
-    reason = (
-        f"part {worst[0]}: {worst[1]} files vs ideal {worst[2]}"
-        if worst[0]
-        else f"{dup_keys} crash-replay duplicate manifest keys"
-    )
-    out = compact_corpus_index(
-        spark, index_dir, target_file_bytes=target_bytes
-    )
-    return {"ran": True, "reason": reason, "parts": out}
-
-
-def _maybe_regen_markers(spark, index_dir) -> dict:
-    from irio2024_mapreduce_spark.plans.ingest import (  # noqa: PLC0415
-        _commit_marker,
-        _read_manifest_rows,
-        regenerate_commit_markers,
-    )
-
-    if not os.path.isdir(os.path.join(index_dir, "manifests")):
-        return {"ran": False, "reason": "no manifests part"}
-    # same lock-free-read boundary as _maybe_compact_index: a
-    # generation flip can reseed the index mid-read
-    keys = run_lockfree_read(
-        index_dir,
-        lambda: (
-            _read_manifest_rows(spark, index_dir)
-            .select("stream", "batch_id")
-            .distinct()
-            .collect()
-        ),
-    )
-    missing = sum(
-        1
-        for r in keys
-        if not os.path.exists(
-            _commit_marker(index_dir, r["batch_id"], r["stream"])
-        )
-    )
-    if missing == 0:
-        return {
-            "ran": False,
-            "reason": f"all {len(keys)} recorded keys have markers",
-        }
-    n = regenerate_commit_markers(spark, index_dir)
+            return {
+                "ran": True,
+                "reason": f"part {part}: {n} files vs ideal {ideal}",
+                "parts": out,
+            }
     return {
-        "ran": True,
-        "reason": f"{missing} keys missing markers",
-        "markers": n,
+        "ran": False,
+        "reason": f"no part over {max_files} files or {frag_ratio}x ideal",
     }
 
 

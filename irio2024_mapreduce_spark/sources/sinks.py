@@ -234,6 +234,22 @@ def flush_tree(root: str) -> None:
         fsync_dir(dirpath)
 
 
+def copy_file_durably(src: str, dst: str) -> None:
+    """Copy ``src`` to ``dst`` across filesystems: the copy goes to a
+    hidden temp name beside ``dst``, is fsynced, then is renamed into
+    place with ``os.replace``. A crash mid-copy leaves only the temp
+    name, never a partial file at ``dst`` that an exists-check would
+    take as done. The caller fsyncs ``dst``'s dir."""
+    tmp = os.path.join(
+        os.path.dirname(dst), "." + os.path.basename(dst) + "._publish_tmp"
+    )
+    with open(src, "rb") as fin, open(tmp, "wb") as fout:
+        shutil.copyfileobj(fin, fout)
+        fout.flush()
+        os.fsync(fout.fileno())
+    os.replace(tmp, dst)
+
+
 def atomic_write_file(path: str, content: str) -> None:
     """Create/replace ``path`` with ``content`` atomically AND
     durably: write a sibling temp file, flush + fsync, ``os.replace``,
@@ -578,31 +594,48 @@ FILELIST_NAME = "_filelist.json"
 
 def write_filelist(spark, data_dir: str) -> dict:
     """List ``data_dir``'s committed files once (:func:`parquet_files`),
-    flush every listed file and every dir on the way to them, then
-    atomically (re)write the file-list sidecar. Every caller writes its
-    commit point (a manifest flip, a delta drop, a staged-dir removal)
-    after this, so the commit can never become durable ahead of the
-    Spark-written files it commits. Callers hold the dataset's writer
-    lock, so the walk races nothing; its cost is paid once per WRITE
-    (build / maintenance cadence) instead of once per probe. The schema
-    is captured through the same basePath read shape the probes use, so
+    flush every file the previous sidecar does not list and every dir
+    that gained an entry since, then atomically (re)write the file-list
+    sidecar. Files the previous sidecar lists were flushed before it was
+    written, and Spark appends under fresh names, so an append or fold
+    flushes only what it wrote. Every caller writes its commit point (a
+    manifest flip, a delta drop, a staged-dir removal) after this, so
+    the commit can never become durable ahead of the Spark-written
+    files it commits. Callers hold the dataset's writer lock, so the
+    walk races nothing; its cost is paid once per WRITE (build /
+    maintenance cadence) instead of once per probe. The schema is
+    captured through the same basePath read shape the probes use, so
     partition-column typing is identical by construction."""
     import json as _json
 
+    def up(rel: str) -> str:  # ".." stands for data_dir's parent
+        return ".." if rel == "." else os.path.dirname(rel) or "."
+
+    listed = (read_filelist(data_dir) or {}).get("files") or {}
+    prev = {rel: set(names) for rel, names in listed.items()}
+    # dirs an earlier sidecar made durable: each listed file's dir and
+    # every one above it, up to data_dir's entry in its parent
+    old_dirs: set[str] = set()
+    for rel in prev:
+        while rel not in old_dirs:
+            old_dirs.add(rel)
+            rel = up(rel)
     files: dict[str, list[str]] = {}
+    dirs: set[str] = set()
     first: str | None = None
     for f in parquet_files(data_dir):
-        fsync_file(f)
         root, name = os.path.split(f)
-        files.setdefault(os.path.relpath(root, data_dir), []).append(name)
+        rel = os.path.relpath(root, data_dir)
+        files.setdefault(rel, []).append(name)
         first = first or f
-    # each file's dir and every one above it, up to data_dir's own
-    # entry in its parent (a build's version dir is new too)
-    dirs: set[str] = {".."} if files else set()
-    for rel in files:
-        while rel not in dirs:
+        if name in prev.get(rel, ()):
+            continue
+        fsync_file(f)
+        # the new file's dir, and above it every new dir's parent
+        dirs.add(rel)
+        while rel not in old_dirs and rel != "..":
+            rel = up(rel)
             dirs.add(rel)
-            rel = os.path.dirname(rel) or "."
     for rel in sorted(dirs):
         fsync_dir(os.path.normpath(os.path.join(data_dir, rel)))
     payload: dict = {"version": 1, "files": files}
@@ -662,8 +695,9 @@ def publish_delta_marker(staged_dir: str, target: str) -> None:
     """Commit a staged per-batch delta dir without a directory rename,
     the primitive object storage lacks. Data files are placed at their
     final names first (hardlinks locally, standing in for an
-    object-store server-side copy; idempotent under roll-forward via
-    exists-checks), the touched dirs are fsynced, and the batch's
+    object-store server-side copy, or :func:`copy_file_durably` across
+    filesystems; idempotent under roll-forward via exists-checks), the
+    touched dirs are fsynced, and the batch's
     `_filelist.json` sidecar is written LAST with one atomic
     single-object write: THE commit. Readers treat a sidecar-less
     delta dir as uncommitted and its unlisted files as garbage, so
@@ -684,7 +718,7 @@ def publish_delta_marker(staged_dir: str, target: str) -> None:
             try:
                 os.link(src, dst)
             except OSError:
-                shutil.copy2(src, dst)
+                copy_file_durably(src, dst)
         touched.add(out_dir)
     for d in sorted(touched):
         fsync_dir(d)

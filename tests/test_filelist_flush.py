@@ -10,7 +10,9 @@ Recorded through ``os.fsync`` / ``os.replace`` / ``shutil.rmtree``:
 * every file (and partition dir) of a freshly built ANN version is
   fsynced before the manifest is replaced;
 * every file a fold appends to the layout is fsynced before the first
-  delta batch dir is removed.
+  delta batch dir is removed;
+* a fold fsyncs only the files it appended: the layout's earlier files
+  were flushed before the previous sidecar listed them.
 """
 
 from __future__ import annotations
@@ -116,3 +118,28 @@ def test_fold_flushes_what_it_appends_before_dropping_the_deltas(
         if kind == "rmtree" and os.path.basename(p).startswith("b=")
     )
     assert sorted(appended - _flushed_before(events, drop)) == []
+
+
+def test_fold_fsyncs_only_the_files_it_appended(
+    spark, emb, tmp_path, monkeypatch
+):
+    idx = os.path.realpath(str(tmp_path / "ann"))
+    build_ann_index(spark, emb.filter(F.col("vec_id") % 2 == 0), idx)
+    m = read_ann_manifest(idx)
+    half = emb.filter(F.col("vec_id") % 2 == 1)
+    staged = str(tmp_path / "staging" / "ann_index")
+    stored_index.stage_delta(FAMILY, spark, half, idx, m, staged, 1)
+    ex = {"kind": "ann", "root": idx, "data": m["data"],
+          "delta": "b=test.1", "rows": half.count()}
+    stored_index.publish_delta(staged, ex, acquire_compaction_lock_patiently)
+    data_dir = os.path.join(idx, m["data"])
+    before = set(parquet_files(data_dir))
+    assert before
+
+    events = _record(monkeypatch)
+    fold_ann_deltas(spark, idx)
+    monkeypatch.undo()
+    appended = set(parquet_files(data_dir)) - before
+    assert appended
+    flushed = {p for kind, p in events if kind == "fsync"}
+    assert sorted(flushed & set(parquet_files(data_dir))) == sorted(appended)

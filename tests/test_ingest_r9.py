@@ -2,10 +2,13 @@
 (family/constants validated instead of trusted), the stored
 decontamination half (ingested batches keep the one-shot pipeline's
 eval-set guarantee), exactly-once manifest recording keyed by
-batch_id, and the probe-time re-cap that restores the posting-cap
+batch_id (the commit marker holds the manifest), and the probe-time
+re-cap that restores the posting-cap
 invariant on an append-grown stored index."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -132,7 +135,8 @@ def test_ingest_without_benchmark_skips_decontamination(spark, tmp_path):
 def test_batch_id_makes_manifest_exactly_once(spark, tmp_path):
     """A replayed batch_id (the at-least-once foreachBatch redelivery)
     short-circuits: the recorded manifest comes back, and neither the
-    corpus, the stats rows, nor the manifests table gain rows."""
+    corpus, the stats rows, nor the commit markers grow. The replay
+    check reads the marker alone, so it needs no SparkSession."""
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "corpus")
     build_corpus_index(spark, _frame(spark, [(1, T_CORPUS)]), idx)
@@ -144,8 +148,8 @@ def test_batch_id_makes_manifest_exactly_once(spark, tmp_path):
     corpus_rows = spark.read.parquet(f"{out}/clean_documents.parquet").count()
     stats_rows = spark.read.parquet(f"{idx}/stats").count()
 
-    # replay the SAME batch id — the commit marker (manifest row,
-    # written last) proves every append landed, so nothing re-runs
+    # replay the SAME batch id — the commit marker (written last)
+    # proves every append landed, so nothing re-runs
     m2 = ingest_batch(
         spark, _frame(spark, [(10, T_FRESH)]), idx, out, batch_id=0
     )
@@ -155,11 +159,43 @@ def test_batch_id_makes_manifest_exactly_once(spark, tmp_path):
         == corpus_rows
     )
     assert spark.read.parquet(f"{idx}/stats").count() == stats_rows
-    manifests = spark.read.parquet(f"{idx}/manifests")
-    assert manifests.count() == 1
+    assert len(os.listdir(f"{idx}/_commit_markers")) == 1
     assert read_recorded_manifest(spark, idx, 0) == m1
+    assert read_recorded_manifest(None, idx, 0) == m1
     # an unseen id is a real new batch
-    assert read_recorded_manifest(spark, idx, 1) is None
+    assert read_recorded_manifest(None, idx, 1) is None
+
+
+def test_older_format_index_and_marker_are_refused(spark, tmp_path):
+    """A marker that holds no manifest (the empty markers of format 3)
+    raises the rebuild error instead of reading as 'never committed',
+    which would re-run the batch; a format-3 index manifest is refused
+    by the same error on ingest."""
+    import json
+
+    idx = str(tmp_path / "idx")
+    out = str(tmp_path / "corpus")
+    build_corpus_index(spark, _frame(spark, [(1, T_CORPUS)]), idx)
+    ingest_batch(
+        spark, _frame(spark, [(10, T_FRESH)]), idx, out,
+        batch_id=0, stream="s",
+    )
+    (marker,) = os.listdir(f"{idx}/_commit_markers")
+    with open(f"{idx}/_commit_markers/{marker}", "w") as f:
+        f.write("committed\n")
+    with pytest.raises(ValueError, match="rebuild the index"):
+        read_recorded_manifest(None, idx, 0, stream="s")
+
+    path = os.path.join(idx, INDEX_MANIFEST_NAME)
+    with open(path) as f:
+        manifest = json.load(f)
+    with open(path, "w") as f:
+        json.dump({**manifest, "version": 3}, f)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        ingest_batch(
+            spark, _frame(spark, [(11, T_CORPUS)]), idx, out,
+            batch_id=1, stream="s",
+        )
 
 
 @pytest.mark.slow  # r15: chaos/soak class, off the default gate path
@@ -247,7 +283,7 @@ def test_compact_index_rebuild_semantics_and_dedupe(spark, tmp_path):
         )
 
     build_corpus_index(spark, half(0), idx)
-    # a real batch so the manifests/stats parts exist
+    # a real batch so the stats part holds a batch row
     ingest_batch(spark, _frame(spark, [(5_000, T_FRESH)]), idx, out,
                  batch_id=1)
     # grow the (len_band, "x y z") bucket past the cap across appends,
@@ -288,7 +324,6 @@ def test_compact_index_rebuild_semantics_and_dedupe(spark, tmp_path):
         .count()
     )
     assert hot == 0
-    assert rep["manifests"]["rows_after"] == rep["manifests"]["rows_before"]
     assert rep["stats"]["rows_after"] == rep["stats"]["rows_before"]
     assert all(
         r["files_after"] <= r["files_before"] for r in rep.values()
@@ -395,15 +430,9 @@ def test_ingest_appends_into_split_partitioned_corpus(spark, tmp_path):
 
 @pytest.mark.slow  # r15: chaos/soak class, off the default gate path
 def test_compaction_preserves_exactly_once_markers(spark, tmp_path):
-    """compact_corpus_index swaps the manifests dir wholesale — the
-    O(1) commit markers live OUTSIDE it and are regenerated from the
-    retained rows, so a crash-redelivered (stream, batch_id) still
-    short-circuits after maintenance (markers inside the swapped dir
-    would have been deleted, reverting every batch to 'never
-    committed' and duplicating its manifest/stats rows on replay)."""
-    import os
-    import shutil
-
+    """compact_corpus_index swaps the index parts wholesale; the commit
+    markers live OUTSIDE every swapped part, so a crash-redelivered
+    (stream, batch_id) still short-circuits after maintenance."""
     from irio2024_mapreduce_spark.plans.ingest import (
         compact_corpus_index,
         read_recorded_manifest,
@@ -421,12 +450,11 @@ def test_compaction_preserves_exactly_once_markers(spark, tmp_path):
         stream="s1",
     )
     assert m["appended"] == 1
+    markers = os.listdir(os.path.join(idx, "_commit_markers"))
 
     compact_corpus_index(spark, idx)
-    # marker survived (regenerated) and replay short-circuits
     assert read_recorded_manifest(spark, idx, 0, stream="s1") == m
     hashes = spark.read.parquet(f"{idx}/hashes").count()
-    manifests = spark.read.parquet(f"{idx}/manifests").count()
     replay = ingest_batch(
         spark,
         _frame(spark, [(10, T_FRESH)]),
@@ -437,53 +465,40 @@ def test_compaction_preserves_exactly_once_markers(spark, tmp_path):
     )
     assert replay == m
     assert spark.read.parquet(f"{idx}/hashes").count() == hashes
-    assert spark.read.parquet(f"{idx}/manifests").count() == manifests
-
-    # marker regeneration also BACKFILLS a lost marker dir entirely
-    shutil.rmtree(os.path.join(idx, "_commit_markers"))
-    assert read_recorded_manifest(spark, idx, 0, stream="s1") is None
-    compact_corpus_index(spark, idx)
-    assert read_recorded_manifest(spark, idx, 0, stream="s1") == m
+    assert os.listdir(os.path.join(idx, "_commit_markers")) == markers
 
 
 @pytest.mark.slow  # r15: chaos/soak class, off the default gate path
-def test_crashed_manifest_swap_recovers_before_any_access(spark, tmp_path):
-    """A compaction hard-killed between its two manifests renames
-    leaves the rows at manifests._compact_old. Every manifests access
-    (replay read, new record) must RESTORE that snapshot first —
-    appending beside it would split-brain the record (readers prefer
-    the near-empty live dir; the next compaction deletes the snapshot
-    as post-swap garbage)."""
-    import os
-
-    from irio2024_mapreduce_spark.plans.ingest import (
-        read_recorded_manifest,
-    )
+def test_crashed_stats_swap_recovers_before_any_access(spark, tmp_path):
+    """A compaction hard-killed between its two stats renames leaves
+    the rows at stats._compact_old. Every stats access (census read,
+    new batch row) must RESTORE that snapshot first — appending beside
+    it would split-brain the census (readers prefer the near-empty
+    live dir; the next compaction deletes the snapshot as post-swap
+    garbage)."""
+    from irio2024_mapreduce_spark.plans.ingest import corpus_stats
 
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "corpus")
+    stats, old = os.path.join(idx, "stats"), os.path.join(
+        idx, "stats._compact_old"
+    )
     build_corpus_index(spark, _frame(spark, [(1, T_CORPUS)]), idx)
-    m0 = ingest_batch(
+    ingest_batch(
         spark, _frame(spark, [(10, T_FRESH)]), idx, out,
         batch_id=0, stream="s1",
     )
+    census = corpus_stats(spark, idx)
     # simulate the crash: live dir renamed away, swap never finished
-    os.rename(
-        os.path.join(idx, "manifests"),
-        os.path.join(idx, "manifests._compact_old"),
-    )
+    os.rename(stats, old)
 
-    # a replay read recovers and still short-circuits
-    assert read_recorded_manifest(spark, idx, 0, stream="s1") == m0
-    assert os.path.isdir(os.path.join(idx, "manifests"))
-    assert not os.path.exists(os.path.join(idx, "manifests._compact_old"))
+    # a census read recovers and still counts every row
+    assert corpus_stats(spark, idx) == census
+    assert os.path.isdir(stats) and not os.path.exists(old)
 
-    # crash again, then commit a NEW batch: the record lands in the
-    # RESTORED dir — both batches' records coexist afterwards
-    os.rename(
-        os.path.join(idx, "manifests"),
-        os.path.join(idx, "manifests._compact_old"),
-    )
+    # crash again, then commit a NEW batch: its row lands in the
+    # RESTORED dir — both batches' rows count afterwards
+    os.rename(stats, old)
     m1 = ingest_batch(
         spark,
         _frame(spark, [(11, "a calm harbor town kept its lanterns lit while the tide slowly turned under the old stone pier")]),
@@ -492,8 +507,7 @@ def test_crashed_manifest_swap_recovers_before_any_access(spark, tmp_path):
         batch_id=1, stream="s1",
     )
     assert m1["appended"] == 1
-    assert read_recorded_manifest(spark, idx, 0, stream="s1") == m0
-    assert read_recorded_manifest(spark, idx, 1, stream="s1") == m1
+    assert corpus_stats(spark, idx)["docs"] == census["docs"] + 1
 
 
 def test_crashed_swap_with_stale_lock_still_recovers(spark, tmp_path):
@@ -501,11 +515,7 @@ def test_crashed_swap_with_stale_lock_still_recovers(spark, tmp_path):
     the dead holder's lock (SIGKILL skips the finally). Recovery must
     reap the stale lock and restore the snapshot instead of raising
     'being compacted' forever."""
-    import os
-
-    from irio2024_mapreduce_spark.plans.ingest import (
-        read_recorded_manifest,
-    )
+    from irio2024_mapreduce_spark.plans.ingest import corpus_stats
     from irio2024_mapreduce_spark.sources.sinks import (
         check_not_compacting,
         compaction_lock_path,
@@ -514,17 +524,18 @@ def test_crashed_swap_with_stale_lock_still_recovers(spark, tmp_path):
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "corpus")
     build_corpus_index(spark, _frame(spark, [(1, T_CORPUS)]), idx)
-    m0 = ingest_batch(
+    ingest_batch(
         spark, _frame(spark, [(10, T_FRESH)]), idx, out,
         batch_id=0, stream="s1",
     )
+    census = corpus_stats(spark, idx)
     os.rename(
-        os.path.join(idx, "manifests"),
-        os.path.join(idx, "manifests._compact_old"),
+        os.path.join(idx, "stats"),
+        os.path.join(idx, "stats._compact_old"),
     )
     with open(compaction_lock_path(idx), "w") as f:
         f.write("999999999")  # dead holder
 
-    assert read_recorded_manifest(spark, idx, 0, stream="s1") == m0
-    assert os.path.isdir(os.path.join(idx, "manifests"))
+    assert corpus_stats(spark, idx) == census
+    assert os.path.isdir(os.path.join(idx, "stats"))
     check_not_compacting(idx)  # the leftover file blocks nobody

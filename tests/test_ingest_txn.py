@@ -1,10 +1,10 @@
 """Transactional ingest commit (r9 verdict item 1): kill-at-every-step
 fault injection over ingest_batch's publish protocol. The contract —
-either the WHOLE batch is visible (index + corpus + stats + manifest)
-or NONE of it is; redelivery produces exactly-once corpus contents and
-one manifest row; a maintenance collision aborts losslessly in both
-directions (the old multi-append design's self-conviction loss is
-structurally gone)."""
+either the WHOLE batch is visible (index + corpus + stats + commit
+marker) or NONE of it is; redelivery produces exactly-once corpus
+contents and one commit marker holding the manifest; a maintenance
+collision aborts losslessly in both directions (the old multi-append
+design's self-conviction loss is structurally gone)."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from irio2024_mapreduce_spark.plans import ingest as ingest_mod
 from irio2024_mapreduce_spark.plans.ingest import (
     SimulatedCrash,
     build_corpus_index,
-    compact_corpus_index,
     ingest_batch,
     read_recorded_manifest,
     recover_staged_batches,
@@ -48,7 +47,6 @@ CRASH_POINTS = [
     "move:hashes",
     "move:postings",
     "move:stats",
-    "move:manifests",
     "move:corpus",
     "marker",  # everything moved + marker touched, staging not GC'd
 ]
@@ -92,15 +90,10 @@ def _hashes(spark, idx):
     return spark.read.parquet(os.path.join(idx, "hashes")).count()
 
 
-def _manifest_rows_for(spark, idx, batch_id, stream):
-    import pyspark.sql.functions as F
-
-    return (
-        spark.read.parquet(os.path.join(idx, "manifests"))
-        .filter(
-            (F.col("batch_id") == batch_id) & (F.col("stream") == stream)
-        )
-        .count()
+def _markers_for(idx, batch_id, stream):
+    """How many commit markers record (stream, batch_id): 0 or 1."""
+    return int(
+        os.path.exists(ingest_mod._commit_marker(idx, batch_id, stream))
     )
 
 
@@ -156,7 +149,7 @@ def test_kill_at_every_step(spark, tmp_path):
         ids = _corpus_ids(spark, out)
         assert ids == ref_ids and len(ids) == len(set(ids))
         assert _hashes(spark, idx) == ref_hashes
-        assert _manifest_rows_for(spark, idx, 2, "s") == 1
+        assert _markers_for(idx, 2, "s") == 1
         staged = os.path.join(idx, "_staged")
         # liveness lock FILES persist by design (an unlinked lock
         # becomes invisible to checkers); only DIRS are staged state
@@ -501,31 +494,3 @@ def test_ingest_rejects_corpus_aliased_sim_root(spark, tmp_path):
             batch_id=3, stream="s",
             batch_emb=emb, ann_index_dir=clean,
         )
-
-
-@pytest.mark.slow
-def test_manifest_replay_is_deterministic(spark, tmp_path):
-    """ADVICE r9 (low): a crash-duplicated (stream, batch_id) key must
-    replay the ORIGINAL row (appended desc), not an arbitrary one —
-    and compaction collapses the key to that single winner row."""
-    idx, out = _setup(spark, tmp_path)
-    m = ingest_batch(
-        spark, _frame(spark, T_BATCH), idx, out, batch_id=2, stream="s"
-    )
-    # forge the re-run's all-exact-dups duplicate row for the same key
-    dup = dict(m, appended=0, exact_dups=m["batch_in"], near_dups=0,
-               killed_null_text=0, killed_too_short=0,
-               killed_too_repetitive=0, killed_no_stopwords=0,
-               contaminated_removed=0)
-    row = ("s", 2, *[int(dup[k]) for k in ingest_mod._MANIFEST_KEYS])
-    spark.createDataFrame([row], ingest_mod._MANIFEST_SCHEMA).write.mode(
-        "append"
-    ).parquet(os.path.join(idx, "manifests"))
-    assert _manifest_rows_for(spark, idx, 2, "s") == 2
-
-    replayed = read_recorded_manifest(spark, idx, 2, stream="s")
-    assert replayed == m  # the original wins, deterministically
-
-    compact_corpus_index(spark, idx)
-    assert _manifest_rows_for(spark, idx, 2, "s") == 1
-    assert read_recorded_manifest(spark, idx, 2, stream="s") == m

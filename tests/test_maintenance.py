@@ -145,9 +145,6 @@ def test_one_call_restores_and_second_skips(spark, aged):
     assert not report2["corpus_compaction"]["ran"]
     assert not report2["ann_resize"]["ran"]
     assert not report2["ivf_rebuild"]["ran"]
-    # markers probe ran in place of the skipped compaction and found
-    # the cache complete
-    assert not report2["commit_markers"]["ran"]
 
 
 def test_ann_duplicate_appends_trip_the_resize_pass(spark, tmp_path):
@@ -364,24 +361,6 @@ def test_ivf_hot_cells_force_retrain_and_restore_recall(spark, tmp_path):
         imbalance_ratio=2.0, imbalance_min_rows=50,
     )
     assert not report2["ivf_rebuild"]["ran"], report2["ivf_rebuild"]
-
-
-@pytest.mark.slow  # r15: chaos/soak class, off the default gate path
-def test_missing_markers_trip_regeneration(spark, tmp_path):
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "corpus")
-    build_corpus_index(spark, _docs(spark, range(100, 104)), idx)
-    ingest_batch(
-        spark, _docs(spark, range(200, 204)), idx, out,
-        batch_id=0, stream="s",
-    )
-    markers = os.path.join(idx, "_commit_markers")
-    for n in os.listdir(markers):
-        os.unlink(os.path.join(markers, n))
-    report = maintain_corpus_index(spark, index_dir=idx)
-    if report["index_compaction"]["ran"]:
-        pytest.skip("fixture tripped compaction; markers covered there")
-    assert report["commit_markers"]["ran"]
-    assert os.listdir(markers)
 
 
 @pytest.mark.slow  # r15: chaos/soak class, off the default gate path
@@ -822,70 +801,3 @@ def test_fold_crash_flag_is_one_shot_sigkill_analog(tmp_path):
         capture_output=True, text=True, timeout=60,
     )
     assert p2.returncode == 0 and "survived" in p2.stdout
-
-
-def test_compact_decision_classifies_vanished_manifest_read(
-    spark, tmp_path, monkeypatch
-):
-    """The r14 marker-mode soak caught _maybe_compact_index's
-    lock-free manifests read dying with a raw Py4JJavaError when a
-    generation flip reseeded the index mid-read. The read now goes
-    through run_lockfree_read: a vanished-file failure retries once
-    with a fresh listing (this test's happy path) and, if it vanishes
-    again, surfaces as the protocol's documented retryable — never the
-    raw JVM traceback."""
-    from irio2024_mapreduce_spark.plans import ingest as ingest_mod
-    from irio2024_mapreduce_spark.plans import (
-        maintenance as maintenance_mod,
-    )
-
-    idx = str(tmp_path / "idx")
-    build_corpus_index(
-        spark,
-        spark.createDataFrame(
-            [(1, "a plain seed document with enough ordinary words "
-                 "to pass the funnel and land in the index")],
-            "doc_id long, text string",
-        ),
-        idx,
-    )
-    ingest_batch(
-        spark,
-        spark.createDataFrame(
-            [(2, "a second ordinary document of plain words that the "
-                 "quality funnel keeps without complaint")],
-            "doc_id long, text string",
-        ),
-        idx, str(tmp_path / "corpus"), batch_id=1, stream="s",
-    )
-    real = ingest_mod._read_manifest_rows
-    calls = {"n": 0, "always_vanish": False}
-
-    def _flaky(spark_, index_dir):
-        calls["n"] += 1
-        if calls["n"] == 1 or calls["always_vanish"]:
-            raise Exception(
-                "Py4JJavaError: java.io.FileNotFoundException: File "
-                f"{idx}/manifests/part-0000.snappy.parquet does not "
-                "exist"
-            )
-        return real(spark_, index_dir)
-
-    monkeypatch.setattr(ingest_mod, "_read_manifest_rows", _flaky)
-    out = maintenance_mod._maybe_compact_index(
-        spark, idx, max_files=10_000, frag_ratio=100.0,
-        target_bytes=128 << 20,
-    )
-    assert calls["n"] == 2  # retried once with a fresh listing
-    assert out["ran"] is False  # healthy index: nothing to compact
-
-    # vanishing on the retry too -> the documented retryable, not a
-    # raw Py4JJavaError
-    calls["always_vanish"] = True
-    with pytest.raises(
-        RuntimeError, match="retry after the maintenance window"
-    ):
-        maintenance_mod._maybe_compact_index(
-            spark, idx, max_files=10_000, frag_ratio=100.0,
-            target_bytes=128 << 20,
-        )

@@ -21,6 +21,7 @@ import pytest
 
 from irio2024_mapreduce_spark.plans.ingest import (
     _SCHEMA_SIDECAR,
+    _commit_marker,
     build_corpus_index,
     ingest_batch,
 )
@@ -76,16 +77,8 @@ def _corpus_ids(spark, out):
 
 
 def _manifest_count(spark, idx, batch_id):
-    import pyspark.sql.functions as F
-
-    path = os.path.join(idx, "manifests")
-    if not os.path.isdir(path):
-        return 0  # no batch ever committed against this index
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("batch_id") == batch_id)
-        .count()
-    )
+    """How many commit markers record batch (s, batch_id): 0 or 1."""
+    return int(os.path.exists(_commit_marker(idx, batch_id, "s")))
 
 
 def _sidecar(out):

@@ -1,6 +1,6 @@
-"""Flat compaction and the advisory compaction lock the ingest writer
-honors. The crash matrix of the compactor's publish step lives in
-``test_replace_dataset.py``."""
+"""Flat compaction, the advisory compaction lock the ingest writer
+honors, and the lock-free reader's retry boundary. The crash matrix of
+the compactor's publish step lives in ``test_replace_dataset.py``."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ from irio2024_mapreduce_spark.sources.sinks import (
     acquire_compaction_lock,
     check_not_compacting,
     compact_parquet,
+    run_lockfree_read,
 )
 
 
@@ -104,3 +105,39 @@ def test_crashed_holder_lock_releases_with_its_process(spark, tmp_path):
     finally:
         release_compaction_lock(got)
     check_not_compacting(root)  # released with the fd
+
+
+def test_lockfree_read_retries_one_vanished_file_then_classifies(tmp_path):
+    """A lock-free read whose input files vanish (a compaction swap, a
+    generation flip) is retried once with a fresh listing; a second
+    vanish surfaces as the documented retryable, not a raw JVM error.
+    Any other failure passes through unchanged."""
+    root = str(tmp_path / "idx")
+    calls = []
+
+    def read(vanishes: int):
+        def attempt():
+            calls.append(1)
+            if len(calls) <= vanishes:
+                raise Exception(
+                    "Py4JJavaError: java.io.FileNotFoundException: File "
+                    f"{root}/hashes/part-0000.snappy.parquet does not exist"
+                )
+            return "rows"
+
+        calls.clear()
+        return run_lockfree_read(root, attempt)
+
+    assert read(vanishes=1) == "rows"
+    assert len(calls) == 2
+    with pytest.raises(
+        RuntimeError, match="retry after the maintenance window"
+    ):
+        read(vanishes=2)
+    assert len(calls) == 2
+
+    def broken():
+        raise ValueError("not a vanished file")
+
+    with pytest.raises(ValueError, match="not a vanished file"):
+        run_lockfree_read(root, broken)

@@ -10,14 +10,18 @@ publish step.
 * the recovery classes of both protocols: live holder, dead
   uncommitted, committed without a plan, lock patience exhausted;
 * every staged data file and staging dir is flushed before
-  ``_committed`` is written.
+  ``_committed`` is written;
+* an ingest batch's commit marker holds the plan's manifest, and a
+  cross-device delta copy is flushed before the delta commits.
 """
 
 from __future__ import annotations
 
+import errno
 import hashlib
 import json
 import os
+from unittest import mock
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -35,7 +39,7 @@ from irio2024_mapreduce_spark.sources.sinks import (
     release_flock,
 )
 
-INDEX_PARTS = ["hashes", "postings", "stats", "manifests"]
+INDEX_PARTS = ["hashes", "postings", "stats"]
 SIM_PARTS = ["ann_index", "ivf_index"]
 INGEST_POINTS = [
     "stage",
@@ -48,6 +52,9 @@ INGEST_POINTS = [
 PREP_POINTS = ["stage", "commit", "swap:corpus", "swap:packs", "swap:index"]
 PRE_COMMIT = {"stage"}
 NOTHING = {"rolled_forward": 0, "discarded": 0, "in_flight": 0}
+MANIFEST = {"batch_in": 3, "exact_dups": 1, "near_dups": 0, "appended": 2}
+# batch (s, 2)'s staging name, which its commit marker shares
+_MARKER_NAME = hashlib.md5(b"s").hexdigest()[:10] + "_2"
 
 
 def _parquet(path: str, **cols) -> None:
@@ -65,8 +72,7 @@ def _ingest_world(root: str) -> str:
     for part in INDEX_PARTS:
         _parquet(os.path.join(idx, part, "part-00000-a.parquet"), k=[1])
     _parquet(os.path.join(corpus, "part-00000-a.parquet"), doc_id=[1])
-    name = hashlib.md5(b"s").hexdigest()[:10] + "_2"
-    staging = os.path.join(idx, "_staged", name)
+    staging = os.path.join(idx, "_staged", _MARKER_NAME)
     for part in INDEX_PARTS + ["corpus"]:
         _parquet(os.path.join(staging, part, "part-00000-b.parquet"), k=[2, 3])
         open(os.path.join(staging, part, "_SUCCESS"), "w").close()
@@ -90,10 +96,20 @@ def _ingest_world(root: str) -> str:
         })
     with open(os.path.join(staging, "_publish_plan.json"), "w") as f:
         json.dump({
-            "stream": "s", "batch_id": 2, "index_parts": INDEX_PARTS,
-            "corpus_root": corpus, "similarity_indexes": sims,
+            "stream": "s", "batch_id": 2, "manifest": MANIFEST,
+            "index_parts": INDEX_PARTS, "corpus_root": corpus,
+            "similarity_indexes": sims,
         }, f)
     return staging
+
+
+def _marker(staging: str) -> dict | None:
+    """The commit marker of batch (s, 2) parsed, or None when absent."""
+    path = os.path.join(_root(staging), "_commit_markers", _MARKER_NAME)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
 
 
 def _prep_world(root: str) -> str:
@@ -213,6 +229,9 @@ def test_crash_point_recovers_to_the_crash_free_publish(
     assert _visible(world) == (before if pre_commit else want)
     assert _staging_dirs(staging) == []
     assert p["recover"](staging) == NOTHING
+    if proto == "ingest":
+        assert _marker(ref) == MANIFEST
+        assert _marker(staging) == (None if pre_commit else MANIFEST)
 
 
 @pytest.mark.parametrize("proto", ["ingest", "prep"])
@@ -316,3 +335,46 @@ def test_staged_data_is_flushed_before_the_commit(
     flushed = set(events[:commit_at])
     assert sorted(files - flushed) == []
     assert sorted(dirs - flushed) == []
+
+
+def test_cross_device_delta_copy_is_flushed_before_the_delta_commits(
+    tmp_path, monkeypatch
+):
+    """When ``os.link`` fails (a similarity index on another filesystem
+    than the staging), every delta file is copied to a temp name,
+    fsynced and renamed into place before the delta's ``_filelist.json``
+    sidecar, its commit, is replaced in."""
+    staging = os.path.realpath(_ingest_world(str(tmp_path)))
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def link(src, dst, *a, **kw):
+        raise OSError(errno.EXDEV, "Invalid cross-device link", dst)
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return real_fsync(fd)
+
+    def replace(src, dst, *a, **kw):
+        events.append(
+            ("replace", os.path.realpath(src), os.path.realpath(dst))
+        )
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "link", link)
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    ingest_mod._publish_staged(staging)
+    monkeypatch.undo()
+    for kind in ("ann", "ivf"):
+        delta = os.path.join(
+            os.path.dirname(_root(staging)), kind, "v1.deltas", "b=s.2"
+        )
+        copied = os.path.join(delta, "tbl=0", "part-0.parquet")
+        commit = events.index(
+            ("replace", mock.ANY, os.path.join(delta, FILELIST_NAME))
+        )
+        # the file reached its name by a replace of a fsynced temp file
+        placed = events.index(("replace", mock.ANY, copied))
+        assert placed < commit
+        assert ("fsync", events[placed][1]) in events[:placed]
