@@ -4,10 +4,10 @@
      "value_r01_comparable_subset": sec, "queries": {name: sec, ...},
      "sf": ..., "load_avg_start": [...], "load_avg_end": [...]}
 
-The per-iteration diagnostics (iteration walls, GC deltas, JIT code
-cache, flagged transients) go to a SIDECAR file — $SPARK_GRAFT_BENCH_
-DETAIL, default ./BENCH_DETAIL_last.json — NOT stdout. Round 5's
-enriched stdout line overflowed the driver's tail capture and the
+The per-iteration diagnostics (iteration walls, GC deltas, classes
+compiled, JIT code cache, flagged transients) go to a SIDECAR file —
+$SPARK_GRAFT_BENCH_DETAIL, default ./BENCH_DETAIL_last.json — NOT
+stdout. Round 5's enriched stdout line overflowed the driver's tail capture and the
 round's official number was lost ("parsed": null in BENCH_r05.json);
 the final stdout line must stay short enough to survive a ~2 KiB tail.
 
@@ -28,7 +28,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from irio2024_mapreduce_spark import registry
-from irio2024_mapreduce_spark.session import drain_driver_backlog, get_spark
+from irio2024_mapreduce_spark.session import (
+    compile_counters,
+    drain_driver_backlog,
+    get_spark,
+)
 
 # Representative of every operator family: scan+flatMap+agg, hash agg,
 # broadcast & shuffle joins, window w/ frame, time windows, dedup,
@@ -318,12 +322,16 @@ def main() -> None:
 
     def jvm_code_cache_mb() -> float:
         """Used bytes across the JIT CodeHeap pools. Whole-stage
-        codegen mints fresh classes whenever a plan differs (and
-        checkpoint RDD ids make repeat invocations differ), so a long
-        multi-query battery can fill the code cache; when it fills,
-        the JIT stops compiling and hot loops run interpreted until
-        the sweeper frees space — a progressive-slowdown-then-recover
-        signature. Sampled per transient to confirm/refute."""
+        codegen mints a fresh class for every plan it has not compiled
+        yet (a repeated plan reuses its class from the session's
+        generated-class cache: on repeat, at most three of the 32
+        headline queries compile anything, a few classes that differ
+        only in an AQE-assigned stage number or a re-planned join),
+        and the JIT compiles each new class into this cache; when it
+        fills, the JIT stops compiling and
+        hot loops run interpreted until the sweeper frees space — a
+        progressive-slowdown-then-recover signature. Sampled per
+        transient to confirm/refute."""
         pools = sc._jvm.java.lang.management.ManagementFactory\
             .getMemoryPoolMXBeans()
         used = 0
@@ -347,6 +355,7 @@ def main() -> None:
     sc = spark.sparkContext
     iteration_times: dict[str, list[float]] = {}
     iteration_gc_ms: dict[str, list[int]] = {}
+    iteration_compiles: dict[str, list[int]] = {}
     code_cache_mb: dict[str, float] = {}
     transients: dict[str, dict] = {}
     # build-vs-probe decomposition of the stored-index fixture
@@ -393,13 +402,17 @@ def main() -> None:
             FIXTURE_LOGS[name].clear()
         times: list[float] = []
         gc_deltas: list[int] = []
+        compiles: list[int] = []
         for _ in range(ITERATIONS):
             gc.collect()
             gc0 = jvm_gc_ms()
+            cg0 = compile_counters(spark)[0]
             t0 = time.perf_counter()
             run_once(qs[name](spark, sf_dir))
             times.append(time.perf_counter() - t0)
             gc_deltas.append(jvm_gc_ms() - gc0)
+            # classes Janino compiled: 0 once the plan's are cached
+            compiles.append(compile_counters(spark)[0] - cg0)
         # the transient signature is a LATER iteration much slower
         # than something that already ran fast — compare each
         # iteration to the best of the EARLIER ones only. (Comparing
@@ -437,6 +450,7 @@ def main() -> None:
             }
         iteration_times[name] = [round(t, 3) for t in times]
         iteration_gc_ms[name] = gc_deltas
+        iteration_compiles[name] = compiles
         code_cache_mb[name] = jvm_code_cache_mb()
         results[name] = round(min(times), 3)
         if name in FIXTURE_LOGS and len(FIXTURE_LOGS[name]) >= len(times):
@@ -538,6 +552,7 @@ def main() -> None:
                 "iteration_times": iteration_times,
                 "stored_probe_decomposition": stored_probe_decomposition,
                 "iteration_gc_ms": iteration_gc_ms,
+                "codegen_compiles": iteration_compiles,
                 "code_cache_mb_after": code_cache_mb,
                 "transients": transients,
                 "sf": sf_dir,

@@ -249,9 +249,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unchanged half makes the jump the identity). Checking BEFORE
         # the jump skips the final round's jump join + checkpoint —
         # work a post-jump check would throw away.
-        changed = (
-            half.filter(F.col("label") != F.col("_old")).limit(1).count()
-        )
+        #
+        # A plain count, not limit(1).count(): Spark names each limit
+        # operator's counter field from a JVM-wide sequence
+        # (``_limit_counter_N``), so every limit generates a class the
+        # generated-class cache can never reuse, two per round. The
+        # limit saved no work: the lazy checkpoint materializes each
+        # partition of `half` whole before the filter reads it.
+        changed = half.filter(F.col("label") != F.col("_old")).count()
         # the count's job materializes `half` (and, by lazy-checkpoint
         # cascade, the previous round's labels it reads), so the
         # previous round's `half` blocks are now dead

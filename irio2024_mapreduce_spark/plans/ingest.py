@@ -904,8 +904,13 @@ def _stage_batch(
         delta_tag = "b=" + os.path.basename(staging)
     from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
 
+    from pyspark import inheritable_thread_target  # noqa: PLC0415
+
+    # job groups and tags are thread-local: each pool job inherits the
+    # caller's, so the staged writes count toward the caller's phase
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=8) as pool:
-        futures = [pool.submit(j) for j in write_jobs]
+        futures = [pool.submit(inherit(j)) for j in write_jobs]
         # the count doubles as the vector DIMENSION gate: one
         # aggregate verifies every admitted vector is EMB_DIM wide
         # before any index part ships it — still pre-commit (no
@@ -928,8 +933,8 @@ def _stage_batch(
             m = stored_index.read_manifest(fam, root)
             dst = os.path.join(staging, f"{kind}_index")
             futures.append(pool.submit(
-                stored_index.stage_delta, fam, spark, vecs, root, m, dst,
-                width,
+                inherit(stored_index.stage_delta), fam, spark, vecs, root,
+                m, dst, width,
             ))
             extras.append({
                 "kind": kind, "root": os.path.abspath(root),

@@ -5,6 +5,8 @@ in batch 1 must convict its duplicates in batch 2)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -66,6 +68,43 @@ def test_stored_index_verdicts_match_graded_query(spark, sf_dir, tmp_path):
     assert shipped.count() == m["appended"]
     # the index grew by the survivors' rows — next batch sees them
     assert spark.read.parquet(f"{idx}/hashes").count() > counts["hashes_rows"]
+
+
+def test_staged_writes_run_under_the_callers_job_group(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Job groups are thread-local, and the staged part writes run on a
+    thread pool: each must still carry the caller's group, so a tracer
+    that reads the group sees every job the batch ran."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    docs = load_table(spark, sf_dir, "documents")
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "corpus")
+    build_corpus_index(spark, docs.filter(F.col("doc_id") % 10 != 9), idx)
+    sc, group = spark.sparkContext, "ingest-under-test"
+    writes: list[tuple[str, str | None]] = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        writes.append((path, sc.getLocalProperty("spark.jobGroup.id")))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "ingest")
+    try:
+        ingest_batch(spark, docs.filter(F.col("doc_id") % 10 == 9), idx, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    staged = [p for p, _ in writes
+              if os.path.basename(p) in ("hashes", "postings", "stats", "corpus")]
+    assert len(staged) == 4, writes
+    assert {g for _, g in writes} == {group}, writes
+    grouped = set(tracker.getJobIdsForGroup(group))
+    assert len(grouped) >= len(writes)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
 
 
 @pytest.mark.slow  # r15: chaos/soak class, off the default gate path

@@ -14,7 +14,7 @@ from tools import profiler as P
 SPAN_FIELDS = {
     "wall_s", "jobs", "stages", "tasks", "max_tasks_per_stage",
     "executor_run_s", "executor_cpu_s", "shuffle_read_mb",
-    "shuffle_write_mb", "spill_mb",
+    "shuffle_write_mb", "spill_mb", "codegen_compiles", "jit_ms",
 }
 
 
@@ -30,6 +30,8 @@ def test_layers_splits_wordcount_into_build_plan_exec(spark, sf_dir):
     assert ex["tasks"] >= ex["max_tasks_per_stage"] >= 1
     assert ex["executor_cpu_s"] > 0
     assert rec["plan"]["jobs"] == 0
+    # the generated-class cache holds the earlier runs' classes
+    assert sum(again[s]["codegen_compiles"] for s in P.SPANS) == 0
 
 
 def test_ab_identical_arms_report_times_and_restore_conf(spark, sf_dir):

@@ -9,7 +9,10 @@ Each run splits a query into spans under their own Spark job groups
 (``perfbench.spans.Tracer``): ``build`` (the query function plus the
 lazy ``localCheckpoint`` jobs it forces), ``plan`` (``executedPlan()``)
 and ``exec`` (a noop-sink write), each with wall, jobs, stages, tasks,
-max tasks per stage, executor run/CPU, shuffle read/write and spill.
+max tasks per stage, executor run/CPU, shuffle read/write and spill,
+plus the compile layer executor CPU cannot show: ``codegen_compiles``
+(classes Janino compiled, from Spark's ``CodegenMetrics``) and
+``jit_ms`` (JVM JIT compile time), each the change across the span.
 The status store is read after every run, before
 ``spark.ui.retainedStages`` evicts its stages. ``layers`` keeps each
 query's fastest of N runs, plus ``explain("formatted")`` dumps with
@@ -40,7 +43,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import HEADLINE
 from irio2024_mapreduce_spark import registry
 from irio2024_mapreduce_spark.operators.similarity import DRIVER_ORACLE_SF
-from irio2024_mapreduce_spark.session import drain_driver_backlog, get_spark
+from irio2024_mapreduce_spark.session import (
+    compile_counters,
+    drain_driver_backlog,
+    get_spark,
+)
 from perfbench.spans import Tracer
 from tools.check_oracle import value_hash
 
@@ -69,17 +76,23 @@ def run_once(spark, fn, sf_dir: str, name: str):
     # each Tracer numbers spans from 1: the run tag keeps job groups apart
     tracer, tag = Tracer(spark), f"{name}#{uuid.uuid4().hex[:12]}"
     gc.collect()
+    # read outside the spans, so the py4j calls stay out of their walls
+    counters = [compile_counters(spark)]
     with tracer.span(f"{tag}:build", "build", jobs=True):
         df = fn(spark, sf_dir)
+    counters.append(compile_counters(spark))
     with tracer.span(f"{tag}:plan", "plan", jobs=True):
         df._jdf.queryExecution().executedPlan()
+    counters.append(compile_counters(spark))
     with tracer.span(f"{tag}:exec", "exec", jobs=True):
         df.write.mode("overwrite").format("noop").save()
+    counters.append(compile_counters(spark))
     groups = tracer.group_stats()
     tracker = spark.sparkContext.statusTracker()
     rec = {}
-    for s in tracer.spans:
+    for i, s in enumerate(tracer.spans):
         g, tasks = groups[s.group], _stage_tasks(tracker, s.group)
+        (cg0, jit0), (cg1, jit1) = counters[i], counters[i + 1]
         spill = g["memoryBytesSpilled"] + g["diskBytesSpilled"]
         rec[s.layer] = {
             "wall_s": round(s.end - s.start, 4), "jobs": g["jobs"],
@@ -90,6 +103,7 @@ def run_once(spark, fn, sf_dir: str, name: str):
             "shuffle_read_mb": round(g["shuffleReadBytes"] / 1e6, 4),
             "shuffle_write_mb": round(g["shuffleWriteBytes"] / 1e6, 4),
             "spill_mb": round(spill / 1e6, 4),
+            "codegen_compiles": cg1 - cg0, "jit_ms": jit1 - jit0,
         }
     rec["wall_s"] = round(sum(rec[s]["wall_s"] for s in SPANS), 4)
     return rec, df
@@ -110,7 +124,9 @@ def layers(spark, sf_dir: str, names, iters: int = 2, explain_dir=None) -> dict:
                     df._jdf.queryExecution(), "formatted"))
         print(f"{name:24s} " + "  ".join(
             f"{s} {best[s]['wall_s']:.3f}s/{best[s]['jobs']}j/"
-            f"{best[s]['executor_cpu_s']:.2f}cpu" for s in SPANS
+            f"{best[s]['executor_cpu_s']:.2f}cpu/"
+            f"{best[s]['codegen_compiles']}cg/{best[s]['jit_ms']}msjit"
+            for s in SPANS
         ), flush=True)
     return out
 
