@@ -149,7 +149,8 @@ CANARY_REF_SEC = 0.250
 # comparable across rounds: replaying this over the r12 (clean) and
 # r13 (all load-flagged) sidecar pairs brings untouched queries to a
 # median ratio of 1.02 where the raw seconds read a phantom
-# 1.19-1.34× regression (tools/validate_canary_norm.py). NEVER mix
+# 1.19-1.34× regression (SCALE.md, "Round-14: load-proof bench
+# normalization", records the replay). NEVER mix
 # this with the COLD reference: cold canaries measure JVM-cold state and
 # over-correct (0.33 cold vs 0.19 steady on the same host).
 CANARY_STEADY_REF_SEC = 0.164
@@ -523,7 +524,7 @@ def main() -> None:
                 # steady-normalized series (r14): cross-round
                 # per-query comparison that survives host drift —
                 # validated over the r12/r13 sidecar pairs
-                # (tools/validate_canary_norm.py)
+                # (SCALE.md, "Round-14: load-proof bench normalization")
                 "canary_steady_ref_sec": CANARY_STEADY_REF_SEC,
                 "queries_steady_normalized": queries_steady_normalized,
                 "subset_steady_normalized_sec": subset_steady_norm,

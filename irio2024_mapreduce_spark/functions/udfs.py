@@ -1,10 +1,13 @@
-"""User-function surface helpers (SURVEY.md §2.3 closing note):
-one Arrow-batched scalar ``pandas_udf`` and one ``applyInPandas``
-grouped-map example, exposed as library utilities.
+"""User-function surface helpers: one Arrow-batched scalar
+``pandas_udf`` and one ``applyInPandas`` grouped-map example, exposed
+as library utilities.
 
-These are the sanctioned escape hatches when built-ins can't express
-the semantics — always Arrow-batched (10-100× over row-at-a-time
-Python UDFs), never in the hot path of the declared queries.
+No engine path calls them: they are the only code behind SURVEY.md
+§2.3's UDF line ("expose one ``pandas_udf`` scalar example and one
+``applyInPandas`` grouped-map example as library helpers"). They are
+the sanctioned escape hatches when built-ins can't express the
+semantics — always Arrow-batched (10-100× over row-at-a-time Python
+UDFs), never in the hot path of the declared queries.
 """
 
 from __future__ import annotations
@@ -16,10 +19,10 @@ from pyspark.sql.functions import pandas_udf
 
 
 def zscore_scalar():
-    """Batch-local z-score — scalar pandas UDF example (one Arrow
-    batch in, one out; vectorized numpy under the hood). Built lazily:
-    the ``pandas_udf`` decorator needs an active SparkSession, so it
-    can't run at import time."""
+    """Batch-local z-score — SURVEY.md §2.3's scalar pandas UDF
+    example (one Arrow batch in, one out; vectorized numpy under the
+    hood). Built lazily: the ``pandas_udf`` decorator needs an active
+    SparkSession, so it can't run at import time."""
 
     @pandas_udf("double")
     def _zscore(v: pd.Series) -> pd.Series:
@@ -32,11 +35,11 @@ def zscore_scalar():
 
 
 def zscore_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """Grouped-map ``applyInPandas`` example: true per-group z-score
-    (the scalar UDF above normalizes per-batch; this one shuffles by
-    group and normalizes per-group — the semantics built-in window
-    aggs could also express, kept here as the canonical grouped-map
-    template)."""
+    """SURVEY.md §2.3's grouped-map ``applyInPandas`` example: true
+    per-group z-score (the scalar UDF above normalizes per-batch; this
+    one shuffles by group and normalizes per-group — the semantics
+    built-in window aggs could also express, kept here as the
+    canonical grouped-map template)."""
     schema = f"{group_col} string, {value_col} double, z double"
 
     def norm(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -55,46 +58,3 @@ def zscore_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
         .groupBy(group_col)
         .applyInPandas(norm, schema=schema)
     )
-
-
-def weighted_mean_udaf():
-    """Grouped-aggregate pandas UDF (the UDAF shape): weighted mean
-    over two columns, one Arrow-shipped group per call, scalar out.
-    Spark plans it as a full-shuffle aggregation WITHOUT a partial
-    phase (a Python aggregate can't split into partial/merge the way
-    JVM ``avg`` does) — which is exactly why the declared queries use
-    built-ins and this exists as the documented escape hatch."""
-
-    @pandas_udf("double")
-    def _wmean(v: pd.Series, w: pd.Series) -> float:
-        tw = w.sum()
-        return float((v * w).sum() / tw) if tw else float("nan")
-
-    return _wmean
-
-
-def split_ledger_udtf():
-    """Python UDTF (table function) example — one input row fans out
-    to N typed rows, the 1→N shape `explode` can't express when the
-    expansion needs imperative parsing. Parses a packed
-    ``"k1:v1,k2:v2"`` ledger string into (entry_key, entry_value)
-    rows. Lazily built (`udtf` needs an active session); returned
-    class is registered by the caller via
-    ``spark.udtf.register(name, fn)`` or used inline in the DataFrame
-    API. Arrow-batched by Spark 4's UDTF executor."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="entry_key: string, entry_value: double")
-    class SplitLedger:
-        def eval(self, ledger: str):  # noqa: D401 — UDTF protocol
-            if not ledger:
-                return
-            for part in ledger.split(","):
-                k, _, v = part.partition(":")
-                try:
-                    yield k.strip(), float(v)
-                except ValueError:
-                    # malformed entry: surface as NaN, never a crash
-                    yield k.strip(), float("nan")
-
-    return SplitLedger

@@ -406,7 +406,7 @@ QUERIES = {
 }
 
 # Never-registered (driver window full): verified by the local
-# harness in tests/test_retired_twins.py. The oracle embeds the
+# harness in tests/test_query_battery.py. The oracle embeds the
 # doc_chunk CTE verbatim so the two can never drift.
 RETIRED_TWIN_QUERIES = {"boilerplate_chunks": boilerplate_chunks}
 RETIRED_TWIN_ORACLES = {

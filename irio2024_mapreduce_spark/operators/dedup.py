@@ -1326,7 +1326,7 @@ ORACLE_SQL = {
 }
 
 # Ungraded pool (driver window full at 50), run every test run by
-# tests/test_retired_twins.py. dedup_simhash_md5 is oracle-checked:
+# tests/test_query_battery.py. dedup_simhash_md5 is oracle-checked:
 # the only oracle check of the benched SimHash pipeline (votes →
 # bit-sum → chunks → hamming verify). dedup_simhash and dedup_near
 # have no oracle entry, so they are rows-only: seeded xxhash64 is not

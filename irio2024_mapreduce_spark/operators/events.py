@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from irio2024_mapreduce_spark.sources.tables import load_table
 
@@ -85,68 +84,10 @@ def event_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SESSION_GAP_S = 30 * 60
-
-
-def event_session_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands formulation of :func:`event_session` —
-    identical output contract and merge semantics (an event exactly
-    ``gap`` after the previous one merges: the flag fires on
-    strictly-greater gaps, mirroring ``session_window``'s
-    next.start <= prev.end merge rule; parity pinned in
-    ``tests/test_operators.py``).
-
-    Why both exist: the native ``session_window`` aggregate is the
-    idiomatic Catalyst operator (and the one the streaming sessionizer
-    semantics mirror), but its physical plan sorts within the
-    aggregate via UpdatingSessions; this form trades that for one
-    exchange on user_id + in-partition sort + two window passes and a
-    final hash aggregate. Measured at 100× events (10 M rows,
-    alternating min-of-2 on identical staging; SCALE.md, "Session
-    forms A/B"): islands 1.94 s vs native
-    3.14 s — 1.6× — so this is the recommended form at the 100 TB end,
-    while the registered query keeps the native operator (same
-    asymptote, streaming-parity showcase)."""
-    events = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    flagged = events.select(
-        "user_id",
-        "ts",
-        "value",
-        # microsecond precision, NOT cast('long'): the second-floor
-        # form computes floor-second diffs, so a true gap in
-        # (GAP, GAP+1s) — e.g. 1800.5 s — would read as exactly GAP
-        # and merge sessions the native session_window (full-precision
-        # '> gap') splits, breaking the row-identical parity pin at
-        # the boundary band
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-            > SESSION_GAP_S * 1_000_000,
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    ).withColumn("session_ord", F.sum("new_session").over(w))
-    return (
-        flagged.groupBy("user_id", "session_ord")
-        .agg(
-            F.min("ts").alias("session_start"),
-            (
-                F.max("ts") + F.expr(f"INTERVAL {SESSION_GAP_S} SECONDS")
-            ).alias("session_end"),
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id", "session_start", "session_end", "n_events", "sum_value"
-        )
-    )
-
-
 # event_tumbling is ungraded: tumbling is event_sliding with step ==
 # size, so the windowing family stays driver-graded through E18/E19.
 # It stays implemented and locally oracle-verified every test run
-# (tests/test_retired_twins.py), and is the batch reference of the
+# (tests/test_query_battery.py), and is the batch reference of the
 # streaming parity test in tests/test_streaming.py.
 RETIRED_TWIN_ORACLES = {
     "event_tumbling": """

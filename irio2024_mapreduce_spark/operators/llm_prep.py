@@ -219,24 +219,6 @@ def _pack_from_counts(spark: SparkSession, counts: DataFrame) -> DataFrame:
     return _assign(packed)
 
 
-def pack_sequences_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-partition reference form (Exchange SinglePartition —
-    correct, unscalable). Exists as the equality witness for
-    :func:`pack_sequences`; never registered."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.orderBy("shuffle_key", "doc_id")
-    cum = _keyed_tokens(docs).withColumn(
-        "cum", F.sum("n_tokens").over(w)
-    )
-    return _assign(
-        cum.select(
-            "doc_id",
-            "n_tokens",
-            (F.col("cum") - F.col("n_tokens")).alias("seq_offset"),
-        )
-    )
-
-
 # Source-mixing weights (units of 1/256 so the fractional part is an
 # exact two-hex-digit threshold on md5(doc_id) — lowercase fixed-width
 # hex compares identically lexicographically in both engines):
@@ -987,7 +969,7 @@ ORACLE_SQL = {
 }
 
 # Never-registered local-oracle queries (driver window is full at 50):
-# verified every test run by tests/test_retired_twins.py's harness
+# verified every test run by tests/test_query_battery.py
 # with the same rows/schema/value-hash discipline as the driver.
 RETIRED_TWIN_QUERIES = {
     "pii_scrub": pii_scrub,

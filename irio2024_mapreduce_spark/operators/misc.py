@@ -137,7 +137,7 @@ def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Ungraded local-oracle extras (the 50-entry driver window is full):
-# verified every test run by tests/test_retired_twins.py. sketches has
+# verified every test run by tests/test_query_battery.py. sketches has
 # no oracle by design (sketch internals differ across engines), so it
 # is checked rows-only there; its real verification is the error-bound
 # assertions against the exact twin columns

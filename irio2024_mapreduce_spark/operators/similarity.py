@@ -1350,7 +1350,7 @@ def _stored_ivf_oracle_for(sf_dir: str) -> str:
 
 
 # Ungraded local-oracle queries (the driver window is full at 50),
-# verified every test run by tests/test_retired_twins.py. The
+# verified every test run by tests/test_query_battery.py. The
 # on-the-fly similarity_ann and similarity_ivf gave their graded
 # slots to the stored-index probes above and stay here as their
 # parity references (tests/test_ann_index.py,

@@ -454,19 +454,6 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     )
 
 
-def rolling_hash(tokens: Column) -> Column:
-    """Order-sensitive 64-bit document fingerprint: left fold of
-    ``h ← xxhash64(h, token)`` over the token sequence — permutations
-    of the same tokens produce different hashes, unlike a bag-of-words
-    digest.
-    Chained xxhash64 instead of the classic ``h*31+c`` polynomial
-    because ANSI mode forbids wrapping long arithmetic. Not portable
-    to the SQL oracle; covered by unit tests."""
-    return F.aggregate(
-        tokens, F.lit(0).cast("long"), lambda acc, t: F.xxhash64(acc, t)
-    )
-
-
 def _sql_overlap(code: str) -> str:
     words = ", ".join(f"'{w}'" for w in STOPWORDS[code])
     return (
@@ -647,7 +634,7 @@ QUERIES = {
 }
 
 # Ungraded local-oracle extras (the driver window is full), verified
-# every test run by tests/test_retired_twins.py.
+# every test run by tests/test_query_battery.py.
 RETIRED_TWIN_QUERIES = {
     # Gopher-style intra-document repetition signals
     "quality_repetition": quality_repetition,

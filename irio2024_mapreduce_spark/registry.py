@@ -54,7 +54,7 @@ WORDCOUNT_ORACLE = f"""
 # stay inside that window: a near-twin of a graded query, or an extra
 # with no room left, goes into its module's RETIRED_TWIN_QUERIES
 # instead (still implemented, and oracle-checked locally by
-# tests/test_retired_twins.py).
+# tests/test_query_battery.py).
 DRIVER_QUERY_WINDOW = 50
 
 # An oracle is DuckDB SQL, or for a data-dependent one (trained

@@ -8,6 +8,9 @@ just actions on a session; this registry keeps the observable
 surface — submit, poll status, last-job lookup — as plain in-process
 bookkeeping around Spark's own scheduler + status tracker. No
 Postgres, no polling loop, no DNS discovery (SURVEY.md §3.4).
+
+No engine path calls it: it is the only code behind COVERAGE.md row
+R13 (StartJob / LastJobStatus), kept for reference parity.
 """
 
 from __future__ import annotations

@@ -24,6 +24,15 @@ scale-out correctness first, local[32] testing second:
   on a JVM that :func:`get_spark` launches; a session someone else
   built keeps its own size, and :func:`ensure_session_confs` cannot
   change it.
+* Stage ids kept out of generated class names
+  (``spark.sql.codegen.useIdInClassName=false``) — the cache is keyed
+  by the generated source, and by default each class is named after
+  its whole-stage-codegen stage id. AQE assigns those ids in the
+  order it creates query stages, which depends on which concurrent
+  shuffle stage finishes first, so a byte-identical body under a new
+  id missed the cache and compiled again (``stats_pack``,
+  ``dedup_incremental``, ``dedup_clusters``). Runtime-settable:
+  :func:`ensure_session_confs` pins it too.
 """
 
 from __future__ import annotations
@@ -74,6 +83,8 @@ def ensure_session_confs(spark: SparkSession) -> None:
       (perf, not correctness: results are identical with the rule on;
       runtime-settable, so pinning it here reaches sessions that never
       went through :func:`get_spark`).
+    * ``codegen.useIdInClassName`` off — see the module docstring
+      (perf only, like the rule above).
     """
     # Set once per SparkSession object — this runs on EVERY
     # load_table call (several per query build, 3 py4j round-trips
@@ -87,6 +98,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.optimizer.excludedRules", EXCLUDED_RULES)
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     try:
         spark._irio_confs_ensured = True
     except AttributeError:  # exotic session wrapper with __slots__
@@ -169,16 +181,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
         )
 
-    # config-independence hook: results must not depend on AQE (the
-    # oracle sweep re-runs with it off — tools/sweep_configs.py)
-    aqe = "false" if os.environ.get("SPARK_GRAFT_AQE") == "0" else "true"
+    # results must not depend on AQE: tools/check_oracle.py --conf
+    # spark.sql.adaptive.enabled=false re-runs the oracle with it off
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-        .config("spark.sql.adaptive.skewJoin.enabled", aqe)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -213,6 +224,7 @@ def get_spark(
         .config(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
         )
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # Production state-store: RocksDB keeps streaming state (open
     # sessions, window partials) off-heap and spillable — the default

@@ -6,8 +6,7 @@ The reference's only sink concatenates reduce outputs into ONE blob
 plan shape — ``coalesce(1)`` feeding a single write task. We keep it
 for parity and small results, but the scale path is
 :func:`write_partitioned`: parallel tasks, optional partition columns
-for downstream pruning, optional bucketing so future joins on the
-bucket keys skip their shuffle entirely.
+for downstream pruning.
 """
 
 from __future__ import annotations
@@ -26,7 +25,9 @@ def write_single_file(
     ``repartition(1)``) — it narrows the last stage without forcing an
     extra shuffle. Only sane for driver-scale results (the reference
     had the same constraint: its collect step streamed every reduce
-    output through the coordinator)."""
+    output through the coordinator). No engine path calls it: it is
+    the only code behind COVERAGE.md row R9, kept for reference
+    parity."""
     writer = df.coalesce(1).write.mode("overwrite")
     if fmt == "csv":
         writer = writer.option("header", str(header).lower())
@@ -45,30 +46,6 @@ def write_partitioned(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.format(fmt).save(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-) -> None:
-    """Bucketed table: joins/aggregations on ``bucket_cols`` skip
-    their shuffle (co-located partitioning persisted at write time) —
-    the answer to 'orders ⋈ lineitem shuffles 100 TB'. The
-    shuffle-free join plan is asserted in tests/test_bucketed_join.py.
-
-    ``path`` makes the table external (data at ``path`` instead of the
-    session warehouse — ``spark.sql.warehouse.dir`` is static config
-    and can't be set on a live session)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
 
 
 def parquet_files(path: str):

@@ -223,42 +223,6 @@ def read_csv_dir(
     )
 
 
-def read_jsonl_dir(
-    spark: SparkSession,
-    path: str,
-    schema,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """All JSON-lines files under a directory, with an EXPLICIT
-    schema — the landing format of most crawl/training-data drops.
-    Same inference/corruption policy as :func:`read_csv_dir`; the
-    line-per-record layout is what makes JSONL splittable (a
-    multi-line JSON array would force one task per file)."""
-    return (
-        spark.read.schema(_with_corrupt_col(schema, corrupt_col))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    )
-
-
-def read_orc_dir(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """All ORC files under a directory. ORC is self-describing and
-    columnar (footer schema, stripe statistics), so unlike the
-    CSV/JSONL readers there is no inference scan to avoid and no
-    corrupt-record column to thread through — malformed stripes fail
-    loudly at read, which is the correct behavior for a binary
-    columnar format. Predicate pushdown into stripe/row-group
-    statistics works the same as parquet. An explicit ``schema`` is
-    optional; pass one to make a 100 TB job robust against a stray
-    file with an evolved schema (Spark then projects/casts instead of
-    failing on merge)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
 def _with_corrupt_col(schema, corrupt_col: str):
     """PERMISSIVE mode only captures the offending line if the schema
     CONTAINS the corrupt column (else malformed rows silently become

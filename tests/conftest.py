@@ -68,3 +68,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+# Spark's SQL status store: the final physical plan of every SQL
+# execution, including the ones a lazy localCheckpoint opens
+def _status_store(spark):
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def last_execution_id(spark) -> int:
+    store = _status_store(spark)
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def executions_after(spark, last_id: int) -> list:
+    """The status store's executions with an id above ``last_id``,
+    read from the newest end. The store evicts its oldest finished
+    executions past ``spark.sql.ui.retainedExecutions``, so a count
+    taken before the case is not a stable offset; the tail is."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = _status_store(spark)
+    n = store.executionsCount()
+    k = 8
+    while True:
+        seq = store.executionsList(max(0, n - k), k)
+        execs = [seq.apply(i) for i in range(seq.size())]
+        if not execs or execs[0].executionId() <= last_id or k >= n:
+            return [e for e in execs if e.executionId() > last_id]
+        k *= 2

@@ -63,7 +63,7 @@ EXPECTED_QUERY_ORDER = [
     # cell-partitioned index; the fly twin similarity_ivf retired to
     # the locally-verified pool (parity pinned in
     # tests/test_ivf_index.py; its data-dependent oracle is replayed
-    # per sf_dir by tests/test_retired_twins.py)
+    # per sf_dir by tests/test_query_battery.py)
     "probe_ivf_index", "text_analysis", "lang_id", "quality_score",
     "quality_funnel", "bm25_search",
     "decontaminate",

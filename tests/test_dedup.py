@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -473,6 +475,22 @@ def _persisted_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
+def _settled_persisted_count(spark, timeout_s: float = 10.0) -> int:
+    """The persisted-RDD count once two readings 0.5 s apart agree.
+    ContextCleaner unpersists the checkpoints a JVM GC freed on its own
+    thread, one RDD at a time, and in a long session that GC also
+    queues every earlier test's garbage, so one reading can catch the
+    cleaner mid-queue."""
+    readings = [spark.sparkContext._jsc.getPersistentRDDs().size()]
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline:
+        time.sleep(0.5)
+        readings.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+        if readings[-1] == readings[-2]:
+            return readings[-1]
+    pytest.fail(f"persisted-RDD count never settled: {readings}")
+
+
 def _write_no_pair_docs(sf_dir) -> str:
     """A documents table with no near-dup pair (every doc has its own
     vocabulary) plus one exact duplicate, so the label loop converges
@@ -519,12 +537,12 @@ def test_dedup_clusters_frees_dead_checkpoints(
     for _ in range(3):
         chunking.dedup_clusters(spark, d).collect()
         drain_driver_backlog(spark)
-        counts.append(len(_persisted_rdd_ids(spark)))
+        counts.append(_settled_persisted_count(spark))
     assert max(counts[1:]) <= counts[0], counts
 
 
 def test_dedup_incremental_semantics(spark, sf_dir):
-    """Beyond the oracle hash (tests/test_retired_twins.py): the
+    """Beyond the oracle hash (tests/test_query_battery.py): the
     verdicts must be consistent with the batch/corpus split — every
     batch doc gets exactly one verdict, an exact_dup really has a
     byte-twin in corpus-or-earlier-batch, and an admitted doc has

@@ -104,7 +104,9 @@ def test_staged_writes_run_under_the_callers_job_group(
     assert {g for _, g in writes} == {group}, writes
     grouped = set(tracker.getJobIdsForGroup(group))
     assert len(grouped) >= len(writes)
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # no job ran ungrouped; the set may only shrink, as the tracker
+    # drops its oldest jobs past spark.ui.retainedJobs
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
 @pytest.mark.slow  # r15: chaos/soak class, off the default gate path

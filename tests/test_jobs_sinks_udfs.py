@@ -195,47 +195,3 @@ def test_zscore_grouped(spark):
         by_g.setdefault(r["g"], []).append(r["z"])
     for zs in by_g.values():
         assert sorted(zs) == [-1.0, 1.0]
-
-
-def test_weighted_mean_udaf(spark):
-    """Grouped-agg pandas UDF: exact weighted means per group."""
-    from irio2024_mapreduce_spark.functions.udfs import weighted_mean_udaf
-
-    df = spark.createDataFrame(
-        [("a", 1.0, 1.0), ("a", 3.0, 3.0), ("b", 10.0, 2.0), ("b", 20.0, 0.0)],
-        "g string, v double, w double",
-    )
-    wmean = weighted_mean_udaf()
-    got = {
-        r["g"]: r["wm"]
-        for r in df.groupBy("g").agg(wmean("v", "w").alias("wm")).collect()
-    }
-    assert got["a"] == (1.0 * 1.0 + 3.0 * 3.0) / 4.0  # 2.5
-    assert got["b"] == 10.0  # zero-weight row contributes nothing
-
-
-def test_split_ledger_udtf(spark):
-    """UDTF: imperative 1->N row expansion with typed output and a
-    malformed-entry policy (NaN, not crash)."""
-    import math
-
-    from irio2024_mapreduce_spark.functions.udfs import split_ledger_udtf
-
-    spark.udtf.register("split_ledger", split_ledger_udtf())
-    rows = spark.sql(
-        """
-        SELECT t.entry_key, t.entry_value
-        FROM VALUES ('usd:1.5,eur:2.25,bad:x') AS v(ledger),
-        LATERAL split_ledger(v.ledger) t
-        """
-    ).collect()
-    got = {r["entry_key"]: r["entry_value"] for r in rows}
-    assert got["usd"] == 1.5 and got["eur"] == 2.25
-    assert math.isnan(got["bad"])
-    # empty input produces no rows at all
-    assert (
-        spark.sql(
-            "SELECT * FROM VALUES ('') AS v(l), LATERAL split_ledger(v.l) t"
-        ).count()
-        == 0
-    )

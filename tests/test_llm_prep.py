@@ -1,6 +1,6 @@
 """Semantic tests for the LLM-prep operators (PII scrubbing and
 sequence packing). The corpus-level oracle-hash check lives in
-tests/test_retired_twins.py; these tests pin the SEMANTICS (crafted
+tests/test_query_battery.py; these tests pin the SEMANTICS (crafted
 PII actually redacts; packing obeys the concatenate-then-chunk
 invariants) and the plan shapes that carry the operators to 100 TB.
 """
@@ -16,9 +16,10 @@ from irio2024_mapreduce_spark.operators.llm_prep import (
     SPLIT_TEST_HEX_EN,
     SPLIT_VAL_HEX,
     SPLIT_VAL_HEX_EN,
+    _assign,
+    _keyed_tokens,
     corpus_split,
     pack_sequences,
-    pack_sequences_naive,
     pii_scrub,
     scrub_text,
     split_docs,
@@ -99,9 +100,30 @@ def test_pack_sequences_invariants(spark, sf_dir):
     assert n_packs == (expect + PACK_MAX_TOKENS - 1) // PACK_MAX_TOKENS
 
 
+def _pack_sequences_naive(spark, sf_dir):
+    """Single-partition reference form of ``pack_sequences``: one
+    global running sum (Exchange SinglePartition — correct,
+    unscalable)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from irio2024_mapreduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    w = Window.orderBy("shuffle_key", "doc_id")
+    cum = _keyed_tokens(docs).withColumn("cum", F.sum("n_tokens").over(w))
+    return _assign(
+        cum.select(
+            "doc_id",
+            "n_tokens",
+            (F.col("cum") - F.col("n_tokens")).alias("seq_offset"),
+        )
+    )
+
+
 def test_pack_distributed_equals_naive(spark, sf_dir):
     a = sorted(map(tuple, pack_sequences(spark, sf_dir).collect()))
-    b = sorted(map(tuple, pack_sequences_naive(spark, sf_dir).collect()))
+    b = sorted(map(tuple, _pack_sequences_naive(spark, sf_dir).collect()))
     assert a == b and len(a) > 0
 
 

@@ -60,19 +60,58 @@ def test_session_window_gap_edge(spark):
     assert sorted(per_user[2]) == [1, 1]
 
 
+def _event_session_islands(spark, sf_dir):
+    """Gaps-and-islands formulation of ``event_session``: flag an
+    event whose gap to the previous one is strictly greater than 30
+    min, running-sum the flags into a session ordinal, aggregate.
+    Microsecond differences, not ``cast('long')``: floor-second diffs
+    would read a 1800.5 s gap as exactly the gap and merge sessions
+    the native ``session_window`` splits."""
+    from pyspark.sql.window import Window
+
+    from irio2024_mapreduce_spark.sources.tables import load_table
+
+    gap_s = 30 * 60
+    events = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts")
+    flagged = events.select(
+        "user_id",
+        "ts",
+        "value",
+        F.when(
+            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
+            > gap_s * 1_000_000,
+            1,
+        )
+        .otherwise(0)
+        .alias("new_session"),
+    ).withColumn("session_ord", F.sum("new_session").over(w))
+    return (
+        flagged.groupBy("user_id", "session_ord")
+        .agg(
+            F.min("ts").alias("session_start"),
+            (F.max("ts") + F.expr(f"INTERVAL {gap_s} SECONDS")).alias(
+                "session_end"
+            ),
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+        .select(
+            "user_id", "session_start", "session_end", "n_events", "sum_value"
+        )
+    )
+
+
 def test_session_islands_equals_native(spark, sf_dir):
     """The gaps-and-islands form (the measured 1.6×-faster scale
     path, SCALE.md round-6) must be row-identical to the registered
     native session_window query — including the exactly-gap merge
     edge, which the events fixture's 30-min grid exercises."""
-    from irio2024_mapreduce_spark.operators.events import (
-        event_session,
-        event_session_islands,
-    )
+    from irio2024_mapreduce_spark.operators.events import event_session
 
     native = sorted(map(tuple, event_session(spark, sf_dir).collect()))
     islands = sorted(
-        map(tuple, event_session_islands(spark, sf_dir).collect())
+        map(tuple, _event_session_islands(spark, sf_dir).collect())
     )
     assert native == islands
 
@@ -127,21 +166,6 @@ def test_exact_dedup_keeps_min_doc_id(spark):
         .collect()
     }
     assert out == {(1, 2), (2, 1)}
-
-
-def test_rolling_hash_order_sensitive(spark):
-    """Same token bag, different order → different fingerprint;
-    identical sequences → identical fingerprint."""
-    from pyspark.sql import functions as F
-
-    from irio2024_mapreduce_spark.operators.text_analysis import rolling_hash
-
-    df = spark.createDataFrame(
-        [("a b c",), ("c b a",), ("a b c",)], ["text"]
-    ).select(rolling_hash(F.split("text", " ")).alias("h"))
-    h1, h2, h3 = [r["h"] for r in df.collect()]
-    assert h1 == h3  # deterministic for identical sequences
-    assert h1 != h2  # order matters (md5-of-sorted-bag would collide)
 
 
 def test_json_extract_integer_guard_parity_on_dirty_values(spark, tmp_path):

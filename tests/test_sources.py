@@ -1,4 +1,4 @@
-"""Source readers: explicit-schema CSV/JSONL ingestion with
+"""Source readers: explicit-schema CSV ingestion with
 queryable corruption, and multi-file text isolation (reference
 R1/R10)."""
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from irio2024_mapreduce_spark.sources.tables import (
     read_csv_dir,
-    read_jsonl_dir,
     read_text_dir,
 )
 
@@ -71,30 +70,6 @@ def test_corrupt_filter_runs_in_spark_and_schema_not_mutated(
     assert caller_schema.fieldNames() == ["doc_id", "lang", "text"]
 
 
-def test_read_jsonl_dir_explicit_schema_and_corruption(spark, tmp_path):
-    d = tmp_path / "jsonl_src"
-    d.mkdir()
-    (d / "a.jsonl").write_text(
-        '{"doc_id": 1, "lang": "en", "text": "hello"}\n'
-        '{"doc_id": 2, "lang": "de", "text": "hallo"}\n'
-    )
-    (d / "b.jsonl").write_text(
-        '{"doc_id": 3, "lang": "fr", "text": "bonjour"}\n'
-        "{this is not json}\n"
-    )
-    df = read_jsonl_dir(spark, str(d), DOC_SCHEMA)
-    rows = df.collect()
-    assert len(rows) == 4
-    good = {
-        r["doc_id"]: r["text"]
-        for r in rows
-        if r["_corrupt_record"] is None
-    }
-    assert good == {1: "hello", 2: "hallo", 3: "bonjour"}
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(bad) == 1 and "this is not json" in bad[0]["_corrupt_record"]
-
-
 def test_read_text_dir_files_never_bleed(spark, tmp_path):
     """R1/R10: every line belongs to exactly one file; a file without
     a trailing newline must not merge with the next file's first
@@ -125,39 +100,6 @@ def test_csv_reader_prunes_columns(spark, tmp_path):
     plan = buf.getvalue()
     read_schema = plan.split("ReadSchema:")[1].split("\n")[0]
     assert "lang" in read_schema and "text" not in read_schema
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    """ORC source: partitioned write → directory read roundtrips
-    exactly, and a filter on the read reaches the ORC scan as a
-    pushed-down predicate (stripe statistics pruning at scale)."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from irio2024_mapreduce_spark.sources.sinks import write_partitioned
-    from irio2024_mapreduce_spark.sources.tables import read_orc_dir
-
-    df = spark.range(200).select(
-        F.col("id"),
-        (F.col("id") % 4).alias("part"),
-        F.concat(F.lit("v"), F.col("id")).alias("val"),
-    )
-    path = str(tmp_path / "orc_out")
-    write_partitioned(df, path, partition_by=["part"], fmt="orc")
-
-    back = read_orc_dir(spark, path)
-    assert sorted(map(tuple, back.select("id", "part", "val").collect())) == \
-        sorted(map(tuple, df.collect()))
-
-    filtered = back.filter(F.col("id") > 150).select("id")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        filtered.explain(mode="formatted")
-    plan = buf.getvalue()
-    assert "PushedFilters: [" in plan and "GreaterThan(id,150)" in plan
-    assert filtered.count() == 49
 
 
 def test_table_rewrites_replace_their_memo_entries(

@@ -5,8 +5,15 @@ twin on DuckDB over the same parquet tables, then compares
 row count, column names, and an order-insensitive value hash
 (columns sorted by name, rows sorted, floats canonicalized).
 
+Results must not depend on the Spark configuration: ``--conf K=V``
+(repeatable) starts the session with those confs on top of the
+engine's, e.g. ``--conf spark.sql.shuffle.partitions=200`` (Spark's
+stock default) or ``--conf spark.sql.adaptive.enabled=false``.
+
 Usage:
-    python tools/check_oracle.py [--sf /root/testdata/sf0.01] [query ...]
+    python tools/check_oracle.py [--sf SF_DIR] [--conf K=V]... [query ...]
+
+``--sf`` defaults to $SF_DIR, else the sf0.01 fixture.
 """
 
 from __future__ import annotations
@@ -59,8 +66,10 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SF_DIR", "/root/testdata/sf0.01"))
+    ap.add_argument("--conf", action="append", default=[], metavar="K=V")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    confs = dict(c.partition("=")[::2] for c in args.conf)
 
     con = duckdb.connect()
     for t in TABLE_NAMES:
@@ -68,7 +77,7 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
         )
 
-    spark = get_spark("oracle-check")
+    spark = get_spark("oracle-check", extra_conf=confs)
     qs = registry.queries()
     # data-dependent oracles (similarity_ivf's injected centroids)
     # rebuilt for THIS sf dir — the driver itself grades at sf0.01,
